@@ -687,24 +687,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val rawSfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // INT96 timestamps carry no parquet statistics (kills both
-      // row-group pruning and Versioned data skipping) — write micros,
-      // mirroring GraftSession
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // see GraftSession: lets small-file splits track bytes-per-core so
-      // a 10 MB sf0.1 scan fans out to all cores instead of 3
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Runtime.getRuntime.addShutdownHook(new Thread(() => cleanupTempDirs()))
 

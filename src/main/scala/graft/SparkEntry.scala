@@ -510,7 +510,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(F.col("vec_id") === 0)
         .select("embedding").head().getSeq[Float](0).map(_.toDouble)
-      Similarity.topKByCosine(emb, "embedding", "vec_id", q, 10, native = true)
+      Similarity.topKByCosine(emb, "embedding", "vec_id", q, 10)
         .select(F.col("vec_id"), F.round(F.col("score"), 6).as("score"))
     }),
 
@@ -587,8 +587,7 @@ object SparkEntry {
       Similarity.recallAtK(
         Similarity.topKIvf(emb, "embedding", "vec_id", q, ivfCentroids,
           k = 10, nprobe = 2),
-        Similarity.topKByCosine(emb, "embedding", "vec_id", q, 10,
-          native = true),
+        Similarity.topKByCosine(emb, "embedding", "vec_id", q, 10),
         "vec_id", k = 10)
     }),
 
@@ -3775,20 +3774,12 @@ object SparkEntry {
       val scored = t(s, dir, "documents").select(
         F.col("lang"), F.col("doc_id"),
         TextAnalysis.qualityScore(F.col("text")).as("quality"))
-      if (s.catalog.functionExists("topk_pairs"))
-        scored.groupBy("lang")
-          .agg(F.call_function("topk_pairs",
-            F.col("quality"), F.col("doc_id"), F.lit(10)).as("top"))
-          .select(F.col("lang"), F.explode(F.col("top")).as("t"))
-          .select(F.col("lang"), F.col("t.id").as("doc_id"),
-                  F.col("t.score").as("quality"))
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy("lang")
-          .orderBy(F.col("quality").desc, F.col("doc_id").asc)
-        scored.withColumn("rk", F.row_number().over(w))
-          .filter(F.col("rk") <= 10).select("lang", "doc_id", "quality")
-      }
+      scored.groupBy("lang")
+        .agg(F.call_function("topk_pairs",
+          F.col("quality"), F.col("doc_id"), F.lit(10)).as("top"))
+        .select(F.col("lang"), F.explode(F.col("top")).as("t"))
+        .select(F.col("lang"), F.col("t.id").as("doc_id"),
+                F.col("t.score").as("quality"))
     }),
 
     // ---- the END-TO-END training-data deliverable: one query composing
@@ -3799,8 +3790,7 @@ object SparkEntry {
     //      recursive-CTE closure over the replayed pair set) ----
     "q59_pipeline_keep" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val sig = TextAnalysis.docSignals(F.col("text"),
-        native = s.catalog.functionExists("text_stats"))
+      val sig = TextAnalysis.docSignals(F.col("text"))
       // Two corpus consumers feed the final anti-join: the narrow
       // signals filter and the LSH cluster pipeline. Round 5 ran them as
       // independent plans overlapped on a Future — each side re-derived

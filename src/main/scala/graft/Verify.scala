@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,20 +6,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the dump comparator reads these parquet files via pandas: INT96
-      // renders naive timestamps matching DuckDB's; TIMESTAMP_MICROS
-      // (isAdjustedToUTC) would render "+00:00"-suffixed values and
-      // hash-mismatch every timestamp column. Gates that NEED micros
-      // statistics (q297_skipping_time) toggle the conf around their
-      // own dataset builds.
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      // override: the dump comparator reads these parquet files via
+      // pandas: INT96 renders naive timestamps matching DuckDB's;
+      // TIMESTAMP_MICROS (isAdjustedToUTC) would render "+00:00"-suffixed
+      // values and hash-mismatch every timestamp column. Gates that NEED
+      // micros statistics (q297_skipping_time) toggle the conf around
+      // their own dataset builds.
       .config("spark.sql.parquet.outputTimestampType", "INT96")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

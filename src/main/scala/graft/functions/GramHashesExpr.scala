@@ -123,9 +123,10 @@ object GramHashesExpr {
   * `gram_pos_hashes(toks, n)` equals the composable
   * `transform(sequence(0, size(toks) - n), i =>
   * md5_hash60(concat_ws(" ", slice(toks, i+1, n))))` for
-  * `size(toks) >= n`; shorter arrays return an empty array (the operator
-  * filters them out before this expression is ever evaluated — the
-  * composable `sequence(0, negative)` form would throw on them). */
+  * `size(toks) >= n`, null elements included (skipped in the join, as
+  * `concat_ws` skips them); shorter arrays return an empty array (the
+  * operator filters them out before this expression is ever evaluated —
+  * the composable `sequence(0, negative)` form would throw on them). */
 case class GramPosHashesExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -68,19 +68,26 @@ object PortableHash {
   }
 
   /** md5Hash60 of `toks[from until from+count]` joined by single spaces —
-    * byte-identical to hashing `array_join(slice(...), " ")`, but via
-    * incremental digest updates: no joined-string allocation per call.
-    * The explicit reset() guards the shared thread-local against state
-    * left by any earlier exception between updates (a dirty digest would
-    * silently corrupt every later hash on this executor thread). */
+    * byte-identical to hashing `array_join(slice(...), " ")` (or
+    * `concat_ws`), but via incremental digest updates: no joined-string
+    * allocation per call. Null elements are skipped, separator
+    * included, exactly as both joins skip them. The explicit reset()
+    * guards the shared thread-local against state left by any earlier
+    * exception between updates (a dirty digest would silently corrupt
+    * every later hash on this executor thread). */
   def md5Hash60Join(toks: Array[UTF8String], from: Int, count: Int): Long = {
     val digest = md.get()
     digest.reset()
+    var joined = false
     var i = 0
     while (i < count) {
-      if (i > 0) digest.update(space, 0, 1)
-      val b = toks(from + i).getBytes
-      digest.update(b, 0, b.length)
+      val t = toks(from + i)
+      if (t != null) {
+        if (joined) digest.update(space, 0, 1)
+        val b = t.getBytes
+        digest.update(b, 0, b.length)
+        joined = true
+      }
       i += 1
     }
     fold60(digest.digest())

@@ -214,8 +214,9 @@ object VectorExpressions {
   }
 }
 
-/** Session extension registering the native vector functions — enable
-  * with `.withExtensions(new GraftExtensions)` or
+/** Session extension registering graft's native functions. Every
+  * session [[graft.GraftSession.builder]] builds installs it; an external
+  * session enables it with
   * `spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import VectorExpressions._

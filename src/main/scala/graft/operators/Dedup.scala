@@ -188,26 +188,17 @@ object Dedup {
       .select(F.col("p.a").as("id_a"), F.col("p.b").as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
-  /** Band-keys expression with the fastest available implementation:
-    * native one-pass banding for unigram shingles; otherwise the
-    * composable fold with the thread-local-digest base hash when
-    * available (same values in every combination — parity-spec'd).
+  /** Band-keys expression: native one-pass banding for unigram
+    * shingles; otherwise the composable fold over the native
+    * `md5_hash60` base hash (same values either way — parity-spec'd).
     * Shared by [[minhashLsh]] and the streaming candidate stage
     * ([[graft.streaming.Streams.minhashCandidatesStream]]). */
-  private[graft] def bandKeysDispatch(spark: org.apache.spark.sql.SparkSession,
-                                      text: Column, numBands: Int,
-                                      rowsPerBand: Int, shingleN: Int): Column = {
-    val catalog = spark.catalog
-    if (shingleN == 1 && catalog.functionExists("minhash_bands"))
+  private[graft] def lshBandKeys(text: Column, numBands: Int,
+                                 rowsPerBand: Int, shingleN: Int): Column =
+    if (shingleN == 1)
       F.call_function("minhash_bands", text, F.lit(numBands), F.lit(rowsPerBand))
-    else {
-      val baseHash: Column => Column =
-        if (catalog.functionExists("md5_hash60"))
-          (c: Column) => F.call_function("md5_hash60", c) % MinhashP
-        else md5BaseHash
-      minhashBandKeys(text, numBands, rowsPerBand, shingleN, baseHash)
-    }
-  }
+    else minhashBandKeys(text, numBands, rowsPerBand, shingleN,
+      (c: Column) => F.call_function("md5_hash60", c) % MinhashP)
 
   /** MinHash + LSH near-duplicate pairs.
     *
@@ -224,7 +215,7 @@ object Dedup {
                  shingleN: Int = 3, threshold: Double = 0.8,
                  maxBucket: Int = 64, reliable: Boolean = false): DataFrame = {
     val nonEmpty = df.filter(F.col(textCol).rlike("\\S"))
-    val bandKeysExpr = bandKeysDispatch(df.sparkSession, F.col(textCol),
+    val bandKeysExpr = lshBandKeys(F.col(textCol),
       numBands, rowsPerBand, shingleN)
     val banded = spreadForCompute(nonEmpty).select(
       F.col(idCol).as("id"),
@@ -258,7 +249,7 @@ object Dedup {
     pairs
       .join(candSh.select(F.col("id").as("id_a"), F.col("sh").as("sh_a")), "id_a")
       .join(candSh.select(F.col("id").as("id_b"), F.col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccardSortedLongs(df)(F.col("sh_a"), F.col("sh_b")))
+      .withColumn("jaccard", jaccardSorted(F.col("sh_a"), F.col("sh_b")))
       .filter(F.col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -273,7 +264,7 @@ object Dedup {
   def writeMinhashIndex(df: DataFrame, textCol: String, idCol: String,
                         path: String, numBands: Int = 4, rowsPerBand: Int = 8,
                         shingleN: Int = 3): Unit = {
-    val bandKeys = bandKeysDispatch(df.sparkSession, F.col(textCol),
+    val bandKeys = lshBandKeys(F.col(textCol),
       numBands, rowsPerBand, shingleN)
     spreadForCompute(df.filter(F.col(textCol).rlike("\\S")))
       .select(F.col(idCol).as("id"), bandKeys.as("bands"),
@@ -346,7 +337,7 @@ object Dedup {
       }
     }
     val index = spark.read.parquet(indexPath)
-    val bandKeys = bandKeysDispatch(spark, F.col(textCol),
+    val bandKeys = lshBandKeys(F.col(textCol),
       numBands, rowsPerBand, shingleN)
     // ONE prep pass over the new batch (bands + shingles feed bucketing
     // AND verification) — staged like minhashLsh's candidate frame
@@ -385,7 +376,7 @@ object Dedup {
       .join(candSh.select(F.col("id").as("id_a"), F.col("sh").as("sh_a")), "id_a")
       .join(candSh.select(F.col("id").as("id_b"), F.col("sh").as("sh_b")), "id_b")
       .withColumn("jaccard",
-        jaccardSortedLongs(newDocs)(F.col("sh_a"), F.col("sh_b")))
+        jaccardSorted(F.col("sh_a"), F.col("sh_b")))
       .filter(F.col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -425,7 +416,7 @@ object Dedup {
       .unionByName(tagged(evalSet, evalTextCol, evalIdCol, isEval = true))
     val banded = spreadForCompute(union).select(
       F.col("id"), F.col("is_eval"),
-      F.posexplode(bandKeysDispatch(spark, F.col("text_"),
+      F.posexplode(lshBandKeys(F.col("text_"),
         numBands, rowsPerBand, shingleN)).as(Seq("band", "bucket")))
     val pairs = stage(
       banded.groupBy("band", "bucket")
@@ -457,7 +448,7 @@ object Dedup {
       .join(candSh.select(F.col("id").as("eval_id"), F.col("sh").as("sh_b")),
         "eval_id")
       .withColumn("jaccard",
-        jaccardSortedLongs(corpus)(F.col("sh_a"), F.col("sh_b")))
+        jaccardSorted(F.col("sh_a"), F.col("sh_b")))
       .filter(F.col("jaccard") >= threshold)
       .select("corpus_id", "eval_id", "jaccard")
   }
@@ -471,14 +462,10 @@ object Dedup {
     F.when(union === 0, F.lit(1.0)).otherwise(inter / union)
   }
 
-  /** Jaccard over SORTED distinct long arrays: uses the native two-
-    * pointer `jaccard_sorted` expression when the session carries
-    * [[graft.functions.GraftExtensions]], else falls back to the
-    * hash-set route (identical values either way). */
-  private def jaccardSortedLongs(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("jaccard_sorted"))
-      F.call_function("jaccard_sorted", a, b)
-    else jaccard(a, b)
+  /** Jaccard over SORTED distinct long arrays: the native two-pointer
+    * `jaccard_sorted` expression (same values as [[jaccard]]). */
+  private[graft] def jaccardSorted(a: Column, b: Column): Column =
+    F.call_function("jaccard_sorted", a, b)
 
   /** Brute-force n-gram Jaccard near-dup pairs within a blocking key.
     * The blocking column bounds the quadratic term — and `maxBlock` caps
@@ -497,7 +484,7 @@ object Dedup {
                         maxBlock: Int = 1024): DataFrame =
     blockedShinglePairs(df, textCol, idCol, blockCol, shingleN, maxBlock)
       .select(F.col("id_a"), F.col("id_b"),
-        jaccardSortedLongs(df)(F.col("sh_a"), F.col("sh_b")).as("jaccard"))
+        jaccardSorted(F.col("sh_a"), F.col("sh_b")).as("jaccard"))
       .filter(F.col("jaccard") >= threshold)
 
   /** The shared capped-block pair machinery of [[ngramJaccardPairs]] and
@@ -609,36 +596,23 @@ object Dedup {
       graft.operators.TextAnalysis.tokens(
         F.coalesce(F.col(textCol), F.lit(""))).as("toks")),
       eager = true, reliable = false)
-    // one gram hash per start position (0-based), docs with >= n tokens.
-    // The hash dispatches to the native md5_hash60 expression when the
-    // session has the extensions (same values — parity-spec'd), and the
-    // gram frame is STAGED: it feeds the duplicate vote AND the
-    // join-back, and the md5-over-slices transform is the operator's
-    // dominant compute — without staging it runs twice (the x10 probe
-    // measured the doubling at 90% duplicate mass).
-    val gramArr =
-      if (df.sparkSession.catalog.functionExists("gram_pos_hashes"))
-        // fused native positional hashing: incremental digest per gram,
-        // no per-position concat_ws allocation, no lambda interpretation
-        // (identical values — parity-spec'd; the x10 trace measured the
-        // composable route's gram stage at 38 s executor time)
-        F.call_function("gram_pos_hashes", F.col("toks"), F.lit(n))
-      else {
-        val hash: Column => Column =
-          if (df.sparkSession.catalog.functionExists("md5_hash60"))
-            (c: Column) => F.call_function("md5_hash60", c)
-          else md5Hash60
-        F.transform(
-          F.sequence(F.lit(0), F.size(F.col("toks")) - n),
-          (i: Column) => hash(F.concat_ws(" ",
-            F.slice(F.col("toks"), i + 1, F.lit(n)))))
-      }
-    // LAZY, not eager: the duplicate-vote aggregation materializes the
-    // blocks as a side effect of the final action, so the join-back
-    // reads them without an extra job barrier (the minhashLsh pairs
-    // precedent)
-    val grams = stage(base.filter(F.size(F.col("toks")) >= n)
-      .select(F.col("id"), F.posexplode(gramArr).as(Seq("pos", "gram"))),
+    // one gram hash per start position (0-based), docs with >= n tokens,
+    // from the fused native `gram_pos_hashes` (incremental digest per
+    // gram, no per-position string — the x10 trace measured the
+    // composable concat_ws/md5 route's gram stage at 38 s executor time).
+    // The gram frame is STAGED: it feeds the duplicate vote AND the
+    // join-back — without staging the hashing runs twice (the x10 probe
+    // measured the doubling at 90% duplicate mass). LAZY, not eager: the
+    // duplicate-vote aggregation materializes the blocks as a side
+    // effect of the final action, so the join-back reads them without
+    // an extra job barrier (the minhashLsh pairs precedent). Null-id
+    // rows cast no vote: the minDocs == 2 min/max vote skips null ids
+    // while a distinct+count vote would count them, and a null id never
+    // joins back anyway.
+    val grams = stage(base
+      .filter(F.col("id").isNotNull && F.size(F.col("toks")) >= n)
+      .select(F.col("id"), F.posexplode(F.call_function("gram_pos_hashes",
+        F.col("toks"), F.lit(n))).as(Seq("pos", "gram"))),
       eager = false, reliable = false)
     // the duplicate vote needs "appears in >= minDocs DISTINCT docs".
     // minDocs == 2 (the default, and every declared caller) needs no
@@ -722,17 +696,12 @@ object Dedup {
     * Documents with no tokens are skipped.
     *
     * Signatures come from the native one-pass [[graft.functions.SimHashExpr]]
-    * when the session carries the extensions (composable fallback is
-    * bit-identical). `portableHash = true` uses the md5-based token hash a
-    * differential SQL oracle can replay. */
+    * (bit-identical to [[simhash64]]). `portableHash = true` uses the
+    * md5-based token hash a differential SQL oracle can replay. */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3, maxBucket: Int = 4096,
                    portableHash: Boolean = false): DataFrame = {
-    val sigExpr =
-      if (df.sparkSession.catalog.functionExists("simhash64"))
-        F.call_function("simhash64", F.col(textCol), F.lit(portableHash))
-      else if (portableHash) simhash64(F.col(textCol), (t: Column) => md5Hash60(t))
-      else simhash64(F.col(textCol))
+    val sigExpr = F.call_function("simhash64", F.col(textCol), F.lit(portableHash))
     hammingPairs(
       spreadForCompute(df.filter(F.col(textCol).rlike("\\S")))
         .select(F.col(idCol).as("_hp_id"), sigExpr.as("_hp_sig")),
@@ -967,7 +936,7 @@ object Dedup {
                        planes: Seq[Seq[Double]], threshold: Double,
                        maxBucket: Int = 4096, reliable: Boolean = false): DataFrame = {
     val banded = df.select(F.col(idCol).as("id"),
-      planeBucket(df, vecCol, planes).as("bucket"))
+      planeBucket(vecCol, planes).as("bucket"))
     // Staged once for the same reason as minhashLsh: the pair set feeds
     // the spine plus both verify joins, and without staging the full
     // scan→bucket-assignment pipeline would execute three times. Lazy —
@@ -988,7 +957,7 @@ object Dedup {
   def embeddingNearDupMulti(df: DataFrame, vecCol: String, idCol: String,
                             planeSets: Seq[Seq[Seq[Double]]], threshold: Double,
                             maxBucket: Int = 4096, reliable: Boolean = false): DataFrame = {
-    val buckets = F.array(planeSets.map(planeBucket(df, vecCol, _)): _*)
+    val buckets = F.array(planeSets.map(planeBucket(vecCol, _)): _*)
     val banded = df.select(F.col(idCol).as("id"),
       F.posexplode(buckets).as(Seq("pset", "bucket")))
     val pairs = stage(cappedBucketPairs(banded, Seq("pset", "bucket"), maxBucket),
@@ -1024,32 +993,13 @@ object Dedup {
 
   /** Distinct engine-portable hashes of a document's token k-grams (the
     * gram stage of [[TextAnalysis.winnowingFingerprint]], un-winnowed) —
-    * md5-based so a SQL oracle replays them. Dispatches the per-gram
-    * hash to the native thread-local-digest `md5_hash60` expression
-    * when the session carries [[graft.functions.GraftExtensions]]
-    * (identical values — parity-spec'd; the decontamination corpus side
-    * computes one hash per gram, the dominant cost of the bloom path at
-    * scale), composable fallback otherwise. */
-  private def gramHashes(spark: org.apache.spark.sql.SparkSession,
-                         text: Column, k: Int): Column = {
-    import graft.functions.ExprUtils.let
-    // the fused native form when the session carries GraftExtensions:
-    // one pass, incremental digest, no per-gram string materialization
-    // (identical values and order — parity-spec'd); the q112 x10 trace
-    // measured the composable lambda route at ~90% interpretation
-    // overhead on the decontamination family's dominant stage
-    if (spark.catalog.functionExists("gram_hashes"))
-      return F.call_function("gram_hashes", text, F.lit(k))
-    val gramHash: Column => Column =
-      if (spark.catalog.functionExists("md5_hash60"))
-        (c: Column) => F.call_function("md5_hash60", c)
-      else md5Hash60
-    let(TextAnalysis.tokens(F.lower(text))) { toks =>
-      F.array_distinct(F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - k, F.lit(0))),
-        (i: Column) => gramHash(F.array_join(F.slice(toks, i + 1, F.lit(k)), " "))))
-    }
-  }
+    * md5-based so a SQL oracle replays them. The fused native
+    * `gram_hashes`: one pass, incremental digest, no per-gram string
+    * (the q112 x10 trace measured the composable lambda route at ~90%
+    * interpretation overhead on the decontamination family's dominant
+    * stage). */
+  private def gramHashes(text: Column, k: Int): Column =
+    F.call_function("gram_hashes", text, F.lit(k))
 
   /** Benchmark DECONTAMINATION: flag corpus documents sharing at least
     * `minShared` token k-grams with an evaluation set — the standard
@@ -1074,8 +1024,7 @@ object Dedup {
                                  k: Int): DataFrame =
     evalSet
       .filter(F.col(evalTextCol).rlike("\\S"))
-      .select(F.explode(gramHashes(evalSet.sparkSession,
-        F.col(evalTextCol), k)).as("g"))
+      .select(F.explode(gramHashes(F.col(evalTextCol), k)).as("g"))
       .distinct()
 
   /** [[decontaminate]]'s corpus side against a prebuilt gram frame
@@ -1085,7 +1034,7 @@ object Dedup {
                                                minShared: Int, k: Int = 3): DataFrame =
     spreadForCompute(corpus.filter(F.col(textCol).rlike("\\S")))
       .select(F.col(idCol).as("id"),
-        F.explode(gramHashes(corpus.sparkSession, F.col(textCol), k)).as("g"))
+        F.explode(gramHashes(F.col(textCol), k)).as("g"))
       .join(F.broadcast(evalGrams), "g")
       .groupBy("id")
       .agg(F.count(F.lit(1)).as("n_shared")) // grams distinct per doc
@@ -1125,14 +1074,6 @@ object Dedup {
                          expectedGrams: Long = 4000000L,
                          numBits: Long = 33554432L): DataFrame = {
     val spark = corpus.sparkSession
-    // like every other dispatch site (pqCodes, cdcChunks, bandKeys): the
-    // bloom path needs GraftExtensions' bloom_agg/bloom_might_contain;
-    // without them fall back to the exact broadcast path — identical
-    // result, just not the sketch-sized scale shape
-    if (!spark.catalog.functionExists("bloom_agg") ||
-        !spark.catalog.functionExists("bloom_might_contain"))
-      return decontaminate(corpus, textCol, idCol, evalSet, evalTextCol,
-        k, minShared)
     // STAGED once, not derived twice: the original "two cheap narrow
     // passes" trade assumed deriving the gram set is ~free, but the
     // derivation pays whatever the eval-side SCAN costs (a filtered view
@@ -1153,7 +1094,7 @@ object Dedup {
       .select(F.col(idCol).as("id"), F.lit(0L).as("g")))
     else out(spreadForCompute(corpus.filter(F.col(textCol).rlike("\\S")))
       .select(F.col(idCol).as("id"),
-        F.explode(gramHashes(spark, F.col(textCol), k)).as("g"))
+        F.explode(gramHashes(F.col(textCol), k)).as("g"))
       .filter(F.call_function("bloom_might_contain",
         F.lit(sketch), F.col("g"))))
   }
@@ -1202,19 +1143,16 @@ object Dedup {
     * row (KBs–MBs, independent of corpus size) — the decontamination
     * member of the stored-artifact family (BM25 index, minhash index,
     * PQ/SQ codes, HLL/histogram sketches). `k` is stored beside the
-    * sketch so the probe side cannot drift from the build side.
-    * Sessions without [[graft.functions.GraftExtensions]] store an
-    * empty sketch; the probe then skips the prune and stays exact. */
+    * sketch so the probe side cannot drift from the build side. An
+    * empty eval set stores an empty sketch; the probe then skips the
+    * prune. */
   def writeDeconIndex(evalSet: DataFrame, evalTextCol: String, path: String,
                       k: Int = 3, expectedGrams: Long = 4000000L,
                       numBits: Long = 33554432L): Unit = {
     val spark = evalSet.sparkSession
     val grams = evalGramsOf(evalSet, evalTextCol, k)
     grams.write.mode("overwrite").parquet(s"$path/grams")
-    val sketch =
-      if (spark.catalog.functionExists("bloom_agg"))
-        buildBloomSketch(spark, grams, expectedGrams, numBits)
-      else null
+    val sketch = buildBloomSketch(spark, grams, expectedGrams, numBits)
     import spark.implicits._
     Seq((k, if (sketch == null) Array.empty[Byte] else sketch))
       .toDF("k", "sketch")
@@ -1237,9 +1175,9 @@ object Dedup {
     val grams = spark.read.parquet(s"$path/grams")
     val corpusGrams = spreadForCompute(corpus.filter(F.col(textCol).rlike("\\S")))
       .select(F.col(idCol).as("id"),
-        F.explode(gramHashes(spark, F.col(textCol), k)).as("g"))
+        F.explode(gramHashes(F.col(textCol), k)).as("g"))
     val pruned =
-      if (sketch.nonEmpty && spark.catalog.functionExists("bloom_might_contain"))
+      if (sketch.nonEmpty)
         corpusGrams.filter(F.call_function("bloom_might_contain",
           F.lit(sketch), F.col("g")))
       else corpusGrams
@@ -1410,12 +1348,11 @@ object Dedup {
           .cast("long").as("n_removed"))
 
   /** Sign-bit bucket of a vector against one hyperplane set (bit i =
-    * sign of dot with plane i), via the native fused-loop f64 dot when
-    * the session carries the extensions — double precision end to end,
-    * bit-identical to the composable fold (and so to the DuckDB replay
-    * oracle); float embeddings widen exactly. */
-  private def planeBucket(df: DataFrame, vecCol: String,
-                          planes: Seq[Seq[Double]]): Column = {
+    * sign of dot with plane i), via the native fused-loop f64 dot —
+    * double precision end to end, bit-identical to the composable fold
+    * (and so to the DuckDB replay oracle); float embeddings widen
+    * exactly. */
+  private def planeBucket(vecCol: String, planes: Seq[Seq[Double]]): Column = {
     // 1L << i uses only the low 6 shift bits: plane 64+ would ALIAS
     // onto plane (i-64)'s bit weight, silently MERGING sign buckets —
     // recall degrades while the caller believes precision increased
@@ -1423,11 +1360,9 @@ object Dedup {
       s"at most 63 hyperplanes fit one sign-bit bucket word, got " +
         s"${planes.length} — shard planes across multiple bucketing " +
         "passes instead")
-    val native = df.sparkSession.catalog.functionExists("vec_dot_f64")
-    def dotD(a: Column, b: Column): Column =
-      if (native) F.call_function("vec_dot_f64", a, b) else Similarity.dot(a, b)
     planes.zipWithIndex.map { case (pl, i) =>
-      F.when(dotD(F.col(vecCol), F.array(pl.map(F.lit): _*)) >= 0, F.lit(1L << i))
+      F.when(F.call_function("vec_dot_f64", F.col(vecCol),
+          F.array(pl.map(F.lit): _*)) >= 0, F.lit(1L << i))
         .otherwise(F.lit(0L))
     }.reduce(_ + _)
   }
@@ -1438,9 +1373,6 @@ object Dedup {
   private def cosineVerify(df: DataFrame, vecCol: String, idCol: String,
                            pairs: DataFrame, threshold: Double,
                            reliable: Boolean = false): DataFrame = {
-    val native = df.sparkSession.catalog.functionExists("vec_cosine_f64")
-    def cosD(a: Column, b: Column): Column =
-      if (native) F.call_function("vec_cosine_f64", a, b) else Similarity.cosine(a, b)
     // no pre-distinct: the semi-join's build side dedupes inherently
     val candIds = pairs
       .select(F.explode(F.array(F.col("id_a"), F.col("id_b"))).as("id"))
@@ -1450,7 +1382,8 @@ object Dedup {
     pairs
       .join(vecs.select(F.col("id").as("id_a"), F.col("vec").as("vec_a")), "id_a")
       .join(vecs.select(F.col("id").as("id_b"), F.col("vec").as("vec_b")), "id_b")
-      .withColumn("cosine", cosD(F.col("vec_a"), F.col("vec_b")))
+      .withColumn("cosine",
+        F.call_function("vec_cosine_f64", F.col("vec_a"), F.col("vec_b")))
       .filter(F.col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }

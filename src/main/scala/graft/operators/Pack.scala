@@ -222,8 +222,7 @@ object Pack {
     * is the engine-portable [[Dedup.md5Hash60]], so an oracle replays
     * the exact boundary set. */
   def cdcChunks(df: DataFrame, textCol: String, idCol: String,
-                k: Int = 3, modulus: Int = 16,
-                native: Boolean = true): DataFrame = {
+                k: Int = 3, modulus: Int = 16): DataFrame = {
     require(k >= 1 && modulus >= 1,
       s"k and modulus must be positive, got k=$k modulus=$modulus")
     import graft.functions.ExprUtils.let
@@ -231,37 +230,22 @@ object Pack {
       .select(F.col(idCol), TextAnalysis.tokens(F.col(textCol)).as("_toks"))
       .filter(F.size(F.col("_toks")) > 0)
     // the per-position gram hashing runs through the native one-pass
-    // cdc_bounds when the session carries GraftExtensions (incremental
-    // digest, no per-position string allocation — identical values,
-    // parity-spec'd); the composable filter chain otherwise. `native =
-    // false` forces the composable route so specs can exercise it.
-    val useNative = native && df.sparkSession.catalog.functionExists("cdc_bounds")
+    // cdc_bounds (incremental digest, no per-position string allocation
+    // — parity-spec'd against the composable boundary rule)
     val chunks = let(F.col("_toks")) { tk =>
-      let(F.size(tk)) { n =>
-        // candidate boundary AFTER 1-based position i (i ≥ k: the gram
-        // must be full); sequence(k, n) would run DESCENDING when n < k,
-        // so short docs get no candidates explicitly
-        def cand = F.when(n >= k,
-          F.filter(F.sequence(F.lit(k), n), (i: Column) =>
-            Dedup.md5Hash60(F.array_join(
-              F.slice(tk, i - (k - 1), F.lit(k)), " ")) % modulus === 0))
-          .otherwise(F.array().cast("array<int>"))
-        val endsExpr =
-          if (useNative) F.call_function("cdc_bounds", tk, F.lit(k), F.lit(modulus))
-          else F.array_union(cand, F.array(n))
-        let(endsExpr) { ends => // forced end-of-doc included
-          let(F.concat(F.array(F.lit(0)),
-                       F.slice(ends, F.lit(1), F.size(ends) - 1))) { starts =>
-            F.transform(F.sequence(F.lit(0), F.size(ends) - 1),
-              (j: Column) => F.struct(
-                j.as("chunk_id"),
-                F.element_at(starts, j + 1).as("start"),
-                (F.element_at(ends, j + 1) - F.element_at(starts, j + 1))
-                  .as("n_tokens"),
-                F.array_join(F.slice(tk, F.element_at(starts, j + 1) + 1,
-                  F.element_at(ends, j + 1) - F.element_at(starts, j + 1)),
-                  " ").as("chunk_text")))
-          }
+      // forced end-of-doc included
+      let(F.call_function("cdc_bounds", tk, F.lit(k), F.lit(modulus))) { ends =>
+        let(F.concat(F.array(F.lit(0)),
+                     F.slice(ends, F.lit(1), F.size(ends) - 1))) { starts =>
+          F.transform(F.sequence(F.lit(0), F.size(ends) - 1),
+            (j: Column) => F.struct(
+              j.as("chunk_id"),
+              F.element_at(starts, j + 1).as("start"),
+              (F.element_at(ends, j + 1) - F.element_at(starts, j + 1))
+                .as("n_tokens"),
+              F.array_join(F.slice(tk, F.element_at(starts, j + 1) + 1,
+                F.element_at(ends, j + 1) - F.element_at(starts, j + 1)),
+                " ").as("chunk_text")))
         }
       }
     }

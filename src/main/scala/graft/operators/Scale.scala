@@ -280,17 +280,16 @@ object Scale {
     * `topk_pairs` aggregate — O(k) state per stratum per task, only k
     * rows per stratum per partition reach the shuffle; a `row_number`
     * window here would sort every stratum's full membership inside one
-    * partition (the straggler at 100 TB). Window fallback without
-    * extensions. Ids must be GLOBALLY unique (the keep-list joins back
-    * by id — the standing id contract of the samplers and dedup
-    * pipelines). Ranking key is the hash AS A DOUBLE (what the heap
-    * stores); int64s above 2^53 can collide when rounded, and such ties
-    * break deterministically by lower id on both the heap and the
-    * replaying oracle.
+    * partition (the straggler at 100 TB). Ids must be GLOBALLY unique
+    * (the keep-list joins back by id — the standing id contract of the
+    * samplers and dedup pipelines). Ranking key is the hash AS A DOUBLE
+    * (what the heap stores); int64s above 2^53 can collide when rounded,
+    * and such ties break deterministically by lower id on both the heap
+    * and the replaying oracle.
     *
     * The heap path requires an INTEGRAL id (its state is `(double, long)`
     * pairs); a non-integral id would cast to null and silently select
-    * nothing, so non-integral ids route through the window fallback,
+    * nothing, so non-integral ids route through a `row_number` window,
     * which handles any id type — same rows either way, just without the
     * bounded-state guarantee. */
   def sampleKPerGroup(df: DataFrame, stratumCol: String, idCol: Column,
@@ -302,7 +301,7 @@ object Scale {
            _: org.apache.spark.sql.types.IntegerType | _: org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    if (integralId && df.sparkSession.catalog.functionExists("topk_pairs")) {
+    if (integralId) {
       val picked = df
         .select(F.col(stratumCol).as("_st"), key.as("_key"),
           idCol.cast("long").as("_id"))

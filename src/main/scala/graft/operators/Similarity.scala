@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
-import org.apache.spark.sql.expressions.Window
 
 /** Approximate-nearest-neighbor search over embedding columns
   * (`array<float>`).
@@ -50,12 +49,9 @@ object Similarity {
     * (no global sort, no shuffle of non-candidates).
     */
   def topKByCosine(df: DataFrame, vecCol: String, idCol: String,
-                   query: Seq[Double], k: Int,
-                   native: Boolean = false): DataFrame = {
+                   query: Seq[Double], k: Int): DataFrame = {
     val q = F.array(query.map(F.lit): _*)
-    val score =
-      if (native) cosineNative(F.col(vecCol), q) else cosine(F.col(vecCol), q)
-    df.select(F.col(idCol), score.as("score"))
+    df.select(F.col(idCol), cosineNative(F.col(vecCol), q).as("score"))
       .orderBy(F.col("score").desc, F.col(idCol).asc)
       .limit(k)
   }
@@ -231,24 +227,15 @@ object Similarity {
     * probe per partition reach the shuffle — the scored corpus is never
     * globally sorted (a `row_number` window here would sort every scored
     * row inside one partition per probe: a straggler at 100 TB). Probe
-    * side must be broadcastable (typical: a query batch); corpus streams.
-    * Falls back to the window formulation when the session lacks
-    * [[graft.functions.GraftExtensions]]. */
+    * side must be broadcastable (typical: a query batch); corpus streams. */
   def topKPerProbe(corpus: DataFrame, vecCol: String, idCol: String,
                    probes: DataFrame, probeVecCol: String, probeIdCol: String,
                    k: Int): DataFrame = {
-    // fused one-loop native cosine when the session carries the
-    // extensions (bit-identical to the composable fold); the fold
-    // otherwise — the same fallback pattern as jaccardSortedLongs
-    val cos: (Column, Column) => Column =
-      if (corpus.sparkSession.catalog.functionExists("vec_cosine_f32"))
-        (a, b) => F.call_function("vec_cosine_f32", a, b)
-      else cosine
     perProbeTopK(corpus.crossJoin(F.broadcast(probes))
       .select(
         F.col(probeIdCol).as("probe_id"),
         F.col(idCol).as("id"),
-        cos(F.col(vecCol), F.col(probeVecCol)).as("score")), k)
+        cosineNative(F.col(vecCol), F.col(probeVecCol)).as("score")), k)
   }
 
   /** ANN JOIN — top-k corpus neighbors for EVERY row of a probe TABLE,
@@ -285,33 +272,20 @@ object Similarity {
       F.explode(F.transform(
         F.slice(F.array_sort(ranked), 1, nprobe),
         (s: Column) => s.getField("i"))).as("bucket"))
-    val cos: (Column, Column) => Column =
-      if (corpus.sparkSession.catalog.functionExists("vec_cosine_f32"))
-        (a, b) => F.call_function("vec_cosine_f32", a, b)
-      else cosine
     perProbeTopK(pb.join(cb, "bucket")
       .select(F.col("probe_id"), F.col("id"),
-        cos(F.col("_cv"), F.col("_pv")).as("score")), k)
+        cosineNative(F.col("_cv"), F.col("_pv")).as("score")), k)
   }
 
   /** Per-probe bounded top-k tail shared by [[topKPerProbe]] and
-    * [[topKPerProbeIvf]]: the `topk_pairs` heap aggregate when the
-    * session carries the extensions, a window fallback otherwise. */
+    * [[topKPerProbeIvf]]: the `topk_pairs` heap aggregate. */
   private def perProbeTopK(scored: DataFrame, k: Int): DataFrame =
-    if (scored.sparkSession.catalog.functionExists("topk_pairs")) {
-      scored.groupBy("probe_id")
-        .agg(F.call_function("topk_pairs",
-          F.col("score"), F.col("id"), F.lit(k)).as("top"))
-        .select(F.col("probe_id"), F.explode(F.col("top")).as("t"))
-        .select(F.col("probe_id"), F.col("t.id").as("id"),
-                F.col("t.score").as("score"))
-    } else {
-      val w = Window.partitionBy("probe_id")
-        .orderBy(F.col("score").desc, F.col("id").asc)
-      scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    }
+    scored.groupBy("probe_id")
+      .agg(F.call_function("topk_pairs",
+        F.col("score"), F.col("id"), F.lit(k)).as("top"))
+      .select(F.col("probe_id"), F.explode(F.col("top")).as("t"))
+      .select(F.col("probe_id"), F.col("t.id").as("id"),
+              F.col("t.score").as("score"))
 
   /** IVF-style bucket id: nearest of `centroids` by dot product.
     * Centroids are literal arrays (trained offline / sampled), so
@@ -456,32 +430,24 @@ object Similarity {
     * billions of vectors. Codebooks are literals (train offline or via
     * [[trainCentroids]] per subspace), so encoding is a pure narrow map
     * in codegen — the same zero-state scale shape as [[ivfBucket]]. */
-  def pqCodes(vec: Column, codebooks: Seq[Seq[Seq[Double]]],
-              spark: org.apache.spark.sql.SparkSession =
-                org.apache.spark.sql.SparkSession.active): Column = {
+  def pqCodes(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
     val subdim = codebooks.head.head.length
     // ragged codebooks would mis-slice silently; check the shape loudly
     require(codebooks.forall(cb => cb.nonEmpty && cb.forall(_.length == subdim)),
       "pqCodes: every codebook entry must have the same sub-dimension")
-    // the native tight-loop expression when the session carries
-    // GraftExtensions: the composable tree ([[pqCodesComposable]]) is
-    // thousands of nodes at realistic (m, k) and falls out of
-    // WholeStageCodegen — see PqCodesExpr's scaladoc. The codebooks
-    // travel to the builder as a foldable nested-array literal and are
-    // unpacked into expression state at resolution time. `spark` must be
-    // the session that will ANALYZE the plan (callers with a DataFrame
-    // pass df.sparkSession) — gating on a different session's registry
-    // would either fail analysis or silently drop to the slow tree.
-    if (spark.catalog.functionExists("pq_codes")) {
-      val cbLit = F.array(codebooks.map(cb =>
-        F.array(cb.map(c => F.array(c.map(F.lit): _*)): _*)): _*)
-      F.call_function("pq_codes", vec.cast("array<double>"), cbLit)
-    } else pqCodesComposable(vec, codebooks)
+    // the native tight-loop expression: the composable tree
+    // ([[pqCodesComposable]]) is thousands of nodes at realistic (m, k)
+    // and falls out of WholeStageCodegen — see PqCodesExpr's scaladoc.
+    // The codebooks travel to the builder as a foldable nested-array
+    // literal and are unpacked into expression state at resolution time.
+    val cbLit = F.array(codebooks.map(cb =>
+      F.array(cb.map(c => F.array(c.map(F.lit): _*)): _*)): _*)
+    F.call_function("pq_codes", vec.cast("array<double>"), cbLit)
   }
 
   /** The composable-expression twin of [[pqCodes]] — same codes
-    * bit-for-bit (parity-spec'd); kept as the no-custom-expression
-    * reference implementation. */
+    * bit-for-bit (parity-spec'd); kept as the reference implementation
+    * the native encoder is checked against. */
   def pqCodesComposable(vec: Column, codebooks: Seq[Seq[Seq[Double]]]): Column = {
     val subdim = codebooks.head.head.length
     val codes = F.array(codebooks.zipWithIndex.map { case (cb, s) =>
@@ -511,21 +477,11 @@ object Similarity {
     * deterministic, so a differential oracle replays the exact k-set. */
   def pqTopKAdc(df: DataFrame, vecCol: String, idCol: String,
                 query: Seq[Double], codebooks: Seq[Seq[Seq[Double]]],
-                k: Int, native: Boolean = true): DataFrame = {
+                k: Int): DataFrame = {
     // native pq_adc consumes the codes child ONCE, so no let binding is
-    // needed and the projection stays inside WholeStageCodegen; the
-    // composable route references codes m times → let-bound. `native =
-    // false` forces the composable route (the topKByCosine precedent —
-    // keeps the fallback exercised by specs even in extension-carrying
-    // sessions).
-    val useNative = native && df.sparkSession.catalog.functionExists("pq_adc")
-    val dist =
-      if (useNative)
-        adcNative(pqCodes(F.col(vecCol), codebooks, df.sparkSession),
-          adcLut(query, codebooks))
-      else graft.functions.ExprUtils.let(pqCodesComposable(F.col(vecCol), codebooks)) {
-        c => adcDist(c, query, codebooks)
-      }
+    // needed and the projection stays inside WholeStageCodegen
+    val dist = adcNative(pqCodes(F.col(vecCol), codebooks),
+      adcLut(query, codebooks))
     df.select(F.col(idCol), dist.as("dist"))
       .orderBy(F.col("dist").asc, F.col(idCol).asc)
       .limit(k)
@@ -559,17 +515,6 @@ object Similarity {
     }
   }
 
-  /** ADC distance of a PQ code array: m LUT lookups summed in fixed
-    * subspace order (bit-identical to the oracle's l0+l1+... chain). */
-  private def adcDist(codes: Column, query: Seq[Double],
-                      codebooks: Seq[Seq[Seq[Double]]]): Column = {
-    val lutLit = F.array(adcLut(query, codebooks)
-      .map(row => F.array(row.map(F.lit): _*)): _*)
-    (0 until codebooks.length).map { s =>
-      F.element_at(F.element_at(lutLit, s + 1), F.element_at(codes, s + 1) + 1)
-    }.reduce(_ + _)
-  }
-
   /** The PQ SERVING LAYOUT: encode once, store (id, codes) partitioned
     * by IVF bucket. A query then touches nprobe/n of the partitions
     * (storage-level pruning, like [[writeIvfBucketed]]) and reads ONLY
@@ -581,7 +526,7 @@ object Similarity {
                       codebooks: Seq[Seq[Seq[Double]]], path: String): Unit =
     df.withColumn("bucket", ivfBucket(F.col(vecCol), centroids))
       .select(F.col(idCol), F.col("bucket"),
-        pqCodes(F.col(vecCol), codebooks, df.sparkSession).as("codes"))
+        pqCodes(F.col(vecCol), codebooks).as("codes"))
       .write.partitionBy("bucket").mode("overwrite").parquet(path)
 
   /** Top-k over a [[writeIvfPqCodes]] layout: bucket predicate →
@@ -592,14 +537,9 @@ object Similarity {
                       idCol: String, query: Seq[Double],
                       centroids: Seq[Seq[Double]],
                       codebooks: Seq[Seq[Seq[Double]]],
-                      k: Int, nprobe: Int = 2,
-                      native: Boolean = true): DataFrame = {
+                      k: Int, nprobe: Int = 2): DataFrame = {
     val queryBuckets = probeBuckets(query, centroids, nprobe)
-    val dist =
-      if (native && spark.catalog.functionExists("pq_adc"))
-        adcNative(F.col("codes"), adcLut(query, codebooks))
-      else adcDist(F.col("codes"), query, codebooks) // plain column ref:
-      // referencing it m times re-reads a field, not a computation
+    val dist = adcNative(F.col("codes"), adcLut(query, codebooks))
     spark.read.parquet(path)
       .filter(F.col("bucket").isin(queryBuckets: _*))
       .select(F.col(idCol), dist.as("dist"))

@@ -576,18 +576,12 @@ object TextAnalysis {
       .collect().toSeq.map(r => (r.getString(1), r.getString(2)))
 
   /** Encode a text column with a trained merge table: ARRAY<STRING> of
-    * subword tokens. Native [[graft.functions.BpeEncodeExpr]] (greedy
-    * lowest-rank, codegen'd) when the session carries GraftExtensions;
-    * sessions without it fail loudly at analysis rather than silently
-    * slow-pathing (the merge table is expression state, not a column —
-    * there is no composable-builtin equivalent worth maintaining). */
-  def bpeEncode(text: Column, merges: Seq[(String, String)]): Column = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    require(spark.catalog.functionExists("bpe_encode"),
-      "bpe_encode needs graft.functions.GraftExtensions on the session")
+    * subword tokens, via the native [[graft.functions.BpeEncodeExpr]]
+    * (greedy lowest-rank, codegen'd; the merge table is expression
+    * state, not a column). */
+  def bpeEncode(text: Column, merges: Seq[(String, String)]): Column =
     F.call_function("bpe_encode",
       F.typedlit(merges.map(m => Seq(m._1, m._2))), text)
-  }
 
   /** Characters that count as punctuation for quality scoring. */
   val PunctClass = "[.,!?;:]"
@@ -788,24 +782,16 @@ object TextAnalysis {
     * length counts — the separate [[qualityScore]] + [[langId]] columns
     * would inline ~10 independent tokenizations per row once
     * CollapseProject merges them into a consumer (the round-1 recompute
-    * hazard, see ExprUtils.let). With `native = true` the counting side
-    * uses the single-pass `text_stats` expression instead (no regex at
-    * all). Semantics — and therefore oracles — are identical to the
-    * stand-alone columns: same formula order, same rounding, same
-    * tie-break CASE. */
-  def docSignals(text: Column, native: Boolean = false): Column = {
+    * hazard, see ExprUtils.let). The counting side is the single-pass
+    * `text_stats` expression (no regex at all). Semantics — and
+    * therefore oracles — are identical to the stand-alone columns: same
+    * formula order, same rounding, same tie-break CASE. */
+  def docSignals(text: Column): Column = {
     import graft.functions.ExprUtils.let
     let(tokens(F.lower(text))) { toks =>
-      val (nTok, nPunct, nStop): (Column, Column, Column) =
-        if (native) {
-          val st = F.call_function("text_stats", text)
-          (st.getField("n_tokens"), st.getField("n_punct"),
-           st.getField("n_stopwords"))
-        } else {
-          val sw = F.array(Stopwords.map(F.lit): _*)
-          (F.size(toks), punctCount(text),
-           F.size(F.filter(toks, (t: Column) => F.array_contains(sw, t))))
-        }
+      val st = F.call_function("text_stats", text)
+      val (nTok, nPunct, nStop) = (st.getField("n_tokens"),
+        st.getField("n_punct"), st.getField("n_stopwords"))
       let(F.array(LangMarkers.map { case (_, ms) =>
         val m = F.array(ms.map(F.lit): _*)
         F.size(F.filter(toks, (t: Column) => F.array_contains(m, t)))
@@ -1172,14 +1158,12 @@ object TextAnalysis {
     * staged tf frame (AQE broadcasts the term side). Per-query top-k
     * runs through the bounded-heap `topk_pairs` aggregate — O(k) state
     * per query per task, never a per-query window sort over all
-    * matching docs (window fallback without extensions). One corpus
-    * tokenization pass serves every query. */
+    * matching docs. One corpus tokenization pass serves every query. */
   def bm25TopKBatch(df: DataFrame, textCol: String, idCol: String,
                     queries: DataFrame, queryIdCol: String,
                     queryTextCol: String, k: Int = 10,
                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = df.sparkSession
     val nDocs = df.count()
     val tf = stagedTf(df, textCol, idCol)
     val qTerms = queries.select(F.col(queryIdCol).as("query_id"),
@@ -1205,21 +1189,12 @@ object TextAnalysis {
       .select(F.col("query_id"), F.col(idCol), termScore.as("ts"))
       .groupBy("query_id", idCol)
       .agg(F.round(F.sum("ts"), 6).as("bm25"))
-    if (spark.catalog.functionExists("topk_pairs"))
-      scored.groupBy("query_id")
-        .agg(F.call_function("topk_pairs",
-          F.col("bm25"), F.col(idCol).cast("long"), F.lit(k)).as("top"))
-        .select(F.col("query_id"), F.explode(F.col("top")).as("t"))
-        .select(F.col("query_id"), F.col("t.id").as(idCol),
-          F.col("t.score").as("bm25"))
-    else {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("query_id")
-        .orderBy(F.col("bm25").desc, F.col(idCol).asc)
-      scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select("query_id", idCol, "bm25")
-    }
+    scored.groupBy("query_id")
+      .agg(F.call_function("topk_pairs",
+        F.col("bm25"), F.col(idCol).cast("long"), F.lit(k)).as("top"))
+      .select(F.col("query_id"), F.explode(F.col("top")).as("t"))
+      .select(F.col("query_id"), F.col("t.id").as(idCol),
+        F.col("t.score").as("bm25"))
   }
 
   /** INCREMENTAL maintenance of a [[writeBm25Index]] layout: append a
@@ -1610,56 +1585,36 @@ object TextAnalysis {
     * lower-id tie-break keeps exactly the smallest `maxPostings` ids,
     * already ascending), a stopword's bucket carries at most
     * `maxPostings` ids plus a count at EVERY stage — partial, shuffle,
-    * and merge — never the full corpus. The `collect_list`+`slice`
-    * fallback (extensions not registered) is semantically identical but
-    * gathers the full list on the reducer before capping — fine on a
-    * laptop, the heap path is the 100 TB one. Kept ids are the smallest
+    * and merge — never the full corpus. Kept ids are the smallest
     * `maxPostings` — deterministic and replayable by an oracle. */
   def invertedIndex(df: DataFrame, textCol: String, idCol: String,
                     maxPostings: Int = 50): DataFrame = {
     require(maxPostings >= 1, s"maxPostings must be >= 1, got $maxPostings")
     val pairs = df.select(F.col(idCol),
       F.explode(F.array_distinct(tokens(F.lower(F.col(textCol))))).as("token"))
-    if (df.sparkSession.catalog.functionExists("topk_pairs"))
-      pairs.groupBy("token")
-        .agg(F.count(F.lit(1)).as("n_docs"),
-             F.call_function("topk_pairs",
-               F.lit(0.0), F.col(idCol).cast("long"), F.lit(maxPostings)).as("_top"))
-        .select(F.col("token"), F.col("n_docs"),
-                F.transform(F.col("_top"), (t: Column) => t.getField("id"))
-                  .as("postings"))
-    else
-      pairs.groupBy("token")
-        .agg(F.count(F.lit(1)).as("n_docs"),
-             F.slice(F.sort_array(F.collect_list(F.col(idCol).cast("long"))), 1,
-                     maxPostings).as("postings"))
+    pairs.groupBy("token")
+      .agg(F.count(F.lit(1)).as("n_docs"),
+           F.call_function("topk_pairs",
+             F.lit(0.0), F.col(idCol).cast("long"), F.lit(maxPostings)).as("_top"))
+      .select(F.col("token"), F.col("n_docs"),
+              F.transform(F.col("_top"), (t: Column) => t.getField("id"))
+                .as("postings"))
   }
 
   /** All text statistics as one projection — single pass over the
-    * corpus. With the session extensions registered, the counting side is
-    * the native `text_stats` walk and quality/lang come from the fused
-    * [[docSignals]]; the composable twins otherwise (identical values —
-    * the same oracles gate both). */
+    * corpus: the counting side is the native `text_stats` walk and
+    * quality/lang come from the fused [[docSignals]] (identical values
+    * to the stand-alone columns — the same oracles gate both). */
   def profile(df: DataFrame, textCol: String): DataFrame = {
     val t = F.col(textCol)
-    if (df.sparkSession.catalog.functionExists("text_stats")) {
-      val st = F.call_function("text_stats", t)
-      val sig = docSignals(t, native = true)
-      df.withColumn("n_tokens", st.getField("n_tokens"))
-        .withColumn("n_subwords", st.getField("n_subwords"))
-        .withColumn("n_punct", st.getField("n_punct"))
-        .withColumn("n_stopwords", st.getField("n_stopwords"))
-        .withColumn("quality", sig.getField("quality"))
-        .withColumn("lang_guess", sig.getField("lang_guess"))
-        .withColumn("fp_md5", fingerprint(t))
-    } else {
-      df.withColumn("n_tokens", tokenCount(t))
-        .withColumn("n_subwords", subwordCount(t))
-        .withColumn("n_punct", punctCount(t))
-        .withColumn("n_stopwords", stopwordCount(t))
-        .withColumn("quality", qualityScore(t))
-        .withColumn("lang_guess", langId(t))
-        .withColumn("fp_md5", fingerprint(t))
-    }
+    val st = F.call_function("text_stats", t)
+    val sig = docSignals(t)
+    df.withColumn("n_tokens", st.getField("n_tokens"))
+      .withColumn("n_subwords", st.getField("n_subwords"))
+      .withColumn("n_punct", st.getField("n_punct"))
+      .withColumn("n_stopwords", st.getField("n_stopwords"))
+      .withColumn("quality", sig.getField("quality"))
+      .withColumn("lang_guess", sig.getField("lang_guess"))
+      .withColumn("fp_md5", fingerprint(t))
   }
 }

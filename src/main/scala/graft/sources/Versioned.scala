@@ -1673,35 +1673,20 @@ object Versioned {
     val bounds: Array[Array[Double]] =
       df.stat.approxQuantile(fields.map(_.name).toArray, probs, 0.001)
     val doubles = fields.map(f => F.col(f.name).cast("double"))
-    val zcol = zcodeColumn(bounds, doubles, bits,
-      useNative = df.sparkSession.catalog.functionExists("zorder_code"))
+    val zcol = zcodeColumn(bounds, doubles)
     val zname = "__graft_zorder"
     (df.withColumn(zname, zcol), zname)
   }
 
-  /** The z-code column: native [[graft.functions.ZOrderCodeExpr]] when
-    * the session carries GraftExtensions, else a bit-identical composed
-    * fallback — bucket = |{cutpoints <= v}| (NULL -> 0) via
-    * filter/size over the literal cutpoint array, then the MSB-first
-    * interleave as unrolled shift/mask arithmetic. Package-private so
-    * the differential spec can pin the two paths equal. */
+  /** The z-code column: native [[graft.functions.ZOrderCodeExpr]] over
+    * the per-column cutpoints. Package-private so the differential spec
+    * can pin it to the composed z-code. */
   private[graft] def zcodeColumn(bounds: Array[Array[Double]],
-                                 doubles: Seq[org.apache.spark.sql.Column],
-                                 bits: Int,
-                                 useNative: Boolean): org.apache.spark.sql.Column = {
+                                 doubles: Seq[org.apache.spark.sql.Column]
+                                ): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.{functions => F}
-    if (useNative)
-      F.call_function("zorder_code",
-        F.typedlit(bounds.map(_.toSeq).toSeq) +: doubles: _*)
-    else {
-      val codes = doubles.zipWithIndex.map { case (d, i) =>
-        F.coalesce(F.size(F.filter(F.typedlit(bounds(i).toSeq),
-          (x: org.apache.spark.sql.Column) => x <= d)), F.lit(0))
-      }
-      (bits - 1 to 0 by -1).flatMap { b =>
-        codes.map(c => F.shiftright(c, b).bitwiseAND(F.lit(1)).cast("long"))
-      }.reduce((acc, bit) => F.shiftleft(acc, 1).bitwiseOR(bit))
-    }
+    F.call_function("zorder_code",
+      F.typedlit(bounds.map(_.toSeq).toSeq) +: doubles: _*)
   }
 
   /** `OPTIMIZE ... ZORDER BY`: rewrite the head into z-ordered segments

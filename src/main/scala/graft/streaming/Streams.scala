@@ -376,8 +376,8 @@ object Streams {
         s"minhashCandidatesStream() requires an integral id column; '$idCol' is $other " +
         "(hash string ids to int64 upstream)")
     }
-    val bandKeys = graft.operators.Dedup.bandKeysDispatch(
-      spark, F.col(textCol), numBands, rowsPerBand, shingleN)
+    val bandKeys = graft.operators.Dedup.lshBandKeys(
+      F.col(textCol), numBands, rowsPerBand, shingleN)
     val banded = docs.filter(F.col(textCol).rlike("\\S"))
       .select(F.col(idCol).cast("long").as("id"),
         F.posexplode(bandKeys).as(Seq("band", "bucket")))
@@ -524,17 +524,13 @@ object Streams {
     def prep(df: DataFrame, text: String, id: String) =
       Dedup.spreadForCompute(df.filter(F.col(text).rlike("\\S")))
         .select(F.col(id).as("eval_id"),
-          Dedup.bandKeysDispatch(spark, F.col(text), numBands, rowsPerBand,
+          Dedup.lshBandKeys(F.col(text), numBands, rowsPerBand,
             shingleN).as("bands"),
           Dedup.sortedHashedShingles(F.col(text), shingleN).as("sh"))
     val evalPrep = prep(evalSet, evalTextCol, evalIdCol).persist(level)
     val evalBands = evalPrep.select(F.col("eval_id"),
       F.posexplode(F.col("bands")).as(Seq("band", "bucket"))).persist(level)
     val evalSh = evalPrep.select("eval_id", "sh")
-    val jac: (Column, Column) => Column =
-      if (spark.catalog.functionExists("jaccard_sorted"))
-        (a, b) => F.call_function("jaccard_sorted", a, b)
-      else Dedup.jaccard
     val qName =
       s"graft_fuzzy_decontaminate_${java.util.UUID.randomUUID().toString.take(8)}"
     val streams = spark.streams
@@ -547,7 +543,7 @@ object Streams {
         // band join against the static side; exact Jaccard confirm
         val bPrep = batch.filter(F.col(textCol).rlike("\\S"))
           .select(F.col(idCol).as("id"),
-            Dedup.bandKeysDispatch(spark, F.col(textCol), numBands,
+            Dedup.lshBandKeys(F.col(textCol), numBands,
               rowsPerBand, shingleN).as("bands"),
             Dedup.sortedHashedShingles(F.col(textCol), shingleN).as("sh"))
           .persist(level) // bands AND sh consumed below — one pass,
@@ -561,7 +557,7 @@ object Streams {
           cand
             .join(bPrep.select(F.col("id"), F.col("sh").as("sh_a")), "id")
             .join(evalSh.select(F.col("eval_id"), F.col("sh").as("sh_b")), "eval_id")
-            .withColumn("jaccard", jac(F.col("sh_a"), F.col("sh_b")))
+            .withColumn("jaccard", Dedup.jaccardSorted(F.col("sh_a"), F.col("sh_b")))
             .filter(F.col("jaccard") >= threshold)
             .select(F.col("id").as("corpus_id"), F.col("eval_id"), F.col("jaccard"))
             .repartition(1) // schema-bearing part file even for clean batches
@@ -860,17 +856,14 @@ object Streams {
     // every subsequent delta reuses the cached classes. Segment
     // skipping still sees the bounds (SegmentStats.normalize);
     // parquet row-group pruning on them is forfeited — redundant
-    // here, the bounds are implied by the equi-join keys. Falls
-    // back to inlined literals when the session lacks
-    // GraftExtensions (the function is extension-registered).
+    // here, the bounds are implied by the equi-join keys.
     def boundCondsOf(loHi: Int => (Any, Any)): Seq[String] = {
-      val wrap = spark.catalog.functionExists("stable_const")
       def lit(v: Any): String = {
         val raw = v match {
           case s: String => "'" + s + "'"
           case other => other.toString
         }
-        if (wrap) s"stable_const($raw)" else raw
+        s"stable_const($raw)"
       }
       boundable.indices.flatMap { i =>
         val (lo, hi) = loHi(i)

@@ -1,6 +1,5 @@
 package graft.trace
 
-import org.apache.spark.sql.SparkSession
 
 /** Single-query bench harness: runs named [[graft.SparkEntry.queries]]
   * entries repeatedly with per-run wall time and a per-stage breakdown —
@@ -19,17 +18,8 @@ object BenchOne {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val clean = sys.env.getOrElse("SPARK_GRAFT_CLEAN", "1") == "1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
+    val b = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    // A/B override: AQE coalesce floor, unset unless SPARK_GRAFT_MINPART is
     sys.env.get("SPARK_GRAFT_MINPART").foreach { v =>
       b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", v)
     }

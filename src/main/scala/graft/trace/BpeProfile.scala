@@ -1,6 +1,6 @@
 package graft.trace
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Isolated profiler for the BPE trainer's driver merge loop — the
   * bench's slowest entry (q279_bpe_train32k_mergeloop). Rebuilds the
@@ -21,12 +21,7 @@ object BpeProfile {
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_MERGES", "32768").toInt
     val doProfile = sys.env.getOrElse("SPARK_GRAFT_PROFILE", "1") == "1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // STAGED corpus, matching the round-16 probe redefinition: the

@@ -1,6 +1,6 @@
 package graft.trace
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Canary-context experiment: does the back-to-back canary after a
   * timed rep read elevated because of AMBIENT load, or because of the
@@ -18,13 +18,7 @@ object CanarySettle {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def canary = spark.range(0, 3200000L, 1, 32).agg(F.sum("id"))
     def canary2 = spark.range(0, 32L, 1, 32).agg(F.sum("id"))

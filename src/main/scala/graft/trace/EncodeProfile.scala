@@ -1,6 +1,6 @@
 package graft.trace
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Isolated timing for the BPE ENCODE pass (the bench's
   * q279_bpe_encode32k body): rebuilds the sweep's widened x10 corpus,
@@ -15,13 +15,7 @@ object EncodeProfile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
     val nMerges = sys.env.getOrElse("SPARK_GRAFT_MERGES", "32768").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def corpus: DataFrame = {

@@ -1,6 +1,5 @@
 package graft.trace
 
-import org.apache.spark.sql.SparkSession
 
 /** FRESH-DRIVER side of the aged-vs-fresh A/B (round-15 verdict ask
   * #1): [[graft.Bench]] forks this main in a brand-new JVM right after
@@ -30,19 +29,7 @@ object FreshApply {
     val ranges = args.drop(2).map(_.toLong).grouped(2)
       .map(a => (a(0), a(1))).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // the aged side (Bench) reads the same ProcMeters — the A/B's two

@@ -1,6 +1,6 @@
 package graft.trace
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** What does a compute canary cost right after a HEAVY probe body, and
   * what drains it? The LSH x10 probes' entry canary floors sit 2-6x
@@ -20,14 +20,7 @@ object HeavyWake {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "4").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def canary = spark.range(0, 3200000L, 1, 32).agg(F.sum("id"))
 

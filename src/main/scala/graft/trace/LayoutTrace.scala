@@ -1,6 +1,6 @@
 package graft.trace
 
-import org.apache.spark.sql.{functions => F, SparkSession}
+import org.apache.spark.sql.{functions => F}
 
 /** Isolated re-measurement of the Bench layout probes
   * (`q06_zorder_2ndcol` / `q06_linear_2ndcol` and the prune pair) on a
@@ -20,18 +20,7 @@ object LayoutTrace {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "7").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.openCostInBytes", (256L * 1024).toString)
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = java.nio.file.Files

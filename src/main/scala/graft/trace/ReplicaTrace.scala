@@ -1,7 +1,7 @@
 package graft.trace
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Replication-apply profiler: stages a small N-segment replica pair,
   * runs one 16-key source UPDATE, then times `changeFeed` +
@@ -23,19 +23,15 @@ object ReplicaTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_REPL_SHUF", "7"))
+    val spark = graft.GraftSession.builder("local[32]",
+        // experiment setting: shuffle width under test (default 7; 32
+        // matches the Bench session when chasing in-sweep-vs-idle gaps)
+        sys.env.getOrElse("SPARK_GRAFT_REPL_SHUF", "7").toInt)
+      // experiment setting: split open cost under test, default Spark's
+      // 4 MB rather than GraftSession's 256 KB
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_REPL_OPENCOST",
           (4L * 1024 * 1024).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     @volatile var jobs = 0

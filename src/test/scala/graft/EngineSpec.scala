@@ -1583,27 +1583,33 @@ class EngineSpec extends SparkSpec {
       Versioned.commit(df, ds)
       Versioned.commit(df.filter($"id" < 0), ds) // second (empty) segment
 
-      // the two z-code implementations are bit-identical
+      // the native z-code is bit-identical to the composed one: bucket =
+      // |{cutpoints <= v}| (NULL -> 0) via filter/size over the literal
+      // cutpoints, then the MSB-first interleave as shift/mask arithmetic
       val bits = 8
       val nCuts = (1 << bits) - 1
       val probs = (1 to nCuts).map(_.toDouble / (nCuts + 1)).toArray
       val bounds = df.stat.approxQuantile(Array("x", "y"), probs, 0.001)
       val doubles = Seq(F.col("x").cast("double"), F.col("y").cast("double"))
+      val composed = {
+        val codes = doubles.zipWithIndex.map { case (d, i) =>
+          F.coalesce(F.size(F.filter(F.typedlit(bounds(i).toSeq),
+            (x: org.apache.spark.sql.Column) => x <= d)), F.lit(0))
+        }
+        (bits - 1 to 0 by -1).flatMap { b =>
+          codes.map(c => F.shiftright(c, b).bitwiseAND(F.lit(1)).cast("long"))
+        }.reduce((acc, bit) => F.shiftleft(acc, 1).bitwiseOR(bit))
+      }
       val diff = df
-        .withColumn("zn", Versioned.zcodeColumn(bounds, doubles, bits, useNative = true))
-        .withColumn("zc", Versioned.zcodeColumn(bounds, doubles, bits, useNative = false))
+        .withColumn("zn", Versioned.zcodeColumn(bounds, doubles))
+        .withColumn("zc", composed)
         .filter($"zn" =!= $"zc").count()
       assert(diff == 0L)
-      // NULL buckets to 0 on both paths
-      val nulled = Seq((null.asInstanceOf[java.lang.Integer], 1))
+      // NULL buckets to 0 on both
+      val zNull = Seq((null.asInstanceOf[java.lang.Integer], 1))
         .toDF("x", "y")
-      val zNull = nulled.select(
-        Versioned.zcodeColumn(bounds,
-          Seq(F.col("x").cast("double"), F.col("y").cast("double")),
-          bits, useNative = true).as("zn"),
-        Versioned.zcodeColumn(bounds,
-          Seq(F.col("x").cast("double"), F.col("y").cast("double")),
-          bits, useNative = false).as("zc")).collect().head
+        .select(Versioned.zcodeColumn(bounds, doubles).as("zn"),
+          composed.as("zc")).collect().head
       assert(zNull.getLong(0) == zNull.getLong(1))
 
       // the dialect statement: rewrites (no one-segment short-circuit),

@@ -747,6 +747,32 @@ class OperatorsSpec extends SparkSpec {
     assert(soloOut == Map(1L -> 0L, 2L -> 0L))
   }
 
+  test("duplicated n-gram removal: a null-id doc casts no vote at any minDocs") {
+    // docs 1 and 2 share "a b c" with the null-id doc: only 2 non-null
+    // docs hold it. Doc 3 shares "q r s" with the null-id doc alone.
+    val withNull = Seq(
+      (Some(1L), "a b c x"),
+      (Some(2L), "y a b c"),
+      (Some(3L), "q r s t"),
+      (None, "a b c q r s")
+    ).toDF("doc_id", "text")
+    val nonNull = withNull.filter(F.col("doc_id").isNotNull)
+    def removals(df: org.apache.spark.sql.DataFrame, minDocs: Int) =
+      Dedup.removeDuplicatedNgrams(df, "text", "doc_id", n = 3, minDocs = minDocs)
+        .collect().map(r => (Option(r.get(0)), r.getString(1), r.getLong(2))).toSet
+    Seq(2, 3).foreach { minDocs =>
+      val got = removals(withNull, minDocs)
+      assert(got.filter(_._1.nonEmpty) == removals(nonNull, minDocs),
+        s"minDocs = $minDocs")
+      // the null-id doc itself passes through untouched
+      assert(got.filter(_._1.isEmpty) == Set((None, "a b c q r s", 0L)))
+    }
+    // "a b c" is in 2 non-null docs: removed at minDocs = 2 only
+    assert(removals(nonNull, 2).map(r => r._1 -> r._3).toMap ==
+      Map(Some(1L) -> 3L, Some(2L) -> 3L, Some(3L) -> 0L))
+    assert(removals(nonNull, 3).forall(_._3 == 0L))
+  }
+
   test("image aHash: hand-computed bits on an 8x8 image; visual near-dups found") {
     // 8x8 image → 1x1 blocks, cells ARE the pixels: gradient 0..63,
     // mean = 31, bits set exactly where pixel > 31 (indices 32..63)
@@ -1357,23 +1383,21 @@ class OperatorsSpec extends SparkSpec {
     assert(r.getString(3).length == 32)
   }
 
-  test("docSignals (fused, both modes) matches stand-alone qualityScore + langId exactly") {
+  test("docSignals matches stand-alone qualityScore + langId exactly") {
     val cases = docs.union(Seq(
       (10L, ""), (11L, "   "), (12L, "der der und ist die"),
       (13L, "le le les et est"), (14L, "el la los es es"),
       (15L, "a.b,c!d?e;f:g punctuation! heavy,,,")
     ).toDF("doc_id", "text"))
-    Seq(false, true).foreach { native =>
-      val sig = TextAnalysis.docSignals(F.col("text"), native = native)
-      val cmp = cases.select(
-        TextAnalysis.qualityScore(F.col("text")).as("q1"),
-        sig.getField("quality").as("q2"),
-        TextAnalysis.langId(F.col("text")).as("l1"),
-        sig.getField("lang_guess").as("l2")).collect()
-      cmp.foreach { r =>
-        assert(r.getDouble(0) == r.getDouble(1), s"quality (native=$native): $r")
-        assert(r.getString(2) == r.getString(3), s"lang (native=$native): $r")
-      }
+    val sig = TextAnalysis.docSignals(F.col("text"))
+    val cmp = cases.select(
+      TextAnalysis.qualityScore(F.col("text")).as("q1"),
+      sig.getField("quality").as("q2"),
+      TextAnalysis.langId(F.col("text")).as("l1"),
+      sig.getField("lang_guess").as("l2")).collect()
+    cmp.foreach { r =>
+      assert(r.getDouble(0) == r.getDouble(1), s"quality: $r")
+      assert(r.getString(2) == r.getString(3), s"lang: $r")
     }
   }
 
@@ -1657,11 +1681,13 @@ class OperatorsSpec extends SparkSpec {
       centroids, cbs, k = 5, nprobe = 1)
     assert(fromCodes.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       inflight.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-    // the composable element_at route over stored codes matches too
-    val composable = Similarity.pqTopKFromCodes(spark, path, "vec_id", query,
-      centroids, cbs, k = 5, nprobe = 1, native = false)
-    assert(composable.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
-      fromCodes.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    // native pq_adc over the STORED codes ≡ the composable LUT-lookup sum,
+    // bit-for-bit, on every row of every bucket
+    val adc = spark.read.parquet(path).select(
+      adcNative(F.col("codes"), adcLut(query, cbs)).as("n"),
+      adcComposable(F.col("codes"), adcLut(query, cbs)).as("c")).collect()
+    assert(adc.length == 40)
+    adc.foreach(r => assert(r.getDouble(0) == r.getDouble(1), s"adc: $r"))
     // partition-level pruning AND a vector-free read schema: the scan
     // reads codes, never embeddings
     val plan = fromCodes.queryExecution.executedPlan.toString
@@ -1763,12 +1789,41 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  /** A PQ query's exact sub-distance table, lut(s)(c) =
+    * ‖q_sub(s) − codebook(s)(c)‖², summed in element order. */
+  private def adcLut(query: Seq[Double],
+                     cbs: Seq[Seq[Seq[Double]]]): Seq[Seq[Double]] = {
+    val subdim = cbs.head.head.length
+    cbs.zipWithIndex.map { case (cb, s) =>
+      cb.map(code => (0 until subdim).foldLeft(0.0) { (acc, j) =>
+        val d = query(s * subdim + j) - code(j); acc + d * d
+      })
+    }
+  }
+
+  private def lutLit(lut: Seq[Seq[Double]]) =
+    F.array(lut.map(row => F.array(row.map(F.lit): _*)): _*)
+
+  private def adcNative(codes: org.apache.spark.sql.Column,
+                        lut: Seq[Seq[Double]]) =
+    F.call_function("pq_adc", codes, lutLit(lut))
+
+  /** The composable ADC reference: m LUT lookups summed in subspace order. */
+  private def adcComposable(codes: org.apache.spark.sql.Column,
+                            lut: Seq[Seq[Double]]) =
+    lut.indices.map { s =>
+      F.element_at(F.element_at(lutLit(lut), s + 1), F.element_at(codes, s + 1) + 1)
+    }.reduce(_ + _)
+
   test("native gram_pos_hashes matches the composable positional hashes exactly") {
     val docs = Seq(
       (0L, Seq("a", "b", "a", "b", "c")),
       (1L, Seq("the", "the", "the")),
       (2L, Seq("x", "y")),
-      (3L, Seq("ünï", "cöde", "ünï", "cöde"))
+      (3L, Seq("ünï", "cöde", "ünï", "cöde")),
+      // null elements: skipped in the join, exactly as concat_ws skips them
+      (4L, Seq("a", null, "b", "c")),
+      (5L, Seq(null, null, "x", null))
     ).toDF("id", "toks")
     Seq(1, 2, 3).foreach { n =>
       val cmp = docs.filter(F.size(F.col("toks")) >= n).select(F.col("id"),
@@ -2105,12 +2160,16 @@ class OperatorsSpec extends SparkSpec {
         Similarity.pqCodesComposable(F.col("embedding"), cbs).as("c"))
       .collect()
     assert(both.forall(r => r.getSeq[Int](0) == r.getSeq[Int](1)))
-    // the composable ADC route (native = false) lands the same top-k —
-    // the extension-free fallback stays exercised
-    val composableTop = Similarity.pqTopKAdc(vecs, "embedding", "vec_id",
-      query = Seq(1.0, 2.0), cbs, k = 3, native = false)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(composableTop.toSeq == top.toSeq)
+    // native pq_adc ≡ the composable LUT-lookup sum over the composable
+    // codes, row by row (the distances the top-k above ranks)
+    val lut = adcLut(Seq(1.0, 2.0), cbs)
+    val adc = vecs.select(F.col("vec_id"),
+        adcNative(Similarity.pqCodes(F.col("embedding"), cbs), lut).as("n"),
+        adcComposable(Similarity.pqCodesComposable(F.col("embedding"), cbs), lut)
+          .as("c"))
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2))))
+      .toMap
+    assert(adc == Map(1L -> ((0.0, 0.0)), 2L -> ((5.0, 5.0)), 3L -> ((5.0, 5.0))))
     // a null vector FAILS the native path loudly (a null distance would
     // rank first in ascending top-k — never silently)
     val withNull = Seq((9L, null: Seq[Float])).toDF("vec_id", "embedding")

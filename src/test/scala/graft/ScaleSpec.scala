@@ -690,12 +690,6 @@ class ScaleSpec extends SparkSpec {
         composable.as("c"))
       .collect()
     both.foreach(r => assert(r.getSeq[Int](0) == r.getSeq[Int](1)))
-    // whole-operator equivalence: native = false forces the composable
-    // chunker; same chunks
-    def rows(native: Boolean) =
-      Pack.cdcChunks(docs, "text", "doc_id", k = 3, modulus = 16, native)
-        .collect().map(_.toSeq).toSet
-    assert(rows(true) == rows(false))
   }
 
   test("CDC chunks reconstruct the stream and realign after an edit") {
