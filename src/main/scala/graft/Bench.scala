@@ -1603,7 +1603,7 @@ object Bench {
     // carry by reference) vs re-copying the snapshot (cost ∝ 2× the
     // whole table). Round 12 measured the pair at 6M rows where
     // apply's fixed constant swamped the asymptotics and apply LOST
-    // 4.6×; round-13 instrumentation (GRAFT_MERGE_TRACE) confirmed the
+    // 4.6×; round-13 per-step MERGE wall tracing confirmed the
     // constant is multi-statement planning + the job-count floor —
     // FLAT in table size at fixed segment size — while recopy scales
     // linearly (measured 2.4 s at 18M, 4.3 s at 36M), so the volume
@@ -2412,7 +2412,7 @@ object Bench {
         "(feed read + net-effect MERGE) vs re-copying the snapshot " +
         "(full read + full write); apply cost = a fixed driver-" +
         "planning constant (flat in table size at fixed segment " +
-        "size — GRAFT_MERGE_TRACE breaks it down; round 14 cut the " +
+        "size — the named MERGE jobs break it down; round 14 cut the " +
         "16-row apply from ~4.5s/34 jobs to ~2.0-2.3s at the full " +
         "72M/128-segment probe volume on an idle box, ReplicaTrace " +
         "MULT=12 NSEG=128: the match-pair rollup rides the " +
@@ -2443,7 +2443,7 @@ object Bench {
         "not cache eviction (drop_caches=3 before isolated reps " +
         "penalizes ONLY the first rep ~+1.8s, later reps self-rewarm " +
         "to 2.3-2.6s, while in-sweep reps sit FLAT at 3.6s), and " +
-        "GRAFT_MERGE_TRACE shows every step inflated UNIFORMLY ~1.5x " +
+        "per-step MERGE tracing showed every step inflated UNIFORMLY ~1.5x " +
         "(planning+scheduling, not one hot I/O). The same aging " +
         "inflates recopy ~2.4x (2.6-3.0s cold-cache idle vs 6.7s " +
         "in-sweep), so the pair ordering and the crossover story are " +

@@ -24,19 +24,6 @@ import graft.sources.Tables
   */
 final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) {
 
-  /** Wall-clock trace of the MERGE path's sequential steps, gated by
-    * `GRAFT_MERGE_TRACE=1` — the instrument that localized the
-    * statement's fixed driver-planning cost (round 13). */
-  private val mergeTrace = sys.env.get("GRAFT_MERGE_TRACE").contains("1")
-  private var mtLast = 0L
-  private def mtrace(tag: String): Unit = if (mergeTrace) {
-    val now = System.nanoTime()
-    if (tag != "begin" && mtLast != 0L)
-      System.err.println(
-        f"[merge-trace] $tag%-22s ${(now - mtLast) / 1e9}%7.3f s")
-    mtLast = now
-  }
-
   /** Driver-side (rows, bytes) of a PLAIN `.parquet` file/dir — the
     * MERGE small-source gate's metadata probe: a recursive listing plus
     * footer record counts, KB-sized reads, no Spark job. `None` when
@@ -75,8 +62,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       // file only, matching default (mergeSchema=false) semantics.
       var schema: Option[org.apache.spark.sql.types.StructType] = None
       val rows = files.iterator.map { f =>
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+        val rdr = graft.sources.Tables.openParquet(conf, f)
         try {
           if (schema.isEmpty)
             schema = Option(rdr.getFooter.getFileMetaData
@@ -1157,7 +1143,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           StructField("version", LongType, nullable = false),
           StructField("n_updated", LongType, nullable = false)))))
     case MergeRe(target, taliasOpt, rest) =>
-      mtrace("begin")
       scalarCache.clear()
       import org.apache.spark.sql.{functions => F}
       val resolved = Tables.resolve(target, baseDir)
@@ -1318,9 +1303,9 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       // describe the same snapshot
       val hv = graft.sources.Versioned.headVersion(spark, resolved)
       val head = graft.sources.Versioned.read(spark, resolved, Some(hv))
-      mtrace("head read")
       (graft.sources.Versioned.ReservedProvenanceCols ++
-          graft.sources.Versioned.CdcReservedCols :+ "__srid").foreach { c =>
+          graft.sources.Versioned.CdcReservedCols ++
+          Seq("__srid", "__trow")).foreach { c =>
         if (head.columns.contains(c) || srcFrame.df.columns.contains(c))
           throw new SemanticError(s"MERGE: reserved column name '$c'")
       }
@@ -1341,29 +1326,35 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       // forces shuffle joins however small it is.
       val tDf =
         graft.sources.Versioned.readWithProvenance(spark, resolved, Some(hv))
-      val sDf =
-        if (srcSmall) {
+      val srcRows: Option[Array[Row]] =
+        if (!srcSmall) None
+        else {
           // injected sources skip even the collect — their rows are
           // already on the driver (LocalTableScan collect would be
           // driver-side anyway, but this keeps it allocation-free)
           val rows = srcInjected.map(_._1).getOrElse(srcFrame.df.collect())
-          val schema = srcFrame.df.schema.add("__srid",
-            org.apache.spark.sql.types.LongType, nullable = false)
-          val data = rows.zipWithIndex.map { case (r, i) =>
-            Row.fromSeq(r.toSeq :+ i.toLong) }
-          // a BARE LocalRelation, not coalesce(1)-wrapped: under
-          // withSmallStmtConfs the leaf executes single-task anyway,
-          // and an unwrapped LocalTableScan under a BroadcastExchange
-          // is collected driver-side with ZERO scheduler jobs, where
-          // the Coalesce wrapper forced a 1-task job per broadcast
-          // build (5 per statement in the round-18 apply census).
-          spark.createDataFrame(
-            java.util.Arrays.asList(data: _*), schema)
-        } else srcFrame.df
+          Some(rows.zipWithIndex.map { case (r, i) =>
+            Row.fromSeq(r.toSeq :+ i.toLong) })
+        }
+      val sDf = srcRows match {
+        // a BARE LocalRelation, not coalesce(1)-wrapped: under
+        // withSmallStmtConfs the leaf executes single-task anyway, where
+        // the Coalesce wrapper forced a 1-task job per broadcast build
+        case Some(data) => spark.createDataFrame(java.util.Arrays.asList(
+          data: _*), srcFrame.df.schema.add("__srid",
+            org.apache.spark.sql.types.LongType, nullable = false))
+        case None => srcFrame.df
           .withColumn("__srid", F.monotonically_increasing_id())
           .localCheckpoint(true)
-      mtrace("provenance + src ckpt")
-      val scope = Map(tName -> GraftFrame.fromDF(tDf),
+      }
+      // the target row rides the match query as ONE struct column, so
+      // the dialect never has to name (or quote) the target's columns;
+      // an insert-only MERGE needs only the matched source ids
+      val tScoped =
+        if (matchedClauses.isEmpty) tDf
+        else tDf.withColumn("__trow",
+          F.struct(head.schema.fieldNames.toSeq.map(F.col): _*))
+      val scope = Map(tName -> GraftFrame.fromDF(tScoped),
         sName -> GraftFrame.fromDF(sDf))
       // validate every clause's SET column names against the target
       matchedClauses.foreach {
@@ -1374,11 +1365,14 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
         case MergeDel(_) => ()
       }
       // one internal dialect query joins the aliased frames on the
-      // user's condition and projects row ids + per-clause condition
-      // flags + SET values; its parsed expressions are then checked
-      // for subqueries (same rule as UPDATE/DELETE — no defined
-      // evaluation scope for them here). A clause with no AND
-      // condition projects a literal TRUE flag (0 = 0).
+      // user's condition and projects the matched TARGET ROW (its
+      // columns and provenance) + the source row id + per-clause
+      // condition flags + SET values — everything the rewrite and the
+      // change rows need, so neither re-reads and re-joins the target.
+      // Its parsed expressions are then checked for subqueries (same
+      // rule as UPDATE/DELETE — no defined evaluation scope for them
+      // here). A clause with no AND condition projects a literal TRUE
+      // flag (0 = 0).
       val clauseCondSql = matchedClauses.zipWithIndex.map { case (cl, i) =>
         val c = cl match {
           case MergeUpd(c0, _) => c0
@@ -1392,7 +1386,10 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
             s", ($rhs) AS __set_${i}_$j" }.mkString
       }.mkString
       val matchedSql =
-        s"SELECT $talias.__file AS __file, $talias.__pos AS __pos, " +
+        "SELECT " +
+          (if (matchedClauses.isEmpty) "" else s"$talias.__trow AS __trow, ") +
+          s"$talias.__file AS __file, " +
+          s"$talias.__pos AS __pos, " +
           s"$talias.__seg AS __seg, $salias.__srid AS __srid" +
           clauseCondSql + setSql +
           s" FROM $tName $talias JOIN $sName $salias ON $condText"
@@ -1403,7 +1400,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           throw new SemanticError(
             "MERGE expressions cannot contain subqueries")
       }
-      // pairs = matched-row provenance + flags + SET values ONLY — this
+      // pairs = matched target rows + flags + SET values — this
       // checkpoint pins a frame bounded by the match count, never the
       // target's size (the round-9 verdict's MERGE-profile fix).
       // __win = index of the FIRST clause whose condition holds for the
@@ -1414,153 +1411,53 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
         F.lit(null).cast("int")) { (i, acc) =>
         F.when(F.col(s"__m_$i"), F.lit(i)).otherwise(acc)
       }
-      // manifest metadata needed by both the classic and the fused
-      // construction below — driver-side, KB-sized
+      // manifest metadata for the rewrite — driver-side, KB-sized
       val segsAll =
         graft.sources.Versioned.headSegments(spark, resolved, Some(hv))
       val dvMap = graft.sources.Versioned.readDvMap(spark, resolved, hv)
-      val innerDf = evalCompound(matchedCq, scope).df
-      // ONE-SCAN FUSION (round 18, apply-floor work — the r17 ledger's
-      // named next move): the classic plan scans the bounds-pruned
-      // target TWICE — once for the match join (pairs), once to
-      // re-read the affected segments for the survivor/change-feed
-      // frame. When the source is small (broadcast-shaped) and the
-      // pruned scan is provably small (selectedPartitions bytes from
-      // the ALREADY-PLANNED inner join — driver-only, the file index
-      // is warm), scan the candidate segments ONCE via a LEFT OUTER
-      // join against the broadcast source and persist that: pairs,
-      // survivors and the change feed all derive from the cached
-      // blocks. The bounds cannot ride the LEFT join's ON clause into
-      // the scan (outer-join semantics keep unmatched left rows), so
-      // candidate segments are taken from the inner plan's pruned file
-      // set instead — the exact same segment-skipping decision. Falls
-      // back to the classic two-scan plan whenever the pruned scan is
-      // large (`graft.merge.fusedScanBytes`, default 256 MB on-disk):
-      // persisting a wide-bounds scan would trade a streamed broadcast
-      // join for block-manager pressure.
-      val fusedCandidates: Option[Seq[String]] =
-        if (!srcSmall || matchedClauses.isEmpty) None
-        else try {
-          val scans = innerDf.queryExecution.executedPlan
-            .collectLeaves().collect {
-              case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-            }
-          // the TARGET's data scan: every file sits at data/<seg>/<f>.
-          // (A deletion-vector sidecar scan, if any, is not it.)
-          def paths(s: org.apache.spark.sql.execution.FileSourceScanExec) =
-            s.selectedPartitions.toPartitionArray
-              .map(_.filePath.toPath).distinct
-          val dataScans = scans.filter { s =>
-            val fs = paths(s)
-            fs.nonEmpty && fs.forall { p =>
-              val gp = p.getParent.getParent
-              gp != null && gp.getName == "data"
-            }
-          }
-          if (dataScans.length != 1) None
-          else {
-            val bytes = dataScans.head.selectedPartitions.totalFileSize
-            val cap = spark.conf.getOption("graft.merge.fusedScanBytes")
-              .map(_.toLong).getOrElse(Engine.MergeFusedScanBytes)
-            if (bytes > cap) None
-            else {
-              val cand = paths(dataScans.head)
-                .map(_.getParent.getName).toSet
-              val ordered = segsAll.filter(cand)
-              if (ordered.isEmpty) None else Some(ordered)
-            }
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
       // the checkpoint's row count rides the SAME job via observe() —
       // zero extra actions — and a small match set (the common DML /
       // replication-apply case) is then collected into a LocalRelation:
-      // the byWin rollup below becomes driver-side Scala instead of a
-      // two-shuffle aggregation query, and every downstream join
-      // against `pairs` (affected-segment flagging, insert anti-join)
-      // broadcasts it instead of shuffling
+      // the byWin rollup below becomes driver-side Scala, the fired
+      // positions become an in-scan filter of the rewrite, and the
+      // insert side needs no shuffle
       val pairsObs = new org.apache.spark.sql.Observation()
-      val (pairsCkpt, fusedFlagged) = fusedCandidates match {
-        case Some(candSegs) =>
-          val scanDf = graft.sources.Versioned.readSegmentsAligned(
-            spark, resolved, candSegs, head.schema, dvMap)
-          val fusedScope = Map(tName -> GraftFrame.fromDF(scanDf),
-            sName -> scope(sName))
-          // same condition/flag/SET texts as the inner query (already
-          // subquery-validated above) — only the join type and the
-          // projection width differ
-          val fusedSql = "SELECT " +
-            head.schema.fieldNames.map(c => s"$talias.$c AS $c")
-              .mkString(", ") +
-            s", $talias.__file AS __file, $talias.__pos AS __pos, " +
-            s"$talias.__seg AS __seg, $salias.__srid AS __srid" +
-            clauseCondSql + setSql +
-            s" FROM $tName $talias LEFT JOIN $sName $salias ON $condText"
-          // __win masked to matched rows: with a LEFT join a clause
-          // condition over source columns alone (e.g. `s.x IS NULL`)
-          // could otherwise "fire" on an unmatched row
-          val flagged0 = evalCompound(
-            SqlParser.parseCompound(fusedSql), fusedScope).df
-            .withColumn("__win",
-              F.when(F.col("__srid").isNotNull, winCol)
-                .otherwise(F.lit(null).cast("int")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val mFlagCols = matchedClauses.indices.map(i => s"__m_$i")
-          val setCols = matchedClauses.zipWithIndex.collect {
-            case (MergeUpd(_, as), i) =>
-              as.indices.map(j => s"__set_${i}_$j")
-          }.flatten
-          val p = flagged0.filter(F.col("__srid").isNotNull)
-            .select((Seq("__file", "__pos", "__seg", "__srid") ++
-              mFlagCols ++ setCols ++ Seq("__win")).map(F.col): _*)
-            .observe(pairsObs, F.count(F.lit(1)).as("n"))
-            .localCheckpoint(true)
-          (p, Some(flagged0))
-        case None =>
-          val p = innerDf
+      val (pairsCkpt, pairsLocal) =
+        Engine.withJobDescription(spark, "MERGE: match scan") {
+          val m = evalCompound(matchedCq, scope).df
+          val p = (if (matchedClauses.isEmpty) m
+              else m.select(F.col("__trow.*") +: m.columns.toSeq
+                .filter(_ != "__trow").map(F.col): _*))
             .withColumn("__win", winCol)
             .observe(pairsObs, F.count(F.lit(1)).as("n"))
             .localCheckpoint(true)
-          (p, None)
-      }
-      val nPairs: Option[Long] =
-        try Some(scala.concurrent.Await
-          .result(pairsObs.future,
-            scala.concurrent.duration.Duration("30s")).getLong(0))
-        catch { case _: java.util.concurrent.TimeoutException => None }
-      // row cap scaled down for wide rows (many SET columns of wide
-      // types): the driver copy stays bounded in BYTES, not just rows
-      val pairRowCap = {
-        val rowW = math.max(8,
-          pairsCkpt.schema.fields.map(_.dataType.defaultSize).sum)
-        math.min(Engine.MergeSmallMatchRows,
-          Engine.MergeSmallMatchBytes / rowW)
-      }
-      val pairsLocal: Option[Array[Row]] =
-        if (nPairs.exists(_ <= pairRowCap)) Some(pairsCkpt.collect())
-        else None
+          val nPairs: Option[Long] =
+            try Some(scala.concurrent.Await
+              .result(pairsObs.future,
+                scala.concurrent.duration.Duration("30s")).getLong(0))
+            catch { case _: java.util.concurrent.TimeoutException => None }
+          (p, if (nPairs.exists(_ <= Engine.smallMatchRowCap(p.schema)))
+            Some(p.collect()) else None)
+        }
       val pairs: org.apache.spark.sql.DataFrame = pairsLocal match {
+        // a bare LocalRelation, like sDf
         case Some(rows) => spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), pairsCkpt.schema)
-          // bare LocalRelation — see sDf: single-task under the
-          // pinned leaf parallelism, zero-job broadcast builds
         case None => pairsCkpt
       }
-      mtrace("match join + ckpt")
       // per-clause-kind action counts; bounded by the match count
       val updIdxs = matchedClauses.zipWithIndex.collect {
         case (MergeUpd(_, _), i) => i }
       val delIdxs = matchedClauses.zipWithIndex.collect {
         case (MergeDel(_), i) => i }
-      // ONE aggregation job over the (match-count-bounded,
-      // checkpointed) pairs frame yields BOTH the standard cardinality
-      // check (a target row matching two source rows has no defined
-      // UPDATE/DELETE result — fail loudly, never pick one; insert-only
-      // merges are exempt, matching Delta/Postgres) AND the per-clause
-      // action counts + affected-segment set: first a per-target-row
-      // rollup (max multiplicity is the cardinality witness), then the
-      // per-winning-clause rollup over it. Fused because each separate
-      // action pays the full driver planning floor — at a 16-row
-      // replication apply that floor, not the data, was the cost.
+      // ONE rollup over the (match-count-bounded, checkpointed) pairs
+      // yields BOTH the standard cardinality check (a target row
+      // matching two source rows has no defined UPDATE/DELETE result —
+      // fail loudly, never pick one; insert-only merges are exempt,
+      // matching Delta/Postgres) AND the per-clause action counts +
+      // affected-segment set: first a per-target-row rollup (max
+      // multiplicity is the cardinality witness), then the
+      // per-winning-clause rollup over it.
       // rollup shape either way: (winning clause index or None,
       // target-row count, max per-target-row multiplicity, segments)
       val winStats: Seq[(Option[Int], Long, Long, Set[String])] =
@@ -1597,12 +1494,9 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
                 r.getAs[Long]("c"), r.getAs[Long]("maxc"),
                 r.getSeq[String](3).toSet))
         }
-      mtrace("byWin collect")
-      if (winStats.exists(_._3 > 1L)) {
-        fusedFlagged.foreach(_.unpersist(false))
+      if (winStats.exists(_._3 > 1L))
         throw new SemanticError("MERGE: a target row matches more than " +
           "one source row — the ON condition must match at most one")
-      }
       // NULL __win = matched rows where no clause fired (they stay
       // as-is): counted for cardinality above, excluded from actions
       val firedStats = winStats.filter(_._1.isDefined)
@@ -1617,37 +1511,9 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       // MERGE rewrites nothing at all: at 100 TB a one-row upsert costs
       // one segment (plus the match join), not a full-table copy.
       val affected: Set[String] = firedStats.flatMap(_._4).toSet
-      // affected segments' rows, flagged with each row's winning
-      // clause — survivors AND the change-feed rows derive from it.
-      // FUSED plan: a cached filter of the one-scan frame (affected ⊆
-      // candidates by construction — pairs came from that scan).
-      // CLASSIC plan: re-read the affected segments and join the pairs
-      // back on provenance. PERSISTED either way (memory-and-disk,
-      // bounded by the candidate/affected segments — data the
-      // statement rewrites anyway): three downstream actions consume
-      // it; unpersisted after the commit.
-      val flaggedAll: Option[org.apache.spark.sql.DataFrame] =
-        if (affected.isEmpty) { fusedFlagged.foreach(_.unpersist(false)); None }
-        else fusedFlagged match {
-          case Some(f0) =>
-            Some(f0.filter(F.col("__seg").isInCollection(affected)))
-          case None => Some(graft.sources.Versioned
-            .readSegmentsAligned(spark, resolved,
-              segsAll.filter(affected), head.schema, dvMap)
-            .join(pairs.drop("__srid", "__seg"),
-              Seq("__file", "__pos"), "left")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        }
-      // the handle whose unpersist actually frees the cached blocks
-      // (Dataset.unpersist on a filter CHILD of the persisted fused
-      // frame would be a silent no-op)
-      val flaggedPinned: Option[org.apache.spark.sql.DataFrame] =
-        fusedFlagged.orElse(flaggedAll)
-      // per-clause CASE projection on the winning index — applied to
-      // survivors and to the feed's update postimages alike. Exposed
-      // as bare columns too, so the change feed can evaluate pre- and
-      // postimage in ONE pass over the cached flagged frame (struct
-      // fields) instead of one plan leg per image kind.
+      // per-clause CASE projection on the winning index — what turns a
+      // fired UPDATE pair into its postimage, for the fresh segment
+      // and the change rows alike
       val updatedCols: Seq[org.apache.spark.sql.Column] =
         head.schema.fields.toSeq.map { f =>
           val updsOnField = matchedClauses.zipWithIndex.collect {
@@ -1665,36 +1531,64 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
                 .otherwise(acc)
           }.as(f.name)
         }
-      def projectUpdated(df: org.apache.spark.sql.DataFrame) =
-        df.select(updatedCols: _*)
-      val survivors: Option[org.apache.spark.sql.DataFrame] =
-        flaggedAll.map { f0 =>
-          // rows won by a DELETE clause drop; everything else projects
-          // with per-clause CASE on the winning index
-          val kept =
-            if (delIdxs.isEmpty) f0
-            else f0.filter(F.col("__win").isNull ||
-              !F.col("__win").isInCollection(delIdxs))
-          projectUpdated(kept)
+      val headCols = head.schema.fieldNames.toSeq.map(F.col)
+      // ONE-PASS REWRITE of the affected segments: their rows read
+      // through the deletion-vector filter with the FIRED positions
+      // added to it (the rows no clause touched come through as they
+      // are), plus the UPDATE postimages straight from the pairs.
+      // DELETE-won rows are simply absent. No re-join of the pairs to
+      // the target, nothing persisted. A match set over the collect
+      // cap excludes its fired positions with the shuffled anti join
+      // the over-cap vectors use.
+      val fired = pairs.filter(F.col("__win").isNotNull)
+      val kept: Option[org.apache.spark.sql.DataFrame] =
+        if (affected.isEmpty) None
+        else Some((pairsLocal match {
+          case Some(rows) =>
+            val (fi, pi, wi) = (pairsCkpt.schema.fieldIndex("__file"),
+              pairsCkpt.schema.fieldIndex("__pos"),
+              pairsCkpt.schema.fieldIndex("__win"))
+            graft.sources.Versioned.readSegmentsAligned(spark, resolved,
+              segsAll.filter(affected), head.schema, dvMap,
+              excluded = graft.functions.DeletedPositions.of(
+                rows.iterator.filterNot(_.isNullAt(wi))
+                  .map(r => (r.getString(fi), r.getLong(pi)))))
+          case None =>
+            graft.sources.DeletionVectors.antiJoin(
+              graft.sources.Versioned.readSegmentsAligned(spark, resolved,
+                segsAll.filter(affected), head.schema, dvMap),
+              fired)
+        }).select(headCols: _*))
+      val postimages: Option[org.apache.spark.sql.DataFrame] =
+        if (affected.isEmpty || updIdxs.isEmpty) None
+        else Some(fired.filter(F.col("__win").isInCollection(updIdxs))
+          .select(updatedCols: _*))
+      // the source rows no pair matched: with the source and the pairs
+      // both on the driver, a driver-side filter (no anti join, so no
+      // broadcast job in the rewrite or the change rows); else the
+      // anti join. WHEN NOT MATCHED [AND cond] then filters them — the
+      // condition compiles against the SOURCE alias only (there is no
+      // target row to reference — standard restriction)
+      val unmatched: org.apache.spark.sql.DataFrame =
+        (srcRows, pairsLocal) match {
+          case (Some(data), Some(rows)) =>
+            val si = pairsCkpt.schema.fieldIndex("__srid")
+            val hit = rows.iterator.map(_.getLong(si)).toSet
+            spark.createDataFrame(java.util.Arrays.asList(
+              data.filterNot(r => hit(r.getLong(r.length - 1))): _*),
+              sDf.schema)
+          case _ => sDf.join(pairs.select("__srid"), Seq("__srid"), "left_anti")
         }
-      // WHEN NOT MATCHED [AND cond]: the condition compiles against the
-      // SOURCE alias only (there is no target row to reference —
-      // standard restriction) and filters the anti-joined source rows
-      val insertKeep: Option[org.apache.spark.sql.DataFrame] =
-        insertCond.map { c =>
-          val keepCq = SqlParser.parseCompound(
-            s"SELECT $salias.__srid AS __srid FROM $sName $salias WHERE $c")
-          (keepCq.head.where.toSeq ++ keepCq.head.select.map(_.expr))
-            .foreach { e =>
-              if (collectScalarSubs(e).nonEmpty || containsInSubquery(e))
-                throw new SemanticError(
-                  "MERGE expressions cannot contain subqueries")
-            }
-          evalCompound(keepCq, scope).df
+      val insertSrc = insertCond.fold(unmatched) { c =>
+        val keepCq = SqlParser.parseCompound(
+          s"SELECT * FROM $sName $salias WHERE $c")
+        keepCq.head.where.foreach { e =>
+          if (collectScalarSubs(e).nonEmpty || containsInSubquery(e))
+            throw new SemanticError(
+              "MERGE expressions cannot contain subqueries")
         }
-      def withInsertCond(df: org.apache.spark.sql.DataFrame) =
-        insertKeep.fold(df)(keep =>
-          df.join(keep, Seq("__srid"), "left_semi"))
+        evalCompound(keepCq, Map(sName -> GraftFrame.fromDF(unmatched))).df
+      }
       val inserts: Option[org.apache.spark.sql.DataFrame] =
         if (insertStar) {
           head.columns.foreach { c =>
@@ -1702,10 +1596,8 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
               s"MERGE INSERT *: source lacks target column '$c' — use " +
               "INSERT (cols) VALUES (exprs) to map explicitly")
           }
-          Some(withInsertCond(
-            sDf.join(pairs.select("__srid"), Seq("__srid"), "left_anti"))
-            .select(head.schema.fields.map(f =>
-              F.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*))
+          Some(insertSrc.select(head.schema.fields.map(f =>
+            F.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*))
         } else insertCols.map { case (cols, vals) =>
           if (cols.length != vals.length) throw new SemanticError(
             s"MERGE INSERT: ${cols.length} columns but ${vals.length} values")
@@ -1725,23 +1617,20 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
               throw new SemanticError(
                 "MERGE expressions cannot contain subqueries")
           }
-          withInsertCond(evalCompound(insCq, scope).df
-            .join(pairs.select("__srid"), Seq("__srid"), "left_anti"))
+          evalCompound(insCq, Map(sName -> GraftFrame.fromDF(insertSrc))).df
             .select(head.schema.fields.map { f =>
               if (cols.contains(f.name))
                 F.col(s"__ins_${f.name}").cast(f.dataType).as(f.name)
               else F.lit(null).cast(f.dataType).as(f.name)
             }.toSeq: _*)
         }
-      mtrace("clauses compiled")
       // survivor count is KNOWN from metadata alone: live rows of the
       // affected segments (footer totals − dv header counts, KB-sized
       // reads) minus the rows a DELETE clause won — when positive the
       // fresh union below is provably non-empty and the write skips
-      // writeSegmentIfNonEmpty's take(1) probe, which would otherwise
-      // pay the FIRST full materialization of the persisted
-      // affected-segment join just to learn what the footers already
-      // say. Also reused for the nInserted status row below.
+      // writeSegmentIfNonEmpty's take(1) probe, a second scan just to
+      // learn what the footers already say. Also reused for the
+      // nInserted status row below.
       val liveAffected: Long =
         if (affected.isEmpty) 0L
         else {
@@ -1755,57 +1644,43 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
         }
       val survivorsNonEmpty = liveAffected - nDeleted > 0
       // new version = untouched segments carried by reference + one
-      // fresh segment holding rewritten survivors and inserted rows
-      val fresh = try {
-        (survivors.toSeq ++ inserts.toSeq)
-        .reduceOption(_ unionAll _)
-        .flatMap { df =>
-          if (survivorsNonEmpty)
-            Some(graft.sources.Versioned.writeSegment(df, resolved))
-          else graft.sources.Versioned.writeSegmentIfNonEmpty(df, resolved)
-        }
-      } catch { case e: Throwable =>
-        flaggedPinned.foreach(_.unpersist(false)); throw e
-      }
-      mtrace("fresh segment write")
-      // everything from here through the commit runs under ONE
-      // unpersist guard: the metadata jobs below can throw (a transient
-      // FS error in a footer walk), and a leak window between the
-      // fresh-write catch and the commit finally would pin the
-      // persisted affected-segment join in the block manager for the
-      // session's lifetime
-      val (nInserted: Long, v: Long) = try {
-        // nInserted DERIVED from metadata, not a second execution of
-        // the source anti-join (`inserts.count()` re-ran a source-sized
-        // plan just for the status row — at a 100 TB-source backfill
-        // upsert that is a full second pass): fresh-segment rows
-        // (sidecar/footer) minus the survivor rows of the affected
-        // segments, where survivors = live rows (footer totals − dv
-        // header counts) − rows won by DELETE clauses. All exact, all
-        // KB-sized reads.
-        val nIns: Long =
-          if (inserts.isEmpty) 0L
-          else {
-            val freshRows = fresh.fold(0L)(s =>
-              graft.sources.Versioned.segmentRowCount(spark, resolved, s))
-            freshRows - (liveAffected - nDeleted)
+      // fresh segment holding the affected segments' kept rows, the
+      // postimages and the inserted rows, written in ONE job
+      val fresh = Engine.withJobDescription(spark, "MERGE: rewrite") {
+        (kept.toSeq ++ postimages.toSeq ++ inserts.toSeq)
+          .reduceOption(_ unionAll _)
+          .flatMap { df =>
+            if (survivorsNonEmpty)
+              Some(graft.sources.Versioned.writeSegment(df, resolved))
+            else graft.sources.Versioned.writeSegmentIfNonEmpty(df, resolved)
           }
-        mtrace("inserts count (metadata)")
-      // change-feed rows, per fired clause kind. An insert-only MERGE
-      // records nothing: its fresh segment holds ONLY inserts, which
-      // the feed synthesizes lazily from the segment delta (CdcNone).
-      val cdcSpec: graft.sources.Versioned.CdcSpec = flaggedAll match {
-        case None => graft.sources.Versioned.CdcNone
-        case Some(f0) =>
-          // ONE pass over the cached flagged frame for every
-          // row-derived image kind (round 18): each fired row emits
-          // its change rows as an exploded array of structs —
-          // [preimage, postimage] for update wins, [delete] for
-          // delete wins — where the previous shape ran one plan leg
-          // (and one cached-scan stage) per image kind, 3 legs × N
-          // cache partitions of tasks per statement. Values are
-          // identical (same projections, same rows); only the file
-          // row order changes, which no feed consumer observes (the
+      }
+      // nInserted DERIVED from metadata, not a second execution of the
+      // source anti-join (`inserts.count()` re-ran a source-sized plan
+      // just for the status row — at a 100 TB-source backfill upsert
+      // that is a full second pass): fresh-segment rows (sidecar/footer)
+      // minus the survivor rows of the affected segments, where
+      // survivors = live rows (footer totals − dv header counts) − rows
+      // won by DELETE clauses. All exact, all KB-sized reads.
+      val nInserted: Long =
+        if (inserts.isEmpty) 0L
+        else {
+          val freshRows = fresh.fold(0L)(s =>
+            graft.sources.Versioned.segmentRowCount(spark, resolved, s))
+          freshRows - (liveAffected - nDeleted)
+        }
+      // change-feed rows, per fired clause kind, from the same pairs.
+      // An insert-only MERGE records nothing: its fresh segment holds
+      // ONLY inserts, which the feed synthesizes lazily from the
+      // segment delta (CdcNone).
+      val cdcSpec: graft.sources.Versioned.CdcSpec =
+        if (affected.isEmpty) graft.sources.Versioned.CdcNone
+        else {
+          // ONE pass over the fired pairs for every row-derived image
+          // kind: each fired row emits its change rows as an exploded
+          // array of structs — [preimage, postimage] for update wins,
+          // [delete] for delete wins. Row order within the files is
+          // unspecified, which no feed consumer observes (the
           // net-effect apply orders by _commit_version/_change_type,
           // the oracle compares row sets).
           def tagged(cols: Seq[org.apache.spark.sql.Column], tag: String) =
@@ -1822,20 +1697,19 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
             else F.when(F.col("__win").isInCollection(updIdxs),
                 F.array(pre, post))
               .otherwise(F.array(del))
-          val rowImages = f0
-            .filter(F.col("__win").isInCollection(updIdxs ++ delIdxs))
+          val rowImages = fired
             .select(F.explode(arr).as("__c"))
             .select("__c.*")
           val parts = Seq(rowImages) ++
             inserts.map(i => graft.sources.Versioned.cdcTag(i, "insert"))
           graft.sources.Versioned.CdcRows(
             parts.reduce(_.unionByName(_)))
-      }
-        (nIns, graft.sources.Versioned.commitPruned(spark, resolved,
+        }
+      val v = Engine.withJobDescription(spark, "MERGE: change rows") {
+        graft.sources.Versioned.commitPruned(spark, resolved,
           segsAll.filterNot(affected), fresh, head.schema, dvMap,
-          cdc = cdcSpec, expectedBase = Some(hv), op = "merge"))
-      } finally flaggedPinned.foreach(_.unpersist(false))
-      mtrace("cdc + commit")
+          cdc = cdcSpec, expectedBase = Some(hv), op = "merge")
+      }
       import org.apache.spark.sql.types.{LongType, StructField, StructType}
       GraftFrame.fromDF(spark.createDataFrame(
         java.util.List.of(Row(v, nUpdated, nDeleted, nInserted)),
@@ -3412,7 +3286,7 @@ object Engine {
       "spark.sql.leafNodeDefaultParallelism" -> "1",
       // leafNodeDefaultParallelism is also files.minPartitionNum's
       // default, which would glue a whole delta-sized segment scan
-      // into ONE task (measured: the fused match join tripled).
+      // into ONE task (measured: the match join tripled).
       // A modest explicit floor keeps small scans parallel while the
       // statement's LocalRelations stay single-task; big scans split
       // by maxPartitionBytes regardless.
@@ -3428,22 +3302,35 @@ object Engine {
   private[graft] val MergeSmallSourceRows = 65536L
   private[graft] val MergeSmallSourceBytes = 16L * 1024 * 1024
 
-  /** MERGE small-match gate: a match set at or under this many rows
+  /** Small-match gate: a MERGE match set at or under this many rows
     * (the observed checkpoint count — exact, no extra job) is
-    * collected so the cardinality/action rollup runs driver-side and
-    * downstream joins against it broadcast. The row cap is scaled
-    * down for wide pair rows so the driver copy is also bounded by
-    * [[MergeSmallMatchBytes]] of schema-estimated width. */
+    * collected so the cardinality/action rollup runs driver-side, its
+    * fired positions filter the rewrite inside the scan, and
+    * downstream joins against it broadcast; a vectored UPDATE/DELETE
+    * under it builds its vectors and change rows on the driver. The
+    * row cap is scaled down for wide rows (see [[smallMatchRowCap]]). */
   private[graft] val MergeSmallMatchRows = 65536L
   private[graft] val MergeSmallMatchBytes = 32L * 1024 * 1024
 
-  /** MERGE one-scan fusion gate (round 18): a small-source statement
-    * whose bounds-pruned target scan is at or under this many ON-DISK
-    * bytes (read off the planned inner join's selectedPartitions —
-    * driver-only) scans the candidate segments ONCE via a LEFT join
-    * and persists the result for pairs + survivors + change feed.
-    * Past the gate, the classic two-scan plan streams instead of
-    * persisting. Conf-overridable (`graft.merge.fusedScanBytes`) for
-    * cluster memory profiles. */
-  private[graft] val MergeFusedScanBytes = 256L * 1024 * 1024
+  /** The small-match row cap for rows of `schema`:
+    * [[MergeSmallMatchRows]], scaled down for wide rows so the driver
+    * copy also stays within [[MergeSmallMatchBytes]] of schema-estimated
+    * width. Shared by MERGE's pairs and the vectored DML's matched rows. */
+  private[graft] def smallMatchRowCap(
+      schema: org.apache.spark.sql.types.StructType): Long = {
+    val rowW = math.max(8, schema.fields.map(_.dataType.defaultSize).sum)
+    math.min(MergeSmallMatchRows, MergeSmallMatchBytes / rowW)
+  }
+
+  /** Run `body` with its Spark jobs labelled `desc` (the job
+    * description the UI, event log and listeners show), restoring the
+    * caller's label after — so stages say which statement step spawned
+    * them. */
+  private[graft] def withJobDescription[T](spark: SparkSession,
+      desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
 }

@@ -4,7 +4,11 @@ import java.io.{DataInputStream, DataOutputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.graft.ExprColumn
+
+import graft.functions.{DeletedPositions, LiveRowExpr}
 
 /** DELETION VECTORS — merge-on-read DELETE for [[Versioned]] datasets
   * (the Delta/Iceberg v2 positional-delete model): instead of
@@ -12,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * tiny sidecar of deleted row POSITIONS (the same parquet
   * `_metadata.file_path`/`row_index` identity the copy-on-write DML
   * already keys on) and the version's manifest maps segments to their
-  * vectors. Reads anti-join the vector positions away; OPTIMIZE (and
-  * any rewrite touching the segment) MATERIALIZES them — fresh
+  * vectors. Reads drop the vectored positions inside the scan;
+  * OPTIMIZE (and any rewrite touching the segment) MATERIALIZES
+  * them — fresh
   * segments never carry vectors. At 100 TB this is the difference
   * between a takedown of 100 documents costing 100 segment rewrites
   * (~100 GB of writes) and costing ~100 KB of position lists.
@@ -23,13 +28,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * name and sorted positions. Vectors are per-SEGMENT (positions keyed
   * by part-file name, which is unique within a segment's directory).
   *
-  * The read-side application is an ANTI JOIN on (file, position) —
-  * exactly how Iceberg's Spark reader applies positional deletes: no
-  * UDFs, no custom physical operators, broadcast when the vector is
-  * small, a plain shuffled anti join when a pathological vector is
-  * not. Row-group/segment SKIPPING stays correct unmodified: deletes
-  * only remove rows, so every stats bound remains a valid
-  * over-approximation.
+  * The read side applies them the way Delta and Iceberg readers apply
+  * position deletes: as a per-file row filter inside the reader, not as
+  * a join. The snapshot's vectors are read on the driver into per-file
+  * position sets that ride a [[LiveRowExpr]] predicate over
+  * `_metadata.file_path`/`row_index` — no extra job, no join, no
+  * per-row string work. Vectors past [[InScanBytes]] on disk are parsed
+  * in tasks and anti-joined instead, shuffled. Row-group/segment
+  * SKIPPING stays correct unmodified: deletes only remove rows, so
+  * every stats bound remains a valid over-approximation.
   */
 object DeletionVectors {
 
@@ -89,45 +96,89 @@ object DeletionVectors {
     } finally in.close()
   }
 
-  /** The deleted-position set of a snapshot as a two-column frame
-    * `(__dvkey = "<seg>/<fileName>", __dvpos)` — vectors parse in
-    * TASKS (one per vector), so a wide manifest's vectors never stream
-    * through the driver. */
-  private[sources] def positionsDf(spark: SparkSession, path: String,
-                                   dvMap: Map[String, String]): DataFrame = {
-    val entries = dvMap.toSeq
-    val rows = spark.sparkContext
-      .parallelize(entries, math.min(math.max(entries.size, 1), 64))
-      .flatMap { case (seg, dvName) =>
-        read(new Configuration(), path, dvName).iterator.flatMap {
-          case (file, ps) => ps.iterator.map(p => (s"$seg/$file", p))
-        }
-      }
-    spark.createDataFrame(rows).toDF("__dvkey", "__dvpos")
+  /** On-disk vector bytes up to which a snapshot's vectors are read on
+    * the driver and applied inside the scan — 8 bytes a position, so
+    * ~4M positions. Past it, reads keep the shuffled anti join. */
+  private[graft] val InScanBytes = 32L * 1024 * 1024
+
+  /** The vectors of `dvMap` (segment → vector file), read on the driver
+    * into one position set keyed `<segment>/<file name>`. */
+  private[graft] def positions(spark: SparkSession, path: String,
+      dvMap: Map[String, String]): DeletedPositions = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    new DeletedPositions(dvMap.iterator.flatMap { case (seg, dv) =>
+      read(conf, path, dv).iterator.map { case (f, ps) => s"$seg/$f" -> ps }
+    }.toMap)
   }
 
-  /** Apply a snapshot's vectors to a provenance-tagged frame (must
-    * carry `__file`/`__pos`/`__seg`): anti-join the deleted positions
-    * away. Broadcast when the vectors are small (their on-disk size is
-    * known from the manifest listing — 8 bytes a row, so the usual
-    * takedown-sized vector broadcasts); a huge vector degrades to a
-    * shuffled anti join rather than a driver OOM. */
-  private[sources] def applyTo(tagged: DataFrame, spark: SparkSession,
-                               path: String,
-                               dvMap: Map[String, String]): DataFrame = {
-    if (dvMap.isEmpty) return tagged
+  /** The live-row predicate over a file-path and a row-index column,
+    * by name (dotted names reach into structs, as in `F.col`). */
+  private[graft] def live(deleted: DeletedPositions, file: String,
+                          pos: String): Column =
+    ExprColumn(LiveRowExpr(deleted, UnresolvedAttribute.quotedString(file),
+      UnresolvedAttribute.quotedString(pos)))
+
+  /** Keep the rows of `df` that no vector in `dvMap` deletes and that
+    * `extra` does not list. `file`/`pos` are the rows' part-file path
+    * and row index (`__file`/`__pos` on a provenance-tagged frame, the
+    * `_metadata` fields on a bare relation). Up to [[InScanBytes]] of
+    * vectors this is one [[LiveRowExpr]] filter: no job, no join, and
+    * the scan needs no provenance strings. Larger vectors are parsed in
+    * tasks and anti-joined, shuffled, as a broadcast would not fit. */
+  private[graft] def applyTo(df: DataFrame, spark: SparkSession,
+      path: String, dvMap: Map[String, String],
+      extra: DeletedPositions = DeletedPositions.empty,
+      file: String = "__file", pos: String = "__pos"): DataFrame = {
+    if (dvMap.isEmpty && extra.isEmpty) return df
     val fs = new Path(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val dvBytes = dvMap.valuesIterator.map { n =>
       fs.getFileStatus(new Path(s"$path/dv", n)).getLen
     }.sum
-    val dv0 = positionsDf(spark, path, dvMap)
-    val dv = if (dvBytes <= 32L * 1024 * 1024) F.broadcast(dv0) else dv0
-    tagged
-      .withColumn("__dvkey", F.concat(F.col("__seg"), F.lit("/"),
-        F.element_at(F.split(F.col("__file"), "/"), -1)))
-      .withColumn("__dvpos", F.col("__pos"))
-      .join(dv, Seq("__dvkey", "__dvpos"), "left_anti")
+    if (dvBytes <= InScanBytes)
+      df.filter(live(positions(spark, path, dvMap).union(extra), file, pos))
+    else {
+      val kept = antiJoin(df, distributedPositions(spark, path, dvMap),
+        file, pos)
+      if (extra.isEmpty) kept else kept.filter(live(extra, file, pos))
+    }
+  }
+
+  /** Drop the rows of `df` whose (`file`, `pos`) appear as
+    * (`__file`, `__pos`) in `excluded` — a provenance-tagged frame, or
+    * vector positions with `__file` = `<seg>/<file name>`. Both sides
+    * key on the last two path components. A shuffled anti join, for
+    * position sets too large to hold on the driver. */
+  private[graft] def antiJoin(df: DataFrame, excluded: DataFrame,
+      file: String = "__file", pos: String = "__pos"): DataFrame = {
+    def key(f: String) = {
+      val parts = F.split(F.col(f), "/")
+      F.concat(F.element_at(parts, -2), F.lit("/"), F.element_at(parts, -1))
+    }
+    df.withColumn("__dvkey", key(file))
+      .withColumn("__dvpos", F.col(pos))
+      .join(excluded.select(key("__file").as("__dvkey"),
+        F.col("__pos").as("__dvpos")), Seq("__dvkey", "__dvpos"), "left_anti")
       .drop("__dvkey", "__dvpos")
+  }
+
+  /** A snapshot's vectors as a `(__file, __pos)` frame parsed in
+    * TASKS (one per vector), under the session's Hadoop conf. */
+  private def distributedPositions(spark: SparkSession, path: String,
+      dvMap: Map[String, String]): DataFrame = {
+    val entries = dvMap.toSeq
+    // ship the SESSION's Hadoop conf: a bare `new Configuration()` in a
+    // task loses spark.hadoop.* settings such as s3a credentials
+    val confBc = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    val rows = spark.sparkContext
+      .parallelize(entries, math.min(math.max(entries.size, 1), 64))
+      .flatMap { case (seg, dvName) =>
+        read(confBc.value.value, path, dvName).iterator.flatMap {
+          case (file, ps) => ps.iterator.map(p => (s"$seg/$file", p))
+        }
+      }
+    spark.createDataFrame(rows).toDF("__file", "__pos")
   }
 }

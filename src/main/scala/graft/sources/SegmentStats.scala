@@ -141,8 +141,7 @@ object SegmentStats {
         var bloomOk: Boolean = true)
     val acc = scala.collection.mutable.LinkedHashMap.empty[String, Acc]
     files.foreach { f =>
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      val rdr = Tables.openParquet(conf, f)
       try {
         rows += rdr.getRecordCount
         rdr.getRowGroups.asScala.foreach { rg =>

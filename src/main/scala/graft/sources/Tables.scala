@@ -202,6 +202,28 @@ object Tables {
                       rowsPerBlock: Int = 2 * 1024 * 1024): Unit =
     BlockFile.append(df, path, rowsPerBlock)
 
+  /** Open a parquet file's footer with read options from `conf`.
+    * Parquet's option-less `open` builds a fresh Hadoop Configuration
+    * per call, which re-reads every default and site XML resource: in
+    * a JFR profile of 100-row MERGEs into a 200k-row table on a 4-core
+    * box, about half of the statement's driver CPU. */
+  private[graft] def openParquet(conf: org.apache.hadoop.conf.Configuration,
+      file: org.apache.hadoop.fs.Path): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
+  /** Total rows of the parquet part files directly under `dir`, from
+    * their footers (KB-sized reads, no job). */
+  private[graft] def parquetRows(conf: org.apache.hadoop.conf.Configuration,
+      dir: org.apache.hadoop.fs.Path): Long =
+    dir.getFileSystem(conf).listStatus(dir).iterator
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val rdr = openParquet(conf, st.getPath)
+        try rdr.getRecordCount finally rdr.close()
+      }.sum
+
   /** Per-column statistics from parquet FOOTERS ALONE — row counts,
     * null counts, numeric min/max — without decoding a single data
     * page: the at-scale companion to the dialect's `SUMMARIZE` (which
@@ -240,10 +262,8 @@ object Tables {
         import scala.jdk.CollectionConverters._
         // a fresh Configuration resolves local and default-FS paths;
         // a deployment on an authenticated store threads its conf here
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f),
-            new org.apache.hadoop.conf.Configuration()))
+        val rdr = openParquet(new org.apache.hadoop.conf.Configuration(),
+          new org.apache.hadoop.fs.Path(f))
         try {
           val acc = scala.collection.mutable.LinkedHashMap
             .empty[String, (Long, Option[Long], Option[Double], Option[Double])]

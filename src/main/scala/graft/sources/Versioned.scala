@@ -558,17 +558,9 @@ object Versioned {
         // the recorded change-row count rides the header (from the
         // just-written footers — driver-side metadata, no job): what
         // DESCRIBE HISTORY surfaces as each DML version's impact
-        val n = try {
-          fs.listStatus(new Path(s"$path/_cdc/$name"))
-            .filter(st => st.isFile &&
-              st.getPath.getName.endsWith(".parquet"))
-            .map { st =>
-              val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                  st.getPath, spark.sparkContext.hadoopConfiguration))
-              try rdr.getRecordCount finally rdr.close()
-            }.sum
-        } catch { case scala.util.control.NonFatal(_) => -1L }
+        val n = try Tables.parquetRows(spark.sparkContext.hadoopConfiguration,
+            new Path(s"$path/_cdc/$name"))
+          catch { case scala.util.control.NonFatal(_) => -1L }
         Some(s"#cdc $name $n")
     }
     val txnLine = txn.map { case (app, batchId) =>
@@ -737,18 +729,9 @@ object Versioned {
     // reads, no job) — lets callers decide survivor emptiness from
     // arithmetic instead of a take(1) probe job (round 18; the same
     // shortcut the MERGE path's liveAffected uses)
-    val n = try {
-      val fs = new Path(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new Path(dir))
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              st.getPath, spark.sparkContext.hadoopConfiguration))
-          try rdr.getRecordCount finally rdr.close()
-        }.sum
-    } catch { case scala.util.control.NonFatal(_) => -1L }
+    val n = try Tables.parquetRows(spark.sparkContext.hadoopConfiguration,
+        new Path(dir))
+      catch { case scala.util.control.NonFatal(_) => -1L }
     // explicit schema: an empty match writes no part files to infer from
     (dir, spark.read.schema(df.schema).parquet(dir), n)
   }
@@ -787,9 +770,7 @@ object Versioned {
     * row consults instead of re-executing a data-sized plan. */
   private[graft] def segmentRowCount(spark: SparkSession, path: String,
       seg: String): Long =
-    SegmentStats.read(spark, path, seg).map(_.rows)
-      .getOrElse(footerRowCountBySeg(spark, path, Seq(seg))
-        .valuesIterator.sum)
+    footerRowCountBySeg(spark, path, Seq(seg))(seg)
 
   /** Exact PER-SEGMENT row counts from parquet footers: ONE distributed
     * job does both the per-segment listing and the footer walks (one
@@ -804,30 +785,22 @@ object Versioned {
     * distributed walks. Runnable inside an executor task. */
   private def footerCountOneSeg(
       conf: org.apache.hadoop.conf.Configuration,
-      path: String, seg: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/data/$seg")
-    val fs = p.getFileSystem(conf)
-    fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            st.getPath, conf))
-        try rdr.getRecordCount finally rdr.close()
-      }.sum
-  }
+      path: String, seg: String): Long =
+    Tables.parquetRows(conf, new Path(s"$path/data/$seg"))
 
   private[graft] def footerRowCountBySeg(spark: SparkSession, path: String,
       segs: Seq[String]): Map[String, Long] = {
     if (segs.isEmpty) return Map.empty
-    // a HANDFUL of segments walks driver-side (a few KB-sized round
-    // trips beat a Spark job's scheduling floor — the MERGE/DML
-    // rewrite asks for exactly its affected segments, usually one);
-    // the distributed job remains the many-segment path per the
-    // scaladoc's O(1)-driver-round-trips contract
-    if (segs.length <= 4) {
+    // up to 32 segments count driver-side — each segment's stats
+    // sidecar (one KB-sized read) or, without one, its footers: a few
+    // small round trips beat a Spark job's scheduling floor (the DML
+    // and MERGE status counts ask for their affected segments); the
+    // distributed job remains the many-segment path per the scaladoc's
+    // O(1)-driver-round-trips contract
+    if (segs.length <= 32) {
       val conf = spark.sparkContext.hadoopConfiguration
-      return segs.map(s => s -> footerCountOneSeg(conf, path, s)).toMap
+      return segs.map(s => s -> SegmentStats.read(spark, path, s)
+        .map(_.rows).getOrElse(footerCountOneSeg(conf, path, s))).toMap
     }
     val confBc = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
@@ -1119,9 +1092,8 @@ object Versioned {
   private[graft] def readWithProvenance(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame = {
     val (rel, _, v) = openRelation(spark, path, version)
-    // provenance FIRST, vectors second: the anti join needs the
-    // (file, pos) identity, and a DML's detection pass must never see
-    // (or re-delete) an already-vectored row
+    // a DML's detection pass must never see (or re-delete) an
+    // already-vectored row
     DeletionVectors.applyTo(withProvenance(rel), spark, path,
       readDvMap(spark, path, v))
   }
@@ -1131,11 +1103,15 @@ object Versioned {
     * widening append serve explicit NULLs for the evolved columns, so
     * a pruned rewrite's projections — compiled against the head schema
     * — resolve regardless of which schema generation the touched
-    * segments carry. */
+    * segments carry. `excluded` adds positions to drop on top of the
+    * segments' vectors, in the same in-scan filter (how MERGE leaves
+    * out the rows its clauses rewrote). */
   private[graft] def readSegmentsAligned(
       spark: SparkSession, path: String, segs: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
-      dvMap: Map[String, String] = Map.empty): DataFrame = {
+      dvMap: Map[String, String] = Map.empty,
+      excluded: graft.functions.DeletedPositions =
+        graft.functions.DeletedPositions.empty): DataFrame = {
     import org.apache.spark.sql.{functions => F}
     require(segs.nonEmpty, "readSegmentsAligned needs >= 1 segment")
     // EXPLICIT target schema, not mergeSchema inference (round 18,
@@ -1155,7 +1131,7 @@ object Versioned {
     // (Set lookup — Seq.contains per dv is O(dvs × segments).)
     val segSet = segs.toSet
     DeletionVectors.applyTo(aligned, spark, path,
-      dvMap.filter { case (s, _) => segSet.contains(s) })
+      dvMap.filter { case (s, _) => segSet.contains(s) }, excluded)
   }
 
   /** Copy-on-write DELETE: commit a new version holding the head's rows
@@ -1263,13 +1239,14 @@ object Versioned {
     * the MATCHED ROW COUNT (position lists), not to the affected
     * segments' size. The right half of the delete spectrum: a
     * takedown of scattered single rows at 100 TB. Vectors union with
-    * any prior vector on the same segment; the vector build runs in
-    * tasks grouped by segment (matched positions never stream through
-    * the driver); [[compact]]/OPTIMIZE and any COW rewrite of the
-    * segment later materialize them. Returns the new version. */
+    * any prior vector on the same segment. A matched set within the
+    * small-match cap builds its vectors and change rows on the driver;
+    * a larger one is staged and its vectors build in tasks grouped by
+    * segment (see [[withMatchedVectors]]). [[compact]]/OPTIMIZE and any COW
+    * rewrite of the segment later materialize them. Returns the new
+    * version. */
   def deleteWhereVectored(spark: SparkSession, path: String,
                           predicate: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.{functions => F}
     val hv = headVersion(spark, path)
     val segsAll = headSegments(spark, path, Some(hv))
     val headSchema = read(spark, path, Some(hv)).schema
@@ -1290,24 +1267,77 @@ object Versioned {
             f.condition.sql)
       case _ => ()
     }
-    // ONE detection scan, staged: the vector build and the change-feed
-    // rows both read the matched-row-sized staging file
-    val (stagingDir, staged, _) = stageMatched(detection, path)
-    try {
-      val newEntries = buildVectors(spark, path, staged, dvOld)
+    withMatchedVectors(detection, path, dvOld) { (matched, newEntries) =>
       if (newEntries.isEmpty) commitSegments(spark, path, segsAll, dvOld,
         expectedBase = Some(hv), op = "delete-vectored")
       else commitSegments(spark, path, segsAll, dvOld ++ newEntries,
-        cdc = CdcRows(cdcTag(staged, "delete")),
+        cdc = CdcRows(cdcTag(matched, "delete")),
         expectedBase = Some(hv), op = "delete-vectored")
-    } finally fsOf(spark, path).delete(new Path(stagingDir), true)
+    }
+  }
+
+  /** Pin a vectored DML's matched rows (provenance-tagged) with ONE
+    * scan whose row count rides the same job, build their vectors, and
+    * run `body(matched rows, segment → new vector file)`. Within MERGE's
+    * small-match cap the rows come to the driver: vectors are built and
+    * written there and `body` gets a one-partition local frame — no
+    * staging round-trip, no shuffle. Past it the rows are staged to
+    * parquet ([[stageMatched]]) and the vectors build in tasks
+    * ([[buildVectors]]); the staging dir is deleted after `body`. */
+  private def withMatchedVectors[T](matched: DataFrame, path: String,
+      dvOld: Map[String, String])(
+      body: (DataFrame, Map[String, String]) => T): T = {
+    import org.apache.spark.sql.{functions => F}
+    val spark = matched.sparkSession
+    val obs = new org.apache.spark.sql.Observation()
+    val pinned = matched.observe(obs, F.count(F.lit(1)).as("n"))
+      .localCheckpoint(true)
+    val n: Option[Long] =
+      try Some(scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration("30s")).getLong(0))
+      catch { case _: java.util.concurrent.TimeoutException => None }
+    if (n.exists(_ <= graft.Engine.smallMatchRowCap(matched.schema))) {
+      val rows = pinned.collect()
+      val conf = spark.sparkContext.hadoopConfiguration
+      val Seq(fi, pi, si) =
+        Seq("__file", "__pos", "__seg").map(matched.schema.fieldIndex)
+      // vectors key positions by part-file name, the path's last part
+      def fileName(r: org.apache.spark.sql.Row) = {
+        val f = r.getString(fi)
+        f.substring(f.lastIndexOf('/') + 1)
+      }
+      val newEntries = rows.groupBy(_.getString(si)).map { case (seg, rs) =>
+        seg -> publishVector(conf, path, seg, dvOld.get(seg),
+          rs.toSeq.groupMap(fileName)(_.getLong(pi)))
+      }
+      body(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        matched.schema).coalesce(1), newEntries)
+    } else {
+      val (dir, staged, _) = stageMatched(pinned, path)
+      try body(staged, buildVectors(spark, path, staged, dvOld))
+      finally fsOf(spark, path).delete(new Path(dir), true)
+    }
+  }
+
+  /** Publish a segment's new vector: its prior vector (if any) ∪ the
+    * newly deleted positions per part-file name. Returns the file name.
+    * Runs on the driver or inside a task. */
+  private def publishVector(conf: org.apache.hadoop.conf.Configuration,
+      path: String, seg: String, prior: Option[String],
+      added: Map[String, Iterable[Long]]): String = {
+    val old = prior.map(DeletionVectors.read(conf, path, _))
+      .getOrElse(Map.empty[String, Array[Long]])
+    DeletionVectors.write(conf, path, seg, (old.keySet ++ added.keySet).map {
+      f => f -> (old.getOrElse(f, Array.emptyLongArray) ++
+        added.getOrElse(f, Nil)).distinct.sorted
+    }.toMap)
   }
 
   /** Per-segment vector build in tasks from a provenance-tagged frame
     * of matched rows: hash-cluster by segment, each task unions its
     * segments' positions with any prior vector and publishes a fresh
     * one; only (segment → vector name) pairs return to the driver.
-    * Shared by the vectored DELETE and UPDATE. */
+    * The staged path of the vectored DELETE and UPDATE. */
   private def buildVectors(spark: SparkSession, path: String,
       matched: DataFrame,
       dvOld: Map[String, String]): Map[String, String] = {
@@ -1336,15 +1366,7 @@ object Versioned {
       }
       val conf = confBc.value.value
       bySeg.iterator.map { case (seg, files) =>
-        val prior: Map[String, Array[Long]] = dvOld.get(seg)
-          .map(DeletionVectors.read(conf, path, _))
-          .getOrElse(Map.empty)
-        val merged = (prior.keySet ++ files.keySet).map { f =>
-          f -> (prior.getOrElse(f, Array.empty[Long]) ++
-            files.get(f).map(_.toArray).getOrElse(Array.empty[Long]))
-            .distinct.sorted
-        }.toMap
-        seg -> DeletionVectors.write(conf, path, seg, merged)
+        seg -> publishVector(conf, path, seg, dvOld.get(seg), files.toMap)
       }
     }.collect().toMap
   }
@@ -1354,9 +1376,10 @@ object Versioned {
     * positional-delete-plus-append shape. Write cost is proportional
     * to the MATCHED ROWS (position lists + their rewritten copies),
     * never to the segments that hold them: the scattered-update dual
-    * of [[deleteWhereVectored]]. `sets` maps column name → replacement
-    * expression (already cast to the committed type by the caller).
-    * Returns (new version, rows updated). */
+    * of [[deleteWhereVectored]], with the same driver and staged paths.
+    * `sets` maps column name → replacement expression (already cast to
+    * the committed type by the caller). Returns (new version, rows
+    * updated). */
   def updateWhereVectored(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)]): (Long, Long) = {
@@ -1384,45 +1407,39 @@ object Versioned {
             s"for the replacement rows): ${f.condition.sql}")
       case _ => ()
     }
-    // ONE detection scan, staged: the vector build, the replacement
-    // rows, and the change-feed pre/postimages all read the
-    // matched-row-sized staging file, never the table again
-    val (stagingDir, staged, _) = stageMatched(matched, path)
-    try {
-      val newEntries = buildVectors(spark, path, staged, dvOld)
+    withMatchedVectors(matched, path, dvOld) { (m, newEntries) =>
       if (newEntries.isEmpty)
-        return (commitSegments(spark, path, segsAll, dvOld,
+        (commitSegments(spark, path, segsAll, dvOld,
           expectedBase = Some(hv), op = "update-vectored"), 0L)
-      // the replacement rows: every matched row with assignments applied
-      val replacements = staged.select(headSchema.fields.map { f =>
-        sets.find(_._1 == f.name) match {
-          case Some((_, rhs)) => rhs.cast(f.dataType).as(f.name)
-          case None => F.col(f.name)
-        }
-      }.toSeq: _*)
-      // non-empty vectors imply >= 1 matched row implies non-empty
-      // replacements — the take(1) emptiness probe was provably
-      // redundant here (round 18)
-      val fresh = Some(writeSegment(replacements, path))
-      val v = commitSegments(spark, path, segsAll ++ fresh.toSeq,
-        dvOld ++ newEntries,
-        cdc = CdcRows(cdcTag(staged, "update_preimage")
-          .unionByName(cdcTag(replacements, "update_postimage"))),
-        expectedBase = Some(hv), op = "update-vectored")
-      // updated count from vector headers: new total minus old total —
-      // metadata, not a scan. Untouched segments cancel out of the
-      // difference, so only TOUCHED segments' vectors are read (and
-      // through batched dvCounts: the old double full pass opened
-      // every vector in the table twice, serially, on the driver —
-      // O(table vectors) round trips for a one-row update)
-      val touched = newEntries.keySet
-      val names = (newEntries.values ++ dvOld.collect {
-        case (s, d) if touched.contains(s) => d }).toSeq.distinct
-      val counts = dvCounts(spark, path, names)
-      def total(m: Map[String, String]) = m.collect {
-        case (s, d) if touched.contains(s) => counts(d) }.sum
-      (v, total(dvOld ++ newEntries) - total(dvOld))
-    } finally fsOf(spark, path).delete(new Path(stagingDir), true)
+      else {
+        // the replacement rows: every matched row with assignments
+        // applied. Non-empty vectors imply >= 1 matched row, so the
+        // segment is written without an emptiness probe
+        val replacements = m.select(headSchema.fields.map { f =>
+          sets.find(_._1 == f.name) match {
+            case Some((_, rhs)) => rhs.cast(f.dataType).as(f.name)
+            case None => F.col(f.name)
+          }
+        }.toSeq: _*)
+        val fresh = writeSegment(replacements, path)
+        val v = commitSegments(spark, path, segsAll :+ fresh,
+          dvOld ++ newEntries,
+          cdc = CdcRows(cdcTag(m, "update_preimage")
+            .unionByName(cdcTag(replacements, "update_postimage"))),
+          expectedBase = Some(hv), op = "update-vectored")
+        // updated count from vector headers: new total minus old total
+        // — metadata, not a scan. Untouched segments cancel out of the
+        // difference, so only TOUCHED segments' vectors are read,
+        // through batched dvCounts
+        val touched = newEntries.keySet
+        val names = (newEntries.values ++ dvOld.collect {
+          case (s, d) if touched.contains(s) => d }).toSeq.distinct
+        val counts = dvCounts(spark, path, names)
+        def total(m: Map[String, String]) = m.collect {
+          case (s, d) if touched.contains(s) => counts(d) }.sum
+        (v, total(dvOld ++ newEntries) - total(dvOld))
+      }
+    }
   }
 
   /** On-disk byte size per segment: serial `getContentSummary` up to a
@@ -2143,16 +2160,17 @@ object Versioned {
     * actually planned to read (`lastSegmentsRead` /
     * `lastSegmentsTotal`), for specs and bench prune accounting.
     * A DV-free snapshot (every snapshot until the first vectored
-    * delete) is the bare relation with ZERO overhead; vectors add the
-    * provenance projection + anti join. */
+    * delete) is the bare relation with ZERO overhead; vectors add one
+    * in-scan filter on the `_metadata` fields, with no provenance
+    * columns projected. */
   private[graft] def readWithIndex(spark: SparkSession, path: String,
       version: Option[Long] = None): (DataFrame, VersionedFileIndex) = {
     val (rel, idx, v) = openRelation(spark, path, version)
     val dv = readDvMap(spark, path, v)
     val df =
       if (dv.isEmpty) rel
-      else DeletionVectors.applyTo(withProvenance(rel), spark, path, dv)
-        .drop(ReservedProvenanceCols: _*)
+      else DeletionVectors.applyTo(rel, spark, path, dv,
+        file = "_metadata.file_path", pos = "_metadata.row_index")
     (df, idx)
   }
 
@@ -2169,7 +2187,8 @@ object Versioned {
     * segment-level [[changes]]/[[removals]] pair cannot see a vectored
     * delete: it adds no segments and removes none). Row content comes
     * from the still-physically-present segments of `toVersion`,
-    * position-semi-joined against the vector delta. Granularity
+    * filtered to the positions the vector delta adds (read on the
+    * driver, like a snapshot read's vectors). Granularity
     * caveat, like the segment CDC pair: a COW rewrite that
     * MATERIALIZES a vector inside the range replaces the segment, and
     * its deletions surface through [[removals]]/[[changes]] instead. */
@@ -2191,15 +2210,11 @@ object Versioned {
     if (changed.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaTo)
-    val newPos = DeletionVectors.positionsDf(spark, path, changed)
-    val oldPos = DeletionVectors.positionsDf(spark, path,
-      dvFrom.filter { case (s, _) => changed.contains(s) })
-    val delta = newPos.except(oldPos)
+    val delta = DeletionVectors.positions(spark, path, changed)
+      .diff(DeletionVectors.positions(spark, path,
+        dvFrom.filter { case (s, _) => changed.contains(s) }))
     readSegmentsAligned(spark, path, changed.keys.toSeq, schemaTo)
-      .withColumn("__dvkey", F.concat(F.col("__seg"), F.lit("/"),
-        F.element_at(F.split(F.col("__file"), "/"), -1)))
-      .withColumn("__dvpos", F.col("__pos"))
-      .join(delta, Seq("__dvkey", "__dvpos"), "left_semi")
+      .filter(!DeletionVectors.live(delta, "__file", "__pos"))
       .select(schemaTo.fieldNames.map(F.col).toSeq: _*)
   }
 
@@ -2572,15 +2587,22 @@ object Versioned {
     // resolve + optimize the predicate against the snapshot schema so
     // the evaluator sees exactly the shapes the execution-time
     // listFiles sees (typed literals, folded casts, split conjuncts);
-    // keep only conditions over the relation's OWN columns — a
-    // deletion-vector anti join contributes filters on its internal
-    // key columns, which the evaluator must not mistake for data
+    // keep only conjuncts over the relation's OWN columns — the
+    // deletion-vector filter (combined into the same Filter) reads the
+    // `_metadata` fields, which the evaluator must not mistake for data
     val names = idx.dataSchema.fieldNames
       .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
+        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+      e match {
+        case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
+          conjuncts(l) ++ conjuncts(r)
+        case other => Seq(other)
+      }
     val conds = df.where(predicate).queryExecution.optimizedPlan.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition
-    }.filter(_.references.forall(a =>
+        conjuncts(f.condition)
+    }.flatten.filter(_.references.forall(a =>
       names.contains(a.name.toLowerCase(java.util.Locale.ROOT))))
     (idx.lastSegmentsTotal, idx.pruneCount(conds))
   }

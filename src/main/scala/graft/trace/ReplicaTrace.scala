@@ -9,8 +9,9 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * iteration loop for shaving the MERGE statement's fixed driver
   * constant (round-13 verdict ask #3). The constant is flat in table
   * size, so profiling at sf0.01 sees the same job floor the 72M-row
-  * bench probe pays. Combine with `GRAFT_MERGE_TRACE=1` for the
-  * per-step wall breakdown.
+  * bench probe pays. Each job line carries its job description, so the
+  * MERGE steps (`MERGE: match scan`, `MERGE: rewrite`, `MERGE: change
+  * rows`) show which jobs belong to which step.
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_REPS (3),
   * SPARK_GRAFT_REPL_MULT (union-replicate lineitem N times, default 1),
@@ -49,7 +50,9 @@ object ReplicaTrace {
         j.stageInfos.foreach(si => stageToJob.put(si.stageId, idx))
         val cs = Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .map("exec" + _).getOrElse("")
+          .map("exec" + _).getOrElse("") + Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .fold("")(" " + _)
         val stages = j.stageInfos.map(si =>
           s"${si.name.takeWhile(_ != '\n').take(60)}(t=${si.numTasks})")
         jobNames += (s"[$cs] " + stages.mkString(" | ")).take(200)

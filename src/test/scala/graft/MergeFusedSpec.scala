@@ -6,13 +6,12 @@ import org.apache.spark.sql.{functions => F}
 
 import graft.sources.Versioned
 
-/** Round-18 MERGE one-scan fusion + CDC apply fast path: the fused
-  * LEFT-join plan (small source, pruned-scan-under-cap) must commit
-  * byte-for-row identical results to the classic two-scan plan, the
-  * LEFT join's null source side must never fire a clause on unmatched
-  * rows, and the applyChanges collected-source path must match the
-  * staged path. The conf gates (`graft.merge.fusedScanBytes`,
-  * `graft.apply.collectMaxBytes`) force each side of every A/B. */
+/** MERGE on the small-source path + CDC apply fast path: the one-pass
+  * rewrite must commit exactly the rows, counts and change rows the spec
+  * computes itself, a clause condition over source columns alone must
+  * never fire on unmatched rows, and the applyChanges collected-source
+  * path must match the staged path (the `graft.apply.collectMaxBytes`
+  * conf gate forces each side of that A/B). */
 class MergeFusedSpec extends SparkSpec {
 
   private def freshPath(tag: String): String =
@@ -55,26 +54,32 @@ class MergeFusedSpec extends SparkSpec {
   private def withConf[T](k: String, v: String)(body: => T): T =
     Engine.withConfs(spark, cond = true, k -> v)(body)
 
-  test("fused and classic MERGE commit identical tables, counts and " +
-    "change feeds") {
+  test("MERGE commits the rows, counts and change feed computed " +
+    "independently") {
     val src = srcPath("ab")
-    val (fusedP, classicP) = (ds("fused"), ds("classic"))
-    val eng = Engine(spark)
-    val rFused = eng.sql(mergeSql(fusedP, src)).df.collect().head
-    val rClassic = withConf("graft.merge.fusedScanBytes", "0") {
-      eng.sql(mergeSql(classicP, src)).df.collect().head
-    }
-    // same action counts
-    assert(rFused.toSeq.drop(1) === rClassic.toSeq.drop(1))
-    // same committed rows
-    assert(rows(Versioned.read(spark, fusedP)) ===
-      rows(Versioned.read(spark, classicP)))
-    // same change rows (minus the per-dataset commit version)
-    val hv = Versioned.versions(spark, fusedP).last
-    def changes(p: String) = rows(Versioned
-      .changeFeed(spark, p, hv - 1, Some(hv)).drop("_commit_version"))
-    assert(changes(fusedP) === changes(classicP))
-    assert(changes(fusedP).nonEmpty)
+    val path = ds("merge")
+    val r = Engine(spark).sql(mergeSql(path, src)).df.collect().head
+    val updated = 90L until 110L
+    val inserted = Seq((500L, "new500"), (501L, "new501"))
+    // (n_updated, n_deleted, n_inserted)
+    assert(r.toSeq.drop(1) === Seq(20L, 1L, 2L))
+    val expected: Set[Seq[Any]] =
+      (0L until 200L).filter(_ != 60L).map { id =>
+        Seq[Any](id, if (updated.contains(id)) s"u$id" else s"p$id", id * 2)
+      }.toSet ++ inserted.map { case (id, p) => Seq[Any](id, p, -1L) }
+    assert(rows(Versioned.read(spark, path)) === expected)
+    // change rows (minus the commit version), one per image
+    val hv = Versioned.versions(spark, path).last
+    val feed = Versioned.changeFeed(spark, path, hv - 1, Some(hv))
+      .drop("_commit_version")
+    val expectedFeed: Set[Seq[Any]] =
+      updated.map(id => Seq[Any](id, s"p$id", id * 2, "update_preimage"))
+        .toSet ++
+        updated.map(id => Seq[Any](id, s"u$id", id * 2, "update_postimage")) ++
+        Seq(Seq[Any](60L, "p60", 120L, "delete")) ++
+        inserted.map { case (id, p) => Seq[Any](id, p, -1L, "insert") }
+    assert(feed.count() == expectedFeed.size.toLong)
+    assert(rows(feed) === expectedFeed)
   }
 
   test("a source-only clause condition does not fire on unmatched rows " +
