@@ -2,12 +2,16 @@ package graft
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.{Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
 
 import graft.api.{Col, GraftFrame}
 import graft.api.Col._
-import graft.sql.{CompoundQuery, GroupByError, JoinClause, SelectItem, SemanticError, SqlParser, SqlQuery}
-import graft.sources.Tables
+import graft.sql.{CompoundQuery, GroupByError, JoinClause, SelectItem, SemanticError, SqlParser, SqlQuery, Statement, TableRef}
+import graft.sql.Statement._
+import graft.sources.{Tables, Versioned}
 
 /** Engine facade: `sql / collect / show / explain`
   * (reference: src/mini_spark/execution.py:57-62 ExecutionEngine.sql).
@@ -77,40 +81,19 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       Some((rows, bytes, schema))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[Engine.withAqeOff]] over this instance's session. */
-  private def withAqeOff[T](cond: Boolean)(body: => T): T =
-    Engine.withAqeOff(spark, cond)(body)
-
   /** [[Engine.withSmallStmtConfs]] over this instance's session. */
   private def withSmallStmtConfs[T](cond: Boolean)(body: => T): T =
     Engine.withSmallStmtConfs(spark, cond)(body)
 
-  /** Session-scoped views: name → body TEXT, re-planned at every use
+  /** Session-scoped views: name → parsed body, re-planned at every use
     * (standard non-materialized view semantics — a view over a
     * Versioned dataset tracks its head, and underlying-table changes
     * are visible immediately). FROM resolution consults views first,
     * then disk; CTE/subquery scope still shadows views (the standard
     * layering: the nearest definition wins). */
   private val views =
-    scala.collection.mutable.LinkedHashMap.empty[String, String]
+    scala.collection.mutable.LinkedHashMap.empty[String, CompoundQuery]
 
-  /** Statement-scoped INJECTED MERGE sources: name → pre-collected
-    * rows + schema. The CDC apply hands its (delta-sized, already
-    * driver-resident) net frame to MERGE this way, as a LocalRelation
-    * under a fixed name — no parquet staging round-trip, no footer
-    * probe, and the small-source fast path reuses the rows without
-    * even a collect. Scoped strictly to the wrapped body; the name
-    * must not shadow a view. */
-  private val injectedSrcs = scala.collection.mutable.Map
-    .empty[String, (Array[Row], org.apache.spark.sql.types.StructType)]
-
-  private[graft] def withLocalMergeSource[T](name: String, rows: Array[Row],
-      schema: org.apache.spark.sql.types.StructType)(body: => T): T = {
-    require(!views.contains(name) && !injectedSrcs.contains(name),
-      s"withLocalMergeSource: name '$name' already bound")
-    injectedSrcs(name) = (rows, schema)
-    try body finally injectedSrcs.remove(name)
-  }
   /** names currently being expanded — a view whose body references
     * itself (directly or through another view) must fail loudly, not
     * recurse forever */
@@ -121,676 +104,253 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       if (!viewStack.add(ref)) throw new SemanticError(
         s"view '$ref' is recursive (expansion chain: " +
         s"${viewStack.mkString(" -> ")} -> $ref)")
-      try evalCompound(SqlParser.parseCompound(body), Map.empty)
+      try evalCompound(body, Map.empty)
       finally viewStack.remove(ref)
     case None => GraftFrame.fromDF(Tables.load(spark, ref, baseDir))
   }
 
-  /** `CREATE TABLE <target> AS SELECT ...` (extension): target is a
-    * quoted parquet path, a quoted `.bin` path (materializes in the
-    * reference's native BlockFile format — column types must be the
-    * format's i32/f32/str/ts set, enforced by the writer), or a bare
-    * name resolved against the engine's base directory with the SAME
-    * rule FROM uses — so the created table is immediately SELECTable
-    * in the next statement. Overwrites an existing target. */
-  private val Ctas =
-    """(?is)^\s*CREATE\s+TABLE\s+(?:'([^']+)'|([A-Za-z_][A-Za-z0-9_.]*))\s+(?:USING\s+([A-Za-z_]+)\s+)?AS\s+(.+)$""".r
+  /** Run one statement of the dialect (see [[graft.sql.Statement]]):
+    * DDL, DML and utility statements run eagerly and return their
+    * status rows; a query returns its lazily planned frame. */
+  def sql(query: String): GraftFrame = execute(SqlParser.parseStatement(query))
 
-  /** `EXPLAIN [FORMATTED] SELECT ...` (extension): plans the body
-    * WITHOUT executing it and returns the physical plan as rows of
-    * text — the surface a SQL user pokes before paying for a scan.
-    * CTAS under EXPLAIN is rejected (planning it would still write). */
-  private val ExplainRe = """(?is)^\s*EXPLAIN(\s+FORMATTED)?\s+(.+)$""".r
-
-  /** `CREATE [OR REPLACE] VIEW <name> AS SELECT ...` /
-    * `DROP VIEW [IF EXISTS] <name>` (extension): session-scoped
-    * non-materialized views — the body is validated (parsed AND
-    * planned) at definition so broken references fail here, stored as
-    * TEXT, and re-planned at every FROM use, so views over Versioned
-    * datasets always serve the current head. Self- or mutually-
-    * recursive views reject at use with the expansion chain named
-    * (recursion belongs to WITH RECURSIVE, which has fixpoint
-    * semantics; view expansion has none). */
-  private val CreateViewRe =
-    """(?is)^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+([A-Za-z_][A-Za-z0-9_]*)\s+AS\s+(.+)$""".r
-  private val DropViewRe =
-    """(?is)^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*$""".r
-
-  /** `DESCRIBE HISTORY '<versioned-ds>'` (extension, the Delta-style
-    * audit statement): one row per committed version — (version,
-    * n_segments, is_head) — from manifests alone, never data. The
-    * operational question it answers: has OPTIMIZE/VACUUM run, how
-    * many appends has the streaming sink stacked, which version would
-    * a time-travel read pin. */
-  private val DescribeHistoryRe =
-    """(?is)^\s*DESC(?:RIBE)?\s+HISTORY\s+(?:'([^']+)'|([A-Za-z_][A-Za-z0-9_.]*))\s*$""".r
-
-  /** `DELETE [VECTORED] FROM '<versioned-ds>' WHERE <pred>`
-    * (extension): copy-on-write delete via
-    * [[graft.sources.Versioned.deleteWhere]] — commits a NEW version
-    * holding the surviving rows; prior snapshots stay readable (time
-    * travel). With VECTORED, merge-on-read instead
-    * ([[graft.sources.Versioned.deleteWhereVectored]]): every segment
-    * carries byte-identical and the matched positions land in
-    * deletion vectors, the right shape when matches are scattered and
-    * sparse. Returns one row (version, n_rows) of the new head. Only
-    * Versioned datasets: an in-place parquet delete has no atomicity
-    * story, so a plain path is rejected. */
-  private val DeleteRe =
-    """(?is)^\s*DELETE\s+(VECTORED\s+)?FROM\s+'([^']+)'\s+WHERE\s+(.+)$""".r
-
-  /** `RESTORE '<versioned-ds>' TO VERSION n | TO TIMESTAMP '<ts>'`
-    * (extension, the Delta RESTORE statement): roll the head back to a
-    * prior snapshot AS A NEW COMMIT via
-    * [[graft.sources.Versioned.restore]] — zero data movement (the new
-    * manifest references the old immutable segments), history intact,
-    * the restore itself audited. Returns one row
-    * (version, restored_version). */
-  private val RestoreRe =
-    """(?is)^\s*RESTORE\s+'([^']+)'\s+TO\s+(?:VERSION\s+(\d+)|TIMESTAMP\s+'([^']+)')\s*$""".r
-
-  /** `ALTER '<versioned-ds>' ADD CONSTRAINT <name> CHECK (<expr>)` /
-    * `ALTER '<versioned-ds>' DROP CONSTRAINT <name>` (extension, the
-    * Delta CHECK-constraint DDL): register a data-quality fence every
-    * future write must satisfy — enforced at the storage layer's
-    * single write choke point, so appends, INSERT, all DML rewrites
-    * and the streaming sink are covered no matter which writer runs.
-    * ADD validates the current head first (existing rows must comply).
-    * `<expr>` is a Spark-SQL boolean expression; NULL passes (the
-    * SQL-standard CHECK rule). Returns (version, constraint_name). */
-  private val AlterConstraintRe =
-    """(?is)^\s*ALTER\s+'([^']+)'\s+(?:ADD\s+CONSTRAINT\s+([A-Za-z_][A-Za-z0-9_]*)\s+CHECK\s*\((.+)\)|DROP\s+CONSTRAINT\s+([A-Za-z_][A-Za-z0-9_]*))\s*$""".r
-
-  /** `SHOW CONSTRAINTS '<versioned-ds>'` — one row per registered
-    * CHECK constraint (name, expression). */
-  private val ShowConstraintsRe =
-    """(?is)^\s*SHOW\s+CONSTRAINTS\s+'([^']+)'\s*$""".r
-
-  /** `VACUUM '<versioned-ds>' [KEEP n]` (extension): garbage-collect
-    * history down to the newest `n` versions (default 1) via
-    * [[graft.sources.Versioned.vacuum]] — a maintenance-window
-    * operation (readers pinned to dropped versions lose their
-    * segments). Returns one row (versions_kept, head_version). */
-  private val VacuumRe =
-    """(?is)^\s*VACUUM\s+'([^']+)'(?:\s+KEEP\s+(\d+))?(?:\s+(DRY)\s+RUN)?\s*$""".r
-
-  /** `OPTIMIZE '<versioned-ds>'` (extension, the lakehouse statement):
-    * compact the head's per-batch segments into one
-    * ([[graft.sources.Versioned.compact]]) — the maintenance statement
-    * a long-running streaming ingest needs so manifests and file
-    * listings stay bounded; prior versions keep time-traveling until
-    * VACUUM. Returns one row (version, segments_compacted).
-    *
-    * `OPTIMIZE '<ds>' ZORDER BY (a, b, ...)` re-clusters the head along
-    * a Morton curve over the named numeric columns
-    * ([[graft.sources.Versioned.optimizeZorder]]) — row-group min/max
-    * statistics then prune scans filtered on ANY clustered column, not
-    * just a sort's leading one. No one-segment short-circuit: the
-    * rewrite is the point. */
-  private val OptimizeRe =
-    """(?is)^\s*OPTIMIZE\s+'([^']+)'(?:\s+ZORDER\s+BY\s*\(\s*([A-Za-z_][A-Za-z0-9_]*(?:\s*,\s*[A-Za-z_][A-Za-z0-9_]*)*)\s*\))?(?:\s+SEGMENTS\s+(\d+))?(?:\s+(PURGE)(?:\s+THRESHOLD\s+([0-9]*\.?[0-9]+))?)?\s*$""".r
-
-  /** `DESCRIBE '<table>'` / `DESCRIBE <name>` (extension): one row per
-    * column — (column_name, column_type, nullable) — through the same
-    * resolution FROM uses, so parquet, `.bin` BlockFiles and Versioned
-    * heads all describe identically. Types print in Spark DDL
-    * lower-case (`bigint`, `string`, `array<float>`). Planning-only:
-    * reads footers/headers, never data. */
-  private val DescribeRe =
-    """(?is)^\s*DESC(?:RIBE)?\s+(?:'([^']+)'|([A-Za-z_][A-Za-z0-9_.]*))\s*$""".r
-
-  /** `SHOW TABLES` (extension): the `.parquet`/`.bin` tables of the
-    * engine's base directory, one (table_name, format) row each — the
-    * minimal catalog surface over a directory-of-files data layout. */
-  private val ShowTablesRe = """(?is)^\s*SHOW\s+TABLES\s*$""".r
-
-  /** `COPY (SELECT ...) TO '<path>' [FORMAT jsonl|csv|parquet|avro|tfrecord]`
-    * (extension, DuckDB-style): task-parallel export of a query result
-    * in the interchange formats trainers and downstream tools ingest —
-    * JSONL (one document per line, the pre-training corpus format), CSV
-    * (with header), parquet, Avro OCF shards, or framed tf.Example
-    * TFRecord shards (the read side of both is the matching FROM-by-
-    * extension route — full-duplex interchange). Default follows the
-    * target extension (`.jsonl`/`.ndjson` → jsonl, `.csv` → csv,
-    * `.avro` → avro, `.tfrecord` → tfrecord, else parquet). The
-    * export is a directory of part files (every writer here is
-    * task-parallel; a single-file export would gather 100 TB through
-    * one writer) — `Tables.readJsonl`/`readCsv` and every engine FROM
-    * read such directories natively. Returns one row (n_rows, path). */
-  private val CopyRe =
-    """(?is)^\s*COPY\s*\((.+)\)\s*TO\s+'([^']+)'\s*(?:\(\s*FORMAT\s+([A-Za-z]+)\s*\)|FORMAT\s+([A-Za-z]+))?\s*$""".r
-
-  /** `SUMMARIZE '<table>'` / `SUMMARIZE <name>` (extension, the DuckDB
-    * statement): per-column dataset-card statistics — non-null count,
-    * null count, EXACT distinct count, min and max (stringified;
-    * non-orderable types get NULL min/max) — in ONE aggregation pass
-    * over the table. Exact, not approximate, so a differential oracle
-    * replays it; the corpus-stats sketch family ([[graft.operators.Scale]])
-    * is the at-scale incremental alternative when one pass over 100 TB
-    * per question is too much. */
-  private val SummarizeRe =
-    """(?is)^\s*SUMMARIZE\s+(?:'([^']+)'|([A-Za-z_][A-Za-z0-9_.]*))\s*$""".r
-
-  /** `SUMMARIZE FOOTERS '<parquet-table>'` (extension): the at-scale
-    * SUMMARIZE — per-column row/null counts and numeric min/max from
-    * parquet FOOTERS alone ([[graft.sources.Tables.parquetFooterStats]]),
-    * zero data pages decoded. String bounds surface as NULL (parquet's
-    * binary min/max may be truncated — serving them as exact values
-    * would be silently wrong). */
-  private val SummarizeFootersRe =
-    """(?is)^\s*SUMMARIZE\s+FOOTERS\s+(?:'([^']+)'|([A-Za-z_][A-Za-z0-9_.]*))\s*$""".r
-
-  /** `ANALYZE '<versioned-ds>'` (extension, the lakehouse ANALYZE
-    * TABLE): backfill data-skipping sidecars for segments missing one
-    * ([[graft.sources.Versioned.analyzeStats]] — task-parallel footer
-    * walks, metadata only). New writes build sidecars inline; this is
-    * the migration path for pre-stats datasets, after which filtered
-    * reads and the metadata-aggregate fast path engage. */
-  private val AnalyzeRe =
-    """(?is)^\s*ANALYZE\s+(?:'([^']+)'|([A-Za-z_][A-Za-z0-9_.]*))\s*$""".r
-
-  /** `UPDATE [VECTORED] '<versioned-ds>' SET col = expr [, ...] WHERE
-    * <pred>` (extension): copy-on-write update completing the DML
-    * triad (INSERT / UPDATE / DELETE) — commits a NEW version where
-    * rows matching the predicate (TRUE only; NULL keeps the row
-    * unchanged, the DELETE rule's mirror) carry the assigned values
-    * and everything else is untouched. With VECTORED, merge-on-read
-    * instead ([[graft.sources.Versioned.updateWhereVectored]]): the
-    * matched positions land in deletion vectors and ONE fresh segment
-    * appends their updated copies — write cost ∝ matched rows, the
-    * scattered-update shape. Assigned expressions are cast to the
-    * column's existing type so the dataset's schema NEVER drifts
-    * across versions (time-travel consumers rely on it). Prior
-    * snapshots stay readable. Returns one row (version, n_updated).
-    *
-    * Known statement-split limitation (shared with [[DeleteRe]]): the
-    * SET/WHERE boundary is the FIRST ` WHERE ` occurrence, so a SET
-    * string literal containing the word ` WHERE ` mis-splits and fails
-    * with a parse error (loud, never silent); a tokenizer-level
-    * statement grammar is the eventual fix. */
-  private val UpdateRe =
-    """(?is)^\s*UPDATE\s+(VECTORED\s+)?'([^']+)'\s+SET\s+(.+?)\s+WHERE\s+(.+)$""".r
-
-  /** `INSERT INTO '<target>' SELECT ...` / `... VALUES (...), (...)`
-    * (extension) — the incremental-publish write path through the
-    * dialect (round-7 verdict: CTAS/DELETE/VACUUM existed but a
-    * SQL-driven pipeline could not append):
-    *   - extension-less target → [[graft.sources.Versioned.commit]]
-    *     with `append = true`: a fresh path bootstraps version 1, an
-    *     existing dataset stacks a new version (schema equality
-    *     enforced by the commit — names AND types);
-    *   - `.bin` target → [[graft.sources.BlockFile.append]] (file or
-    *     committed blockdir; merges into the under-full tail block,
-    *     the reference's append invariant);
-    *   - `.parquet` target → rejected: a raw parquet directory has no
-    *     atomic append story (a reader could see half the new files) —
-    *     versioned datasets exist exactly for this.
-    * `VALUES` rows take column names and types from the EXISTING
-    * target's schema (positional, with casts — standard INSERT
-    * semantics); a SELECT body is aligned to the target schema the
-    * same way when one exists. */
-  private val InsertRe =
-    """(?is)^\s*INSERT\s+INTO\s+(?:'([^']+)'|([A-Za-z_][A-Za-z0-9_.]*))\s*(?:\(\s*([A-Za-z_][A-Za-z0-9_]*(?:\s*,\s*[A-Za-z_][A-Za-z0-9_]*)*)\s*\))?\s+(.+)$""".r
-  private val InsertValuesBody = """(?is)^\s*VALUES\s+(.+)$""".r
-
-  /** `MERGE INTO '<versioned-ds>' [AS] t USING <source> [AS] s ON <cond>
-    *    [WHEN MATCHED THEN UPDATE SET col = expr [, ...] | WHEN MATCHED THEN DELETE]
-    *    [WHEN NOT MATCHED THEN INSERT * | WHEN NOT MATCHED THEN INSERT (cols) VALUES (exprs)]`
-    * (extension, the lakehouse upsert): one atomic copy-on-write commit
-    * applying the matched action to target rows the ON condition pairs
-    * with a source row, and inserting unmatched SOURCE rows. `<source>`
-    * is a quoted path, a bare table name, or a parenthesized SELECT
-    * with an alias. Standard cardinality rule enforced: a target row
-    * matching MORE than one source row is an error (loud, matching
-    * Postgres/Delta), because "apply both updates" has no defined
-    * order. SET right-hand sides and INSERT VALUES expressions get the
-    * full dialect grammar and may reference BOTH aliases (SET) or the
-    * source alias (INSERT). `INSERT *` maps source columns to target
-    * columns BY NAME and requires every target column present.
-    * Statement-split limitation (the [[UpdateRe]] note's family): the
-    * ON condition is cut at the LAST ` ON ` before the first WHEN, so
-    * a string literal containing ` when matched ` or a condition
-    * containing ` on ` mis-splits and fails loudly. */
-  private val MergeRe =
-    """(?is)^\s*MERGE\s+INTO\s+'([^']+)'(?:\s+(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*))?\s+USING\s+(.+)$""".r
-  private val MergeWhenSplit = """(?i)\bWHEN\s+(?:NOT\s+)?MATCHED\b""".r
-  private val MergeOnSplit = """(?i)\s+ON\s+""".r
-  private val MergeUsingSub =
-    """(?is)^\((.+)\)\s*(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*)\s*$""".r
-  private val MergeUsingQuoted =
-    """(?is)^'([^']+)'(?:\s+(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*))?\s*$""".r
-  private val MergeUsingBare =
-    """(?is)^([A-Za-z_][A-Za-z0-9_.]*)(?:\s+(?:AS\s+)?([A-Za-z_][A-Za-z0-9_]*))?\s*$""".r
-  private val MergeClauseHead =
-    """(?is)^WHEN\s+(NOT\s+)?MATCHED\s+(.+?)\s*$""".r
-  private val MergeActUpdate = """(?is)^UPDATE\s+SET\s+(.+?)\s*$""".r
-  private val MergeActDelete = """(?is)^DELETE\s*$""".r
-  private val MergeActInsertStar = """(?is)^INSERT\s+\*\s*$""".r
-  private val MergeActInsertCols =
-    """(?is)^INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.+)\)\s*$""".r
-
-  /** MERGE clause forms — standard first-match-wins semantics: any
-    * number of `WHEN MATCHED [AND cond] THEN UPDATE SET ... / DELETE`
-    * clauses evaluated in specification order per matched row, plus at
-    * most one `WHEN NOT MATCHED [AND cond] THEN INSERT ...`. */
-  private sealed trait MergeMatched
-  private final case class MergeUpd(cond: Option[String],
-      assigns: Seq[(String, String)]) extends MergeMatched
-  private final case class MergeDel(cond: Option[String]) extends MergeMatched
-
-  /** SET assignments split textually (`col = expr`, top-level commas
-    * and `=` only) so right-hand sides embed verbatim into the internal
-    * join query — they may reference both MERGE aliases. */
-  private def parseMergeAssigns(setText: String): Seq[(String, String)] =
-    splitTopLevel(setText, ',').map { a =>
-      val i = {
-        var j = -1; var depth = 0; var inStr = false; var k = 0
-        while (j < 0 && k < a.length) {
-          val c = a.charAt(k)
-          if (inStr) { if (c == '\'') inStr = false }
-          else c match {
-            case '\'' => inStr = true
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case '=' if depth == 0 => j = k
-            case _ => ()
-          }
-          k += 1
-        }
-        if (j < 0) throw new SemanticError(
-          s"MERGE: SET assignment '$a' is not `col = expr`")
-        j
-      }
-      (a.take(i).trim, a.drop(i + 1).trim)
-    }
-
-  /** Index of the first TOP-LEVEL `THEN` keyword: outside parens and
-    * single-quoted strings AND outside `CASE ... END` (a WHEN-clause
-    * condition may itself contain a CASE expression whose own THENs
-    * must not terminate the condition). -1 when absent. */
-  private def findTopLevelThen(text: String): Int = {
-    var depth = 0; var inStr = false; var caseDepth = 0
-    var i = 0
-    def wordAt(j: Int, w: String): Boolean =
-      j + w.length <= text.length &&
-        text.regionMatches(true, j, w, 0, w.length) &&
-        (j == 0 || !Character.isLetterOrDigit(text.charAt(j - 1)) &&
-          text.charAt(j - 1) != '_') &&
-        (j + w.length == text.length ||
-          !Character.isLetterOrDigit(text.charAt(j + w.length)) &&
-            text.charAt(j + w.length) != '_')
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else c match {
-        case '\'' => inStr = true; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case _ =>
-          if (depth == 0 && wordAt(i, "CASE")) { caseDepth += 1; i += 4 }
-          else if (depth == 0 && caseDepth > 0 && wordAt(i, "END")) {
-            caseDepth -= 1; i += 3
-          }
-          else if (depth == 0 && caseDepth == 0 && wordAt(i, "THEN"))
-            return i
-          else i += 1
-      }
-    }
-    -1
+  /** Execute a parsed statement. Its Spark jobs carry the statement's
+    * kind as their job description (MERGE labels its steps more
+    * finely). The scalar-subquery memo is per statement: a long-lived
+    * Engine (the shell) must not serve a stale collected value after
+    * the underlying table changed on disk. */
+  def execute(stmt: Statement): GraftFrame = {
+    scalarCache.clear()
+    Engine.withJobDescription(spark, stmt.kind)(run(stmt))
   }
 
-  /** Split `text` at top-level occurrences of `sep` (outside parens and
-    * single-quoted strings) — the SET-assignment splitter MERGE needs
-    * because a right-hand side may itself contain commas
-    * (`CASE ... END`, function calls). */
-  private def splitTopLevel(text: String, sep: Char): Seq[String] = {
-    val out = ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false; var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case `sep` if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += c
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
+  /** A statement's one status row: `(column, value)` pairs, each
+    * column typed from its value (Long, Int, Boolean, else String) and
+    * non-nullable. */
+  private def statusRow(cols: (String, Any)*): GraftFrame =
+    rowsFrame(StructType(cols.map { case (n, v) =>
+      StructField(n, v match {
+        case _: Long    => LongType
+        case _: Int     => IntegerType
+        case _: Boolean => BooleanType
+        case _          => StringType
+      }, nullable = false)
+    }), Seq(Row.fromSeq(cols.map(_._2))))
+
+  /** Non-nullable columns of a driver-side result. */
+  private def schemaOf(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })
+
+  private def rowsFrame(schema: StructType, rows: Seq[Row]): GraftFrame =
+    GraftFrame.fromDF(spark.createDataFrame(rows.asJava, schema))
+
+  private def notVersioned(kind: String, resolved: String) =
+    new SemanticError(s"$kind requires a Versioned dataset at '$resolved'")
+
+  /** The resolved path of `target`, which must be a Versioned dataset:
+    * DML, history and maintenance statements need its manifests. */
+  private def versionedPath(kind: String, target: String): String = {
+    val resolved = Tables.resolve(target, baseDir)
+    if (Versioned.versions(spark, resolved).isEmpty)
+      throw notVersioned(kind, resolved)
+    resolved
   }
 
-  def sql(query: String): GraftFrame = query match {
-    case CreateViewRe(orReplace, name, body) =>
-      scalarCache.clear()
-      if (views.contains(name) && orReplace == null)
+  /** `body`, with the storage layer's argument errors surfaced as the
+    * statement's [[SemanticError]]. */
+  private def semantic[T](body: => T): T =
+    try body
+    catch { case e: IllegalArgumentException => throw new SemanticError(e.getMessage) }
+
+  /** DML expressions have no evaluation scope for subqueries. */
+  private def noSubqueries(what: String, cs: Col*): Unit =
+    if (cs.exists(c => collectScalarSubs(c).nonEmpty || containsInSubquery(c)))
+      throw new SemanticError(s"$what cannot contain subqueries")
+
+  private def run(stmt: Statement): GraftFrame = stmt match {
+    case Query(q) => evalCompound(q, Map.empty)
+
+    // views: the body is planned at definition, so broken references
+    // fail here; it is registered first, so a self-referential body
+    // trips the cycle guard with the chain named, and rolled back when
+    // it does not plan
+    case CreateView(name, orReplace, body) =>
+      if (views.contains(name) && !orReplace)
         throw new SemanticError(s"view '$name' already exists — " +
           "use CREATE OR REPLACE VIEW to redefine it")
-      // parse loudly BEFORE registering (a syntax error must not even
-      // transiently install the view); the semantic validation below
-      // re-plans through table(name) and rolls back on failure
-      SqlParser.parseCompound(body): Unit
-      // registered BEFORE validation so a self-referential body trips
-      // the cycle guard here, at definition, with the chain named
-      val prior = views.get(name)
-      views += name -> body
+      val prior = views.put(name, body)
       val cols =
         try table(name).df.columns.length
         catch { case e: Throwable =>
-          prior match {
-            case Some(p) => views += name -> p
-            case None    => views.remove(name)
-          }
+          prior.fold(views.remove(name))(views.put(name, _)): Unit
           throw e
         }
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(name, cols.toLong)),
-        StructType(Seq(
-          StructField("view_name", StringType, nullable = false),
-          StructField("n_columns", LongType, nullable = false)))))
-    case DropViewRe(ifExists, name) =>
-      scalarCache.clear()
+      statusRow("view_name" -> name, "n_columns" -> cols.toLong)
+    case DropView(name, ifExists) =>
       val existed = views.remove(name).nonEmpty
-      if (!existed && ifExists == null)
+      if (!existed && !ifExists)
         throw new SemanticError(s"view '$name' does not exist")
-      import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(name, existed)),
-        StructType(Seq(
-          StructField("view_name", StringType, nullable = false),
-          StructField("dropped", BooleanType, nullable = false)))))
-    case AlterConstraintRe(target, addName, checkExpr, dropName) =>
-      scalarCache.clear()
+      statusRow("view_name" -> name, "dropped" -> existed)
+
+    // CHECK constraints are enforced at the storage layer's single
+    // write choke point; ADD validates the current head first. The
+    // expression is Spark SQL; NULL passes (the SQL-standard rule).
+    case AddConstraint(target, name, check) =>
+      val resolved = versionedPath("ALTER CONSTRAINT", target)
+      statusRow("version" -> constraintDdl(
+        Versioned.addConstraint(spark, resolved, name, check)),
+        "constraint_name" -> name)
+    case DropConstraint(target, name) =>
+      val resolved = versionedPath("ALTER CONSTRAINT", target)
+      statusRow("version" -> constraintDdl(
+        Versioned.dropConstraint(spark, resolved, name)),
+        "constraint_name" -> name)
+    case ShowConstraints(target) =>
       val resolved = Tables.resolve(target, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError(
-          s"ALTER CONSTRAINT requires a Versioned dataset at '$resolved'")
-      val (v, name) =
-        try {
-          if (addName != null)
-            (graft.sources.Versioned.addConstraint(spark, resolved,
-              addName, checkExpr.trim), addName)
-          else
-            (graft.sources.Versioned.dropConstraint(spark, resolved,
-              dropName), dropName)
-        } catch {
-          case e: IllegalArgumentException =>
-            throw new SemanticError(e.getMessage)
-          case e: org.apache.spark.sql.AnalysisException =>
-            throw new SemanticError(
-              s"constraint expression does not analyze: ${e.getMessage}")
-        }
-      import org.apache.spark.sql.types.{LongType, StringType, StructField,
-        StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(v, name)),
-        StructType(Seq(
-          StructField("version", LongType, nullable = false),
-          StructField("constraint_name", StringType, nullable = false)))))
-    case ShowConstraintsRe(target) =>
-      val resolved = Tables.resolve(target, baseDir)
-      import org.apache.spark.sql.types.{StringType, StructField,
-        StructType}
       // `status`: `pending-drop` marks a constraint whose drop was
       // durably audited but whose file removal never landed (the
       // dropConstraint commit-first crash window — fail-safe
       // over-enforcement until the drop is re-run), so history and
       // enforcement can never disagree silently
-      val pending =
-        graft.sources.Versioned.pendingConstraintDrops(spark, resolved)
-      val rows = graft.sources.Versioned.constraints(spark, resolved)
-        .toSeq.sortBy(_._1).map { case (n, e) =>
-          Row(n, e, if (pending(n)) "pending-drop" else "enforced") }
-      GraftFrame.fromDF(spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        StructType(Seq(
-          StructField("constraint_name", StringType, nullable = false),
-          StructField("check_expr", StringType, nullable = false),
-          StructField("status", StringType, nullable = false)))))
-    case RestoreRe(target, verOpt, tsOpt) =>
-      scalarCache.clear()
-      val resolved = Tables.resolve(target, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError(
-          s"RESTORE requires a Versioned dataset at '$resolved'")
-      val toV =
-        try {
-          if (verOpt != null) verOpt.toLong
-          else graft.sources.Versioned.versionAt(spark, resolved,
-            parseAsOfTimestamp(tsOpt))
-        } catch { case e: IllegalArgumentException =>
-          throw new SemanticError(e.getMessage) }
-      val v =
-        try graft.sources.Versioned.restore(spark, resolved, toV)
-        catch { case e: IllegalArgumentException =>
-          throw new SemanticError(e.getMessage) }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(v, toV)),
-        StructType(Seq(
-          StructField("version", LongType, nullable = false),
-          StructField("restored_version", LongType, nullable = false)))))
-    case VacuumRe(target, keep, dry) =>
-      scalarCache.clear()
-      val resolved = Tables.resolve(target, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError(
-          s"VACUUM requires a Versioned dataset at '$resolved'")
-      val n = Option(keep).map(_.toInt).getOrElse(1)
-      if (dry != null) {
-        // DRY RUN: the operator's pre-flight — what WOULD retention at
-        // KEEP n delete, and how many data bytes does it free — with
-        // nothing touched (metadata walk only)
-        val st = graft.sources.Versioned.vacuum(spark, resolved, n,
-          dryRun = true)
-        import org.apache.spark.sql.types.{LongType, StructField,
-          StructType}
-        return GraftFrame.fromDF(spark.createDataFrame(
-          java.util.List.of(Row(st.versionsDropped.toLong,
-            st.segmentsDeleted.toLong, st.dvFilesDeleted.toLong,
-            st.cdcEntriesDeleted.toLong, st.bytesFreed)),
-          StructType(Seq(
-            StructField("would_drop_versions", LongType, nullable = false),
-            StructField("would_delete_segments", LongType,
-              nullable = false),
-            StructField("would_delete_dv_files", LongType,
-              nullable = false),
-            StructField("would_delete_cdc_entries", LongType,
-              nullable = false),
-            StructField("would_free_bytes", LongType, nullable = false)))))
+      val pending = Versioned.pendingConstraintDrops(spark, resolved)
+      rowsFrame(schemaOf("constraint_name" -> StringType,
+          "check_expr" -> StringType, "status" -> StringType),
+        Versioned.constraints(spark, resolved).toSeq.sortBy(_._1).map {
+          case (n, e) => Row(n, e, if (pending(n)) "pending-drop" else "enforced")
+        })
+
+    // RESTORE rolls the head back AS A NEW COMMIT: the new manifest
+    // references the old immutable segments, history stays intact
+    case Restore(target, to) =>
+      val resolved = versionedPath("RESTORE", target)
+      val toV = semantic(to.fold(identity, ts =>
+        Versioned.versionAt(spark, resolved, parseAsOfTimestamp(ts))))
+      statusRow("version" -> semantic(Versioned.restore(spark, resolved, toV)),
+        "restored_version" -> toV)
+    case Vacuum(target, keep, dryRun) =>
+      val resolved = versionedPath("VACUUM", target)
+      if (dryRun) {
+        // the operator's pre-flight — what retention at KEEP n would
+        // delete and how many data bytes it frees — with nothing
+        // touched (metadata walk only)
+        val st = Versioned.vacuum(spark, resolved, keep, dryRun = true)
+        statusRow("would_drop_versions" -> st.versionsDropped.toLong,
+          "would_delete_segments" -> st.segmentsDeleted.toLong,
+          "would_delete_dv_files" -> st.dvFilesDeleted.toLong,
+          "would_delete_cdc_entries" -> st.cdcEntriesDeleted.toLong,
+          "would_free_bytes" -> st.bytesFreed)
+      } else {
+        Versioned.vacuum(spark, resolved, keep): Unit
+        val left = Versioned.versions(spark, resolved)
+        statusRow("versions_kept" -> left.length.toLong,
+          "head_version" -> left.last)
       }
-      graft.sources.Versioned.vacuum(spark, resolved, n): Unit
-      val left = graft.sources.Versioned.versions(spark, resolved)
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(left.length.toLong, left.last)),
-        StructType(Seq(
-          StructField("versions_kept", LongType, nullable = false),
-          StructField("head_version", LongType, nullable = false)))))
-    case OptimizeRe(target, zorderCols, segmentsOpt, purgeKw, purgeThr) =>
-      scalarCache.clear()
-      val resolved = Tables.resolve(target, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError(
-          s"OPTIMIZE requires a Versioned dataset at '$resolved'")
-      if (segmentsOpt != null && zorderCols == null)
+    case Optimize(target, zorder, segments, purge) =>
+      val resolved = versionedPath("OPTIMIZE", target)
+      if (segments.nonEmpty && zorder.isEmpty)
         throw new SemanticError("SEGMENTS n only applies to OPTIMIZE " +
           "... ZORDER BY (plain OPTIMIZE sizes segments by bytes)")
-      if (purgeKw != null) {
-        // `OPTIMIZE '<ds>' PURGE [THRESHOLD f]`: materialize deletion
-        // vectors — segments ≥ f deleted (default: every vectored
-        // segment) rewrite in place, the rest carry byte-identical
-        if (zorderCols != null) throw new SemanticError(
-          "OPTIMIZE PURGE does not combine with ZORDER BY (a ZORDER " +
-            "republish already materializes every deletion vector)")
-        val thr = if (purgeThr == null) 0.0 else purgeThr.toDouble
-        val (v, n) =
-          try graft.sources.Versioned.purgeVectors(spark, resolved, thr)
-          catch { case e: IllegalArgumentException =>
-            throw new SemanticError(e.getMessage) }
-        import org.apache.spark.sql.types.{LongType, StructField,
-          StructType}
-        return GraftFrame.fromDF(spark.createDataFrame(
-          java.util.List.of(Row(v, n.toLong)),
-          StructType(Seq(
-            StructField("version", LongType, nullable = false),
-            StructField("segments_purged", LongType, nullable = false)))))
+      purge match {
+        case Some(thr) =>
+          // materialize deletion vectors: segments ≥ thr deleted (0:
+          // every vectored segment) rewrite in place, the rest carry
+          // byte-identical
+          if (zorder.nonEmpty) throw new SemanticError(
+            "OPTIMIZE PURGE does not combine with ZORDER BY (a ZORDER " +
+              "republish already materializes every deletion vector)")
+          val (v, n) = semantic(Versioned.purgeVectors(spark, resolved, thr))
+          statusRow("version" -> v, "segments_purged" -> n.toLong)
+        case None =>
+          val before = Versioned.segmentCount(spark, resolved)
+          // already-compact short-circuit: compact() would rewrite a
+          // one-segment head IN FULL for zero benefit. ZORDER never
+          // short-circuits: re-clustering a one-segment head is the
+          // point; SEGMENTS k writes z-range segments, the
+          // manifest-skipping and DML-granularity shape
+          val v =
+            if (zorder.nonEmpty) semantic(segments match {
+              case Some(k) =>
+                Versioned.optimizeZorderSegments(spark, resolved, zorder, k)
+              case None => Versioned.optimizeZorder(spark, resolved, zorder)
+            })
+            else if (before <= 1) Versioned.versions(spark, resolved).last
+            else Versioned.compact(spark, resolved)
+          statusRow("version" -> v, "segments_compacted" -> before.toLong)
       }
-      val before = graft.sources.Versioned.segmentCount(spark, resolved)
-      // already-compact short-circuit: a one-segment head would still
-      // be rewritten IN FULL by compact() — a whole-dataset write for
-      // zero benefit (and a useless new version). ZORDER never
-      // short-circuits: re-clustering a one-segment head is the point.
-      val v =
-        if (zorderCols != null) {
-          val cols = zorderCols.split(",").map(_.trim).toSeq
-          try {
-            if (segmentsOpt != null)
-              // z-range segments: the manifest-skipping AND
-              // DML-granularity shape of the clustered table
-              graft.sources.Versioned.optimizeZorderSegments(
-                spark, resolved, cols, segmentsOpt.toInt)
-            else graft.sources.Versioned.optimizeZorder(
-              spark, resolved, cols)
-          } catch { case e: IllegalArgumentException =>
-            throw new SemanticError(e.getMessage) }
-        }
-        else if (before <= 1)
-          graft.sources.Versioned.versions(spark, resolved).last
-        else graft.sources.Versioned.compact(spark, resolved)
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(v, before.toLong)),
-        StructType(Seq(
-          StructField("version", LongType, nullable = false),
-          StructField("segments_compacted", LongType, nullable = false)))))
-    case DeleteRe(vectored, target, cond) =>
-      scalarCache.clear()
-      val resolved = Tables.resolve(target, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError(
-          s"DELETE requires a Versioned dataset at '$resolved' — " +
-          "copy-on-write needs manifests; commit through Versioned first")
-      // parse the predicate with the full dialect expression grammar by
-      // wrapping it in a SELECT; subquery predicates have no rendering
-      // against the snapshot read and reject loudly
-      val where = SqlParser
-        .parseCompound(s"SELECT * FROM t WHERE $cond").head.where
-        .getOrElse(throw new SemanticError("DELETE needs a predicate"))
-      if (collectScalarSubs(where).nonEmpty || containsInSubquery(where))
-        throw new SemanticError(
-          "DELETE predicates cannot contain subqueries")
-      val df = graft.sources.Versioned.read(spark, resolved, None)
-      val v =
-        try {
-          if (vectored != null) graft.sources.Versioned
-            .deleteWhereVectored(spark, resolved, where.compile(df.schema))
-          else graft.sources.Versioned.deleteWhere(
-            spark, resolved, where.compile(df.schema))
-        } catch { case e: IllegalArgumentException =>
-          throw new SemanticError(e.getMessage) }
-      // status row from FOOTER metadata over the new manifest — the
-      // round-10 verdict's last table-sized DML cost: a full
-      // read(head).count() here scanned the entire table per DELETE
-      // statement for pure reporting
-      val n = graft.sources.Versioned.rowCount(spark, resolved, Some(v))
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(v, n)),
-        StructType(Seq(StructField("version", LongType, nullable = false),
-          StructField("n_rows", LongType, nullable = false)))))
-    case DescribeHistoryRe(quoted, bare) =>
-      val ref = if (quoted != null) quoted else bare
+
+    // DELETE: copy-on-write commits the surviving rows as a new
+    // version; VECTORED lands the matched positions in deletion vectors
+    // instead (every segment carries byte-identical)
+    case Delete(target, where, vectored) =>
+      val resolved = versionedPath("DELETE", target)
+      noSubqueries("DELETE predicates", where)
+      val pred = where.compile(Versioned.read(spark, resolved, None).schema)
+      val v = semantic(
+        if (vectored) Versioned.deleteWhereVectored(spark, resolved, pred)
+        else Versioned.deleteWhere(spark, resolved, pred))
+      // status row from FOOTER metadata over the new manifest, never a
+      // count of the new head
+      statusRow("version" -> v,
+        "n_rows" -> Versioned.rowCount(spark, resolved, Some(v)))
+    case u: Update => update(u)
+    case m: Merge => merge(m)
+    case i: Insert => insert(i)
+
+    case DescribeHistory(ref) =>
       val resolved = Tables.resolve(ref, baseDir)
-      import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
       // commit_ts = the manifest's write time (rename-committed, written
       // once) in epoch ms. Versions AND mtimes come from ONE directory
-      // listing — versionsWithMtime — with `vs` derived from it, never
-      // a separate versions() listing: a vacuum racing between two
-      // listings would surface as a bare NoSuchElementException on the
-      // mtime lookup. The manifests themselves come from ONE bulk read
-      // (distributed past the cutoff). The statement previously paid 3
-      // serial driver round trips per version (manifestMeta +
-      // segmentCount's re-read + getFileStatus) — at a 10k-commit audit
-      // that was 30k round trips.
-      val withMtime = graft.sources.Versioned
-        .versionsWithMtime(spark, resolved).sortBy(_._1)
-      if (withMtime.isEmpty) throw new SemanticError(
-        s"DESCRIBE HISTORY requires a Versioned dataset at '$resolved'")
+      // listing — a vacuum racing between two listings would surface as
+      // a bare NoSuchElementException on the mtime lookup — and the
+      // manifests from ONE bulk read (distributed past the cutoff)
+      val withMtime = Versioned.versionsWithMtime(spark, resolved).sortBy(_._1)
+      if (withMtime.isEmpty) throw notVersioned("DESCRIBE HISTORY", resolved)
       val vs = withMtime.map(_._1)
       val mtimes = withMtime.toMap
-      val bulk = graft.sources.Versioned
-        .readManifestsBulk(spark, resolved, vs)
-      // operation = the commit's #op header line; versions committed
-      // before operations were recorded surface "" (never a guess).
-      // change_rows = the DML's recorded change-row count (the `#cdc
-      // <dir> <n>` header): NULL when the version recorded nothing (an
-      // append's inserts are lazy, a reorganization is neutral) — the
-      // per-version impact column of the audit.
+      val bulk = Versioned.readManifestsBulk(spark, resolved, vs)
+      // operation = the commit's #op header line ("" for versions
+      // committed before operations were recorded). change_rows = the
+      // DML's recorded change-row count (the `#cdc <dir> <n>` header):
+      // NULL when the version recorded nothing (an append's inserts are
+      // lazy, a reorganization is neutral)
       val rows = vs.map { v =>
         val (segs, meta) = bulk(v)
         val changeRows: java.lang.Long = meta.collectFirst {
           case l if l.startsWith("#cdc ") && l != "#cdc neutral" &&
               l.stripPrefix("#cdc ").split(" ").length > 1 =>
-            java.lang.Long.valueOf(
-              l.stripPrefix("#cdc ").split(" ")(1))
+            java.lang.Long.valueOf(l.stripPrefix("#cdc ").split(" ")(1))
         }.orNull
-        Row(v,
-          segs.length,
-          v == vs.last,
-          mtimes(v),
+        Row(v, segs.length, v == vs.last, mtimes(v),
           meta.collectFirst { case l if l.startsWith("#op ") =>
             l.stripPrefix("#op ") }.getOrElse(""),
           changeRows)
       }
-      GraftFrame.fromDF(spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        StructType(Seq(
-          StructField("version", LongType, nullable = false),
-          StructField("n_segments", IntegerType, nullable = false),
-          StructField("is_head", BooleanType, nullable = false),
-          StructField("commit_ts", LongType, nullable = false),
-          StructField("operation", org.apache.spark.sql.types.StringType,
-            nullable = false),
-          StructField("change_rows", LongType, nullable = true)))))
-    case DescribeRe(quoted, bare) =>
-      // table() may plan a VIEW body holding a scalar subquery — the
-      // per-statement memo contract (see the default case) applies to
-      // metadata statements too, or a value collected by an earlier
-      // statement describes a stale snapshot
-      scalarCache.clear()
-      val ref = if (quoted != null) quoted else bare
-      val df = table(ref).df
-      import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
-      val rows = df.schema.fields.toSeq.map(f =>
-        // Locale.ROOT: 'BIGINT'.toLowerCase under tr-TR yields 'bıgınt'
-        // (dotless i) — the ILIKE lowering trap, statement-side
-        Row(f.name, f.dataType.sql.toLowerCase(java.util.Locale.ROOT),
-          f.nullable))
-      GraftFrame.fromDF(spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-        StructType(Seq(
-          StructField("column_name", StringType, nullable = false),
-          StructField("column_type", StringType, nullable = false),
-          StructField("nullable", BooleanType, nullable = false)))))
-    case CopyRe(body, target, fmtParen, fmtBare) =>
-      scalarCache.clear()
-      val df = evalCompound(SqlParser.parseCompound(body), Map.empty).df
-      val fmt = Option(fmtParen).orElse(Option(fmtBare))
-        .map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse {
-          if (target.endsWith(".jsonl") || target.endsWith(".ndjson")) "jsonl"
-          else if (target.endsWith(".csv")) "csv"
-          else if (target.endsWith(".avro")) "avro"
-          else if (target.endsWith(".tfrecord")) "tfrecord"
-          else "parquet"
-        }
+      rowsFrame(schemaOf("version" -> LongType, "n_segments" -> IntegerType,
+          "is_head" -> BooleanType, "commit_ts" -> LongType,
+          "operation" -> StringType).add("change_rows", LongType, nullable = true),
+        rows)
+    // DESCRIBE: one (column_name, column_type, nullable) row per column
+    // through the resolution FROM uses; types in lower-case Spark DDL
+    case Describe(ref) =>
+      rowsFrame(schemaOf("column_name" -> StringType,
+          "column_type" -> StringType, "nullable" -> BooleanType),
+        table(ref).df.schema.fields.toSeq.map(f =>
+          // Locale.ROOT: 'BIGINT'.toLowerCase under tr-TR yields 'bıgınt'
+          Row(f.name, f.dataType.sql.toLowerCase(java.util.Locale.ROOT),
+            f.nullable)))
+
+    // COPY: a task-parallel export of a query result as a directory of
+    // part files — JSONL, CSV (with header), parquet, Avro OCF or framed
+    // tf.Example TFRecord; the format defaults from the target extension
+    case Copy(q, target, format) =>
+      val df = evalCompound(q, Map.empty).df
+      val fmt = format.map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse {
+        if (target.endsWith(".jsonl") || target.endsWith(".ndjson")) "jsonl"
+        else if (target.endsWith(".csv")) "csv"
+        else if (target.endsWith(".avro")) "avro"
+        else if (target.endsWith(".tfrecord")) "tfrecord"
+        else "parquet"
+      }
       // ONE execution of the body: write, then count the EXPORT (line
       // counts for the text formats, a columnless scan for parquet) —
       // a count() before the write would run the whole query twice and,
@@ -811,10 +371,8 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           df.write.mode("overwrite").parquet(target)
           spark.read.parquet(target).count()
         case "avro" =>
-          // task-parallel OCF shards through the Avro core library
-          // (graft.sources.Avro — local-FS shard files, one per task,
-          // like the executor-side writers the ingest gates use);
-          // count is the READ-BACK of the export, like the others
+          // task-parallel OCF shards through the Avro core library, one
+          // per task; count is the READ-BACK of the export
           val dir = new java.io.File(target)
           if (dir.exists())
             org.apache.commons.io.FileUtils.deleteDirectory(dir)
@@ -860,32 +418,21 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           s"Unknown COPY format '$other' — FORMAT jsonl, csv, parquet, " +
             "avro or tfrecord")
       }
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(n, target)),
-        StructType(Seq(
-          StructField("n_rows", LongType, nullable = false),
-          StructField("path", StringType, nullable = false)))))
-    case AnalyzeRe(quoted, bare) =>
-      val ref = if (quoted != null) quoted else bare
-      val resolved = Tables.resolve(ref, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError("ANALYZE builds data-skipping " +
-          s"statistics for a Versioned dataset; '$ref' is not one")
-      val (nSegs, nBuilt) =
-        graft.sources.Versioned.analyzeStats(spark, resolved)
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(nSegs.toLong, nBuilt.toLong)),
-        StructType(Seq(
-          StructField("n_segments", LongType, nullable = false),
-          StructField("n_built", LongType, nullable = false)))))
+      statusRow("n_rows" -> n, "path" -> target)
 
-    case SummarizeFootersRe(quoted, bare) =>
-      val ref = if (quoted != null) quoted else bare
+    // ANALYZE: backfill data-skipping sidecars for segments missing one
+    // (task-parallel footer walks, metadata only)
+    case Analyze(ref) =>
+      val (nSegs, nBuilt) =
+        Versioned.analyzeStats(spark, versionedPath("ANALYZE", ref))
+      statusRow("n_segments" -> nSegs.toLong, "n_built" -> nBuilt.toLong)
+    // SUMMARIZE FOOTERS: per-column row/null counts and numeric min/max
+    // from parquet FOOTERS alone, zero data pages decoded. String bounds
+    // surface as NULL (parquet's binary min/max may be truncated)
+    case SummarizeFooters(ref) =>
       val resolved = Tables.resolve(ref, baseDir)
       if (!resolved.endsWith(".parquet") &&
-          graft.sources.Versioned.versions(spark, resolved).nonEmpty)
+          Versioned.versions(spark, resolved).nonEmpty)
         throw new SemanticError("SUMMARIZE FOOTERS reads a raw parquet " +
           "directory's footers; resolve a Versioned dataset's segments " +
           "explicitly (footers cannot see manifest membership)")
@@ -903,14 +450,14 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
             allOrNull("n_nulls", F.sum("n_nulls")),
             allOrNull("min_val", F.min("min_val")),
             allOrNull("max_val", F.max("max_val"))))
-    case SummarizeRe(quoted, bare) =>
-      scalarCache.clear() // view bodies re-plan here too (see DESCRIBE)
-      val df = table(if (quoted != null) quoted else bare).df
+    // SUMMARIZE: per-column non-null, null and EXACT distinct counts
+    // plus min and max (stringified; NULL for non-orderable types) in
+    // ONE aggregation pass — exact, so a differential oracle replays it
+    case Summarize(ref) =>
+      val df = table(ref).df
       import org.apache.spark.sql.{functions => F}
-      import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType, StructField, StructType}
-      // one aggregation pass: 4 statistics per column + the row count;
       // the single collected row is 4·ncols + 1 scalars — bounded by the
-      // schema, never the data (the ivfCentroids bounded-collect rule)
+      // schema, never the data
       val fields = df.schema.fields.toSeq
       val aggs = fields.flatMap { f =>
         val c = df.col(f.name)
@@ -933,29 +480,25 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       } :+ F.count(F.lit(1))
       val r = df.agg(aggs.head, aggs.tail: _*).head()
       val total = r.getLong(aggs.length - 1)
-      val out = fields.zipWithIndex.map { case (f, i) =>
-        Row(f.name, f.dataType.sql.toLowerCase(java.util.Locale.ROOT),
-          r.getLong(4 * i), total - r.getLong(4 * i),
-          if (r.isNullAt(4 * i + 1)) null else r.getLong(4 * i + 1),
-          if (r.isNullAt(4 * i + 2)) null else r.getString(4 * i + 2),
-          if (r.isNullAt(4 * i + 3)) null else r.getString(4 * i + 3))
-      }
-      GraftFrame.fromDF(spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(out).asJava),
-        StructType(Seq(
-          StructField("column_name", StringType, nullable = false),
-          StructField("column_type", StringType, nullable = false),
-          StructField("n_nonnull", LongType, nullable = false),
-          StructField("n_null", LongType, nullable = false),
-          StructField("n_distinct", LongType, nullable = true), // NULL for maps
-          StructField("min_value", StringType, nullable = true),
-          StructField("max_value", StringType, nullable = true)))))
-    case ShowTablesRe() =>
+      rowsFrame(schemaOf("column_name" -> StringType,
+          "column_type" -> StringType, "n_nonnull" -> LongType,
+          "n_null" -> LongType)
+          .add("n_distinct", LongType, nullable = true) // NULL for maps
+          .add("min_value", StringType, nullable = true)
+          .add("max_value", StringType, nullable = true),
+        fields.zipWithIndex.map { case (f, i) =>
+          Row(f.name, f.dataType.sql.toLowerCase(java.util.Locale.ROOT),
+            r.getLong(4 * i), total - r.getLong(4 * i),
+            if (r.isNullAt(4 * i + 1)) null else r.getLong(4 * i + 1),
+            if (r.isNullAt(4 * i + 2)) null else r.getString(4 * i + 2),
+            if (r.isNullAt(4 * i + 3)) null else r.getString(4 * i + 3))
+        })
+    // SHOW TABLES: every FROM-by-extension table of the base directory,
+    // one (table_name, format) row each, then the session's views
+    case ShowTables =>
       val dir = baseDir.getOrElse(throw new SemanticError(
         "SHOW TABLES needs an engine base directory (tables are files; " +
         "without a directory there is nothing to list)"))
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
       // the Hadoop FS API, not java.io.File: FROM/Versioned resolve
       // tables through the Hadoop filesystem of the path's scheme, so a
       // non-local base directory must list the same catalog those paths
@@ -967,923 +510,59 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
          else Seq.empty)
         .map(_.getPath.getName)
         .flatMap { n =>
-          // every FROM-by-extension format the resolver serves — the
-          // catalog must list exactly what a bare-name FROM can read
-          val fmt =
-            if (n.endsWith(".parquet")) Some(n.stripSuffix(".parquet") -> "parquet")
-            else if (n.endsWith(".bin")) Some(n -> "blockfile")
-            else if (n.endsWith(".warc") || n.endsWith(".warc.gz")) Some(n -> "warc")
-            else if (n.endsWith(".tar") || n.endsWith(".tar.gz") ||
-                     n.endsWith(".tgz")) Some(n -> "tar")
-            else if (n.endsWith(".zip")) Some(n -> "zip")
-            else if (n.endsWith(".avro")) Some(n -> "avro")
-            else if (n.endsWith(".tfrecord")) Some(n -> "tfrecord")
-            else if (n.endsWith(".csv") || n.endsWith(".csv.gz")) Some(n -> "csv")
-            else if (n.endsWith(".jsonl") || n.endsWith(".ndjson")) Some(n -> "jsonl")
-            else None
-          fmt
+          // the catalog must list exactly what a bare-name FROM can read
+          if (n.endsWith(".parquet")) Some(n.stripSuffix(".parquet") -> "parquet")
+          else if (n.endsWith(".bin")) Some(n -> "blockfile")
+          else if (n.endsWith(".warc") || n.endsWith(".warc.gz")) Some(n -> "warc")
+          else if (n.endsWith(".tar") || n.endsWith(".tar.gz") ||
+                   n.endsWith(".tgz")) Some(n -> "tar")
+          else if (n.endsWith(".zip")) Some(n -> "zip")
+          else if (n.endsWith(".avro")) Some(n -> "avro")
+          else if (n.endsWith(".tfrecord")) Some(n -> "tfrecord")
+          else if (n.endsWith(".csv") || n.endsWith(".csv.gz")) Some(n -> "csv")
+          else if (n.endsWith(".jsonl") || n.endsWith(".ndjson")) Some(n -> "jsonl")
+          else None
         }
         .sortBy(_._1)
         .map { case (name, fmt) => Row(name, fmt) } ++
         views.keys.toSeq.sorted.map(n => Row(n, "view"))
-      GraftFrame.fromDF(spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(files).asJava),
-        StructType(Seq(
-          StructField("table_name", StringType, nullable = false),
-          StructField("format", StringType, nullable = false)))))
-    case UpdateRe(vectored, target, setText, cond) =>
-      scalarCache.clear()
-      val resolved = Tables.resolve(target, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError(
-          s"UPDATE requires a Versioned dataset at '$resolved' — " +
-          "copy-on-write needs manifests; commit through Versioned first")
-      val assigns = SqlParser.parseSetAssignments(setText)
-      val where = SqlParser
-        .parseCompound(s"SELECT * FROM t WHERE $cond").head.where
-        .getOrElse(throw new SemanticError("UPDATE needs a predicate"))
-      (where +: assigns.map(_._2)).foreach { c =>
-        if (collectScalarSubs(c).nonEmpty || containsInSubquery(c))
-          throw new SemanticError(
-            "UPDATE expressions cannot contain subqueries")
-      }
-      // resolve the head version ONCE (detection read, segment list and
-      // rewrite all describe the same snapshot; a concurrent commit
-      // fails the final rename loudly instead of desynchronizing them)
-      val hv = graft.sources.Versioned.headVersion(spark, resolved)
-      val head = graft.sources.Versioned.read(spark, resolved, Some(hv))
-      // same reserved-name guard as MERGE: the rewrite appends
-      // provenance columns to the scan, so a colliding user column
-      // would fail deep inside with an ambiguous-reference error
-      (graft.sources.Versioned.ReservedProvenanceCols ++
-          graft.sources.Versioned.CdcReservedCols).foreach { c =>
-        if (head.columns.contains(c))
-          throw new SemanticError(s"UPDATE: reserved column name '$c'")
-      }
-      assigns.foreach { case (n, _) =>
-        if (!head.columns.contains(n)) throw new SemanticError(
-          s"UPDATE SET references unknown column '$n'")
-      }
-      import org.apache.spark.sql.{functions => F}
-      // standard UPDATE row-match semantics: only predicate-TRUE rows
-      // change; a NULL predicate leaves the row as-is — which the RAW
-      // predicate already gives both consumers (Filter keeps TRUE only;
-      // when() sends NULL to otherwise), and the bare comparison shape
-      // is what parquet pushdown + row-group pruning consume: wrapping
-      // it in coalesce(.., false) forced the detection pass into a
-      // full-table scan
-      val pred = where.compile(head.schema)
-      if (vectored != null) {
-        // MERGE-ON-READ update: vector the matched positions, append
-        // one fresh segment of updated copies — write cost ∝ matched
-        // rows, every existing segment carries byte-identical
-        val sets = assigns.map { case (n, rhs) =>
-          n -> rhs.compile(head.schema)
-        }
-        val (v, nUpd) =
-          try graft.sources.Versioned.updateWhereVectored(
-            spark, resolved, pred, sets)
-          catch { case e: IllegalArgumentException =>
-            throw new SemanticError(e.getMessage) }
-        import org.apache.spark.sql.types.{LongType, StructField, StructType}
-        return GraftFrame.fromDF(spark.createDataFrame(
-          java.util.List.of(Row(v, nUpd)),
-          StructType(Seq(
-            StructField("version", LongType, nullable = false),
-            StructField("n_updated", LongType, nullable = false)))))
-      }
-      // SEGMENT-PRUNED copy-on-write: one detection pass (predicate
-      // pushed into the scan) finds which segments hold matched rows
-      // and how many — the per-segment collect is bounded by the
-      // manifest length. Only those segments rewrite; untouched ones
-      // carry into the new manifest by reference. A selective UPDATE
-      // on a 100 TB corpus costs the matched segments, not the table.
-      val segsAll =
-        graft.sources.Versioned.headSegments(spark, resolved, Some(hv))
-      // ONE detection scan, staged: per-segment counts, the status
-      // row, and the change-feed pre/postimages all read the
-      // matched-row-sized staging file, never the table again
-      val detection = graft.sources.Versioned
-        .readWithProvenance(spark, resolved, Some(hv)).filter(pred)
-      // the predicate is evaluated TWICE on this path (detection scan,
-      // then F.when(pred, ...) in the rewrite) — the same double-eval
-      // hazard deleteWhere guards against: a nondeterministic predicate
-      // (rand()) would silently under-update rows the detection pass
-      // didn't flag. Reject loudly, same analyzed-Filter check.
-      detection.queryExecution.analyzed.foreach {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          if (!f.condition.deterministic) throw new SemanticError(
-            "UPDATE predicates must be deterministic (the predicate is " +
-              "evaluated once to find affected segments and again to " +
-              s"rewrite them): ${f.condition.sql}")
-        case _ => ()
-      }
-      val (stagingDir, staged, _) =
-        graft.sources.Versioned.stageMatched(detection, resolved)
-      val (v, nUpdated) = try {
-        val perSeg = staged
-          .groupBy("__seg").agg(F.count(F.lit(1)).as("c"))
-          .collect()
-        val nUpd = perSeg.map(_.getLong(1)).sum
-        val affected = perSeg.map(_.getString(0)).toSet
-        val dvMap = graft.sources.Versioned.readDvMap(spark, resolved, hv)
-        val v0 =
-          if (affected.isEmpty)
-            graft.sources.Versioned.commitSegments(spark, resolved, segsAll,
-              dvMap, expectedBase = Some(hv), op = "update")
-          else {
-            val updated = graft.sources.Versioned
-              .readSegmentsAligned(spark, resolved,
-                segsAll.filter(affected), head.schema, dvMap)
-              .select(head.schema.fields.map { f =>
-                assigns.find(_._1 == f.name) match {
-                  case Some((_, rhs)) =>
-                    // cast to the column's committed type: schema
-                    // stability across versions is the dataset's contract
-                    F.when(pred, rhs.compile(head.schema).cast(f.dataType))
-                      .otherwise(F.col(f.name)).as(f.name)
-                  case None => F.col(f.name)
-                }
-              }.toSeq: _*)
-            // writeSegment directly, not writeSegmentIfNonEmpty: an
-            // UPDATE never removes rows, and every affected segment
-            // holds at least one LIVE matched row (detection read
-            // dv-applied provenance), so `updated` cannot be empty —
-            // the emptiness probe would be a wasted second scan of the
-            // affected segments
-            val fresh = Some(graft.sources.Versioned
-              .writeSegment(updated, resolved))
-            val post = staged.select(head.schema.fields.map { f =>
-              assigns.find(_._1 == f.name) match {
-                case Some((_, rhs)) =>
-                  rhs.compile(head.schema).cast(f.dataType).as(f.name)
-                case None => F.col(f.name)
-              }
-            }.toSeq: _*)
-            val cdc = graft.sources.Versioned
-              .cdcTag(staged, "update_preimage")
-              .unionByName(graft.sources.Versioned
-                .cdcTag(post, "update_postimage"))
-            graft.sources.Versioned.commitPruned(spark, resolved,
-              segsAll.filterNot(affected), fresh, head.schema, dvMap,
-              cdc = graft.sources.Versioned.CdcRows(cdc),
-              expectedBase = Some(hv), op = "update")
-          }
-        (v0, nUpd)
-      } finally {
-        new org.apache.hadoop.fs.Path(stagingDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(new org.apache.hadoop.fs.Path(stagingDir), true): Unit
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(v, nUpdated)),
-        StructType(Seq(
-          StructField("version", LongType, nullable = false),
-          StructField("n_updated", LongType, nullable = false)))))
-    case MergeRe(target, taliasOpt, rest) =>
-      scalarCache.clear()
-      import org.apache.spark.sql.{functions => F}
-      val resolved = Tables.resolve(target, baseDir)
-      if (graft.sources.Versioned.versions(spark, resolved).isEmpty)
-        throw new SemanticError(
-          s"MERGE requires a Versioned dataset at '$resolved' — " +
-          "copy-on-write needs manifests; commit through Versioned first")
-      // statement split: WHEN clauses off the tail, then the LAST
-      // ` ON ` inside the head separates USING source from condition
-      val whenStart = MergeWhenSplit.findFirstMatchIn(rest).map(_.start)
-        .getOrElse(throw new SemanticError(
-          "MERGE needs at least one WHEN [NOT] MATCHED clause"))
-      val headText = rest.take(whenStart)
-      val whenText = rest.drop(whenStart).trim
-      val onMatches = MergeOnSplit.findAllMatchIn(headText).toSeq
-      if (onMatches.isEmpty) throw new SemanticError(
-        "MERGE needs `USING <source> ON <condition>`")
-      val usingText = headText.take(onMatches.last.start).trim
-      val condText = headText.drop(onMatches.last.end).trim
-      // WHEN clauses: split at each WHEN boundary, classify each
-      val whenStarts = MergeWhenSplit.findAllMatchIn(whenText)
-        .map(_.start).toSeq
-      val clauses = whenStarts.zipAll(whenStarts.drop(1), 0, whenText.length)
-        .map { case (a, b) => whenText.substring(a, b).trim }
-      // clause list: any number of WHEN MATCHED [AND cond] clauses
-      // (first-match-wins per matched row, specification order — the
-      // standard semantics), at most one WHEN NOT MATCHED [AND cond]
-      val matchedClauses =
-        scala.collection.mutable.ArrayBuffer.empty[MergeMatched]
-      var insertStar = false
-      var insertCols: Option[(Seq[String], Seq[String])] = None
-      var insertCond: Option[String] = None
-      clauses.foreach { clause =>
-        val (isNot, rest) = clause match {
-          case MergeClauseHead(notKw, r) => (notKw != null, r)
-          case other => throw new SemanticError(
-            s"MERGE: cannot parse WHEN clause '$other'")
-        }
-        // optional `AND <cond>` before THEN — the condition may itself
-        // hold parens, strings and CASE...END, so the THEN that ends it
-        // is found by a top-level scan, not a regex
-        val (cond, action) =
-          if (rest.take(4).equalsIgnoreCase("THEN"))
-            (None, rest.drop(4).trim)
-          else if (rest.take(3).equalsIgnoreCase("AND")) {
-            val afterAnd = rest.drop(3)
-            val at = findTopLevelThen(afterAnd)
-            if (at < 0) throw new SemanticError(
-              s"MERGE: WHEN clause condition has no THEN: '$clause'")
-            (Some(afterAnd.take(at).trim), afterAnd.drop(at + 4).trim)
-          } else throw new SemanticError(
-            s"MERGE: expected AND <condition> or THEN after " +
-              s"${if (isNot) "NOT MATCHED" else "MATCHED"}: '$clause'")
-        (isNot, action) match {
-          case (false, MergeActUpdate(setText)) =>
-            matchedClauses += MergeUpd(cond, parseMergeAssigns(setText))
-          case (false, MergeActDelete()) =>
-            matchedClauses += MergeDel(cond)
-          case (true, MergeActInsertStar()) =>
-            if (insertStar || insertCols.nonEmpty) throw new SemanticError(
-              "MERGE supports at most one WHEN NOT MATCHED clause")
-            insertStar = true; insertCond = cond
-          case (true, MergeActInsertCols(cols, vals)) =>
-            if (insertStar || insertCols.nonEmpty) throw new SemanticError(
-              "MERGE supports at most one WHEN NOT MATCHED clause")
-            insertCols = Some((
-              cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-              splitTopLevel(vals, ',')))
-            insertCond = cond
-          case _ => throw new SemanticError(
-            s"MERGE: unsupported WHEN clause '$clause' — expected WHEN " +
-            "MATCHED [AND cond] THEN UPDATE SET ... / DELETE, or WHEN " +
-            "NOT MATCHED [AND cond] THEN INSERT * / INSERT (cols) " +
-            "VALUES (exprs)")
-        }
-      }
-      // reachability: only the LAST matched clause may be unconditioned
-      // (an earlier catch-all would shadow everything after it)
-      matchedClauses.dropRight(1).zipWithIndex.foreach { case (cl, i) =>
-        val c = cl match {
-          case MergeUpd(c0, _) => c0
-          case MergeDel(c0) => c0
-        }
-        if (c.isEmpty) throw new SemanticError(
-          s"MERGE: WHEN MATCHED clause ${i + 1} has no AND condition " +
-            "but is not last — later matched clauses are unreachable")
-      }
-      // source frame + aliases (+ the raw table ref when the source is
-      // a table path — the small-source fast path prices it from
-      // footers below; views and subqueries price as unknown)
-      // footprint probed BEFORE the source frame is built (round 18,
-      // apply-floor work): a provably-small plain-parquet source reads
-      // with the footer's own recorded Spark schema — KB metadata
-      // already in hand — so the fast path's collect below is the
-      // FIRST job that touches it (spark.read.parquet without a schema
-      // pays a per-statement schema-inference job first)
-      // injected sources (the CDC apply's pre-collected net frame)
-      // resolve FIRST: rows + schema are already driver-resident, so
-      // the probe is free and the fast path's "collect" is a no-op
-      val srcInjected: Option[(Array[Row],
-          org.apache.spark.sql.types.StructType)] =
-        usingText match {
-          case MergeUsingBare(n, _) => injectedSrcs.get(n)
-          case _ => None
-        }
-      val srcProbe: Option[(Long, Long,
-          Option[org.apache.spark.sql.types.StructType])] =
-        srcInjected match {
-          case Some((rows, sch)) => Some((rows.length.toLong, 0L, Some(sch)))
-          case None => usingText match {
-            case MergeUsingQuoted(p, _) =>
-              plainParquetFootprint(graft.sources.Tables.resolve(p, baseDir))
-            case MergeUsingBare(n, _) if !views.contains(n) =>
-              plainParquetFootprint(graft.sources.Tables.resolve(n, baseDir))
-            case _ => None
-          }
-        }
-      val srcSmall = srcProbe.exists(_._1 <= Engine.MergeSmallSourceRows)
-      def srcTable(ref: String): GraftFrame = srcInjected match {
-        case Some((rows, sch)) => GraftFrame.fromDF(spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), sch))
-        case None => srcProbe match {
-          case Some((_, _, Some(sch))) if srcSmall =>
-            GraftFrame.fromDF(spark.read.schema(sch)
-              .parquet(graft.sources.Tables.resolve(ref, baseDir)))
-          case _ => table(ref)
-        }
-      }
-      val (srcFrame, saliasRaw, srcRefOpt) = usingText match {
-        case MergeUsingSub(sub, a) =>
-          (evalCompound(SqlParser.parseCompound(sub), Map.empty),
-            Option(a), None)
-        case MergeUsingQuoted(p, a) => (srcTable(p), Option(a), Some(p))
-        case MergeUsingBare(n, a) =>
-          (srcTable(n), Option(a).orElse(Some(n)), Some(n))
-        case other => throw new SemanticError(
-          s"MERGE: cannot parse USING source '$other'")
-      }
-      val tName = "__merge_target"; val sName = "__merge_source"
-      val talias = Option(taliasOpt).getOrElse(tName)
-      val salias = saliasRaw.getOrElse(sName)
-      if (talias == salias) throw new SemanticError(
-        s"MERGE: target and source aliases collide ('$talias')")
-      // SMALL-SOURCE statements run with AQE pinned off (round 18,
-      // apply-floor work): the match join and insert anti-join already
-      // broadcast the LocalRelation source, the target scan is already
-      // bounds-pruned at the manifest, and the rewrite is one segment
-      // — there is nothing for runtime re-planning to improve, while
-      // AQE materializes every exchange as its own stage-job (~5 extra
-      // scheduler floors per statement at the CDC apply's volume). A
-      // big MERGE keeps AQE (skew joins, coalescing matter there).
-      // leafNodeDefaultParallelism=1 rides along so the statement's
-      // driver-built LocalRelations broadcast without a scheduler job
-      // (see [[Engine.withSmallStmtConfs]]).
-      withSmallStmtConfs(srcSmall) {
-      // resolve the head version ONCE for the whole statement (the
-      // UPDATE/DELETE rule): match join, segment list and rewrite all
-      // describe the same snapshot
-      val hv = graft.sources.Versioned.headVersion(spark, resolved)
-      val head = graft.sources.Versioned.read(spark, resolved, Some(hv))
-      (graft.sources.Versioned.ReservedProvenanceCols ++
-          graft.sources.Versioned.CdcReservedCols ++
-          Seq("__srid", "__trow")).foreach { c =>
-        if (head.columns.contains(c) || srcFrame.df.columns.contains(c))
-          throw new SemanticError(s"MERGE: reserved column name '$c'")
-      }
-      // TARGET row identity is storage-level: parquet `_metadata`
-      // file-path/row-index provenance — deterministic across jobs with
-      // ZERO materialization (no full-table checkpoint) — plus the
-      // owning segment name, which is what makes the rewrite
-      // SEGMENT-PRUNED below. The SOURCE can be an arbitrary subquery,
-      // so it pins synthetic ids with a checkpoint — bounded by the
-      // source's size, never the target's. SMALL-SOURCE FAST PATH (the
-      // CDC replication apply's shape): when a plain-parquet USING
-      // source is provably tiny from its footers alone (KB metadata
-      // reads, no job), collect it ONCE into a LocalRelation with
-      // driver-assigned ids instead — determinism for free, and (the
-      // real win) accurate size stats, so the match join and the
-      // insert anti-join BROADCAST the source instead of shuffling
-      // both sides; a checkpointed RDD reports unknown stats and
-      // forces shuffle joins however small it is.
-      val tDf =
-        graft.sources.Versioned.readWithProvenance(spark, resolved, Some(hv))
-      val srcRows: Option[Array[Row]] =
-        if (!srcSmall) None
-        else {
-          // injected sources skip even the collect — their rows are
-          // already on the driver (LocalTableScan collect would be
-          // driver-side anyway, but this keeps it allocation-free)
-          val rows = srcInjected.map(_._1).getOrElse(srcFrame.df.collect())
-          Some(rows.zipWithIndex.map { case (r, i) =>
-            Row.fromSeq(r.toSeq :+ i.toLong) })
-        }
-      val sDf = srcRows match {
-        // a BARE LocalRelation, not coalesce(1)-wrapped: under
-        // withSmallStmtConfs the leaf executes single-task anyway, where
-        // the Coalesce wrapper forced a 1-task job per broadcast build
-        case Some(data) => spark.createDataFrame(java.util.Arrays.asList(
-          data: _*), srcFrame.df.schema.add("__srid",
-            org.apache.spark.sql.types.LongType, nullable = false))
-        case None => srcFrame.df
-          .withColumn("__srid", F.monotonically_increasing_id())
-          .localCheckpoint(true)
-      }
-      // the target row rides the match query as ONE struct column, so
-      // the dialect never has to name (or quote) the target's columns;
-      // an insert-only MERGE needs only the matched source ids
-      val tScoped =
-        if (matchedClauses.isEmpty) tDf
-        else tDf.withColumn("__trow",
-          F.struct(head.schema.fieldNames.toSeq.map(F.col): _*))
-      val scope = Map(tName -> GraftFrame.fromDF(tScoped),
-        sName -> GraftFrame.fromDF(sDf))
-      // validate every clause's SET column names against the target
-      matchedClauses.foreach {
-        case MergeUpd(_, as) => as.foreach { case (n, _) =>
-          if (!head.columns.contains(n)) throw new SemanticError(
-            s"MERGE SET references unknown target column '$n'")
-        }
-        case MergeDel(_) => ()
-      }
-      // one internal dialect query joins the aliased frames on the
-      // user's condition and projects the matched TARGET ROW (its
-      // columns and provenance) + the source row id + per-clause
-      // condition flags + SET values — everything the rewrite and the
-      // change rows need, so neither re-reads and re-joins the target.
-      // Its parsed expressions are then checked for subqueries (same
-      // rule as UPDATE/DELETE — no defined evaluation scope for them
-      // here). A clause with no AND condition projects a literal TRUE
-      // flag (0 = 0).
-      val clauseCondSql = matchedClauses.zipWithIndex.map { case (cl, i) =>
-        val c = cl match {
-          case MergeUpd(c0, _) => c0
-          case MergeDel(c0) => c0
-        }
-        s", (${c.getOrElse("0 = 0")}) AS __m_$i"
-      }.mkString
-      val setSql = matchedClauses.zipWithIndex.collect {
-        case (MergeUpd(_, as), i) =>
-          as.zipWithIndex.map { case ((_, rhs), j) =>
-            s", ($rhs) AS __set_${i}_$j" }.mkString
-      }.mkString
-      val matchedSql =
-        "SELECT " +
-          (if (matchedClauses.isEmpty) "" else s"$talias.__trow AS __trow, ") +
-          s"$talias.__file AS __file, " +
-          s"$talias.__pos AS __pos, " +
-          s"$talias.__seg AS __seg, $salias.__srid AS __srid" +
-          clauseCondSql + setSql +
-          s" FROM $tName $talias JOIN $sName $salias ON $condText"
-      val matchedCq = SqlParser.parseCompound(matchedSql)
-      (matchedCq.head.joins.map(_.on) ++
-        matchedCq.head.select.map(_.expr)).foreach { c =>
-        if (collectScalarSubs(c).nonEmpty || containsInSubquery(c))
-          throw new SemanticError(
-            "MERGE expressions cannot contain subqueries")
-      }
-      // pairs = matched target rows + flags + SET values — this
-      // checkpoint pins a frame bounded by the match count, never the
-      // target's size (the round-9 verdict's MERGE-profile fix).
-      // __win = index of the FIRST clause whose condition holds for the
-      // row (first-match-wins; NULL = matched but no clause fired:
-      // the row stays as-is AND stays excluded from the insert side,
-      // the standard semantics)
-      val winCol = matchedClauses.indices.foldRight(
-        F.lit(null).cast("int")) { (i, acc) =>
-        F.when(F.col(s"__m_$i"), F.lit(i)).otherwise(acc)
-      }
-      // manifest metadata for the rewrite — driver-side, KB-sized
-      val segsAll =
-        graft.sources.Versioned.headSegments(spark, resolved, Some(hv))
-      val dvMap = graft.sources.Versioned.readDvMap(spark, resolved, hv)
-      // the checkpoint's row count rides the SAME job via observe() —
-      // zero extra actions — and a small match set (the common DML /
-      // replication-apply case) is then collected into a LocalRelation:
-      // the byWin rollup below becomes driver-side Scala, the fired
-      // positions become an in-scan filter of the rewrite, and the
-      // insert side needs no shuffle
-      val pairsObs = new org.apache.spark.sql.Observation()
-      val (pairsCkpt, pairsLocal) =
-        Engine.withJobDescription(spark, "MERGE: match scan") {
-          val m = evalCompound(matchedCq, scope).df
-          val p = (if (matchedClauses.isEmpty) m
-              else m.select(F.col("__trow.*") +: m.columns.toSeq
-                .filter(_ != "__trow").map(F.col): _*))
-            .withColumn("__win", winCol)
-            .observe(pairsObs, F.count(F.lit(1)).as("n"))
-            .localCheckpoint(true)
-          val nPairs: Option[Long] =
-            try Some(scala.concurrent.Await
-              .result(pairsObs.future,
-                scala.concurrent.duration.Duration("30s")).getLong(0))
-            catch { case _: java.util.concurrent.TimeoutException => None }
-          (p, if (nPairs.exists(_ <= Engine.smallMatchRowCap(p.schema)))
-            Some(p.collect()) else None)
-        }
-      val pairs: org.apache.spark.sql.DataFrame = pairsLocal match {
-        // a bare LocalRelation, like sDf
-        case Some(rows) => spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), pairsCkpt.schema)
-        case None => pairsCkpt
-      }
-      // per-clause-kind action counts; bounded by the match count
-      val updIdxs = matchedClauses.zipWithIndex.collect {
-        case (MergeUpd(_, _), i) => i }
-      val delIdxs = matchedClauses.zipWithIndex.collect {
-        case (MergeDel(_), i) => i }
-      // ONE rollup over the (match-count-bounded, checkpointed) pairs
-      // yields BOTH the standard cardinality check (a target row
-      // matching two source rows has no defined UPDATE/DELETE result —
-      // fail loudly, never pick one; insert-only merges are exempt,
-      // matching Delta/Postgres) AND the per-clause action counts +
-      // affected-segment set: first a per-target-row rollup (max
-      // multiplicity is the cardinality witness), then the
-      // per-winning-clause rollup over it.
-      // rollup shape either way: (winning clause index or None,
-      // target-row count, max per-target-row multiplicity, segments)
-      val winStats: Seq[(Option[Int], Long, Long, Set[String])] =
-        if (matchedClauses.isEmpty) Seq.empty
-        else pairsLocal match {
-          case Some(rows) =>
-            // driver-side mirror of the distributed rollup below —
-            // bounded by the observed match count, no extra jobs
-            val sch = pairsCkpt.schema
-            val (fi, pi, gi, wi) = (sch.fieldIndex("__file"),
-              sch.fieldIndex("__pos"), sch.fieldIndex("__seg"),
-              sch.fieldIndex("__win"))
-            rows.toSeq
-              .groupBy(r => (r.getString(fi), r.getLong(pi))).values
-              .map { g =>
-                val h = g.head
-                (if (h.isNullAt(wi)) None else Some(h.getInt(wi)),
-                  g.length.toLong, h.getString(gi))
-              }.toSeq
-              .groupBy(_._1).map { case (w, gs) =>
-                (w, gs.length.toLong, gs.map(_._2).max,
-                  gs.map(_._3).toSet)
-              }.toSeq
-          case None => pairsCkpt
-            .groupBy("__file", "__pos")
-            .agg(F.count(F.lit(1)).as("__c"),
-              F.first(F.col("__win")).as("__win"),
-              F.first(F.col("__seg")).as("__seg"))
-            .groupBy("__win").agg(F.count(F.lit(1)).as("c"),
-              F.max(F.col("__c")).as("maxc"),
-              F.collect_set(F.col("__seg")).as("segs"))
-            .collect().toSeq.map(r =>
-              (if (r.isNullAt(0)) None else Some(r.getInt(0)),
-                r.getAs[Long]("c"), r.getAs[Long]("maxc"),
-                r.getSeq[String](3).toSet))
-        }
-      if (winStats.exists(_._3 > 1L))
-        throw new SemanticError("MERGE: a target row matches more than " +
-          "one source row — the ON condition must match at most one")
-      // NULL __win = matched rows where no clause fired (they stay
-      // as-is): counted for cardinality above, excluded from actions
-      val firedStats = winStats.filter(_._1.isDefined)
-      val byWin = firedStats.map(s => s._1.get -> s._2).toMap
-      val (nUpdated, nDeleted) =
-        (updIdxs.map(i => byWin.getOrElse(i, 0L)).sum,
-          delIdxs.map(i => byWin.getOrElse(i, 0L)).sum)
-      // SEGMENT PRUNING: only the segments holding rows a clause FIRED
-      // on are rewritten (a matched row whose conditions all failed
-      // rewrites nothing); untouched segments carry into the new
-      // manifest by reference, files byte-identical. An insert-only
-      // MERGE rewrites nothing at all: at 100 TB a one-row upsert costs
-      // one segment (plus the match join), not a full-table copy.
-      val affected: Set[String] = firedStats.flatMap(_._4).toSet
-      // per-clause CASE projection on the winning index — what turns a
-      // fired UPDATE pair into its postimage, for the fresh segment
-      // and the change rows alike
-      val updatedCols: Seq[org.apache.spark.sql.Column] =
-        head.schema.fields.toSeq.map { f =>
-          val updsOnField = matchedClauses.zipWithIndex.collect {
-            case (MergeUpd(_, as), i) if as.exists(_._1 == f.name) =>
-              (i, as.indexWhere(_._1 == f.name))
-          }
-          if (updsOnField.isEmpty) F.col(f.name)
-          else updsOnField.foldRight(
-            F.col(f.name): org.apache.spark.sql.Column) {
-            case ((ci, aj), acc) =>
-              // cast to the committed type: schema stability across
-              // versions is the dataset's contract (the UPDATE rule)
-              F.when(F.col("__win") === ci,
-                  F.col(s"__set_${ci}_$aj").cast(f.dataType))
-                .otherwise(acc)
-          }.as(f.name)
-        }
-      val headCols = head.schema.fieldNames.toSeq.map(F.col)
-      // ONE-PASS REWRITE of the affected segments: their rows read
-      // through the deletion-vector filter with the FIRED positions
-      // added to it (the rows no clause touched come through as they
-      // are), plus the UPDATE postimages straight from the pairs.
-      // DELETE-won rows are simply absent. No re-join of the pairs to
-      // the target, nothing persisted. A match set over the collect
-      // cap excludes its fired positions with the shuffled anti join
-      // the over-cap vectors use.
-      val fired = pairs.filter(F.col("__win").isNotNull)
-      val kept: Option[org.apache.spark.sql.DataFrame] =
-        if (affected.isEmpty) None
-        else Some((pairsLocal match {
-          case Some(rows) =>
-            val (fi, pi, wi) = (pairsCkpt.schema.fieldIndex("__file"),
-              pairsCkpt.schema.fieldIndex("__pos"),
-              pairsCkpt.schema.fieldIndex("__win"))
-            graft.sources.Versioned.readSegmentsAligned(spark, resolved,
-              segsAll.filter(affected), head.schema, dvMap,
-              excluded = graft.functions.DeletedPositions.of(
-                rows.iterator.filterNot(_.isNullAt(wi))
-                  .map(r => (r.getString(fi), r.getLong(pi)))))
-          case None =>
-            graft.sources.DeletionVectors.antiJoin(
-              graft.sources.Versioned.readSegmentsAligned(spark, resolved,
-                segsAll.filter(affected), head.schema, dvMap),
-              fired)
-        }).select(headCols: _*))
-      val postimages: Option[org.apache.spark.sql.DataFrame] =
-        if (affected.isEmpty || updIdxs.isEmpty) None
-        else Some(fired.filter(F.col("__win").isInCollection(updIdxs))
-          .select(updatedCols: _*))
-      // the source rows no pair matched: with the source and the pairs
-      // both on the driver, a driver-side filter (no anti join, so no
-      // broadcast job in the rewrite or the change rows); else the
-      // anti join. WHEN NOT MATCHED [AND cond] then filters them — the
-      // condition compiles against the SOURCE alias only (there is no
-      // target row to reference — standard restriction)
-      val unmatched: org.apache.spark.sql.DataFrame =
-        (srcRows, pairsLocal) match {
-          case (Some(data), Some(rows)) =>
-            val si = pairsCkpt.schema.fieldIndex("__srid")
-            val hit = rows.iterator.map(_.getLong(si)).toSet
-            spark.createDataFrame(java.util.Arrays.asList(
-              data.filterNot(r => hit(r.getLong(r.length - 1))): _*),
-              sDf.schema)
-          case _ => sDf.join(pairs.select("__srid"), Seq("__srid"), "left_anti")
-        }
-      val insertSrc = insertCond.fold(unmatched) { c =>
-        val keepCq = SqlParser.parseCompound(
-          s"SELECT * FROM $sName $salias WHERE $c")
-        keepCq.head.where.foreach { e =>
-          if (collectScalarSubs(e).nonEmpty || containsInSubquery(e))
-            throw new SemanticError(
-              "MERGE expressions cannot contain subqueries")
-        }
-        evalCompound(keepCq, Map(sName -> GraftFrame.fromDF(unmatched))).df
-      }
-      val inserts: Option[org.apache.spark.sql.DataFrame] =
-        if (insertStar) {
-          head.columns.foreach { c =>
-            if (!sDf.columns.contains(c)) throw new SemanticError(
-              s"MERGE INSERT *: source lacks target column '$c' — use " +
-              "INSERT (cols) VALUES (exprs) to map explicitly")
-          }
-          Some(insertSrc.select(head.schema.fields.map(f =>
-            F.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*))
-        } else insertCols.map { case (cols, vals) =>
-          if (cols.length != vals.length) throw new SemanticError(
-            s"MERGE INSERT: ${cols.length} columns but ${vals.length} values")
-          cols.foreach { c =>
-            if (!head.columns.contains(c)) throw new SemanticError(
-              s"MERGE INSERT references unknown target column '$c'")
-          }
-          // VALUES expressions compile against the SOURCE alias; the
-          // unlisted target columns fill with explicit NULLs (the
-          // column-list INSERT rule)
-          val insSql = s"SELECT $salias.__srid AS __srid" +
-            vals.zip(cols).map { case (v, c) => s", ($v) AS __ins_$c" }
-              .mkString + s" FROM $sName $salias"
-          val insCq = SqlParser.parseCompound(insSql)
-          insCq.head.select.map(_.expr).foreach { c =>
-            if (collectScalarSubs(c).nonEmpty || containsInSubquery(c))
-              throw new SemanticError(
-                "MERGE expressions cannot contain subqueries")
-          }
-          evalCompound(insCq, Map(sName -> GraftFrame.fromDF(insertSrc))).df
-            .select(head.schema.fields.map { f =>
-              if (cols.contains(f.name))
-                F.col(s"__ins_${f.name}").cast(f.dataType).as(f.name)
-              else F.lit(null).cast(f.dataType).as(f.name)
-            }.toSeq: _*)
-        }
-      // survivor count is KNOWN from metadata alone: live rows of the
-      // affected segments (footer totals − dv header counts, KB-sized
-      // reads) minus the rows a DELETE clause won — when positive the
-      // fresh union below is provably non-empty and the write skips
-      // writeSegmentIfNonEmpty's take(1) probe, a second scan just to
-      // learn what the footers already say. Also reused for the
-      // nInserted status row below.
-      val liveAffected: Long =
-        if (affected.isEmpty) 0L
-        else {
-          val totals = graft.sources.Versioned
-            .footerRowCountBySeg(spark, resolved, affected.toSeq)
-            .valuesIterator.sum
-          val dvDel = graft.sources.Versioned.dvCounts(spark, resolved,
-            dvMap.collect { case (s, d) if affected(s) => d }.toSeq)
-            .valuesIterator.sum
-          totals - dvDel
-        }
-      val survivorsNonEmpty = liveAffected - nDeleted > 0
-      // new version = untouched segments carried by reference + one
-      // fresh segment holding the affected segments' kept rows, the
-      // postimages and the inserted rows, written in ONE job
-      val fresh = Engine.withJobDescription(spark, "MERGE: rewrite") {
-        (kept.toSeq ++ postimages.toSeq ++ inserts.toSeq)
-          .reduceOption(_ unionAll _)
-          .flatMap { df =>
-            if (survivorsNonEmpty)
-              Some(graft.sources.Versioned.writeSegment(df, resolved))
-            else graft.sources.Versioned.writeSegmentIfNonEmpty(df, resolved)
-          }
-      }
-      // nInserted DERIVED from metadata, not a second execution of the
-      // source anti-join (`inserts.count()` re-ran a source-sized plan
-      // just for the status row — at a 100 TB-source backfill upsert
-      // that is a full second pass): fresh-segment rows (sidecar/footer)
-      // minus the survivor rows of the affected segments, where
-      // survivors = live rows (footer totals − dv header counts) − rows
-      // won by DELETE clauses. All exact, all KB-sized reads.
-      val nInserted: Long =
-        if (inserts.isEmpty) 0L
-        else {
-          val freshRows = fresh.fold(0L)(s =>
-            graft.sources.Versioned.segmentRowCount(spark, resolved, s))
-          freshRows - (liveAffected - nDeleted)
-        }
-      // change-feed rows, per fired clause kind, from the same pairs.
-      // An insert-only MERGE records nothing: its fresh segment holds
-      // ONLY inserts, which the feed synthesizes lazily from the
-      // segment delta (CdcNone).
-      val cdcSpec: graft.sources.Versioned.CdcSpec =
-        if (affected.isEmpty) graft.sources.Versioned.CdcNone
-        else {
-          // ONE pass over the fired pairs for every row-derived image
-          // kind: each fired row emits its change rows as an exploded
-          // array of structs — [preimage, postimage] for update wins,
-          // [delete] for delete wins. Row order within the files is
-          // unspecified, which no feed consumer observes (the
-          // net-effect apply orders by _commit_version/_change_type,
-          // the oracle compares row sets).
-          def tagged(cols: Seq[org.apache.spark.sql.Column], tag: String) =
-            F.struct((cols :+
-              F.lit(tag).as("_change_type")): _*)
-          val origCols = head.schema.fieldNames.toSeq
-            .map(n => F.col(n).as(n))
-          val pre = tagged(origCols, "update_preimage")
-          val post = tagged(updatedCols, "update_postimage")
-          val del = tagged(origCols, "delete")
-          val arr =
-            if (delIdxs.isEmpty) F.array(pre, post)
-            else if (updIdxs.isEmpty) F.array(del)
-            else F.when(F.col("__win").isInCollection(updIdxs),
-                F.array(pre, post))
-              .otherwise(F.array(del))
-          val rowImages = fired
-            .select(F.explode(arr).as("__c"))
-            .select("__c.*")
-          val parts = Seq(rowImages) ++
-            inserts.map(i => graft.sources.Versioned.cdcTag(i, "insert"))
-          graft.sources.Versioned.CdcRows(
-            parts.reduce(_.unionByName(_)))
-        }
-      val v = Engine.withJobDescription(spark, "MERGE: change rows") {
-        graft.sources.Versioned.commitPruned(spark, resolved,
-          segsAll.filterNot(affected), fresh, head.schema, dvMap,
-          cdc = cdcSpec, expectedBase = Some(hv), op = "merge")
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        java.util.List.of(Row(v, nUpdated, nDeleted, nInserted)),
-        StructType(Seq(
-          StructField("version", LongType, nullable = false),
-          StructField("n_updated", LongType, nullable = false),
-          StructField("n_deleted", LongType, nullable = false),
-          StructField("n_inserted", LongType, nullable = false)))))
-      } // withAqeOff(srcSmall)
+      rowsFrame(schemaOf("table_name" -> StringType, "format" -> StringType),
+        files)
 
-    case InsertRe(quoted, bare, colList, body) =>
-      scalarCache.clear()
-      // Tables.resolve is THE shared rule (its scaladoc: writers must
-      // land where a subsequent FROM of the same reference reads) — a
-      // hand-built '<base>/<bare>.parquet' here would resolve a bare
-      // 't.bin' differently from FROM/DESCRIBE
-      val target = if (quoted != null) quoted else {
-        if (baseDir.isEmpty) throw new SemanticError(
-          "INSERT INTO with a bare name needs an engine base " +
-          "directory; use a quoted target path instead")
-        bare
+    // EXPLAIN plans its query WITHOUT executing it and returns the
+    // physical plan as rows of text
+    case Explain(inner, formatted) =>
+      val parsed = inner match {
+        case Query(q) => q
+        case _: CreateTableAs => throw new SemanticError("EXPLAIN does not " +
+          "take CREATE TABLE (planning it would still write); EXPLAIN the " +
+          "SELECT body")
+        case other => throw new SemanticError(
+          s"EXPLAIN takes a query, not ${other.kind}")
       }
-      val resolved = Tables.resolve(target, baseDir)
-      if (resolved.endsWith(".parquet"))
-        throw new SemanticError(
-          "INSERT INTO a raw parquet path has no atomic append (a " +
-          "concurrent reader could observe half the new files); use an " +
-          "extension-less target for a Versioned dataset, a '.bin' " +
-          "target for BlockFile append, or CREATE TABLE to republish")
-      val isBin = resolved.endsWith(".bin")
-      // the existing target's schema, when there is one — VALUES rows
-      // need it for names; SELECT bodies align to it positionally
-      val targetSchema: Option[org.apache.spark.sql.types.StructType] =
-        if (isBin) {
-          val f = new java.io.File(resolved)
-          if (f.exists()) Some(Tables.blockFileRead(spark, resolved).schema)
-          else None
-        } else if (graft.sources.Versioned.versions(spark, resolved).nonEmpty)
-          Some(graft.sources.Versioned.read(spark, resolved, None).schema)
-        else None
-      // optional explicit column list: `INSERT INTO t (a, b) ...`
-      val cols: Option[Seq[String]] =
-        Option(colList).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      cols.foreach { cs =>
-        if (cs.distinct.length != cs.length) throw new SemanticError(
-          s"INSERT column list names a column twice: ${cs.mkString(", ")}")
-      }
-      val incoming = body match {
-        case InsertValuesBody(valueRows) =>
-          val names = cols.orElse(targetSchema.map(_.map(_.name).toSeq))
-            .getOrElse(throw new SemanticError(
-              s"INSERT ... VALUES needs an existing table at '$resolved' " +
-              "or an explicit column list `INSERT INTO t (a, b) VALUES " +
-              "...` to name the columns"))
-          evalCompound(SqlParser.parseCompound(
-            s"""SELECT * FROM (VALUES $valueRows) _ins(${
-              names.map(n => "\"" + n + "\"").mkString(", ")})"""),
-            Map.empty).df
-        case _ => evalCompound(SqlParser.parseCompound(body), Map.empty).df
-      }
-      // Alignment, standard INSERT semantics:
-      //   - no column list: the target's columns align POSITIONALLY with
-      //     casts (`VALUES (1, 'x')` fits a (BIGINT, VARCHAR) table);
-      //     EXTRA trailing columns pass through as schema EVOLUTION on
-      //     Versioned targets (the commit's prefix rule validates; older
-      //     segments then read NULL for them) and reject loudly in the
-      //     BlockFile writer (fixed-width format, no evolution story).
-      //     FEWER columns than the target is an error — SILENT
-      //     null-padding hides a broken pipeline;
-      //   - with a column list: listed names map the incoming columns to
-      //     their target columns, and the UNLISTED target columns fill
-      //     with NULL — explicit, so not silent. Names outside the
-      //     target schema reject (widen positionally instead).
-      val df = (targetSchema, cols) match {
-        case (Some(ts), None) =>
-          if (incoming.columns.length < ts.length) throw new SemanticError(
-            s"INSERT arity mismatch: target '$resolved' has ${ts.length} " +
-            s"columns, the inserted query produces ${incoming.columns.length}")
-          incoming.select(incoming.columns.zipWithIndex.map { case (c, i) =>
-            if (i < ts.length)
-              incoming.col(c).cast(ts.fields(i).dataType).as(ts.fields(i).name)
-            else incoming.col(c)
-          }: _*)
-        case (Some(ts), Some(cs)) =>
-          cs.find(c => !ts.fieldNames.contains(c)).foreach(c =>
-            throw new SemanticError(
-              s"INSERT column list names '$c', which '$resolved' does " +
-              "not have; new columns are added by a WIDENING positional " +
-              "insert, not a column list"))
-          if (incoming.columns.length != cs.length) throw new SemanticError(
-            s"INSERT arity mismatch: column list names ${cs.length} " +
-            s"columns, the inserted query produces ${incoming.columns.length}")
-          import org.apache.spark.sql.{functions => F}
-          val byName = cs.zip(incoming.columns).toMap
-          incoming.select(ts.fields.toSeq.map { f =>
-            byName.get(f.name) match {
-              case Some(c) => incoming.col(c).cast(f.dataType).as(f.name)
-              case None    => F.lit(null).cast(f.dataType).as(f.name)
-            }
-          }: _*)
-        case (None, Some(cs)) =>
-          // fresh target: the list NAMES the new dataset's columns
-          if (incoming.columns.length != cs.length) throw new SemanticError(
-            s"INSERT arity mismatch: column list names ${cs.length} " +
-            s"columns, the inserted query produces ${incoming.columns.length}")
-          incoming.toDF(cs: _*)
-        case (None, None) => incoming
-      }
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      if (isBin) {
-        // counts from BLOCK METADATA before and after (the BlockFile
-        // source pushes a bare COUNT(*) down to the footer walk — zero
-        // column bytes): the inserted query executes exactly ONCE, in
-        // the append itself, and appended = the metadata delta
-        val before =
-          if (new java.io.File(resolved).exists())
-            Tables.blockFileRead(spark, resolved).count()
-          else 0L
-        Tables.blockFileAppend(df, resolved)
-        val total = Tables.blockFileRead(spark, resolved).count()
-        GraftFrame.fromDF(spark.createDataFrame(
-          java.util.List.of(Row(total - before, total)),
-          StructType(Seq(
-            StructField("rows_appended", LongType, nullable = false),
-            StructField("n_rows", LongType, nullable = false)))))
-      } else {
-        val v = graft.sources.Versioned.commit(df, resolved, append = true)
-        // count the NEW segment only, from FOOTER metadata (the DELETE
-        // status-row rule): a head count would re-scan the whole
-        // dataset after every incremental publish, and even a scoped
-        // changes().count() re-reads the rows this statement just
-        // wrote. Cumulative totals are one `SELECT COUNT() FROM ds`
-        // away when wanted.
-        val appended = graft.sources.Versioned
-          .addedRowCount(spark, resolved, v - 1, Some(v))
-        GraftFrame.fromDF(spark.createDataFrame(
-          java.util.List.of(Row(v, appended)),
-          StructType(Seq(
-            StructField("version", LongType, nullable = false),
-            StructField("rows_appended", LongType, nullable = false)))))
-      }
-    case ExplainRe(formatted, body) =>
-      if (Ctas.findFirstIn(body).isDefined)
-        throw new SemanticError("EXPLAIN does not take CREATE TABLE " +
-          "(planning it would still write); EXPLAIN the SELECT body")
-      scalarCache.clear()
-      val parsed = SqlParser.parseCompound(body)
-      // EXPLAIN promises planning WITHOUT execution, but uncorrelated
-      // scalar subqueries are resolved by collecting a real value — a
-      // scan job — before the outer plan exists. Reject rather than
-      // silently run work under a statement documented as free (the
-      // CTAS-refusal precedent above). Uncorrelated EXISTS still pays
-      // its bounded one-row emptiness probe.
+      // uncorrelated scalar subqueries are resolved by collecting a real
+      // value — a scan job — before the outer plan exists: reject rather
+      // than run work under a statement that promises none. Uncorrelated
+      // EXISTS still pays its bounded one-row emptiness probe.
       if (compoundHasScalarSub(parsed))
         throw new SemanticError("EXPLAIN does not take scalar " +
           "subqueries (resolving one executes a real scan to collect " +
           "the value); inline the value or run the query itself")
-      val planned = evalCompound(parsed, Map.empty)
       val mode = org.apache.spark.sql.execution.ExplainMode.fromString(
-        if (formatted != null) "formatted" else "simple")
-      val lines = planned.df.queryExecution.explainString(mode)
-        .split("\n").toSeq
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      GraftFrame.fromDF(spark.createDataFrame(
-        new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-          .SeqHasAsJava(lines.map(Row(_))).asJava),
-        StructType(Seq(StructField("plan", StringType, nullable = false)))))
-    case Ctas(quoted, bare, using, body) =>
-      scalarCache.clear()
-      val frame = evalCompound(SqlParser.parseCompound(body), Map.empty)
+        if (formatted) "formatted" else "simple")
+      rowsFrame(schemaOf("plan" -> StringType),
+        evalCompound(parsed, Map.empty).df.queryExecution.explainString(mode)
+          .split("\n").toSeq.map(Row(_)))
+
+    // CTAS: a quoted target path, or a bare name resolved against the
+    // base directory with the rule FROM uses, so the created table is
+    // SELECTable in the next statement. Overwrites an existing target.
+    case CreateTableAs(t, quoted, using, q) =>
+      val frame = evalCompound(q, Map.empty)
       val target =
-        if (quoted != null) quoted
+        if (quoted) t
         else baseDir match {
-          case Some(d) => s"$d/$bare.parquet"
+          case Some(d) => s"$d/$t.parquet"
           case None => throw new SemanticError(
             "CREATE TABLE with a bare name needs an engine base " +
             "directory; use a quoted target path instead")
@@ -1897,7 +576,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       // (BlockFile.writeDir) — the target must still end in .bin so a
       // later FROM of the same reference routes through the BlockFile
       // reader (which treats the directory as one table).
-      val fmt = Option(using).map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse(
+      val fmt = using.map(_.toLowerCase(java.util.Locale.ROOT)).getOrElse(
         if (resolved.endsWith(".bin")) "blockfile" else "parquet")
       fmt match {
         case "parquet" =>
@@ -1920,19 +599,711 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
             throw new SemanticError(
               "USING versioned needs an extension-less target (the path " +
               "becomes a manifest + segments dataset directory)")
-          graft.sources.Versioned.commit(frame.df, resolved,
-            append = false): Unit
+          Versioned.commit(frame.df, resolved, append = false): Unit
         case other => throw new SemanticError(
           s"Unknown CTAS format '$other' — USING parquet, blockfile, " +
           "blockdir or versioned")
       }
       table(resolved)
-    case _ =>
-      // scalar-subquery memo is per-statement: a long-lived Engine (the
-      // shell) must not serve a stale collected value after the
-      // underlying table changed on disk
-      scalarCache.clear()
-      evalCompound(SqlParser.parseCompound(query), Map.empty)
+  }
+
+  private def constraintDdl(body: => Long): Long =
+    try semantic(body)
+    catch { case e: org.apache.spark.sql.AnalysisException =>
+      throw new SemanticError(
+        s"constraint expression does not analyze: ${e.getMessage}") }
+
+  /** UPDATE: rows where the predicate is TRUE carry the assigned values
+    * (NULL keeps the row, the DELETE rule's mirror), each cast to its
+    * column's committed type so the schema never drifts across
+    * versions. Copy-on-write rewrites the affected segments; VECTORED
+    * vectors the matched positions and appends one segment of their
+    * updated copies — write cost ∝ matched rows. */
+  private def update(u: Update): GraftFrame = {
+    val Update(target, assigns, where, vectored) = u
+    val resolved = versionedPath("UPDATE", target)
+    noSubqueries("UPDATE expressions", where +: assigns.map(_._2): _*)
+    // resolve the head version ONCE (detection read, segment list and
+    // rewrite all describe the same snapshot; a concurrent commit
+    // fails the final rename loudly instead of desynchronizing them)
+    val hv = Versioned.headVersion(spark, resolved)
+    val head = Versioned.read(spark, resolved, Some(hv))
+    // same reserved-name guard as MERGE: the rewrite appends
+    // provenance columns to the scan, so a colliding user column
+    // would fail deep inside with an ambiguous-reference error
+    (Versioned.ReservedProvenanceCols ++ Versioned.CdcReservedCols).foreach { c =>
+      if (head.columns.contains(c))
+        throw new SemanticError(s"UPDATE: reserved column name '$c'")
+    }
+    assigns.foreach { case (n, _) =>
+      if (!head.columns.contains(n)) throw new SemanticError(
+        s"UPDATE SET references unknown column '$n'")
+    }
+    import org.apache.spark.sql.{functions => F}
+    // standard UPDATE row-match semantics: only predicate-TRUE rows
+    // change; a NULL predicate leaves the row as-is — which the RAW
+    // predicate already gives both consumers (Filter keeps TRUE only;
+    // when() sends NULL to otherwise), and the bare comparison shape
+    // is what parquet pushdown + row-group pruning consume: wrapping
+    // it in coalesce(.., false) forced the detection pass into a
+    // full-table scan
+    val pred = where.compile(head.schema)
+    if (vectored) {
+      val sets = assigns.map { case (n, rhs) => n -> rhs.compile(head.schema) }
+      val (v, nUpd) =
+        semantic(Versioned.updateWhereVectored(spark, resolved, pred, sets))
+      return statusRow("version" -> v, "n_updated" -> nUpd)
+    }
+    // SEGMENT-PRUNED copy-on-write: one detection pass (predicate
+    // pushed into the scan) finds which segments hold matched rows
+    // and how many — the per-segment collect is bounded by the
+    // manifest length. Only those segments rewrite; untouched ones
+    // carry into the new manifest by reference. A selective UPDATE
+    // on a 100 TB corpus costs the matched segments, not the table.
+    val segsAll = Versioned.headSegments(spark, resolved, Some(hv))
+    // ONE detection scan, staged: per-segment counts, the status
+    // row, and the change-feed pre/postimages all read the
+    // matched-row-sized staging file, never the table again
+    val detection = Versioned
+      .readWithProvenance(spark, resolved, Some(hv)).filter(pred)
+    // the predicate is evaluated TWICE on this path (detection scan,
+    // then F.when(pred, ...) in the rewrite) — the same double-eval
+    // hazard deleteWhere guards against: a nondeterministic predicate
+    // (rand()) would silently under-update rows the detection pass
+    // didn't flag. Reject loudly, same analyzed-Filter check.
+    detection.queryExecution.analyzed.foreach {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        if (!f.condition.deterministic) throw new SemanticError(
+          "UPDATE predicates must be deterministic (the predicate is " +
+            "evaluated once to find affected segments and again to " +
+            s"rewrite them): ${f.condition.sql}")
+      case _ => ()
+    }
+    val (stagingDir, staged, _) = Versioned.stageMatched(detection, resolved)
+    val (v, nUpdated) = try {
+      val perSeg = staged
+        .groupBy("__seg").agg(F.count(F.lit(1)).as("c"))
+        .collect()
+      val nUpd = perSeg.map(_.getLong(1)).sum
+      val affected = perSeg.map(_.getString(0)).toSet
+      val dvMap = Versioned.readDvMap(spark, resolved, hv)
+      val v0 =
+        if (affected.isEmpty)
+          Versioned.commitSegments(spark, resolved, segsAll,
+            dvMap, expectedBase = Some(hv), op = "update")
+        else {
+          val updated = Versioned
+            .readSegmentsAligned(spark, resolved,
+              segsAll.filter(affected), head.schema, dvMap)
+            .select(head.schema.fields.map { f =>
+              assigns.find(_._1 == f.name) match {
+                case Some((_, rhs)) =>
+                  F.when(pred, rhs.compile(head.schema).cast(f.dataType))
+                    .otherwise(F.col(f.name)).as(f.name)
+                case None => F.col(f.name)
+              }
+            }.toSeq: _*)
+          // writeSegment directly, not writeSegmentIfNonEmpty: an
+          // UPDATE never removes rows, and every affected segment
+          // holds at least one LIVE matched row (detection read
+          // dv-applied provenance), so `updated` cannot be empty —
+          // the emptiness probe would be a wasted second scan of the
+          // affected segments
+          val fresh = Some(Versioned.writeSegment(updated, resolved))
+          val post = staged.select(head.schema.fields.map { f =>
+            assigns.find(_._1 == f.name) match {
+              case Some((_, rhs)) =>
+                rhs.compile(head.schema).cast(f.dataType).as(f.name)
+              case None => F.col(f.name)
+            }
+          }.toSeq: _*)
+          val cdc = Versioned.cdcTag(staged, "update_preimage")
+            .unionByName(Versioned.cdcTag(post, "update_postimage"))
+          Versioned.commitPruned(spark, resolved,
+            segsAll.filterNot(affected), fresh, head.schema, dvMap,
+            cdc = Versioned.CdcRows(cdc),
+            expectedBase = Some(hv), op = "update")
+        }
+      (v0, nUpd)
+    } finally {
+      new org.apache.hadoop.fs.Path(stagingDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(stagingDir), true): Unit
+    }
+    statusRow("version" -> v, "n_updated" -> nUpdated)
+  }
+
+  /** MERGE: one atomic copy-on-write commit applying the winning
+    * WHEN MATCHED clause to each target row the ON condition pairs
+    * with a source row (first match wins, in specification order), and
+    * inserting the unmatched SOURCE rows. A target row matching MORE
+    * than one source row is an error (Postgres/Delta), because "apply
+    * both updates" has no defined order; an insert-only MERGE is
+    * exempt. SET right-hand sides may reference both aliases, INSERT
+    * values and conditions the source alias only. `INSERT *` maps
+    * source columns to target columns BY NAME. */
+  private def merge(m: Merge): GraftFrame = {
+    import org.apache.spark.sql.{functions => F}
+    val resolved = versionedPath("MERGE", m.target)
+    val matchedClauses = m.matched
+    // reachability: only the LAST matched clause may be unconditioned
+    // (an earlier catch-all would shadow everything after it)
+    matchedClauses.dropRight(1).zipWithIndex.foreach { case (cl, i) =>
+      if (cl.cond.isEmpty) throw new SemanticError(
+        s"MERGE: WHEN MATCHED clause ${i + 1} has no AND condition " +
+          "but is not last — later matched clauses are unreachable")
+    }
+    // SMALL-SOURCE gate, probed BEFORE the source frame is built:
+    // rows already on the driver are small by count; a provably-small
+    // plain-parquet table (KB footer reads, no job) reads with the
+    // footer's own recorded Spark schema, so the fast path's collect
+    // below is the FIRST job that touches it (spark.read.parquet
+    // without a schema pays a schema-inference job first). Views and
+    // subqueries price as unknown.
+    val srcProbe: Option[(Long, Long, Option[StructType])] = m.source match {
+      case SourceRows(rows, sch) => Some((rows.length.toLong, 0L, Some(sch)))
+      case SourceTable(ref) if !views.contains(ref) =>
+        plainParquetFootprint(Tables.resolve(ref, baseDir))
+      case _ => None
+    }
+    val srcSmall = srcProbe.exists(_._1 <= Engine.MergeSmallSourceRows)
+    val srcFrame: DataFrame = m.source match {
+      case SourceRows(rows, sch) =>
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), sch)
+      case SourceTable(ref) => srcProbe match {
+        case Some((_, _, Some(sch))) if srcSmall =>
+          spark.read.schema(sch).parquet(Tables.resolve(ref, baseDir))
+        case _ => table(ref).df
+      }
+      case SourceQuery(q) => evalCompound(q, Map.empty).df
+    }
+    val tName = "__merge_target"; val sName = "__merge_source"
+    val talias = m.targetAlias.getOrElse(tName)
+    val salias = m.sourceAlias.getOrElse(sName)
+    if (talias == salias) throw new SemanticError(
+      s"MERGE: target and source aliases collide ('$talias')")
+    def ref(alias: String, c: String): Col = ColRef(s"$alias.$c")
+    def query(from: String, alias: String, items: Seq[Col],
+        join: Option[JoinClause] = None, where: Option[Col] = None) =
+      CompoundQuery(SqlQuery(items.map(e => SelectItem(e, star = e == Star)),
+        TableRef(from, Some(alias)), join.toSeq, where, Nil, None, Nil, None,
+        distinct = false), Nil, Nil, None)
+    // SMALL-SOURCE statements run with AQE pinned off: the match join
+    // and insert anti-join already broadcast the LocalRelation source,
+    // the target scan is already bounds-pruned at the manifest, and
+    // the rewrite is one segment — there is nothing for runtime
+    // re-planning to improve, while AQE materializes every exchange as
+    // its own stage-job. A big MERGE keeps AQE (skew joins, coalescing
+    // matter there). leafNodeDefaultParallelism=1 rides along so the
+    // statement's driver-built LocalRelations scan as one task (see
+    // [[Engine.withSmallStmtConfs]]).
+    withSmallStmtConfs(srcSmall) {
+    // resolve the head version ONCE for the whole statement (the
+    // UPDATE/DELETE rule): match join, segment list and rewrite all
+    // describe the same snapshot
+    val hv = Versioned.headVersion(spark, resolved)
+    val head = Versioned.read(spark, resolved, Some(hv))
+    (Versioned.ReservedProvenanceCols ++ Versioned.CdcReservedCols ++
+        Seq("__srid", "__trow")).foreach { c =>
+      if (head.columns.contains(c) || srcFrame.columns.contains(c))
+        throw new SemanticError(s"MERGE: reserved column name '$c'")
+    }
+    // TARGET row identity is storage-level: parquet `_metadata`
+    // file-path/row-index provenance — deterministic across jobs with
+    // ZERO materialization (no full-table checkpoint) — plus the
+    // owning segment name, which is what makes the rewrite
+    // SEGMENT-PRUNED below. The SOURCE can be an arbitrary subquery,
+    // so it pins synthetic ids with a checkpoint — bounded by the
+    // source's size, never the target's. SMALL-SOURCE FAST PATH: the
+    // source is collected ONCE into a LocalRelation with
+    // driver-assigned ids instead — determinism for free, and (the
+    // real win) accurate size stats, so the match join and the
+    // insert anti-join BROADCAST the source instead of shuffling
+    // both sides; a checkpointed RDD reports unknown stats and
+    // forces shuffle joins however small it is.
+    val tDf = Versioned.readWithProvenance(spark, resolved, Some(hv))
+    val srcRows: Option[Array[Row]] =
+      if (!srcSmall) None
+      else {
+        val rows = m.source match {
+          case SourceRows(rows, _) => rows
+          case _ => srcFrame.collect()
+        }
+        Some(rows.zipWithIndex.map { case (r, i) =>
+          Row.fromSeq(r.toSeq :+ i.toLong) })
+      }
+    val sDf = srcRows match {
+      // a BARE LocalRelation, not coalesce(1)-wrapped: under
+      // withSmallStmtConfs the leaf executes single-task anyway, where
+      // the Coalesce wrapper forced a 1-task job per broadcast build
+      case Some(data) => spark.createDataFrame(java.util.Arrays.asList(
+        data: _*), srcFrame.schema.add("__srid", LongType, nullable = false))
+      case None => srcFrame
+        .withColumn("__srid", F.monotonically_increasing_id())
+        .localCheckpoint(true)
+    }
+    // the target row rides the match query as ONE struct column, so
+    // the query never has to name the target's columns; an insert-only
+    // MERGE needs only the matched source ids
+    val tScoped =
+      if (matchedClauses.isEmpty) tDf
+      else tDf.withColumn("__trow",
+        F.struct(head.schema.fieldNames.toSeq.map(F.col): _*))
+    val scope = Map(tName -> GraftFrame.fromDF(tScoped),
+      sName -> GraftFrame.fromDF(sDf))
+    // validate every clause's SET column names against the target
+    matchedClauses.foreach {
+      case MergeUpdate(_, as) => as.foreach { case (n, _) =>
+        if (!head.columns.contains(n)) throw new SemanticError(
+          s"MERGE SET references unknown target column '$n'")
+      }
+      case _ => ()
+    }
+    // one match query joins the aliased frames on the ON condition and
+    // projects the matched TARGET ROW (its columns and provenance) +
+    // the source row id + per-clause condition flags + SET values —
+    // everything the rewrite and the change rows need, so neither
+    // re-reads and re-joins the target. A clause with no AND condition
+    // projects a literal TRUE flag (0 = 0).
+    val matchedCq = query(tName, talias,
+      (if (matchedClauses.isEmpty) Nil
+       else Seq(ref(talias, "__trow").alias("__trow"))) ++
+        Seq(ref(talias, "__file").alias("__file"),
+          ref(talias, "__pos").alias("__pos"),
+          ref(talias, "__seg").alias("__seg"),
+          ref(salias, "__srid").alias("__srid")) ++
+        matchedClauses.zipWithIndex.map { case (cl, i) =>
+          cl.cond.getOrElse(Lit(0) === Lit(0)).alias(s"__m_$i") } ++
+        matchedClauses.zipWithIndex.flatMap {
+          case (MergeUpdate(_, as), i) =>
+            as.zipWithIndex.map { case ((_, rhs), j) =>
+              rhs.alias(s"__set_${i}_$j") }
+          case _ => Nil
+        },
+      join = Some(JoinClause(TableRef(sName, Some(salias)), m.on, "inner")))
+    noSubqueries("MERGE expressions",
+      m.on +: matchedCq.head.select.map(_.expr): _*)
+    // pairs = matched target rows + flags + SET values — this
+    // checkpoint pins a frame bounded by the match count, never the
+    // target's size.
+    // __win = index of the FIRST clause whose condition holds for the
+    // row (first-match-wins; NULL = matched but no clause fired:
+    // the row stays as-is AND stays excluded from the insert side,
+    // the standard semantics)
+    val winCol = matchedClauses.indices.foldRight(
+      F.lit(null).cast("int")) { (i, acc) =>
+      F.when(F.col(s"__m_$i"), F.lit(i)).otherwise(acc)
+    }
+    // manifest metadata for the rewrite — driver-side, KB-sized
+    val segsAll = Versioned.headSegments(spark, resolved, Some(hv))
+    val dvMap = Versioned.readDvMap(spark, resolved, hv)
+    // the checkpoint's row count rides the SAME job via observe() —
+    // zero extra actions — and a small match set (the common DML /
+    // replication-apply case) is then collected into a LocalRelation:
+    // the byWin rollup below becomes driver-side Scala, the fired
+    // positions become an in-scan filter of the rewrite, and the
+    // insert side needs no shuffle
+    val pairsObs = new org.apache.spark.sql.Observation()
+    val (pairsCkpt, pairsLocal) =
+      Engine.withJobDescription(spark, "MERGE: match scan") {
+        val mq = evalCompound(matchedCq, scope).df
+        val p = (if (matchedClauses.isEmpty) mq
+            else mq.select(F.col("__trow.*") +: mq.columns.toSeq
+              .filter(_ != "__trow").map(F.col): _*))
+          .withColumn("__win", winCol)
+          .observe(pairsObs, F.count(F.lit(1)).as("n"))
+          .localCheckpoint(true)
+        val nPairs: Option[Long] =
+          try Some(scala.concurrent.Await
+            .result(pairsObs.future,
+              scala.concurrent.duration.Duration("30s")).getLong(0))
+          catch { case _: java.util.concurrent.TimeoutException => None }
+        (p, if (nPairs.exists(_ <= Engine.smallMatchRowCap(p.schema)))
+          Some(p.collect()) else None)
+      }
+    val pairs: DataFrame = pairsLocal match {
+      // a bare LocalRelation, like sDf
+      case Some(rows) => spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*), pairsCkpt.schema)
+      case None => pairsCkpt
+    }
+    // per-clause-kind action counts; bounded by the match count
+    val updIdxs = matchedClauses.zipWithIndex.collect {
+      case (_: MergeUpdate, i) => i }
+    val delIdxs = matchedClauses.zipWithIndex.collect {
+      case (_: MergeDelete, i) => i }
+    // ONE rollup over the (match-count-bounded, checkpointed) pairs
+    // yields BOTH the standard cardinality check (a target row
+    // matching two source rows has no defined UPDATE/DELETE result —
+    // fail loudly, never pick one; insert-only merges are exempt,
+    // matching Delta/Postgres) AND the per-clause action counts +
+    // affected-segment set: first a per-target-row rollup (max
+    // multiplicity is the cardinality witness), then the
+    // per-winning-clause rollup over it.
+    // rollup shape either way: (winning clause index or None,
+    // target-row count, max per-target-row multiplicity, segments)
+    val winStats: Seq[(Option[Int], Long, Long, Set[String])] =
+      if (matchedClauses.isEmpty) Seq.empty
+      else pairsLocal match {
+        case Some(rows) =>
+          // driver-side mirror of the distributed rollup below —
+          // bounded by the observed match count, no extra jobs
+          val sch = pairsCkpt.schema
+          val (fi, pi, gi, wi) = (sch.fieldIndex("__file"),
+            sch.fieldIndex("__pos"), sch.fieldIndex("__seg"),
+            sch.fieldIndex("__win"))
+          rows.toSeq
+            .groupBy(r => (r.getString(fi), r.getLong(pi))).values
+            .map { g =>
+              val h = g.head
+              (if (h.isNullAt(wi)) None else Some(h.getInt(wi)),
+                g.length.toLong, h.getString(gi))
+            }.toSeq
+            .groupBy(_._1).map { case (w, gs) =>
+              (w, gs.length.toLong, gs.map(_._2).max,
+                gs.map(_._3).toSet)
+            }.toSeq
+        case None => pairsCkpt
+          .groupBy("__file", "__pos")
+          .agg(F.count(F.lit(1)).as("__c"),
+            F.first(F.col("__win")).as("__win"),
+            F.first(F.col("__seg")).as("__seg"))
+          .groupBy("__win").agg(F.count(F.lit(1)).as("c"),
+            F.max(F.col("__c")).as("maxc"),
+            F.collect_set(F.col("__seg")).as("segs"))
+          .collect().toSeq.map(r =>
+            (if (r.isNullAt(0)) None else Some(r.getInt(0)),
+              r.getAs[Long]("c"), r.getAs[Long]("maxc"),
+              r.getSeq[String](3).toSet))
+      }
+    if (winStats.exists(_._3 > 1L))
+      throw new SemanticError("MERGE: a target row matches more than " +
+        "one source row — the ON condition must match at most one")
+    // NULL __win = matched rows where no clause fired (they stay
+    // as-is): counted for cardinality above, excluded from actions
+    val firedStats = winStats.filter(_._1.isDefined)
+    val byWin = firedStats.map(s => s._1.get -> s._2).toMap
+    val (nUpdated, nDeleted) =
+      (updIdxs.map(i => byWin.getOrElse(i, 0L)).sum,
+        delIdxs.map(i => byWin.getOrElse(i, 0L)).sum)
+    // SEGMENT PRUNING: only the segments holding rows a clause FIRED
+    // on are rewritten (a matched row whose conditions all failed
+    // rewrites nothing); untouched segments carry into the new
+    // manifest by reference, files byte-identical. An insert-only
+    // MERGE rewrites nothing at all: at 100 TB a one-row upsert costs
+    // one segment (plus the match join), not a full-table copy.
+    val affected: Set[String] = firedStats.flatMap(_._4).toSet
+    // per-clause CASE projection on the winning index — what turns a
+    // fired UPDATE pair into its postimage, for the fresh segment
+    // and the change rows alike
+    val updatedCols: Seq[org.apache.spark.sql.Column] =
+      head.schema.fields.toSeq.map { f =>
+        val updsOnField = matchedClauses.zipWithIndex.collect {
+          case (MergeUpdate(_, as), i) if as.exists(_._1 == f.name) =>
+            (i, as.indexWhere(_._1 == f.name))
+        }
+        if (updsOnField.isEmpty) F.col(f.name)
+        else updsOnField.foldRight(
+          F.col(f.name): org.apache.spark.sql.Column) {
+          case ((ci, aj), acc) =>
+            // cast to the committed type: schema stability across
+            // versions is the dataset's contract (the UPDATE rule)
+            F.when(F.col("__win") === ci,
+                F.col(s"__set_${ci}_$aj").cast(f.dataType))
+              .otherwise(acc)
+        }.as(f.name)
+      }
+    val headCols = head.schema.fieldNames.toSeq.map(F.col)
+    // ONE-PASS REWRITE of the affected segments: their rows read
+    // through the deletion-vector filter with the FIRED positions
+    // added to it (the rows no clause touched come through as they
+    // are), plus the UPDATE postimages straight from the pairs.
+    // DELETE-won rows are simply absent. No re-join of the pairs to
+    // the target, nothing persisted. A match set over the collect
+    // cap excludes its fired positions with the shuffled anti join
+    // the over-cap vectors use.
+    val fired = pairs.filter(F.col("__win").isNotNull)
+    val kept: Option[DataFrame] =
+      if (affected.isEmpty) None
+      else Some((pairsLocal match {
+        case Some(rows) =>
+          val (fi, pi, wi) = (pairsCkpt.schema.fieldIndex("__file"),
+            pairsCkpt.schema.fieldIndex("__pos"),
+            pairsCkpt.schema.fieldIndex("__win"))
+          Versioned.readSegmentsAligned(spark, resolved,
+            segsAll.filter(affected), head.schema, dvMap,
+            excluded = graft.functions.DeletedPositions.of(
+              rows.iterator.filterNot(_.isNullAt(wi))
+                .map(r => (r.getString(fi), r.getLong(pi)))))
+        case None =>
+          graft.sources.DeletionVectors.antiJoin(
+            Versioned.readSegmentsAligned(spark, resolved,
+              segsAll.filter(affected), head.schema, dvMap),
+            fired)
+      }).select(headCols: _*))
+    val postimages: Option[DataFrame] =
+      if (affected.isEmpty || updIdxs.isEmpty) None
+      else Some(fired.filter(F.col("__win").isInCollection(updIdxs))
+        .select(updatedCols: _*))
+    // the source rows no pair matched: with the source and the pairs
+    // both on the driver, a driver-side filter (no anti join, so no
+    // broadcast job in the rewrite or the change rows); else the
+    // anti join. WHEN NOT MATCHED [AND cond] then filters them — the
+    // condition compiles against the SOURCE alias only (there is no
+    // target row to reference — standard restriction)
+    val unmatched: DataFrame =
+      (srcRows, pairsLocal) match {
+        case (Some(data), Some(rows)) =>
+          val si = pairsCkpt.schema.fieldIndex("__srid")
+          val hit = rows.iterator.map(_.getLong(si)).toSet
+          spark.createDataFrame(java.util.Arrays.asList(
+            data.filterNot(r => hit(r.getLong(r.length - 1))): _*),
+            sDf.schema)
+        case _ => sDf.join(pairs.select("__srid"), Seq("__srid"), "left_anti")
+      }
+    val insertSrc = m.notMatched.flatMap(_.cond).fold(unmatched) { c =>
+      noSubqueries("MERGE expressions", c)
+      evalCompound(query(sName, salias, Seq(Star), where = Some(c)),
+        Map(sName -> GraftFrame.fromDF(unmatched))).df
+    }
+    val inserts: Option[DataFrame] = m.notMatched.map {
+      case MergeInsert(_, None) =>
+        head.columns.foreach { c =>
+          if (!sDf.columns.contains(c)) throw new SemanticError(
+            s"MERGE INSERT *: source lacks target column '$c' — use " +
+            "INSERT (cols) VALUES (exprs) to map explicitly")
+        }
+        insertSrc.select(head.schema.fields.map(f =>
+          F.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
+      case MergeInsert(_, Some((cols, vals))) =>
+        if (cols.length != vals.length) throw new SemanticError(
+          s"MERGE INSERT: ${cols.length} columns but ${vals.length} values")
+        cols.foreach { c =>
+          if (!head.columns.contains(c)) throw new SemanticError(
+            s"MERGE INSERT references unknown target column '$c'")
+        }
+        // VALUES expressions compile against the SOURCE alias; the
+        // unlisted target columns fill with explicit NULLs (the
+        // column-list INSERT rule)
+        val insCq = query(sName, salias,
+          ref(salias, "__srid").alias("__srid") +:
+            vals.zip(cols).map { case (v, c) => v.alias(s"__ins_$c") })
+        noSubqueries("MERGE expressions", vals: _*)
+        evalCompound(insCq, Map(sName -> GraftFrame.fromDF(insertSrc))).df
+          .select(head.schema.fields.map { f =>
+            if (cols.contains(f.name))
+              F.col(s"__ins_${f.name}").cast(f.dataType).as(f.name)
+            else F.lit(null).cast(f.dataType).as(f.name)
+          }.toSeq: _*)
+    }
+    // survivor count is KNOWN from metadata alone: live rows of the
+    // affected segments (footer totals − dv header counts, KB-sized
+    // reads) minus the rows a DELETE clause won — when positive the
+    // fresh union below is provably non-empty and the write skips
+    // writeSegmentIfNonEmpty's take(1) probe, a second scan just to
+    // learn what the footers already say. Also reused for the
+    // nInserted status row below.
+    val liveAffected: Long =
+      if (affected.isEmpty) 0L
+      else {
+        val totals = Versioned
+          .footerRowCountBySeg(spark, resolved, affected.toSeq)
+          .valuesIterator.sum
+        val dvDel = Versioned.dvCounts(spark, resolved,
+          dvMap.collect { case (s, d) if affected(s) => d }.toSeq)
+          .valuesIterator.sum
+        totals - dvDel
+      }
+    val survivorsNonEmpty = liveAffected - nDeleted > 0
+    // new version = untouched segments carried by reference + one
+    // fresh segment holding the affected segments' kept rows, the
+    // postimages and the inserted rows, written in ONE job
+    val fresh = Engine.withJobDescription(spark, "MERGE: rewrite") {
+      (kept.toSeq ++ postimages.toSeq ++ inserts.toSeq)
+        .reduceOption(_ unionAll _)
+        .flatMap { df =>
+          if (survivorsNonEmpty)
+            Some(Versioned.writeSegment(df, resolved))
+          else Versioned.writeSegmentIfNonEmpty(df, resolved)
+        }
+    }
+    // nInserted DERIVED from metadata, not a second execution of the
+    // source anti-join: fresh-segment rows (sidecar/footer) minus the
+    // survivor rows of the affected segments, where survivors = live
+    // rows (footer totals − dv header counts) − rows won by DELETE
+    // clauses. All exact, all KB-sized reads.
+    val nInserted: Long =
+      if (inserts.isEmpty) 0L
+      else {
+        val freshRows = fresh.fold(0L)(s =>
+          Versioned.segmentRowCount(spark, resolved, s))
+        freshRows - (liveAffected - nDeleted)
+      }
+    // change-feed rows, per fired clause kind, from the same pairs.
+    // An insert-only MERGE records nothing: its fresh segment holds
+    // ONLY inserts, which the feed synthesizes lazily from the
+    // segment delta (CdcNone).
+    val cdcSpec: Versioned.CdcSpec =
+      if (affected.isEmpty) Versioned.CdcNone
+      else {
+        // ONE pass over the fired pairs for every row-derived image
+        // kind: each fired row emits its change rows as an exploded
+        // array of structs — [preimage, postimage] for update wins,
+        // [delete] for delete wins. Row order within the files is
+        // unspecified, which no feed consumer observes (the
+        // net-effect apply orders by _commit_version/_change_type,
+        // the oracle compares row sets).
+        def tagged(cols: Seq[org.apache.spark.sql.Column], tag: String) =
+          F.struct((cols :+
+            F.lit(tag).as("_change_type")): _*)
+        val origCols = head.schema.fieldNames.toSeq
+          .map(n => F.col(n).as(n))
+        val pre = tagged(origCols, "update_preimage")
+        val post = tagged(updatedCols, "update_postimage")
+        val del = tagged(origCols, "delete")
+        val arr =
+          if (delIdxs.isEmpty) F.array(pre, post)
+          else if (updIdxs.isEmpty) F.array(del)
+          else F.when(F.col("__win").isInCollection(updIdxs),
+              F.array(pre, post))
+            .otherwise(F.array(del))
+        val rowImages = fired
+          .select(F.explode(arr).as("__c"))
+          .select("__c.*")
+        val parts = Seq(rowImages) ++
+          inserts.map(i => Versioned.cdcTag(i, "insert"))
+        Versioned.CdcRows(parts.reduce(_.unionByName(_)))
+      }
+    val v = Engine.withJobDescription(spark, "MERGE: change rows") {
+      Versioned.commitPruned(spark, resolved,
+        segsAll.filterNot(affected), fresh, head.schema, dvMap,
+        cdc = cdcSpec, expectedBase = Some(hv), op = "merge")
+    }
+    statusRow("version" -> v, "n_updated" -> nUpdated,
+      "n_deleted" -> nDeleted, "n_inserted" -> nInserted)
+    } // withSmallStmtConfs(srcSmall)
+  }
+
+  /** INSERT INTO: an extension-less target commits through
+    * [[Versioned.commit]] with `append = true` (a fresh path bootstraps
+    * version 1; the commit enforces schema equality, names AND types);
+    * a `.bin` target appends to the BlockFile (merging into the
+    * under-full tail block, the reference's append invariant); a
+    * `.parquet` target rejects — a raw parquet directory has no atomic
+    * append. VALUES rows take column names and types from the EXISTING
+    * target's schema (positional, with casts — standard INSERT
+    * semantics); a query body aligns to it the same way. */
+  private def insert(ins: Insert): GraftFrame = {
+    // Tables.resolve is THE shared rule (its scaladoc: writers must
+    // land where a subsequent FROM of the same reference reads)
+    if (!ins.quoted && baseDir.isEmpty) throw new SemanticError(
+      "INSERT INTO with a bare name needs an engine base " +
+      "directory; use a quoted target path instead")
+    val resolved = Tables.resolve(ins.target, baseDir)
+    if (resolved.endsWith(".parquet"))
+      throw new SemanticError(
+        "INSERT INTO a raw parquet path has no atomic append (a " +
+        "concurrent reader could observe half the new files); use an " +
+        "extension-less target for a Versioned dataset, a '.bin' " +
+        "target for BlockFile append, or CREATE TABLE to republish")
+    val isBin = resolved.endsWith(".bin")
+    // the existing target's schema, when there is one — VALUES rows
+    // need it for names; query bodies align to it positionally
+    val targetSchema: Option[StructType] =
+      if (isBin) {
+        val f = new java.io.File(resolved)
+        if (f.exists()) Some(Tables.blockFileRead(spark, resolved).schema)
+        else None
+      } else if (Versioned.versions(spark, resolved).nonEmpty)
+        Some(Versioned.read(spark, resolved, None).schema)
+      else None
+    // optional explicit column list: `INSERT INTO t (a, b) ...`
+    val cols = ins.columns
+    cols.foreach { cs =>
+      if (cs.distinct.length != cs.length) throw new SemanticError(
+        s"INSERT column list names a column twice: ${cs.mkString(", ")}")
+    }
+    val incoming = ins.body match {
+      case Left(rows) =>
+        val names = cols.orElse(targetSchema.map(_.map(_.name).toSeq))
+          .getOrElse(throw new SemanticError(
+            s"INSERT ... VALUES needs an existing table at '$resolved' " +
+            "or an explicit column list `INSERT INTO t (a, b) VALUES " +
+            "...` to name the columns"))
+        rows.find(_.length != names.length).foreach(r =>
+          throw new SemanticError(s"INSERT arity mismatch: a VALUES row " +
+            s"has ${r.length} entries for ${names.length} columns"))
+        valuesFrame(names, rows).df
+      case Right(q) => evalCompound(q, Map.empty).df
+    }
+    // Alignment, standard INSERT semantics:
+    //   - no column list: the target's columns align POSITIONALLY with
+    //     casts (`VALUES (1, 'x')` fits a (BIGINT, VARCHAR) table);
+    //     EXTRA trailing columns pass through as schema EVOLUTION on
+    //     Versioned targets (the commit's prefix rule validates; older
+    //     segments then read NULL for them) and reject loudly in the
+    //     BlockFile writer (fixed-width format, no evolution story).
+    //     FEWER columns than the target is an error — SILENT
+    //     null-padding hides a broken pipeline;
+    //   - with a column list: listed names map the incoming columns to
+    //     their target columns, and the UNLISTED target columns fill
+    //     with NULL — explicit, so not silent. Names outside the
+    //     target schema reject (widen positionally instead).
+    val df = (targetSchema, cols) match {
+      case (Some(ts), None) =>
+        if (incoming.columns.length < ts.length) throw new SemanticError(
+          s"INSERT arity mismatch: target '$resolved' has ${ts.length} " +
+          s"columns, the inserted query produces ${incoming.columns.length}")
+        incoming.select(incoming.columns.zipWithIndex.map { case (c, i) =>
+          if (i < ts.length)
+            incoming.col(c).cast(ts.fields(i).dataType).as(ts.fields(i).name)
+          else incoming.col(c)
+        }: _*)
+      case (Some(ts), Some(cs)) =>
+        cs.find(c => !ts.fieldNames.contains(c)).foreach(c =>
+          throw new SemanticError(
+            s"INSERT column list names '$c', which '$resolved' does " +
+            "not have; new columns are added by a WIDENING positional " +
+            "insert, not a column list"))
+        if (incoming.columns.length != cs.length) throw new SemanticError(
+          s"INSERT arity mismatch: column list names ${cs.length} " +
+          s"columns, the inserted query produces ${incoming.columns.length}")
+        import org.apache.spark.sql.{functions => F}
+        val byName = cs.zip(incoming.columns).toMap
+        incoming.select(ts.fields.toSeq.map { f =>
+          byName.get(f.name) match {
+            case Some(c) => incoming.col(c).cast(f.dataType).as(f.name)
+            case None    => F.lit(null).cast(f.dataType).as(f.name)
+          }
+        }: _*)
+      case (None, Some(cs)) =>
+        // fresh target: the list NAMES the new dataset's columns
+        if (incoming.columns.length != cs.length) throw new SemanticError(
+          s"INSERT arity mismatch: column list names ${cs.length} " +
+          s"columns, the inserted query produces ${incoming.columns.length}")
+        incoming.toDF(cs: _*)
+      case (None, None) => incoming
+    }
+    if (isBin) {
+      // counts from BLOCK METADATA before and after (the BlockFile
+      // source pushes a bare COUNT(*) down to the footer walk — zero
+      // column bytes): the inserted query executes exactly ONCE, in
+      // the append itself, and appended = the metadata delta
+      val before =
+        if (new java.io.File(resolved).exists())
+          Tables.blockFileRead(spark, resolved).count()
+        else 0L
+      Tables.blockFileAppend(df, resolved)
+      val total = Tables.blockFileRead(spark, resolved).count()
+      statusRow("rows_appended" -> (total - before), "n_rows" -> total)
+    } else {
+      val v = Versioned.commit(df, resolved, append = true)
+      // count the NEW segment only, from FOOTER metadata (the DELETE
+      // status-row rule): a head count would re-scan the whole
+      // dataset after every incremental publish
+      statusRow("version" -> v, "rows_appended" ->
+        Versioned.addedRowCount(spark, resolved, v - 1, Some(v)))
+    }
   }
 
   /** Evaluate a compound under a CTE scope (name → planned frame).
@@ -3271,14 +2642,13 @@ object Engine {
 
   /** Small-source MERGE statement confs: AQE off (see [[withAqeOff]])
     * AND single-partition leaf execution for the statement's
-    * driver-built LocalRelations. The latter replaces the former
-    * `coalesce(1)` wrapping: a bare `LocalTableScan` under a
-    * `BroadcastExchange` is collected DRIVER-SIDE (zero scheduler
-    * jobs), while the Coalesce wrapper forced a real 1-task job per
-    * broadcast build — 5 of the CDC apply's 13 per-statement jobs in
-    * the round-18 census were exactly these. Direct (non-broadcast)
-    * executions of those relations run 1 task instead of cores-many
-    * mostly-empty ones, which is what the coalesce was for. */
+    * driver-built LocalRelations, which replaces the former
+    * `coalesce(1)` wrapping: their scans run 1 task instead of
+    * cores-many mostly-empty ones. A broadcast of such a relation
+    * still runs one 1-task job per build: `BroadcastExchangeExec`
+    * collects its child through `executeCollectIterator`, which
+    * `LocalTableScanExec` does not override on Spark 4.1 (it overrides
+    * `executeCollect`, `executeTake` and `executeTail` only). */
   private[graft] def withSmallStmtConfs[T](
       spark: SparkSession, cond: Boolean)(body: => T): T =
     withConfs(spark, cond,

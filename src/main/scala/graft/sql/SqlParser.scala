@@ -151,8 +151,16 @@ object SqlParser {
     // scalar function call whose body would choke on the inner AS
     "CAST")
 
-  def tokenize(input: String): Vector[Tok] = {
+  /** A lexing error, raised as a [[ParseError]] when the parser reaches
+    * it — so a statement may carry raw text the dialect's lexer does not
+    * accept (a CHECK constraint's Spark-SQL body). */
+  final case class TBad(text: String) extends Tok
+
+  /** The tokens of `input` and the offset each starts at. */
+  private def lex(input: String): (Vector[Tok], Vector[Int]) = {
     val toks = Vector.newBuilder[Tok]
+    val offs = Vector.newBuilder[Int]
+    def emit(t: Tok, at: Int): Unit = { toks += t; offs += at }
     var i = 0
     val n = input.length
     while (i < n) {
@@ -160,45 +168,49 @@ object SqlParser {
       if (c.isWhitespace) i += 1
       else if (c == '\'') {
         val end = input.indexOf('\'', i + 1)
-        if (end < 0) throw new ParseError(s"Unterminated string at offset $i")
-        toks += TStr(input.substring(i + 1, end)); i = end + 1
+        if (end < 0) { emit(TBad(s"Unterminated string at offset $i"), i); i = n }
+        else { emit(TStr(input.substring(i + 1, end)), i); i = end + 1 }
       } else if (c == '"') {
         // double-quoted identifier (standard SQL): the escape hatch for
         // columns whose names collide with reserved words (end, in, is,
         // null, case, ...) — never keyword-classified
         val end = input.indexOf('"', i + 1)
-        if (end < 0) throw new ParseError(s"Unterminated quoted identifier at offset $i")
-        toks += TIdent(input.substring(i + 1, end)); i = end + 1
+        if (end < 0) {
+          emit(TBad(s"Unterminated quoted identifier at offset $i"), i); i = n
+        } else { emit(TIdent(input.substring(i + 1, end)), i); i = end + 1 }
       } else if (c.isDigit) {
         val start = i
         while (i < n && (input(i).isDigit || input(i) == '.')) i += 1
         val text = input.substring(start, i)
-        if (text.count(_ == '.') > 1)
-          throw new ParseError(s"Malformed number '$text' at offset $start")
-        toks += TNum(text)
+        emit(if (text.count(_ == '.') > 1)
+            TBad(s"Malformed number '$text' at offset $start")
+          else TNum(text), start)
       } else if (c.isLetter || c == '_') {
         val start = i
         // dotted identifiers for table aliases (u.user_id, parser.py:60)
         while (i < n && (input(i).isLetterOrDigit || input(i) == '_' || input(i) == '.')) i += 1
         val text = input.substring(start, i)
-        if (keywords.contains(text.toUpperCase)) toks += TKw(text.toUpperCase)
-        else toks += TIdent(text)
+        emit(if (keywords.contains(text.toUpperCase)) TKw(text.toUpperCase)
+          else TIdent(text), start)
       } else {
         val two = if (i + 1 < n) input.substring(i, i + 2) else ""
-        if (Set("==", "!=", "<=", ">=", "<>", "//").contains(two)) { toks += TOp(two); i += 2 }
-        else if ("=<>+-*/%(),;&|".indexOf(c) >= 0) { toks += TOp(c.toString); i += 1 }
-        else throw new ParseError(s"Unexpected character '$c' at offset $i")
+        if (Set("==", "!=", "<=", ">=", "<>", "//").contains(two)) { emit(TOp(two), i); i += 2 }
+        else if ("=<>+-*/%(),;&|".indexOf(c) >= 0) { emit(TOp(c.toString), i); i += 1 }
+        else { emit(TBad(s"Unexpected character '$c' at offset $i"), i); i += 1 }
       }
     }
-    toks += TEOF
-    toks.result()
+    emit(TEOF, n)
+    (toks.result(), offs.result())
   }
 
   // ---------- parser ----------
-  final private class P(toks: Vector[Tok]) {
+  final private class P(toks: Vector[Tok], offs: Vector[Int], input: String) {
     private var pos = 0
-    def peek: Tok = toks(pos)
-    def next(): Tok = { val t = toks(pos); pos += 1; t }
+    def peek: Tok = toks(pos) match {
+      case TBad(msg) => throw new ParseError(msg)
+      case t         => t
+    }
+    def next(): Tok = { val t = peek; pos += 1; t }
     def accept(kw: String): Boolean = peek match {
       case TKw(`kw`) => pos += 1; true
       case TOp(`kw`) => pos += 1; true
@@ -213,18 +225,250 @@ object SqlParser {
 
     def parseCompound(): CompoundQuery = {
       val cq = parseCompoundBody()
+      end()
+      cq
+    }
+
+    def parseStatement(): Statement = {
+      val st = statement()
+      end()
+      st
+    }
+
+    /** An optional `;`, then the end of input. */
+    private def end(): Unit = {
       accept(";")
       peek match {
         case TEOF => ()
         case t    => throw new ParseError(s"Trailing input at '${t.text}'")
       }
-      cq
     }
 
-    /** UPDATE's `SET col = expr [, col = expr]...` list — right-hand
-      * sides get the full dialect expression grammar (CASE, functions,
-      * concatenation, the works). */
-    def parseSetList(): Seq[(String, Col)] = {
+    // ---------- statements ----------
+    // Statement words (CREATE, MERGE, USING, MATCHED, ...) match
+    // case-insensitively and are never reserved, so columns and tables
+    // may keep those names.
+
+    private def word(w: String): Boolean = peek match {
+      case TIdent(t) if t.equalsIgnoreCase(w) => pos += 1; true
+      case TKw(`w`) => pos += 1; true
+      case _ => false
+    }
+    private def expectWord(w: String): Unit =
+      if (!word(w)) throw new ParseError(s"Expected $w, got ${peek.text}")
+    private def ident(what: String): String = next() match {
+      case TIdent(n) => n
+      case t => throw new ParseError(s"Expected $what, got ${t.text}")
+    }
+    private def identList(what: String): Seq[String] = {
+      expectOp("(")
+      val out = ListBuffer(ident(what))
+      while (accept(",")) out += ident(what)
+      expectOp(")")
+      out.toSeq
+    }
+    private def atEnd(i: Int): Boolean = toks(i) == TEOF || toks(i) == TOp(";")
+    /** A table reference: a quoted path (`quoted` = true) or a bare name. */
+    private def table(): (String, Boolean) = next() match {
+      case TStr(p)   => (p, true)
+      case TIdent(n) => (n, false)
+      case t => throw new ParseError(s"Expected a table, got ${t.text}")
+    }
+    private def target(): String = table()._1
+    private def str(what: String): String = next() match {
+      case TStr(v) => v
+      case t => throw new ParseError(s"Expected a quoted $what, got ${t.text}")
+    }
+    /** `[AS] alias`, where a bare alias may not be the word `stop`. */
+    private def aliasBefore(stop: String): Option[String] = peek match {
+      case TKw("AS") => next(); Some(ident("an alias"))
+      case TIdent(a) if !a.equalsIgnoreCase(stop) => next(); Some(a)
+      case _ => None
+    }
+
+    private def statement(): Statement = {
+      import Statement._
+      peek match {
+        case TKw("DESC") => next(); describe()
+        case TIdent(w) => next(); w.toUpperCase(java.util.Locale.ROOT) match {
+          case "CREATE" =>
+            if (word("TABLE")) {
+              val (t, quoted) = table()
+              val using = if (word("USING")) Some(ident("a format after USING")) else None
+              expectKw("AS")
+              CreateTableAs(t, quoted, using, parseCompoundBody())
+            } else {
+              val orReplace = accept("OR") && { expectWord("REPLACE"); true }
+              expectWord("VIEW")
+              val name = ident("a view name")
+              expectKw("AS")
+              CreateView(name, orReplace, parseCompoundBody())
+            }
+          case "DROP" =>
+            expectWord("VIEW")
+            val ifExists = word("IF") && { expectKw("EXISTS"); true }
+            DropView(ident("a view name"), ifExists)
+          case "ALTER" =>
+            val t = target()
+            if (word("ADD")) {
+              expectWord("CONSTRAINT")
+              val name = ident("a constraint name")
+              expectWord("CHECK")
+              AddConstraint(t, name, rawParenthesized())
+            } else {
+              expectWord("DROP"); expectWord("CONSTRAINT")
+              DropConstraint(t, ident("a constraint name"))
+            }
+          case "SHOW" =>
+            if (word("TABLES")) ShowTables
+            else { expectWord("CONSTRAINTS"); ShowConstraints(target()) }
+          case "RESTORE" =>
+            val t = target()
+            expectWord("TO")
+            if (accept("VERSION")) Restore(t, Left(intLit("version")))
+            else { expectWord("TIMESTAMP"); Restore(t, Right(str("timestamp"))) }
+          case "VACUUM" =>
+            val t = target()
+            val keep = if (word("KEEP")) intLit("version count after KEEP").toInt else 1
+            Vacuum(t, keep, word("DRY") && { expectWord("RUN"); true })
+          case "OPTIMIZE" =>
+            val t = target()
+            val zorder =
+              if (word("ZORDER")) { expectKw("BY"); identList("a ZORDER column") }
+              else Nil
+            val segments =
+              if (word("SEGMENTS")) Some(intLit("segment count").toInt) else None
+            val purge =
+              if (!word("PURGE")) None
+              else if (!word("THRESHOLD")) Some(0.0)
+              else next() match {
+                case TNum(f) => Some(f.toDouble)
+                case t => throw new ParseError(s"Expected a THRESHOLD fraction, got ${t.text}")
+              }
+            Optimize(t, zorder, segments, purge)
+          case "DELETE" =>
+            val vectored = word("VECTORED")
+            expectKw("FROM")
+            val t = target()
+            expectKw("WHERE")
+            Delete(t, parseOr(), vectored)
+          case "UPDATE" =>
+            val vectored = word("VECTORED")
+            val t = target()
+            expectWord("SET")
+            val set = parseSetList()
+            expectKw("WHERE")
+            Update(t, set, parseOr(), vectored)
+          case "MERGE" => merge()
+          case "INSERT" =>
+            expectWord("INTO")
+            val (t, quoted) = table()
+            val cols = if (peek == TOp("(")) Some(identList("a column name")) else None
+            Insert(t, quoted, cols,
+              if (accept("VALUES")) Left(valueRows()) else Right(parseCompoundBody()))
+          case "COPY" =>
+            expectOp("(")
+            val q = parseCompoundBody()
+            expectOp(")")
+            expectWord("TO")
+            val path = str("COPY target path")
+            val format =
+              if (accept("(")) {
+                expectWord("FORMAT")
+                val f = ident("a format name"); expectOp(")"); Some(f)
+              } else if (word("FORMAT")) Some(ident("a format name"))
+              else None
+            Copy(q, path, format)
+          case "DESCRIBE" => describe()
+          case "SUMMARIZE" => peek match {
+            case TIdent(f) if f.equalsIgnoreCase("footers") && !atEnd(pos + 1) =>
+              next(); SummarizeFooters(target())
+            case _ => Summarize(target())
+          }
+          case "ANALYZE" => Analyze(target())
+          case "EXPLAIN" =>
+            val formatted = word("FORMATTED")
+            Explain(statement(), formatted)
+          case _ => pos -= 1; Query(parseCompoundBody())
+        }
+        case _ => Query(parseCompoundBody())
+      }
+    }
+
+    private def describe(): Statement = peek match {
+      case TIdent(h) if h.equalsIgnoreCase("history") && !atEnd(pos + 1) =>
+        next(); Statement.DescribeHistory(target())
+      case _ => Statement.Describe(target())
+    }
+
+    /** `( <raw text> )` through the statement's last `)`: the text is
+      * kept as written, never tokenized as dialect SQL. */
+    private def rawParenthesized(): String = {
+      expectOp("(")
+      var close = toks.length - 2 // the token before TEOF
+      if (toks(close) == TOp(";")) close -= 1
+      if (close < pos || toks(close) != TOp(")"))
+        throw new ParseError("Expected a parenthesized expression ending the statement")
+      val text = input.substring(offs(pos - 1) + 1, offs(close)).trim
+      pos = close + 1
+      text
+    }
+
+    private def merge(): Statement = {
+      import Statement._
+      expectWord("INTO")
+      val t = target()
+      val targetAlias = aliasBefore("USING")
+      expectWord("USING")
+      val (source, defaultAlias) = next() match {
+        case TOp("(") =>
+          val q = parseCompoundBody(); expectOp(")"); (SourceQuery(q), None)
+        case TStr(p)   => (SourceTable(p), None)
+        case TIdent(n) => (SourceTable(n), Some(n))
+        case tok => throw new ParseError(
+          s"Expected a MERGE source (a table or a parenthesized query), got ${tok.text}")
+      }
+      val sourceAlias = aliasBefore("ON").orElse(defaultAlias)
+      expectKw("ON")
+      val on = parseOr()
+      val matched = ListBuffer.empty[MergeMatched]
+      var insert: Option[MergeInsert] = None
+      while (accept("WHEN")) {
+        val notMatched = accept("NOT")
+        expectWord("MATCHED")
+        val cond = if (accept("AND")) Some(parseOr()) else None
+        expectKw("THEN")
+        if (notMatched) {
+          if (insert.nonEmpty) throw new SemanticError(
+            "MERGE supports at most one WHEN NOT MATCHED clause")
+          expectWord("INSERT")
+          insert = Some(MergeInsert(cond,
+            if (accept("*")) None
+            else {
+              val cols = identList("an INSERT column")
+              expectKw("VALUES")
+              expectOp("(")
+              val vals = ListBuffer(parseOr())
+              while (accept(",")) vals += parseOr()
+              expectOp(")")
+              Some((cols, vals.toSeq))
+            }))
+        } else if (word("UPDATE")) {
+          expectWord("SET")
+          matched += MergeUpdate(cond, parseSetList())
+        } else if (word("DELETE")) matched += MergeDelete(cond)
+        else throw new ParseError(
+          s"Expected UPDATE SET or DELETE after WHEN MATCHED ... THEN, got ${peek.text}")
+      }
+      if (matched.isEmpty && insert.isEmpty) throw new SemanticError(
+        "MERGE needs at least one WHEN [NOT] MATCHED clause")
+      Merge(t, targetAlias, source, sourceAlias, on, matched.toSeq, insert)
+    }
+
+    /** UPDATE's and MERGE's `SET col = expr [, col = expr]...` list —
+      * right-hand sides get the full dialect expression grammar (CASE,
+      * functions, concatenation, the works). */
+    private def parseSetList(): Seq[(String, Col)] = {
       val out = ListBuffer.empty[(String, Col)]
       def one(): Unit = {
         val name = next() match {
@@ -241,10 +485,6 @@ object SqlParser {
       }
       one()
       while (accept(",")) one()
-      peek match {
-        case TEOF => ()
-        case t    => throw new ParseError(s"Trailing input at '${t.text}'")
-      }
       out.toSeq
     }
 
@@ -531,15 +771,7 @@ object SqlParser {
         next()
         if (peek == TKw("VALUES")) {
           next()
-          def valRow(): Seq[Col] = {
-            expectOp("(")
-            val es = ListBuffer(parseAdd())
-            while (accept(",")) es += parseAdd()
-            expectOp(")")
-            es.toSeq
-          }
-          val rows = ListBuffer(valRow())
-          while (accept(",")) rows += valRow()
+          val rows = valueRows()
           expectOp(")")
           val alias = parseTableAlias().getOrElse(throw new ParseError(
             "VALUES requires an alias with column names: " +
@@ -576,11 +808,6 @@ object SqlParser {
       // that instant (manifest commit times). Without the clause a
       // versioned path reads its LATEST version. TIMESTAMP is matched
       // as a bare ident, not reserved — a column may keep the name.
-      def intLit(what: String): Long = next() match {
-        case TNum(t) if !t.contains('.') => t.toLong
-        case t => throw new ParseError(
-          s"Expected an integer $what, got ${t.text}")
-      }
       val (version, asOfTs, cdc): (Option[Long], Option[String],
           Option[(String, Long, Option[Long])]) =
         if (!accept("FOR")) (None, None, None)
@@ -622,6 +849,26 @@ object SqlParser {
         }
       TableRef(path, parseTableAlias(), version = version, asOfTs = asOfTs,
         cdc = cdc)
+    }
+
+    /** `(e, ...), (e, ...)` — the rows of a VALUES list. */
+    private def valueRows(): Seq[Seq[Col]] = {
+      def row(): Seq[Col] = {
+        expectOp("(")
+        val es = ListBuffer(parseAdd())
+        while (accept(",")) es += parseAdd()
+        expectOp(")")
+        es.toSeq
+      }
+      val rows = ListBuffer(row())
+      while (accept(",")) rows += row()
+      rows.toSeq
+    }
+
+    private def intLit(what: String): Long = next() match {
+      case TNum(t) if !t.contains('.') => t.toLong
+      case t => throw new ParseError(
+        s"Expected an integer $what, got ${t.text}")
     }
 
     private def parseTableAlias(): Option[String] = peek match {
@@ -1015,13 +1262,17 @@ object SqlParser {
     }
   }
 
-  /** Parse a (possibly set-op-combined) query. */
-  def parseCompound(sql: String): CompoundQuery =
-    new P(tokenize(sql)).parseCompound()
+  private def parser(sql: String): P = {
+    val (toks, offs) = lex(sql)
+    new P(toks, offs, sql)
+  }
 
-  /** Parse an UPDATE statement's SET assignment list. */
-  def parseSetAssignments(sql: String): Seq[(String, Col)] =
-    new P(tokenize(sql)).parseSetList()
+  /** Parse a (possibly set-op-combined) query. */
+  def parseCompound(sql: String): CompoundQuery = parser(sql).parseCompound()
+
+  /** Parse any statement of the dialect: a query, DDL, DML or utility
+    * statement (see [[Statement]]). */
+  def parseStatement(sql: String): Statement = parser(sql).parseStatement()
 
   /** Parse a single query block; a compound query is a parse error here
     * (legacy single-block entry point — the engine uses [[parseCompound]]). */

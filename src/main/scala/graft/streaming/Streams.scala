@@ -805,6 +805,9 @@ object Streams {
                    targetPath: String, feed: DataFrame,
                    keys: Seq[String]): Unit = {
     import org.apache.spark.sql.expressions.Window
+    import graft.api.Col
+    import graft.api.Col.{ColRef, FuncCall, Lit}
+    import graft.sql.Statement
     require(keys.nonEmpty, "applyChanges needs at least one key column")
     val dataCols = feed.columns.toSeq
       .filterNot(Set("_change_type", "_commit_version"))
@@ -830,88 +833,68 @@ object Streams {
     // pushes single-side join predicates into the scan, where the
     // manifest's data-skipping stats drop every non-overlapping
     // segment: the apply's read cost becomes O(key-local segments),
-    // not O(table). Numeric and string keys only; others just skip
-    // the bound (correctness never depends on it). A feed with no
-    // ACTIONABLE rows (empty, or audit preimages only) applies
-    // nothing: skip the MERGE rather than committing a no-op version.
+    // not O(table). Integral and string keys only (the types the
+    // driver-side fold below orders); others just skip the bound
+    // (correctness never depends on it). A feed with no ACTIONABLE
+    // rows (empty, or audit preimages only) applies nothing: skip the
+    // MERGE rather than committing a no-op version.
     val boundable = {
       import org.apache.spark.sql.types._
       net.schema.fields
         .filter(f => keys.contains(f.name))
-        // integral + string keys only: their literals render into
-        // the dialect exactly (float E-notation would not)
         .filter(f => Set[DataType](ByteType, ShortType, IntegerType,
           LongType, StringType)(f.dataType))
     }
-    // quote-bearing strings never reach a bound — safe() below skips
-    // their bound entirely (the dialect defines no string escaping),
-    // so lit() only ever quotes verbatim.
-    // stable_const() wrapping (round-17, the verdict's MERGE-JIT
-    // ask): the bounds are the ONLY part of the apply's MERGE
-    // template that varies per statement, and inlined into the
-    // generated code they forced a fresh Janino compile + 1-2.7s
-    // of JVM JIT on EVERY delta (metered: ReplicaTrace jit_ms
-    // ~3.3s/rep converged). Wrapped, the value rides the codegen
+    // stable_const() wrapping (the MERGE-JIT fix): the bounds are the
+    // ONLY part of the apply's MERGE that varies per statement, and
+    // inlined into the generated code they forced a fresh Janino
+    // compile + 1-2.7s of JVM JIT on EVERY delta (metered: ReplicaTrace
+    // jit_ms ~3.3s/rep converged). Wrapped, the value rides the codegen
     // references array: the statement template compiles once and
     // every subsequent delta reuses the cached classes. Segment
     // skipping still sees the bounds (SegmentStats.normalize);
     // parquet row-group pruning on them is forfeited — redundant
     // here, the bounds are implied by the equi-join keys.
-    def boundCondsOf(loHi: Int => (Any, Any)): Seq[String] = {
-      def lit(v: Any): String = {
-        val raw = v match {
-          case s: String => "'" + s + "'"
-          case other => other.toString
-        }
-        s"stable_const($raw)"
-      }
+    def boundsOf(loHi: Int => (Any, Any)): Seq[Col] = {
+      def stableConst(v: Any): Col = FuncCall("stable_const", Seq(Lit(v match {
+        // integral bounds as the dialect's integer literals: 32-bit
+        // when they fit, else 64-bit
+        case n: Number if n.longValue.isValidInt => n.intValue
+        case n: Number => n.longValue
+        case other => other
+      })))
       boundable.indices.flatMap { i =>
         val (lo, hi) = loHi(i)
-        // a quoted string bound would need escaping the dialect's
-        // tokenizer doesn't define — skip the bound, never mangle
-        def safe(v: Any) = v match {
-          case s: String => !s.contains("'")
-          case _ => true
-        }
-        if (lo == null || hi == null || !safe(lo) || !safe(hi))
-          Seq.empty
-        else Seq(s"t.${boundable(i).name} >= ${lit(lo)}",
-          s"t.${boundable(i).name} <= ${lit(hi)}")
+        val key = ColRef(s"t.${boundable(i).name}")
+        if (lo == null || hi == null) Nil
+        else Seq(key >= stableConst(lo), key <= stableConst(hi))
       }
     }
-    def runMerge(usingRef: String, eng: graft.Engine,
-                 boundConds: Seq[String]): Unit = {
-      val on = (keys.map(k => s"t.$k = s.$k") ++ boundConds)
-        .mkString(" AND ")
-      val sets = dataCols.filterNot(keys.contains)
-        .map(c => s"$c = s.$c").mkString(", ")
-      val updateClause =
-        if (sets.isEmpty) "" // key-only table: nothing to update
-        else s" WHEN MATCHED AND s.__apply_op != 'delete' " +
-          s"THEN UPDATE SET $sets"
-      eng.sql(
-        s"MERGE INTO '$targetPath' t USING $usingRef s ON $on" +
-          " WHEN MATCHED AND s.__apply_op = 'delete' THEN DELETE" +
-          updateClause +
-          s" WHEN NOT MATCHED AND s.__apply_op != 'delete' THEN INSERT " +
-          s"(${dataCols.mkString(", ")}) VALUES " +
-          s"(${dataCols.map(c => s"s.$c").mkString(", ")})"): Unit
+    // ONE MERGE applies the net rows: deletes drop, updates rewrite,
+    // new keys insert
+    def merge(source: Statement.MergeSource, bounds: Seq[Col]): Unit = {
+      def src(c: String): Col = ColRef(s"s.$c")
+      val isDelete = src("__apply_op") === Lit("delete")
+      val notDelete = src("__apply_op") =!= Lit("delete")
+      val sets = dataCols.filterNot(keys.contains).map(c => c -> src(c))
+      graft.Engine(spark).execute(Statement.Merge(targetPath, Some("t"),
+        source, Some("s"),
+        on = (keys.map(k => ColRef(s"t.$k") === src(k)) ++ bounds).reduce(_ && _),
+        matched = Statement.MergeDelete(Some(isDelete)) +:
+          // key-only table: nothing to update
+          (if (sets.isEmpty) Nil else Seq(Statement.MergeUpdate(Some(notDelete), sets))),
+        notMatched = Some(Statement.MergeInsert(Some(notDelete),
+          Some((dataCols, dataCols.map(src))))))): Unit
     }
-    // DELTA-SIZED FAST PATH (round 18, apply-floor work): when the net
-    // frame's plan-estimated size is small, collect it to the driver
-    // (ONE job — the same single pass the staging write paid) and hand
-    // the rows to MERGE as an injected LocalRelation source. This
-    // removes the parquet staging round-trip entirely: no staging
-    // write/commit, no footer probe, no re-read-and-collect inside the
-    // MERGE small-source fast path, no cleanup — and the statement
-    // template gains a FIXED source name where the staging path's
-    // per-statement tmp dir varied. Bounds + count come from the
-    // collected rows (same values the staged observe() produced;
+    // DELTA-SIZED FAST PATH: when the net frame's plan-estimated size is
+    // small, collect it to the driver (ONE job) and hand the rows to
+    // MERGE as its source — nothing is staged. Bounds + count come from
+    // the collected rows (the values the staged observe() produces;
     // string min/max compared in UTF8String's unsigned-byte order so a
     // bound can never exclude a genuine match). The estimate gate is
     // conf'd (`graft.apply.collectMaxBytes`, default 64 MB of
-    // plan-estimated bytes): a backfill-scale feed keeps today's
-    // distributed staging path untouched.
+    // plan-estimated bytes): a backfill-scale feed takes the
+    // distributed staging path.
     val collectCap = spark.conf.getOption("graft.apply.collectMaxBytes")
       .map(_.toLong).getOrElse(64L * 1024 * 1024)
     val estBytes = net.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -922,8 +905,7 @@ object Streams {
       val rows = graft.Engine.withAqeOff(spark, cond = true) {
         net.collect()
       }
-      if (rows.isEmpty) return
-      val boundConds = boundCondsOf { i =>
+      if (rows.nonEmpty) merge(Statement.SourceRows(rows, net.schema), boundsOf { i =>
         val idx = net.schema.fieldIndex(boundable(i).name)
         val isStr = boundable(i).dataType ==
           org.apache.spark.sql.types.StringType
@@ -946,30 +928,7 @@ object Streams {
           }
         }
         (lo, hi)
-      }
-      val eng = graft.Engine(spark)
-      if (rows.length <= graft.Engine.MergeSmallSourceRows) {
-        val srcName = "__graft_apply_net"
-        eng.withLocalMergeSource(srcName, rows, net.schema) {
-          runMerge(srcName, eng, boundConds)
-        }
-      } else {
-        // estimate said small but the row count is past the MERGE
-        // small-source gate: stage the ALREADY-COLLECTED rows (no
-        // feed re-execution) and take the staged path
-        val tmp = s"$targetPath/_cdc/.staging-apply-" +
-          java.util.UUID.randomUUID().toString.take(8) + "/net.parquet"
-        val fs = new org.apache.hadoop.fs.Path(tmp)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        try {
-          spark.createDataFrame(
-            java.util.Arrays.asList(rows: _*), net.schema)
-            .write.parquet(tmp)
-          runMerge(s"'$tmp'", eng, boundConds)
-        } finally {
-          fs.delete(new org.apache.hadoop.fs.Path(tmp).getParent, true): Unit
-        }
-      }
+      })
       return
     }
     // DISTRIBUTED STAGING PATH (feed past the estimate gate): the net
@@ -1002,10 +961,8 @@ object Streams {
           spark.read.schema(net.schema).parquet(tmp)
             .agg(aggs.head, aggs.tail: _*).collect().head
         }
-      if (row.getLong(0) == 0L) return
-      val boundConds =
-        boundCondsOf(i => (row.get(1 + 2 * i), row.get(2 + 2 * i)))
-      runMerge(s"'$tmp'", graft.Engine(spark), boundConds)
+      if (row.getLong(0) > 0L) merge(Statement.SourceTable(tmp),
+        boundsOf(i => (row.get(1 + 2 * i), row.get(2 + 2 * i))))
     } finally {
       fs.delete(new org.apache.hadoop.fs.Path(tmp).getParent, true): Unit
     }

@@ -774,6 +774,22 @@ class EngineSpec extends SparkSpec {
       assert(r3.head == ((0L, 0L, 1L))) // only 77 inserted
       assert(rows(engine.sql(
         s"SELECT COUNT() AS n FROM '$ds' WHERE id = 1").df) == Set(Seq(1L)))
+      // statement keywords inside string literals are literals: ` on `
+      // in the ON condition, `when matched` in a WHEN condition
+      val r4 = engine.sql(
+        s"""MERGE INTO '$ds' t
+           |USING (SELECT CAST(1 AS BIGINT) AS sid, 'when matched' AS note
+           |       UNION ALL
+           |       SELECT CAST(3 AS BIGINT) AS sid, 'x on y' AS note
+           |       UNION ALL
+           |       SELECT CAST(2 AS BIGINT) AS sid, 'plain' AS note) s
+           |ON t.id = s.sid AND s.note <> 'x on y'
+           |WHEN MATCHED AND s.note = 'when matched' THEN UPDATE SET v = s.note
+           |WHEN MATCHED THEN DELETE""".stripMargin).df
+        .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(r4.head == ((1L, 1L, 0L))) // id 1 updated, id 2 deleted; 3 fails ON
+      assert(rows(engine.sql(s"SELECT id, v FROM '$ds'").df) == Set(
+        Seq(1L, "when matched"), Seq(3L, "c"), Seq(9L, "i"), Seq(77L, "n")))
       // error paths: non-versioned target, unknown SET column, alias
       // collision, INSERT * with a missing source column, no WHEN
       assertThrows[graft.sql.SemanticError] {
@@ -881,6 +897,12 @@ class EngineSpec extends SparkSpec {
       // SET expressions keep the column's committed type (n stays long)
       assert(engine.sql(s"SELECT n FROM '$ds'").df.schema("n").dataType ==
         org.apache.spark.sql.types.LongType)
+      // a WHERE inside a SET string literal is part of the literal
+      val lit = engine.sql(s"UPDATE '$ds' SET lang = 'a WHERE b' WHERE id = 1")
+        .df.collect().head
+      assert(lit.getLong(0) == 3L && lit.getLong(1) == 1L)
+      assert(rows(engine.sql(s"SELECT id, lang FROM '$ds'").df) ==
+        Set(Seq(1L, "a WHERE b"), Seq(2L, "xx"), Seq(3L, null)))
       // error paths: unknown column, subquery in SET, non-versioned path
       assertThrows[graft.sql.SemanticError] {
         engine.sql(s"UPDATE '$ds' SET nope = 1 WHERE id = 1")
@@ -1676,6 +1698,53 @@ class EngineSpec extends SparkSpec {
         s"z-order should prune >= half the groups on y: $zHit/$zTot")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    }
+  }
+
+  test("every job a statement runs carries the statement's kind") {
+    val out = Files.createTempDirectory("graft-stmt-kind")
+    try {
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      import spark.implicits._
+      val ds = s"$out/ds"
+      graft.sources.Versioned.commit(
+        (1L to 300L).map(i => (i, s"v$i")).toDF("id", "v"), ds)
+      graft.sources.Versioned.commit(
+        (301L to 600L).map(i => (i, s"v$i")).toDF("id", "v"), ds, append = true)
+      def jobDescriptions(stmt: String): Seq[String] = {
+        val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+        val l = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            descs.add(Option(e.properties)
+              .flatMap(p => Option(p.getProperty("spark.job.description")))
+              .getOrElse("<none>"))
+        }
+        spark.sparkContext.addSparkListener(l)
+        try {
+          engine.sql(stmt)
+          // listener delivery is asynchronous: wait for the count to settle
+          var last = -1
+          while (last != descs.size) { last = descs.size; Thread.sleep(300) }
+          descs.asScala.toSeq
+        } finally spark.sparkContext.removeSparkListener(l)
+      }
+      Seq(
+        "UPDATE" -> s"UPDATE VECTORED '$ds' SET v = 'u' WHERE id >= 10 AND id < 20",
+        "DELETE" -> s"DELETE VECTORED FROM '$ds' WHERE id >= 30 AND id < 40",
+        "INSERT" -> s"INSERT INTO '$ds' VALUES (1000, 'ins'), (1001, 'ins')",
+        "OPTIMIZE" -> s"OPTIMIZE '$ds'").foreach { case (kind, stmt) =>
+        val descs = jobDescriptions(stmt)
+        assert(descs.nonEmpty, s"$kind ran no job")
+        assert(descs.forall(_ == kind), s"$kind jobs: ${descs.mkString(", ")}")
+      }
+      assert(rows(engine.sql(s"SELECT COUNT() AS n FROM '$ds'").df) ==
+        Set(Seq(592L)))
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(out.toFile)
     }
   }
 }

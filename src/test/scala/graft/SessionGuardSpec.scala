@@ -9,24 +9,57 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps graft on one session config and one execution path: every
   * session in the library and its mains comes from
   * [[GraftSession.builder]] (which installs the native functions), so no
-  * operator needs to ask whether a native function exists. */
+  * operator needs to ask whether a native function exists. Keeps it on
+  * one SQL front end too: statements parse once into a
+  * [[graft.sql.Statement]], and code that runs a statement builds the
+  * value instead of SQL text. */
 class SessionGuardSpec extends AnyFunSuite {
 
   private val forbidden = Seq("catalog.functionExists(", "SparkSession.builder()")
 
-  test("no functionExists fork or hand-built session outside GraftSession.scala") {
+  private def mainFiles: Seq[Path] = {
     val main = Paths.get("src/main")
     assert(Files.isDirectory(main), s"run from the repo root: $main not found")
-    val files = Files.walk(main).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(_.getFileName.toString == "GraftSession.scala")
-      .toSeq
+    Files.walk(main).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq
+  }
+
+  private def lines(f: Path): Seq[(String, Int)] =
+    Files.readAllLines(f).asScala.toSeq.zipWithIndex.map { case (l, i) => (l, i + 1) }
+
+  test("no functionExists fork or hand-built session outside GraftSession.scala") {
+    val files = mainFiles.filterNot(_.getFileName.toString == "GraftSession.scala")
     assert(files.nonEmpty)
     val hits = for {
-      f: Path <- files
-      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      f <- files
+      (line, n) <- lines(f)
       pat <- forbidden if line.contains(pat)
-    } yield s"$f:${i + 1}: $pat"
+    } yield s"$f:$n: $pat"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("no regex over SQL text in Engine.scala") {
+    val engine = Paths.get("src/main/scala/graft/Engine.scala")
+    val hits = lines(engine).collect {
+      case (line, n) if line.contains("\".r") || line.trim.endsWith(".r") =>
+        s"$engine:$n: $line"
+    }
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  // graft/sql holds the grammar; SparkEntry is the oracle's query
+  // catalogue, whose MERGE statements are dialect input under test
+  test("no MERGE INTO text is built outside graft/sql and the oracle queries") {
+    val files = mainFiles.filterNot(p =>
+      p.toString.contains("/graft/sql/") ||
+        p.getFileName.toString == "SparkEntry.scala")
+    val hits = for {
+      f <- files
+      (line, n) <- lines(f)
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("/*") && !code.startsWith("//")
+      if code.contains("MERGE INTO")
+    } yield s"$f:$n: $code"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 }

@@ -131,7 +131,8 @@ class StableConstSpec extends SparkSpec {
       if (name.endsWith(".scala")) {
         val txt = java.nio.file.Files.readString(p)
         val refs = txt.linesIterator.zipWithIndex.exists { case (l, _) =>
-          (l.contains("stable_const(") || l.contains("StableConst(")) &&
+          (l.contains("stable_const(") || l.contains("StableConst(") ||
+            l.contains("\"stable_const\"")) &&
             !l.trim.startsWith("//") && !l.trim.startsWith("*")
         }
         if (refs && !allowed.exists(name.replace('\\', '/').endsWith(_)))
@@ -144,11 +145,11 @@ class StableConstSpec extends SparkSpec {
         "conjuncts; prove the new site's bounds are redundant " +
         "(join-implied or manifest-pruned) and add it to the allowlist")
     // and within Streams.scala the producing shape stays the bounds
-    // template, exactly once
+    // builder, exactly once
     val streams = java.nio.file.Files.readString(
       root.resolve("streaming/Streams.scala"))
     val producing = streams.linesIterator.count(l =>
-      l.contains("stable_const($") && !l.trim.startsWith("//"))
+      l.contains("FuncCall(\"stable_const\"") && !l.trim.startsWith("//"))
     assert(producing == 1,
       s"Streams.scala stable_const-producing lines: $producing (expected " +
         "exactly the applyChanges bounds template)")
