@@ -117,9 +117,11 @@ object GramHashesExpr {
   }
 }
 
-/** Native positional token n-gram md5-60 hashing — the
-  * [[graft.operators.Dedup.removeDuplicatedNgrams]] hot loop (one hash
-  * per start position, duplicates KEPT — positions are the point).
+/** Native positional token n-gram md5-60 hashing — the duplicate vote
+  * of [[graft.operators.Dedup.removeDuplicatedNgrams]] (one hash per
+  * start position, duplicates KEPT — positions are the point; the
+  * rewrite rehashes the same grams from the text bytes in
+  * [[NgramDropExpr]]).
   * `gram_pos_hashes(toks, n)` equals the composable
   * `transform(sequence(0, size(toks) - n), i =>
   * md5_hash60(concat_ws(" ", slice(toks, i+1, n))))` for

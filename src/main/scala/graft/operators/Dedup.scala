@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.graft.ExprColumn
 
+import graft.functions.{NgramDropExpr, SpanDropExpr}
 import graft.functions.ExprUtils.let
 
 /** Deduplication operators for training-data pipelines.
@@ -157,7 +159,15 @@ object Dedup {
     * `LogicalRDD` leaf — without this, every label-propagation round's
     * blocks would survive for the query's lifetime (the intra-query
     * analog of the cross-query block accumulation that slowed the
-    * round-3 bench 2.4×). Reliable-checkpoint files are untouched. */
+    * round-3 bench 2.4×). Reliable-checkpoint files are untouched.
+    *
+    * Block lifetime where no operator unstages: a stage that the
+    * RETURNED frame still reads ([[decontaminateBloom]]'s eval grams,
+    * [[removeDuplicatedNgramsShuffled]]'s input and gram frames) cannot
+    * be freed inside the operator — its blocks are what the caller's
+    * action reads. They live until the caller unpersists them (the
+    * benchmark and Verify sweep `getPersistentRDDs` between statements)
+    * or the ContextCleaner drops them once the frame is garbage. */
   private def unstage(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
@@ -567,97 +577,97 @@ object Dedup {
     * substring dedup (the "dedup repeated substrings across documents"
     * step of a pre-training pipeline, at token-n-gram granularity):
     * every token n-gram whose md5 hash appears in at least `minDocs`
-    * DISTINCT documents marks its n token positions in every document
-    * containing it; each document is rebuilt from the unmarked tokens
-    * (single-space joined — the rebuild normalizes whitespace, on both
-    * the Spark side and the differential oracle). Returns
+    * DISTINCT document ids marks its n token positions in every
+    * document containing it; each document is rebuilt from the unmarked
+    * tokens (single-space joined — the rebuild normalizes whitespace, on
+    * both the Spark side and the differential oracle). Returns
     * (id, clean_text, n_removed). Documents shorter than n tokens (and
-    * empty ones) pass through with n_removed = 0.
+    * empty or null ones) pass through with n_removed = 0, as do null-id
+    * documents, which cast no vote and lose nothing. Each document is
+    * rebuilt from its own grams: two documents sharing an id do not
+    * trade positions.
     *
-    * Scale shape: gram extraction is a narrow per-row transform over
-    * the token array; the duplicated-gram vote is a (gram, id)-distinct
-    * aggregation over 8-byte hashes — never text; the marked-positions
-    * join back is doc-keyed; and the rebuild is one per-row expression
-    * over the original token array (no re-explode, no order-sensitive
-    * shuffle). A boilerplate gram shared by millions of documents
-    * fans out only its 8-byte hash. */
+    * Two passes. The VOTE hashes every doc's positional n-grams
+    * (`gram_pos_hashes`, 8-byte hashes, never text) into a gram-keyed
+    * aggregate and collects the duplicated hashes, bounded, to the
+    * driver (jobs labelled `DEDUP: n-gram vote`). The REWRITE is one
+    * map-only projection over the input: the native `drop_ngrams`
+    * ([[graft.functions.NgramDropExpr]]) carries the sorted set as
+    * expression state and drops the marked spans per document — no
+    * stage, no join, no doc-keyed shuffle. A set over
+    * [[graft.sources.DeletionVectors.InScanBytes]] (8 bytes a hash)
+    * takes [[removeDuplicatedNgramsShuffled]] instead, which re-runs the
+    * vote distributed. */
   def removeDuplicatedNgrams(df: DataFrame, textCol: String, idCol: String,
                              n: Int = 8, minDocs: Int = 2): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    // staged ONCE: the token arrays feed the gram branch AND the final
-    // rebuild join — without staging the corpus scans three times
-    // (Catalyst does not dedupe common subplans; q59's precedent).
-    // NULL text coalesces to '' (= zero tokens): without it a null row
-    // propagated null toks into the final projection, emitting
-    // clean_text = "" with n_removed = -1 (size(null)) — corrupting
-    // any removal-rate aggregate downstream.
-    val base = stage(spreadForCompute(df).select(F.col(idCol).as("id"),
-      graft.operators.TextAnalysis.tokens(
-        F.coalesce(F.col(textCol), F.lit(""))).as("toks")),
-      eager = true, reliable = false)
-    // one gram hash per start position (0-based), docs with >= n tokens,
-    // from the fused native `gram_pos_hashes` (incremental digest per
-    // gram, no per-position string — the x10 trace measured the
-    // composable concat_ws/md5 route's gram stage at 38 s executor time).
-    // The gram frame is STAGED: it feeds the duplicate vote AND the
-    // join-back — without staging the hashing runs twice (the x10 probe
-    // measured the doubling at 90% duplicate mass). LAZY, not eager: the
-    // duplicate-vote aggregation materializes the blocks as a side
-    // effect of the final action, so the join-back reads them without
-    // an extra job barrier (the minhashLsh pairs precedent). Null-id
-    // rows cast no vote: the minDocs == 2 min/max vote skips null ids
-    // while a distinct+count vote would count them, and a null id never
-    // joins back anyway.
-    val grams = stage(base
-      .filter(F.col("id").isNotNull && F.size(F.col("toks")) >= n)
-      .select(F.col("id"), F.posexplode(F.call_function("gram_pos_hashes",
-        F.col("toks"), F.lit(n))).as(Seq("pos", "gram"))),
-      eager = false, reliable = false)
-    // the duplicate vote needs "appears in >= minDocs DISTINCT docs".
-    // minDocs == 2 (the default, and every declared caller) needs no
-    // distinct pass at all: >= 2 distinct ids  ⇔  min(id) != max(id) —
-    // ONE map-side-combinable exchange instead of the (gram, id)
-    // distinct exchange FOLLOWED BY the count exchange (guide §2.3/§2.4:
-    // aggregate before you shuffle, remove shuffles outright; the x10
-    // trace shows the two-exchange vote moving 29.5 MB then 19.4 MB).
-    // The general minDocs falls back to the distinct+count plan.
-    val dup =
-      if (minDocs == 2)
-        grams.groupBy("gram")
-          .agg(F.min("id").as("_mn"), F.max("id").as("_mx"))
-          .filter(F.col("_mn") =!= F.col("_mx"))
-          .select("gram")
-      else grams.select("gram", "id").distinct()
-        .groupBy("gram").agg(F.count(F.lit(1)).as("_nd"))
-        .filter(F.col("_nd") >= minDocs)
+    val cap = (graft.sources.DeletionVectors.InScanBytes / 8).toInt
+    val dup = graft.Engine.withJobDescription(df.sparkSession, "DEDUP: n-gram vote") {
+      duplicatedGrams(spreadForCompute(df.filter(F.col(idCol).isNotNull))
+        .select(F.col(idCol).as("id"), F.explode(F.call_function("gram_pos_hashes",
+          TextAnalysis.tokens(F.coalesce(F.col(textCol), F.lit(""))),
+          F.lit(n))).as("gram")), minDocs)
+        .limit(cap + 1).collect().map(_.getLong(0))
+    }
+    if (dup.length > cap) removeDuplicatedNgramsShuffled(df, textCol, idCol, n, minDocs)
+    else {
+      java.util.Arrays.sort(dup)
+      // NULL text rebuilds as '' (zero tokens, n_removed = 0)
+      val text = ExprColumn.expr(F.coalesce(F.col(textCol), F.lit("")))
+      df.select(F.col(idCol).as(idCol),
+          F.when(F.col(idCol).isNull,
+            ExprColumn(NgramDropExpr(Array.emptyLongArray, n, text)))
+            .otherwise(ExprColumn(NgramDropExpr(dup, n, text))).as("_r"))
+        .select(F.col(idCol), F.col("_r.clean_text"), F.col("_r.n_removed"))
+    }
+  }
+
+  /** The duplicate vote over (id, gram) rows: the grams held by at least
+    * `minDocs` distinct non-null ids. minDocs == 2 (the default, and
+    * every declared caller) needs no distinct pass: >= 2 distinct ids
+    * ⇔ min(id) != max(id) — ONE map-side-combinable exchange instead of
+    * the (gram, id) distinct exchange FOLLOWED BY the count exchange. */
+  private def duplicatedGrams(grams: DataFrame, minDocs: Int): DataFrame =
+    if (minDocs == 2)
+      grams.groupBy("gram")
+        .agg(F.min("id").as("_mn"), F.max("id").as("_mx"))
+        .filter(F.col("_mn") =!= F.col("_mx"))
         .select("gram")
-    val starts = grams.join(dup, "gram")
-      .groupBy("id").agg(F.collect_list("pos").as("starts"))
-    base.join(starts, Seq("id"), "left")
-      .select(F.col("id"), F.col("toks"),
-        F.coalesce(F.col("starts"), F.array().cast("array<int>")).as("st"))
-      .select(F.col("id").as(idCol), F.col("toks"),
-        F.flatten(F.transform(F.col("st"),
-          (s: Column) => F.sequence(s, s + n - 1))).as("cov"))
-      // kept = toks at positions NOT covered. array_except is hash-based
-      // (O(L + |cov|) and order-preserving on its left argument, here the
-      // ascending position sequence) — a per-token array_contains scan
-      // would be O(L·|cov|), which degenerates to O(L²) per document in
-      // the boilerplate-heavy regime where most positions are marked
-      // (the x10 probe's 90%-duplicate corpus measured the blowup).
-      // Guard the empty-token case: sequence(0, -1) counts DOWN.
-      .select(F.col(idCol), F.col("toks"),
-        F.when(F.size(F.col("toks")) > 0,
-          F.transform(
-            F.array_except(
-              F.sequence(F.lit(0), F.size(F.col("toks")) - 1), F.col("cov")),
-            (i: Column) => F.element_at(F.col("toks"), i + 1)))
-          .otherwise(F.array().cast("array<string>")).as("kept"))
-      .select(F.col(idCol),
-        F.concat_ws(" ", F.col("kept")).as("clean_text"),
-        (F.size(F.col("toks")) - F.size(F.col("kept")))
-          .cast("long").as("n_removed"))
+    else grams.select("gram", "id").distinct()
+      .groupBy("gram").agg(F.count(F.lit(1)).as("_nd"))
+      .filter(F.col("_nd") >= minDocs)
+      .select("gram")
+
+  /** [[removeDuplicatedNgrams]] with the duplicate set kept distributed,
+    * for sets too large to ship as expression state: the gram frame
+    * joins the duplicate grams, each document's marked starts collect
+    * doc-keyed and join back, and the native `drop_spans`
+    * ([[graft.functions.SpanDropExpr]], the same kernel) rebuilds. The
+    * input is STAGED once with a per-row key, so the gram branch and the
+    * rebuild read one scan and each document gets exactly its own
+    * starts; the gram frame is staged lazily (the vote materializes it
+    * for the join). Both stages' blocks back the returned frame, so they
+    * live until the caller unpersists them or they are collected. */
+  private[graft] def removeDuplicatedNgramsShuffled(df: DataFrame, textCol: String,
+      idCol: String, n: Int, minDocs: Int): DataFrame = {
+    val base = stage(spreadForCompute(df).select(F.col(idCol).as("id"),
+      F.monotonically_increasing_id().as("_doc"),
+      F.coalesce(F.col(textCol), F.lit("")).as("text")),
+      eager = true, reliable = false)
+    val grams = stage(base.filter(F.col("id").isNotNull)
+      .select(F.col("id"), F.col("_doc"), F.posexplode(F.call_function(
+        "gram_pos_hashes", TextAnalysis.tokens(F.col("text")), F.lit(n)))
+        .as(Seq("pos", "gram"))),
+      eager = false, reliable = false)
+    val starts = grams.join(duplicatedGrams(grams, minDocs), "gram")
+      .groupBy("_doc").agg(F.collect_list("pos").as("starts"))
+    base.join(starts, Seq("_doc"), "left")
+      .select(F.col("id").as(idCol), ExprColumn(SpanDropExpr(n,
+        ExprColumn.expr(F.col("text")),
+        ExprColumn.expr(F.coalesce(F.col("starts"),
+          F.array().cast("array<int>"))))).as("_r"))
+      .select(F.col(idCol), F.col("_r.clean_text"), F.col("_r.n_removed"))
   }
 
   /** 64-bit SimHash of a document: per-token hashes vote ±1 on each bit;
@@ -1081,8 +1091,11 @@ object Dedup {
     // measured ~7 s of executor time per pass) — while the staged gram
     // set itself is hashes only (8 bytes/gram, KBs–MBs at eval-harness
     // scale), cheap to hold and read back for the confirm join.
+    // LAZY: the sketch build's job computes the staged gram blocks and
+    // leaves them for the confirm join; an eager stage would compute the
+    // same blocks in a count job of its own at construction
     val evalGrams = stage(evalGramsOf(evalSet, evalTextCol, k),
-      eager = true, reliable = false)
+      eager = false, reliable = false)
     val sketch = buildBloomSketch(spark, evalGrams, expectedGrams, numBits)
     val out = (corpusGrams: DataFrame) => corpusGrams
       .join(evalGrams, "g") // exact confirm: kills bloom false positives

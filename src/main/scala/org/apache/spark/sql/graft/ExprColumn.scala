@@ -11,4 +11,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   */
 object ExprColumn {
   def apply(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** The (unresolved) Catalyst expression of a `Column`: the child to
+    * hand such a native expression. */
+  def expr(c: Column): Expression = ExpressionUtils.expression(c)
 }

@@ -773,6 +773,153 @@ class OperatorsSpec extends SparkSpec {
     assert(removals(nonNull, 3).forall(_._3 == 0L))
   }
 
+  /** The composable reference form of [[Dedup.removeDuplicatedNgrams]]:
+    * marked starts collected per id and joined back, then a per-row
+    * lambda rebuild over the token array (`flatten∘transform∘sequence`,
+    * `array_except`, `transform(element_at)`, `concat_ws`). The native
+    * `drop_ngrams`/`drop_spans` plans must equal it on unique ids. */
+  private def dupNgramsComposable(df: org.apache.spark.sql.DataFrame,
+      textCol: String, idCol: String, n: Int,
+      minDocs: Int): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Column
+    val base = df.select(F.col(idCol).as("id"),
+      TextAnalysis.tokens(F.coalesce(F.col(textCol), F.lit(""))).as("toks"))
+    val grams = base
+      .filter(F.col("id").isNotNull && F.size(F.col("toks")) >= n)
+      .select(F.col("id"), F.posexplode(F.call_function("gram_pos_hashes",
+        F.col("toks"), F.lit(n))).as(Seq("pos", "gram")))
+    val dup = grams.select("gram", "id").distinct()
+      .groupBy("gram").agg(F.count(F.lit(1)).as("_nd"))
+      .filter(F.col("_nd") >= minDocs)
+      .select("gram")
+    val starts = grams.join(dup, "gram")
+      .groupBy("id").agg(F.collect_list("pos").as("starts"))
+    base.join(starts, Seq("id"), "left")
+      .select(F.col("id"), F.col("toks"),
+        F.coalesce(F.col("starts"), F.array().cast("array<int>")).as("st"))
+      .select(F.col("id").as(idCol), F.col("toks"),
+        F.flatten(F.transform(F.col("st"),
+          (s: Column) => F.sequence(s, s + n - 1))).as("cov"))
+      .select(F.col(idCol), F.col("toks"),
+        F.when(F.size(F.col("toks")) > 0,
+          F.transform(
+            F.array_except(
+              F.sequence(F.lit(0), F.size(F.col("toks")) - 1), F.col("cov")),
+            (i: Column) => F.element_at(F.col("toks"), i + 1)))
+          .otherwise(F.array().cast("array<string>")).as("kept"))
+      .select(F.col(idCol),
+        F.concat_ws(" ", F.col("kept")).as("clean_text"),
+        (F.size(F.col("toks")) - F.size(F.col("kept")))
+          .cast("long").as("n_removed"))
+  }
+
+  private def dupNgramRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+      r.getString(1), r.getLong(2))).toSeq
+      .sortBy { case (id, t, k) => (id.getOrElse(Long.MinValue), t, k) }
+
+  /** Offline generated documents: tokens from a small vocabulary (ASCII,
+    * mixed case, multi-byte unicode) copied in runs from three shared
+    * base texts, so grams repeat across documents at every n; joined by
+    * runs of spaces, tabs, newlines, `\x0B`, `\f` and `\r`. Null and
+    * empty texts, short docs and null ids are all drawn. */
+  private lazy val generatedDocs = {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val vocab = Seq("a", "b", "Ab", "cc", "ünï", "cöde", "日本", "語", "🙂", "x")
+    val rnd = new scala.util.Random(7L)
+    val bases = Seq.fill(3)(Seq.fill(24)(vocab(rnd.nextInt(vocab.length))))
+    val sep = Gen.oneOf(" ", " ", " ", "  ", "\t", "\n", "\u000B", "\t\t\n",
+      " \u000B ", "\f", "\r\n")
+    val words = Gen.oneOf(
+      Gen.choose(0, 2).flatMap(b => Gen.choose(0, 14).flatMap(from =>
+        Gen.choose(1, 10).map(len => bases(b).slice(from, from + len)))),
+      Gen.choose(1, 4).flatMap(k => Gen.listOfN(k, Gen.oneOf(vocab))))
+    val text: Gen[Option[String]] = Gen.frequency(
+      1 -> Gen.const(None), 1 -> Gen.const(Some("")),
+      1 -> Gen.oneOf(" ", "\t\n", "\u000B").map(Some(_)),
+      12 -> (for {
+        parts <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, words))
+        toks = parts.flatten
+        seps <- Gen.listOfN(toks.length + 1, sep)
+        lead <- Gen.oneOf(true, false)
+        trail <- Gen.oneOf(true, false)
+      } yield Some((if (lead) seps.last else "") + toks.zip(seps).map {
+        case (t, s) => t + s }.mkString.dropRight(if (trail) 0 else 1))))
+    // plus docs of unique tokens, single non-space separators and
+    // nothing to drop: their rebuild still rewrites every separator
+    val fixed = Seq("q1\tq2\nq3", "q4\u000Bq5 日本\t語q", "a\tb", "\t\t\n\u000B")
+    ((1 to 80).map { i =>
+      val t = text.pureApply(Gen.Parameters.default, Seed(42L + i))
+      (if (i % 11 == 0) None else Some(i.toLong), t.orNull)
+    } ++ fixed.zipWithIndex.map { case (t, j) => (Some(81L + j), t) })
+      .toDF("doc_id", "text")
+  }
+
+  test("duplicated n-gram removal: the native rewrite and the shuffled " +
+    "plan equal the composable reference row by row") {
+    val docs = generatedDocs
+    assert(docs.filter(F.col("doc_id").isNull).count() > 0)
+    for (n <- Seq(1, 2, 3, 8); minDocs <- Seq(2, 3)) {
+      val ref = dupNgramRows(dupNgramsComposable(docs, "text", "doc_id", n, minDocs))
+      assert(ref.exists(_._3 > 0) && ref.exists(r => r._1.nonEmpty && r._3 == 0),
+        s"n=$n minDocs=$minDocs: the inputs must both drop and keep")
+      assert(dupNgramRows(Dedup.removeDuplicatedNgrams(docs, "text", "doc_id",
+        n = n, minDocs = minDocs)) == ref, s"native, n=$n minDocs=$minDocs")
+      assert(dupNgramRows(Dedup.removeDuplicatedNgramsShuffled(docs, "text",
+        "doc_id", n, minDocs)) == ref, s"shuffled, n=$n minDocs=$minDocs")
+    }
+  }
+
+  test("duplicated n-gram removal: two docs sharing an id each lose only " +
+    "their own spans") {
+    // "a b c" is held by ids 1 and 2. Both id-1 docs keep their own
+    // text's positions: the second one holds no "a b c" and loses nothing
+    val docs = Seq((1L, "a b c x"), (1L, "y z w v"), (2L, "q a b c"))
+      .toDF("doc_id", "text")
+    val want = Seq((Some(1L), "x", 3L), (Some(1L), "y z w v", 0L),
+      (Some(2L), "q", 3L)).sortBy { case (id, t, k) => (id.get, t, k) }
+    assert(dupNgramRows(Dedup.removeDuplicatedNgrams(docs, "text", "doc_id",
+      n = 3)) == want)
+    assert(dupNgramRows(Dedup.removeDuplicatedNgramsShuffled(docs, "text",
+      "doc_id", 3, 2)) == want)
+  }
+
+  /** The jobs `body` starts, by job description. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("<none>"))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener delivery is asynchronous: wait for the count to settle
+      var last = -1
+      while (last != descs.size) { last = descs.size; Thread.sleep(300) }
+      descs.asScala.toSeq
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("duplicated n-gram removal: at most 4 jobs, the vote labelled, " +
+    "nothing left persisted") {
+    val docs = generatedDocs
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    var rows = Seq.empty[(Option[Long], String, Long)]
+    val jobs = jobsOf {
+      rows = dupNgramRows(Dedup.removeDuplicatedNgrams(docs, "text", "doc_id", n = 3))
+    }
+    assert(rows.exists(_._3 > 0))
+    assert(jobs.length <= 4, s"jobs: ${jobs.mkString(", ")}")
+    assert(jobs.count(_ == "DEDUP: n-gram vote") >= 1, s"jobs: ${jobs.mkString(", ")}")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty)
+  }
+
   test("image aHash: hand-computed bits on an 8x8 image; visual near-dups found") {
     // 8x8 image → 1x1 blocks, cells ARE the pixels: gradient 0..63,
     // mean = 31, bits set exactly where pixel > 31 (indices 32..63)
@@ -2349,6 +2496,31 @@ class OperatorsSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") ||
       plan.contains("BroadcastNestedLoopJoin"),
       s"small gram index must broadcast its confirm join:\n$plan")
+  }
+
+  test("bloom decontamination: construction runs only the sketch " +
+    "build's jobs, output unchanged") {
+    val corpus = Seq(
+      (20L, "alpha beta gamma delta epsilon zeta"),
+      (21L, "alpha beta gamma unrelated words here"),
+      (22L, "totally different text about spark engines")
+    ).toDF("doc_id", "text")
+    val eval = Seq(
+      (0L, "alpha beta gamma delta epsilon zeta eta theta iota")
+    ).toDF("doc_id", "text")
+    var out: org.apache.spark.sql.DataFrame = null
+    val built = jobsOf {
+      out = Dedup.decontaminateBloom(corpus, "text", "doc_id", eval, "text",
+        k = 3, minShared = 1, expectedGrams = 1000L, numBits = 65536L)
+    }
+    // the eval grams' distinct shuffle (which staging runs under AQE)
+    // and the sketch aggregate's two jobs; an eager stage of the eval
+    // grams adds a count job
+    assert(built.length <= 3, s"construction jobs: ${built.length}")
+    def collect(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(collect(out) == collect(Dedup.decontaminate(
+      corpus, "text", "doc_id", eval, "text", k = 3, minShared = 1)))
   }
 
   test("bloom decontamination equals the exact broadcast pipeline") {
