@@ -2,512 +2,108 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 
-/** Benchmark main — driver contract.
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+
+import graft.trace.{ProcMeters, StageTraceListener}
+
+/** Headline benchmark main: the north-star numbers, measured the way the
+  * reference measures itself — the Q1 query, averaged over runs
+  * (reference: examples/benchmark.py:51-68, README.md:163-165).
   *
-  * Runs the headline queries on `SPARK_GRAFT_SF_DIR`, forcing full
-  * materialization through the `noop` sink (a bare `count()` would let
-  * Catalyst prune the plan down to a scan-count). Timing mirrors the
-  * reference: wall-clock around query execution only, session startup
-  * excluded (reference: src/mini_spark/shell.py:91-93); every query gets
-  * one warmup run (JIT + code cache + parquet footers) and 3–5 timed
-  * reps with the median reported and the [min, max] spread emitted for
-  * EVERY entry — headline queries AND scale probes — matching the
-  * reference's avg-of-runs methodology (README.md:163-165) while making
-  * noise-vs-regression adjudicable from the artifact alone.
+  * Entries ([[HeadlineEntries]]): the per-rep driver floor, the Q1
+  * flagship, Q1 at BASELINE.md's sf1 row count (`q06_x10_6Mrows`, gated
+  * at 2x the reference's 0.707 s) and the heavy x10 dedup tier.
+  * Command-line arguments narrow a run to the named entries; a name may
+  * also be any [[SparkEntry.queries]] entry.
   *
-  * Output contract: ONE JSON line on stdout, and — because build-tool
-  * log decoration can swallow stdout — the same JSON is also written to
-  * `bench.json` in the working directory, to `$SPARK_GRAFT_OUT/bench.json`
-  * when that env var is set, and echoed to stderr with a unique
-  * `GRAFT_BENCH_JSON ` prefix. A per-stage timing artifact (the tracing
-  * analog of the reference's merged perfetto traces) goes to
-  * `bench_stages.json` alongside each `bench.json`. The JSON carries an
-  * environment fingerprint (load average before/after, core count, /tmp
-  * filesystem) and a fixed-cost 32-task canary timed at start and end,
-  * so cross-round deltas can be attributed to machine state vs plan
-  * changes.
+  * Each entry gets one untimed warm-up; then every round runs every entry
+  * once, interleaved, so machine drift lands on all entries alike.
+  * Before every rep all RDDs are unpersisted and the heap collected
+  * (outside the timed window); the frame is CONSTRUCTED inside the timed
+  * window, so operators that stage intermediates eagerly are charged,
+  * and written to the `noop` sink (a bare `count()` would let Catalyst
+  * prune the plan to a scan-count). Each entry publishes this run's
+  * median, min, max and quartiles with every rep and its host steal.
+  *
+  * Output: one JSON line on stdout and in `bench.json` (working directory
+  * and `$SPARK_GRAFT_OUT`); per-rep stages go to `bench_stages.json`.
+  * Env: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1),
+  * `SPARK_GRAFT_CPUS` (default: the available cores), `SPARK_GRAFT_OUT`.
   */
 object Bench {
-  // by-name: DataFrame CONSTRUCTION is inside the timed region, so
-  // operators that eagerly stage intermediates (localCheckpoint in the
-  // LSH pipelines, the IVF layout write in q48) are honestly charged
-  private def execTime(df: => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    df.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
-  }
 
-  /** Drop every persisted RDD (the LSH pipelines' staged intermediates).
-    * Each by-name construction checkpoints fresh blocks; across ~100
-    * query executions in one JVM the dead blocks accumulate until the
-    * memory manager taxes whichever query runs last — the round-3 bench
-    * measured the LSH family 2.4× slower in the full sweep than in
-    * isolation from exactly this. Runs OUTSIDE the timed window: a real
-    * deployment runs one query per job and never pays it. */
-  private def sweepPersisted(spark: SparkSession): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+  /** BASELINE.md: the reference's Q1 at sf1 (6,001,215 rows). */
+  val BaselineSf1Q1Sec = 0.707
 
-  /** per-entry [min, max] across the timed reps, emitted for every key
-    * in the output JSON — headline queries and probes alike */
-  private val spreads =
-    scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+  /** Timed rounds per run of [[main]]. */
+  val Rounds = 7
 
-  /** per-entry, per-rep CANARY wall times (seconds), taken back-to-back
-    * with each timed rep — the round-9/10 verdicts' missing attribution
-    * mechanism: a rep taken while the box is loaded shows an elevated
-    * canary IN THE SAME REP, so a cross-round regression can be
-    * machine-attributed from the artifact alone (emitted as
-    * `rep_canary_ratio` = canary / sweep-floor per rep). */
-  private val repCanaries =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+  val HeadlineEntries: Seq[String] = Seq(
+    "q00_floor", "q06_q1_flagship", "q06_x10_6Mrows",
+    "q29_x10_50kdocs", "q112_x10_50kdocs", "q51_x10_50kdocs",
+    "q152_x10_50kdocs", "q143_x10_50kdocs")
 
-  /** per-entry, per-rep I/O-CANARY wall times — a fixed ~100 MB parquet
-    * read taken back-to-back with each rep (round-13 verdict ask #2):
-    * the compute canary cannot see page-cache eviction or disk
-    * contention, which is exactly what a table-scan probe is most
-    * sensitive to, so round 13's requeue pass "qualified" cold-cache
-    * reps under busy-disk windows the compute series read as calm. */
-  private val repIoCanaries =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
+  final case class Summary(median: Double, min: Double, max: Double,
+                           q1: Double, q3: Double)
 
-  /** per-entry, per-rep WALL times — kept raw (not just the median) so
-    * the end-of-sweep QUALIFICATION pass (round-11 verdict ask #1) can
-    * recompute each median over canary-qualified reps only. */
-  private val repTimes =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
-
-  /** per-entry, per-rep GC and JIT wall (ms) spent INSIDE the timed
-    * window (round-15 verdict ask #1: the aged-driver elimination chain
-    * named candidates it could not measure — these two are the
-    * measurable ones). A late-sweep rep whose gc_ms is flat against its
-    * early-sweep twin ELIMINATES heap aging for that entry; one whose
-    * gc_ms grew names it. JIT likewise for deopt/recompile storms. */
-  private val repGcMs =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
-  private val repJitMs =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
-
-  // one shared implementation with the fork side — see
-  // graft.trace.ProcMeters (the A/B compares these readings, so the
-  // two sides must not be able to drift apart)
-  private def gcTotalMs: Long = graft.trace.ProcMeters.gcMs
-  private def gcTotalCount: Long = graft.trace.ProcMeters.gcCount
-  private def jitTotalMs: Long = graft.trace.ProcMeters.jitMs
-  private def procStatJiffies(): (Long, Long) =
-    graft.trace.ProcMeters.statJiffies
-  private val repIowaitMs =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
-  private val repStealMs =
-    scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
-
-  /** Time `body` (seconds) while recording the GC/JIT wall and the
-    * box-level iowait/steal that accrued inside the window, appended
-    * to the entry's meter series. EVERY timed rep — probe(),
-    * probeInterleaved(), and the custom runners (the x10 trio, the
-    * BPE wordcount/mergeloop) — records through here, so the steal
-    * qualification bar and the artifact's per-rep meters cover every
-    * published entry (the round-16 review finding: the custom runners
-    * originally skipped the meters while the notes claimed full
-    * coverage). */
-  private def meteredSec(name: String)(body: => Unit): Double = {
-    val (g0, j0) = (gcTotalMs, jitTotalMs)
-    val (io0, st0) = procStatJiffies()
-    val t0 = System.nanoTime()
-    body
-    val t = (System.nanoTime() - t0) / 1e9
-    val (io1, st1) = procStatJiffies()
-    repGcMs += name -> (repGcMs.getOrElse(name, Seq.empty) :+ (gcTotalMs - g0))
-    repJitMs += name -> (repJitMs.getOrElse(name, Seq.empty) :+ (jitTotalMs - j0))
-    // USER_HZ is 100 on every mainstream Linux: 1 jiffy = 10 ms
-    repIowaitMs += name ->
-      (repIowaitMs.getOrElse(name, Seq.empty) :+ (io1 - io0) * 10)
-    repStealMs += name ->
-      (repStealMs.getOrElse(name, Seq.empty) :+ (st1 - st0) * 10)
-    t
-  }
-
-  /** [[execTime]] + [[meteredSec]] for DataFrame-shaped rep bodies. */
-  private def execTimeMetered(name: String, df: => DataFrame): Double =
-    meteredSec(name) {
-      df.write.format("noop").mode("overwrite").save()
+  /** Quartiles by linear interpolation between order statistics (numpy's
+    * default), so an even-length median averages the two middles. */
+  def summarize(xs: Seq[Double]): Summary = {
+    require(xs.nonEmpty, "summarize: empty series")
+    val s = xs.sorted.toIndexedSeq
+    def at(p: Double): Double = {
+      val pos = p * (s.length - 1)
+      val lo = pos.toInt
+      val hi = math.min(lo + 1, s.length - 1)
+      s(lo) + (s(hi) - s(lo)) * (pos - lo)
     }
-
-  /** Driver-age fingerprint: the JVM-state quantities that GROW over a
-    * ~100-probe sweep, snapshotted at sweep start and publication time
-    * so the aged-vs-young delta is in the artifact (heap live set after
-    * a full GC, loaded classes — every codegen'd stage is a class —
-    * cumulative GC/JIT wall). */
-  private def jvmAgeJson(): String = {
-    System.gc()
-    val heap = java.lang.management.ManagementFactory.getMemoryMXBean
-      .getHeapMemoryUsage.getUsed / (1024 * 1024)
-    val cl = java.lang.management.ManagementFactory.getClassLoadingMXBean
-    s"""{"heap_after_gc_mb":$heap,"classes_live":${cl.getLoadedClassCount},"classes_total":${cl.getTotalLoadedClassCount},"gc_total_sec":${f"${gcTotalMs / 1000.0}%.1f"},"gc_count":$gcTotalCount,"jit_total_sec":${f"${jitTotalMs / 1000.0}%.1f"}}"""
+    Summary(at(0.5), s.head, s.last, at(0.25), at(0.75))
   }
 
-  /** re-runnable probe bodies for the requeue pass: name → one more
-    * (sweep + GC + timed run + canary) appended to repTimes/repCanaries.
-    * Probes whose body a LATER sweep step invalidates (e.g. the
-    * unzoned blockfile read after the zone map lands) deregister
-    * themselves; probes needing special session state (the skew pair)
-    * register a custom hook that restores it around each extra rep. */
-  private val requeueHooks =
-    scala.collection.mutable.LinkedHashMap.empty[String, () => Unit]
+  /** One run's artifacts: the bench JSON line and the per-rep stages. */
+  final case class Output(json: String, stagesJson: String)
 
-  /** Canary observations split by PHASE: the requeue pass is qualified
-    * against the requeue window's OWN floor, never only the whole-sweep
-    * floor (round-13 verdict ask #6 — the pass ran in the sweep's
-    * dirtiest minutes against a floor taken across the whole sweep).
-    * Every canary execution — rep-interleaved, fingerprint, calm
-    * poll — lands in the current phase's buffers via [[recordCanary]].
-    */
-  private var requeuePhase = false
-  private val sweepCanaryObs = scala.collection.mutable.ArrayBuffer.empty[Double]
-  private val sweepIoObs = scala.collection.mutable.ArrayBuffer.empty[Double]
-  private val requeueCanaryObs = scala.collection.mutable.ArrayBuffer.empty[Double]
-  private val requeueIoObs = scala.collection.mutable.ArrayBuffer.empty[Double]
-  private def recordCanary(c: Double, io: Double): Unit =
-    if (requeuePhase) { requeueCanaryObs += c; requeueIoObs += io }
-    else { sweepCanaryObs += c; sweepIoObs += io }
-
-  /** per-entry rep count at the moment the requeue pass began — reps
-    * past this index were taken in the requeue window and qualify
-    * against the requeue floors. */
-  private val preRequeueReps = scala.collection.mutable.Map.empty[String, Int]
-
-  /** Prior artifact's floors (parsed from the pre-run bench.json before
-    * the requeue pass) — the plausibility-windowed hints for
-    * [[BenchPolicy.floor]]. */
-  private var floorHintC: Option[Double] = None
-  private var floorHintIo: Option[Double] = None
-
-  /** Compute/I/O floors per phase. The requeue-phase EFFECTIVE floor is
-    * the min of the two: a floor derived from a loaded window must
-    * never LOOSEN the bar below what the sweep established, while a
-    * calmer-than-sweep requeue window honestly tightens it. */
-  private def floorSweepC: Double =
-    BenchPolicy.floor(sweepCanaryObs.toSeq, floorHintC)
-  private def floorSweepIo: Double =
-    BenchPolicy.floor(sweepIoObs.toSeq, floorHintIo)
-  private def floorRequeueC: Double =
-    if (requeueCanaryObs.isEmpty) floorSweepC
-    else math.min(floorSweepC,
-      BenchPolicy.floor(requeueCanaryObs.toSeq, floorHintC))
-  private def floorRequeueIo: Double =
-    if (requeueIoObs.isEmpty) floorSweepIo
-    else math.min(floorSweepIo,
-      BenchPolicy.floor(requeueIoObs.toSeq, floorHintIo))
-
-  /** Poll BOTH canaries until the box is quiet enough that a rep taken
-    * now COULD still qualify — compute within EntryFloorCapRatio ×
-    * QualRatio of the global floor (a rep's own bar is entry-local;
-    * this poll only screens out windows where even the cap would
-    * disqualify it), I/O within IoQualRatio of the I/O floor — or the
-    * patience budget runs out. Every poll refines the current phase's
-    * floors. Returns whether calm was reached (false ⇒ the box never
-    * went quiet; the caller should stop requeueing rather than burn
-    * the budget polling). */
-  private def waitForCalm(spark: SparkSession): Boolean = {
-    var tries = 0
-    while (tries < 10) {
-      val c = execTime(canaryJob(spark))
-      val io = execTime(ioCanaryJob(spark))
-      recordCanary(c, io)
-      val (fc, fio) =
-        if (requeuePhase) (floorRequeueC, floorRequeueIo)
-        else (floorSweepC, floorSweepIo)
-      if (c <= BenchPolicy.EntryFloorCapRatio * BenchPolicy.QualRatio * fc &&
-          io <= BenchPolicy.IoQualRatio * fio) return true
-      Thread.sleep(2000)
-      tries += 1
-    }
-    false
-  }
-
-  /** Reps of `name` taken while the box was quiet — compute canary
-    * within [[BenchPolicy.QualRatio]] AND I/O canary within
-    * [[BenchPolicy.IoQualRatio]] of the floors of the PHASE the rep ran
-    * in (sweep vs requeue window). Entries without a parallel canary
-    * series qualify nothing (published as all-reps with
-    * `qualified_reps` 0, never silently). */
-  private def qualifiedOf(name: String): Seq[Double] =
-    SweepPublication.qualifiedReps(
-      repTimes.getOrElse(name, Seq.empty),
-      repCanaries.getOrElse(name, Seq.empty),
-      repIoCanaries.getOrElse(name, Seq.empty),
-      preRequeueReps.getOrElse(name,
-        repTimes.getOrElse(name, Seq.empty).length),
-      floorSweepC, floorRequeueC, floorSweepIo, floorRequeueIo,
-      repStealMs.getOrElse(name, Seq.empty),
-      Runtime.getRuntime.availableProcessors())
-
-  private def medOf(xs: Seq[Double]): Double = BenchPolicy.median(xs)
-
-  /** The fixed-cost canary job: schedule-and-agg 32 tasks over a
-    * generated range — no I/O, trivial compute, so its wall is pure
-    * scheduler + JVM overhead; shared by the per-rep interleave and the
-    * sweep-level before/after fingerprint. */
-  private def canaryJob(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.{functions => F}
-    spark.range(0, 3200000L, 1, 32).agg(F.sum("id"))
-  }
-
-  /** The fixed-cost I/O canary: a full read of a ~100 MB staged parquet
-    * table of md5 hex strings (high entropy — parquet cannot compress
-    * it away), 32 files so the read fans out. Warm (page-cached) it
-    * costs ~0.05-0.15 s; evicted or behind a busy disk it costs a
-    * MULTIPLE — the signal the compute canary is blind to. */
-  private var ioCanaryPath: String = _
-  private def stageIoCanary(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.{functions => F}
-    ioCanaryPath = newTempDir("graft-bench-iocanary-") + "/io.parquet"
-    spark.range(0, 3000000L, 1, 32)
-      .select(F.col("id"), F.md5(F.col("id").cast("string")).as("h"))
-      .write.mode("overwrite").parquet(ioCanaryPath)
-  }
-  private def ioCanaryJob(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.{functions => F}
-    spark.read.parquet(ioCanaryPath)
-      .agg(F.count(F.lit(1)).as("n"), F.min("h").as("m"))
-  }
-
-  /** One recorded (compute, io) canary pair, measured with the
-    * just-finished rep's OWN WAKE drained first: unpersist + GC clear
-    * its garbage and trailing block state, and an untimed warm read
-    * restores the io-canary file its streaming may have evicted. The
-    * canaries exist to measure the BOX during the rep's window —
-    * external load and disk contention persist through the ~0.3 s
-    * drain and still register; the rep's self-perturbation must not.
-    * Round-15 finding that forced this: on an IDLE box, every
-    * GB-streaming probe (the four LSH x10 entries, the 6M-row layout
-    * pairs, recopy) published 0-2 qualified reps because its own
-    * footprint evicted the canary file (io ratios 1.8-4.7x the floor)
-    * and its un-collected wake held the compute-canary entry floor
-    * above the loaded-patch cap (entry_floor_ratio 2.4-6.1) — heavy
-    * entries could NEVER qualify, however quiet the machine. */
-  private def settledCanaryPair(spark: SparkSession): (Double, Double) = {
-    sweepPersisted(spark); System.gc()
-    // the GC enqueues the rep's dead shuffles/broadcasts on the
-    // ContextCleaner, whose deletions run on background threads EXACTLY
-    // while the canary would — a storm sized by the rep's own shuffle
-    // count (the LSH probes' entry floors sat 2-6x the global floor
-    // with calm in-rep conditions). A short settle plus one THROWAWAY
-    // canary absorbs the storm untimed; the io warm restores the
-    // canary file the rep's streaming may have evicted.
-    Thread.sleep(150)
-    execTime(canaryJob(spark)): Unit
-    execTime(ioCanaryJob(spark)): Unit
-    val c = execTime(canaryJob(spark))
-    val io = execTime(ioCanaryJob(spark))
-    recordCanary(c, io)
-    (c, io)
-  }
-
-  /** Shared probe/headline runner: sweep + GC + warmup, then `reps`
-    * timed runs; records the spread and returns the median. EVERY timed
-    * entry — scale probes and headline queries alike — goes through
-    * here so none ships as a bare single sample (the round-6 gate
-    * number had no spread, so noise vs regression could not be
-    * adjudicated from the artifacts) and the timing methodology cannot
-    * drift between the two call sites. Every rep is followed
-    * back-to-back by one canary execution (the round-10 verdict's #1
-    * ask): the canary series dates load excursions rep-by-rep, which is
-    * what lets the regressions block below name a mechanical cause.
-    * `afterWarmup` is the headline loop's tracer hook (drain warmup
-    * stages so per-stage attribution covers the timed runs only). */
-  private def probe(spark: SparkSession, name: String, reps: Int = 5,
-                    afterWarmup: () => Unit = () => (),
-                    rewarmOnRequeue: Boolean = true)
-                   (q: => DataFrame): Double = {
-    sweepPersisted(spark)
-    System.gc()
-    execTime(q) // warmup (not reported)
-    execTime(canaryJob(spark)) // canary warmup (JIT parity with reps)
-    execTime(ioCanaryJob(spark))
-    afterWarmup()
-    // GC before EVERY rep, not just the warmup (outside the timed
-    // window): the heavy probes stage multi-hundred-MB checkpoint
-    // blocks per construction, and a rep that inherits the previous
-    // rep's un-collected garbage can spend seconds in allocation-
-    // pressure pauses — round 7 measured a single q152_x10 rep at 12.9 s
-    // against a 2.9-3.5 s family, exactly the q59 round-6 pattern.
-    def oneRep(): Unit = {
-      sweepPersisted(spark); System.gc()
-      val t = execTimeMetered(name, q)
-      val (c, io) = settledCanaryPair(spark)
-      repTimes += name -> (repTimes.getOrElse(name, Seq.empty) :+ t)
-      repCanaries += name -> (repCanaries.getOrElse(name, Seq.empty) :+ c)
-      repIoCanaries += name ->
-        (repIoCanaries.getOrElse(name, Seq.empty) :+ io)
-    }
-    (1 to reps).foreach(_ => oneRep())
-    // the body stays re-runnable for the end-of-sweep requeue pass,
-    // RE-WARMED: in-sweep reps follow the warmup and each other
-    // back-to-back (page cache hot), while a requeued rep runs many
-    // minutes later against whatever the rest of the sweep evicted —
-    // round 13's ~1.53 s "calm" x10 reps vs its 0.36-0.75 s in-sweep
-    // reps were exactly this cold-vs-warm split, not a regression. The
-    // untimed re-run restores cache parity so requeued reps measure
-    // the same condition the in-sweep reps did. STATEFUL probes
-    // (bodies that commit versions, consume pre-staged ranges, or copy
-    // whole tables) pass rewarmOnRequeue = false: an untimed re-run
-    // would double their version history, burn pre-staged fixtures,
-    // and — for the write-heavy ones — kick off exactly the dirty-page
-    // writeback that disqualifies the timed rep that follows.
-    requeueHooks += name -> (() => {
-      sweepPersisted(spark); System.gc()
-      if (rewarmOnRequeue) execTime(q): Unit // re-warm, untimed
-      oneRep()
-    })
-    val runs = repTimes(name).sorted
-    spreads += name -> ((runs.head, runs.last))
-    runs(runs.length / 2)
-  }
-
-  /** Interleaved runner for TWIN layout probes (round-14 verdict ask
-    * #1 — the x10 trio's pattern generalized): each cycle times every
-    * body back-to-back and shares ONE canary pair, so a load excursion
-    * lands in the SAME rep of every series and the published pair
-    * ORDERING is load-invariant — two sequential probe() calls let
-    * drift between the blocks invert a comparison whose row-group
-    * accounting says 14x fewer reads (round 14's pruned 0.529 s vs
-    * unpruned 0.473 s). One shared requeue hook appends a full
-    * re-warmed cycle to all series, so qualified counts move together
-    * and no subset triggers duplicate cycles. Returns each entry's
-    * in-sweep median, in input order. */
-  private def probeInterleaved(spark: SparkSession,
-      entries: Seq[(String, () => DataFrame)],
-      reps: Int = 5): Seq[Double] = {
-    sweepPersisted(spark); System.gc()
-    entries.foreach { case (_, q) => execTime(q()): Unit } // warmups
-    execTime(canaryJob(spark)); execTime(ioCanaryJob(spark))
-    val series = entries.map(_ =>
-      scala.collection.mutable.ArrayBuffer.empty[Double])
-    val cSeries = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val ioSeries = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def oneCycle(): Unit = {
-      sweepPersisted(spark); System.gc()
-      entries.zip(series).foreach { case ((n, q), buf) =>
-        buf += execTimeMetered(n, q())
-      }
-      val (c, io) = settledCanaryPair(spark)
-      cSeries += c; ioSeries += io
-      entries.zip(series).foreach { case ((n, _), buf) =>
-        repTimes += n -> buf.toSeq
-        repCanaries += n -> cSeries.toSeq
-        repIoCanaries += n -> ioSeries.toSeq
-      }
-    }
-    (1 to reps).foreach(_ => oneCycle())
-    val cycleHook: () => Unit = () => {
-      sweepPersisted(spark); System.gc()
-      entries.foreach { case (_, q) => execTime(q()): Unit } // re-warm
-      oneCycle()
-    }
-    entries.foreach { case (n, _) => requeueHooks += n -> cycleHook }
-    entries.zip(series).map { case ((n, _), buf) =>
-      val runs = buf.toSeq.sorted
-      spreads += n -> ((runs.head, runs.last))
-      runs(runs.length / 2)
-    }
-  }
-
-  /** temp dirs created by staging/probes — removed before exit so a
-    * bench run leaves /tmp as it found it (round-6 missing #4); the
-    * shutdown hook covers crash paths */
-  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-  private def newTempDir(prefix: String): String = {
-    val d = Files.createTempDirectory(prefix).toString
-    tempDirs += d
-    d
-  }
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
-    f.delete(): Unit
-  }
-  private def cleanupTempDirs(): Unit =
-    tempDirs.foreach(d => deleteRec(new java.io.File(d)))
-
-  /** Recursive on-disk size: a `.parquet` entry may be a single file or
-    * a directory of part files — `File.length()` on a directory is the
-    * ~4 KB inode size, which would silently coalesce a large
-    * directory-form fact table to one split. */
+  /** Recursive on-disk size: a `.parquet` entry may be a directory of part
+    * files, and `File.length()` of a directory is its inode size. */
   private def tableBytes(f: java.io.File): Long =
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).map(tableBytes).sum
     else f.length()
 
-  /** Ingest-stage the benchmark tables ONCE (untimed) into a splittable
-    * layout. The driver's regenerated parquet ships each table as ONE
-    * parquet row group; a row group is parquet's minimum read unit, so
-    * no engine can parallelize such a scan regardless of plan quality
-    * (Spark's byte-range file splits all collapse onto the single
-    * group). Real deployments ingest into a splittable layout before
-    * serving queries — and BASELINE.md's reference numbers likewise
-    * time queries only AFTER the (excluded) CSV→BlockFile conversion,
-    * so the comparison stays apples-to-apples.
+  private def deleteRec(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRec)
+    f.delete(): Unit
+  }
+
+  /** Ingest-stage the tables once (untimed) into a splittable layout under
+    * `out`. The test data ships each table as ONE parquet row group, the
+    * minimum read unit, so no engine can parallelize its scan; real
+    * deployments ingest before serving, and BASELINE.md's reference
+    * numbers likewise exclude the CSV→BlockFile conversion.
     *
-    * The split is ORDER-PRESERVING: `maxRecordsPerFile` rolls the
-    * writer to a new file every ~rows/splits records with NO shuffle —
-    * round 6 used `repartition(splits)`, whose round-robin exchange
-    * destroyed sort locality and encoding efficiency (the staged files
-    * decoded measurably slower per row; round-6 verdict "what's wrong
-    * #1"). Tables small enough to broadcast stay single-file. The
-    * flagship over the RAW single-group layout is still reported
-    * (`q06_rawlayout_600krows`, `q06_x10_rawlayout`) so the layout
-    * delta stays visible rather than hidden. */
-  private[graft] def stageSplittable(spark: SparkSession, rawDir: String,
-                              ways: Int): String = {
-    val staged = newTempDir("graft-bench-tables-")
-    val dir = new java.io.File(rawDir)
-    val tables = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet"))
+    * The split is order-preserving (`maxRecordsPerFile`, no shuffle): a
+    * round-robin repartition destroyed sort locality and decoded slower
+    * per row. Split count: string-heavy rows (≥64 B compressed and a
+    * string column) pay per-row regex/hash CPU, so they fan out by rows
+    * (rows/500, capped at `ways`: documents q87 measured 0.42 s at 1
+    * split, 0.17 s at 10, 0.11 s at 32, but 32 splits put ~0.1 s of task
+    * scheduling under every aggregate over the table). Narrow numeric
+    * tables decode in bulk, so a split must carry ≥512 KB and ≥50k rows
+    * (the flagship was flat from 8 to 32 lineitem splits). At real scale
+    * every table hits the `ways` cap. */
+  private def stageSplittable(spark: SparkSession, rawDir: String,
+                              ways: Int, out: String): String = {
+    val tables = Option(new java.io.File(rawDir).listFiles())
+      .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
     tables.foreach { f =>
       val df = spark.read.parquet(f.getPath)
-      val out = s"$staged/${f.getName}"
-      // split count: every split must be worth its task, where "worth"
-      // depends on PER-ROW cost. Round 7's one-size floors (50k rows AND
-      // 512 KB) staged the 5,000-row `documents` table as ONE split and
-      // serialized every regex/hash-heavy doc scan on one core of 32
-      // (round-7 verdict #1: q87 2.06×, q110 1.83×, q52 1.42×). The
-      // discriminator is STRING-heavy rows (compressed width ≥64 B AND a
-      // string column): per-row regex/hash CPU dominates decode there,
-      // so fan out BY ROWS. Measured (round-8 split experiment, medians
-      // of 3): documents@1 split q87=0.420s q110=0.377s q52=0.279s; @10
-      // splits 0.167/0.147/0.139s; @32 0.109/0.133/0.140s. 32 is NOT
-      // the right point despite winning the narrow scans: a full r8
-      // sweep at 32 splits (documents AND embeddings) put ~0.1s of task
-      // scheduling under every aggregating query over those tables and
-      // regressed the ANN family 1.5-2x (q32 0.132→0.257, q27
-      // 0.209→0.471) — embeddings is numeric vector data whose per-row
-      // cost never justified fan-out at all, hence the StringType guard.
-      // NARROW numeric tables decode in bulk, so a split must carry
-      // real volume or scheduling overhead wins (round 6: events at 15
-      // splits quadrupled q19; measured: flagship 0.402s@4 lineitem
-      // splits, flat 0.21-0.22 from 8 through 32; events q19/q42 a wash
-      // at 2 vs 4). At real scale every branch hits the core cap
-      // immediately (any 100 GB table does) — the floors only protect
-      // the small-SF bench.
+      val dest = s"$out/${f.getName}"
       val rows = df.count()
       val bytes = tableBytes(f)
-      val rowWidth = bytes / math.max(1L, rows)
-      val textHeavy = rowWidth >= 64 && df.schema.exists(
+      val textHeavy = bytes / math.max(1L, rows) >= 64 && df.schema.exists(
         _.dataType == org.apache.spark.sql.types.StringType)
-      // rows/500 (documents: 10 splits), NOT rows/150 (32): the first
-      // r8 sweep fanned documents AND embeddings to 32 single-task-wave
-      // splits — narrow regex scans got 2-4x faster but every
-      // aggregating query over those tables paid ~0.1s of extra task
-      // scheduling and the ANN family regressed 1.5-2x (embeddings is
-      // numeric vector data; its per-row cost never justified the
-      // fan-out, hence the StringType guard). 10 splits keeps q87 at
-      // ~0.17s isolated (vs 0.42 at 1, 0.11 at 32) without taxing the
-      // shuffle/agg fleet.
-      // narrow numeric tables keep round 7's exact floors: the split
-      // experiment measured the flagship FLAT from 8 through 32 lineitem
-      // splits (0.21-0.22s) and events q19/q42 a wash at 2 vs 4, so
-      // changing them buys nothing and muddies round-over-round compares
       val splits =
         if (textHeavy)
           math.min(ways.toLong, math.max(1L, rows / 500L)).toInt
@@ -515,24 +111,17 @@ object Bench {
           ways.toLong, bytes / (512 * 1024), rows / 50000L).min).toInt
       if (splits > 1)
         df.write.option("maxRecordsPerFile", (rows / splits + 1).toString)
-          .mode("overwrite").parquet(out)
-      else df.coalesce(1).write.mode("overwrite").parquet(out)
+          .mode("overwrite").parquet(dest)
+      else df.coalesce(1).write.mode("overwrite").parquet(dest)
     }
-    staged
+    out
   }
 
-  /** Stage the x10 throughput-probe input ONCE (untimed) as a REAL
-    * 6M-row table — the same row count as BASELINE.md's sf1 row
-    * (6,001,215 rows, 0.707 s) — written order-preserving (~3 files per
-    * union branch, ~30 total, one task per file on scan). Round 6 read
-    * 10 paths of the 32-file staged copy instead: 320 scan tasks whose
-    * per-task overhead swamped the aggregation. A table of this volume
-    * is what a real ingest would produce; the raw-layout twin
-    * (`q06_x10_rawlayout`: 10 paths of the driver's single-row-group
-    * file, 10 tasks) is reported alongside so the no-ingest number
-    * stays visible. */
-  private def stageX10(spark: SparkSession, rawDir: String): String = {
-    val out = newTempDir("graft-bench-x10-") + "/lineitem_x10.parquet"
+  /** Stage the x10 throughput input once (untimed) as a real 6M-row table
+    * — BASELINE.md's sf1 row count — written order-preserving, ~3 files
+    * per union branch. Reading 10 paths of the staged copy instead
+    * scheduled 320 scan tasks whose overhead swamped the aggregation. */
+  private def stageX10(spark: SparkSession, rawDir: String, out: String): String = {
     val li = spark.read.parquet(s"$rawDir/lineitem.parquet")
     val rows = li.count()
     (0 until 10).map(_ => li).reduce(_.union(_))
@@ -541,49 +130,12 @@ object Bench {
     out
   }
 
-  /** Range-bucket `df` by `l_orderkey` ONCE (one table pass, a
-    * partitioned write), then publish one Versioned dataset per
-    * requested tag whose i-th segment is the i-th bucket: 1 +
-    * tags.length table passes instead of tags.length × nSeg filtered
-    * full scans — what keeps the multi-segment probe stagings
-    * affordable in-sweep, and the shape a real range-partitioned
-    * ingest produces anyway. Untimed, like every staging. */
-  private def stageRangeSegments(spark: SparkSession, df: DataFrame,
-      mnK: Long, width: Long, nSeg: Int, tags: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.{functions => F}
-    val bucketed = newTempDir("graft_bench_buckets")
-    df.withColumn("__b", ((F.col("l_orderkey") - mnK) / width).cast("int"))
-      .write.partitionBy("__b").mode("overwrite").parquet(bucketed)
-    // an EMPTY bucket writes no partition dir at all, and the per-bucket
-    // read below would abort the sweep with PATH_NOT_FOUND — fail with
-    // the cause named instead (a sparse key distribution at small SF
-    // needs a lower nSeg)
-    val missing = (0 until nSeg)
-      .filterNot(i => new java.io.File(s"$bucketed/__b=$i").exists())
-    require(missing.isEmpty,
-      s"stageRangeSegments: key range bucket(s) ${missing.take(5)
-        .mkString(", ")} of $nSeg are empty — lower the segment count " +
-        "for this volume")
-    tags.map { tag =>
-      val p = newTempDir(s"graft_bench_$tag") + "/ds"
-      (0 until nSeg).foreach { i =>
-        graft.sources.Versioned.commit(
-          spark.read.parquet(s"$bucketed/__b=$i"), p): Unit
-      }
-      p
-    }
-  }
-
-  /** The 10×-replicated documents corpus shared by the scale probes:
-    * distinct ids per copy, identical text (a corpus that is 90%
-    * duplicates — the workload a dedup pass exists for). The staged
-    * table is split ~core-count ways, so 10 copies would schedule ~320
-    * scan tasks whose per-task overhead swamps sub-second probes —
-    * coalesce caps the scan width at the core count (each task then
-    * reads ~10 small files serially, full parallelism, no task storm). */
+  /** The documents corpus replicated 10x: distinct ids per copy, identical
+    * text (90% duplicates, the workload a dedup pass exists for).
+    * Coalesced to the core count: 10 copies of the staged table would
+    * schedule ~10x its splits, and per-task overhead swamps the probes. */
   private def docs10(spark: SparkSession, sfDir: String,
                      cores: Int): DataFrame = {
-    import org.apache.spark.sql.{functions => F}
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     (0 until 10).map(i => d.select(
@@ -593,2015 +145,156 @@ object Bench {
       .coalesce(cores)
   }
 
-  /** Fixed-cost canary: schedule-and-noop 32 tasks over a generated
-    * range — no I/O, trivial compute, so its time is pure scheduler +
-    * JVM overhead. Timed at bench start and end; a drifted canary means
-    * machine state (load, CPU governor, heap age), not plan changes —
-    * the attribution round 6 could not make for its fleet-wide ~1.3×. */
-  /** Before/after fingerprint: 3 (compute, I/O) canary pairs, recorded
-    * into the current phase's floor buffers; returns the medians. */
-  private def canaryTime(spark: SparkSession): (Double, Double) = {
-    execTime(canaryJob(spark)); execTime(ioCanaryJob(spark)) // warmups
-    val pairs = (1 to 3).map(_ => settledCanaryPair(spark))
-    (BenchPolicy.median(pairs.map(_._1)), BenchPolicy.median(pairs.map(_._2)))
-  }
-
-  private def loadAvg(): String =
-    try Files.readString(Paths.get("/proc/loadavg")).trim.split(" ").take(3).mkString(",")
-    catch { case _: Throwable => "" }
-
-  /** Fork [[graft.trace.FreshApply]] in a BRAND-NEW JVM (same flags,
-    * same classpath, same box, same staged datasets) — the fresh side
-    * of the aged-vs-fresh A/B (round-15 verdict ask #1). Returns the
-    * fork's result JSON and a status; any failure degrades to a status
-    * string, never aborts the sweep. */
-  private def forkFreshApply(srcPath: String, repPath: String,
-      ranges: Seq[(Long, Long)],
-      timeoutSec: Long = 420): (Option[String], String) = {
-    import scala.jdk.CollectionConverters._
-    try {
-      val javaBin =
-        Paths.get(System.getProperty("java.home"), "bin", "java").toString
-      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq
-        .filterNot(a => a.startsWith("-agentlib") || a.contains("jdwp"))
-      val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq(
-        "-cp", System.getProperty("java.class.path"),
-        "graft.trace.FreshApply", srcPath, repPath) ++
-        ranges.flatMap(r => Seq(r._1.toString, r._2.toString))).asJava
-      val outF = Files.createTempFile("graft_fresh_apply", ".out").toFile
-      val errF = Files.createTempFile("graft_fresh_apply", ".err").toFile
-      val pb = new ProcessBuilder(cmd)
-      pb.redirectOutput(outF)
-      pb.redirectError(errF)
-      val p = pb.start()
-      val done = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
-      if (!done) {
-        p.destroyForcibly(): Unit
-        p.waitFor(10, java.util.concurrent.TimeUnit.SECONDS): Unit
-        outF.delete(); errF.delete()
-        if (p.isAlive()) {
-          // destroyForcibly did not land (uninterruptible I/O): the
-          // fork may STILL be writing under repPath — deleting its
-          // `.staging-*` dirs now (or letting it recreate them after
-          // our sweep) would break the same-replica-condition guarantee
-          // the cleanup exists for. Skip the sweep, say so in the
-          // status; downstream apply/recopy reps this sweep are
-          // suspect and the status is the record of why.
-          (None, "fork_timeout_unkilled_staging_not_swept")
-        } else {
-          // a fork killed mid-applyChanges leaves `_cdc/.staging-*`
-          // scratch under repPath (the manifest commit itself is
-          // atomic, so the table is intact) — sweep the orphans so the
-          // requeued apply reps and the recopy probe keep timing the
-          // SAME replica condition the pre-fork reps measured
-          try {
-            val cdc = new java.io.File(repPath, "_cdc")
-            Option(cdc.listFiles()).getOrElse(Array.empty)
-              .filter(_.getName.startsWith(".staging-"))
-              .foreach { d =>
-                def rm(f: java.io.File): Unit = {
-                  Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-                  f.delete(): Unit
-                }
-                rm(d)
-              }
-          } catch { case _: Throwable => () }
-          (None, "fork_timeout")
-        }
-      } else {
-        val out = Files.readString(outF.toPath)
-        val code = p.exitValue()
-        outF.delete(); errF.delete()
-        out.linesIterator.find(_.startsWith("GRAFT_FRESH_APPLY ")) match {
-          case Some(l) =>
-            (Some(l.stripPrefix("GRAFT_FRESH_APPLY ").trim), "ok")
-          case None => (None, s"fork_exit_${code}_no_marker")
-        }
-      }
-    } catch {
-      case e: Throwable => (None, s"fork_failed_${e.getClass.getSimpleName}")
-    }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val rawSfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => cleanupTempDirs()))
-
-    val loadBefore = loadAvg()
-    stageIoCanary(spark) // untimed; both canaries exist before any rep
-    // PRE-WARM the compute canary to its steady state (round 15): its
-    // wall is task-scheduling cost that C2-compiles over ~100+
-    // executions (CanarySettle: ~0.13s run 1 → ~0.05 by run 60 →
-    // ~0.03 after hundreds), so without this the global floor — the
-    // 5th-smallest observation, i.e. END-of-sweep state — sits 2-6x
-    // under what any MID-sweep canary can reach, and every heavy
-    // mid-sweep entry (the LSH x10 family at probes ~40-75) fails the
-    // loaded-patch cap on JIT position alone: entry floors 0.07-0.18s
-    // absolute, exactly a fresh JVM's canary wall (HeavyWake), not
-    // probe wake. ~10s of untimed warmup flattens the curve for the
-    // whole sweep; the loop stops early once the rolling median stops
-    // improving.
-    locally {
-      var best = Double.MaxValue
-      var sinceImproved = 0
-      var i = 0
-      while (i < 250 && sinceImproved < 40) {
-        val c = execTime(canaryJob(spark))
-        if (c < best * 0.95) { best = c; sinceImproved = 0 }
-        else sinceImproved += 1
-        i += 1
-      }
-      (1 to 10).foreach(_ => execTime(ioCanaryJob(spark)): Unit)
-    }
-    val (canaryBefore, ioCanaryBefore) = canaryTime(spark)
-    // driver-age fingerprint at sweep start (its publication-time twin
-    // lands in env.jvm_end; the delta is the aging the artifact can
-    // now show instead of attribute by elimination)
-    val jvmStartJson = jvmAgeJson()
-    val (iowait0, steal0) = procStatJiffies()
-
-    // untimed ingest (see stageSplittable's scaladoc); queries read the
-    // splittable staged copy, `sf` in the output keeps the raw dir and
-    // `layout` names what was timed (ADVICE round 6: the flagship's
-    // meaning must not silently change between layouts)
-    val sfDir = stageSplittable(spark, rawSfDir, ways = cpus.toInt)
-    val x10Path = stageX10(spark, rawSfDir)
-    val tracer = new graft.trace.StageTraceListener
-    spark.sparkContext.addSparkListener(tracer)
-
-    val qs = SparkEntry.queries
-    val headline = Seq(
-      "q06_q1_flagship", // the BASELINE workload (TPC-H Q1 variant)
-      "q02_project_arith", "q05_between_ts", "q11_join_agg", "q12_join3",
-      "q17_topk", "q19_events_hourly", "q23_token_stats", "q27_dedup_exact",
-      "q28_jaccard_pairs", "q29_minhash_pairs", "q30_simhash_pairs",
-      "q31_embed_neardup", "q32_knn_brute", "q33_knn_ivf",
-      "q36_sessionize", "q41_topk_probe", "q42_asof_join", "q44_salted_agg",
-      // the 100 TB serving/deliverable paths (partition-pruned ANN includes
-      // its layout write each run; clusters/pipeline include the minhash
-      // pair pass)
-      "q48_knn_ivf_part", "q51_dedup_clusters", "q52_gopher_quality",
-      "q55_window_funcs", "q59_pipeline_keep",
-      // round-4 additions: TPC-H join stressors + the new pipeline ops
-      "q78_tpch_q13", "q79_tpch_q16", "q80_tpch_q19", "q81_tpch_q21",
-      "q86_pack_chunks", "q87_pii_redact", "q88_hash_split",
-      // corpus statistics + serving artifacts (tf-idf is two keyed aggs
-      // + a token join; the index is one bounded-heap agg; chunking is a
-      // pure narrow explode)
-      "q94_tfidf_terms", "q96_chunks", "q98_inverted_index",
-      // second corpus-stats wave: two-level shuffle rank, unigram model
-      // scoring (staged tf), content-defined chunking (narrow)
-      "q103_shuffle_rank", "q106_unigram_nll", "q110_cdc_chunks",
-      "q112_bloom_decontaminate", "q113_bucketed_join",
-      // retrieval + dialect subquery representative; q126 times the
-      // INDEX BUILD + the pruned query (the honest one-shot cost, like
-      // q113/q124) — the serving-only latency is the q126_x10 probe
-      "q115_bm25", "q118_sql_in_subquery", "q126_bm25_indexed",
-      // compressed-index ANN serving paths (in-flight, pruned, stored).
-      // NOTE: q113/q124 (like q48) deliberately time their LAYOUT WRITE
-      // inside the measured region — the honest one-shot cost; the
-      // serving-only latency is the in-flight twin (q122/q123)
-      "q122_knn_pq", "q123_knn_ivfpq", "q124_knn_pq_layout",
-      // round-5 additions: cross-corpus fuzzy decontamination (the LSH
-      // family's cross-table member), bigram LM scoring (staged bigram
-      // tf), int8 scalar quantization (narrow + bounded top-k, incl.
-      // its in-engine min/max training pass)
-      "q129_fuzzy_decontaminate", "q131_bigram_nll", "q132_knn_sq",
-      // round-6 additions: the exact-substring-dedup rewrite (gram vote
-      // + doc-keyed mark join + per-row rebuild)
-      "q152_remove_dup_ngrams",
-      // round-7 additions: the contamination rollup (q129's pipeline +
-      // distinct/join/agg) and the recall-closing ANN serving config
-      // (ADC pool + bounded exact re-rank)
-      "q166_contamination_report", "q168_knn_ivfpq_refine",
-      // round-7 second wave: per-source boilerplate strip (line-digest
-      // vote + doc-keyed rebuild), the IVF-pruned ANN join (bucket
-      // equi-join, no cross join), and visual dedup end-to-end (real
-      // PNG encode+decode + aHash + Hamming chunk LSH)
-      "q176_remove_boilerplate", "q184_ann_join", "q188_visual_neardup",
-      // round-7 third wave: event analytics (funnel join chain), the
-      // head-coverage corpus diagnostic (token agg + bounded top-k),
-      // the artifact-free truncated-dim ANN tier, and the web-crawl
-      // URL normalization chain (pure narrow regex)
-      "q206_funnel", "q208_head_coverage", "q209_knn_truncated",
-      "q201_url_normalize",
-      // round-7 fifth wave: the two whole-document packers (one shuffle
-      // + a per-shard native fold each; FFD adds the largest-first
-      // in-shard sort) and the two data-prep capstones (SFT: quality →
-      // split → FFD; pretraining: dedup → decontaminate → concat-chunk)
-      "q217_nextfit_pack", "q219_ffd_pack",
-      "q224_sft_prep", "q228_pretrain_prep",
-      // round-8 addition: the web-crawl curation capstone (normalize →
-      // canonical-URL dedup → quality gate → rollup: narrow regex chain
-      // + one keyed min + a semi join + two aggs)
-      "q251_webcrawl_prep",
-      // round-9 addition: the mixed-container video walk (synthesize +
-      // sniff + per-family bitstream parse over all five families —
-      // pure narrow CPU, the multimodal family's representative)
-      "q263_video_meta_mixed",
-      // round-9 second wave: the trained-tokenizer path — q279 as
-      // gated is train(8)+encode; the throughput number that matters
-      // at corpus scale is the ENCODE pass alone, probed separately
-      // below with a 200-merge table (q279_bpe_encode here keeps the
-      // gate-identical end-to-end cost visible beside it)
-      "q279_bpe_encode")
-
-    // EXPLICIT driver-floor probe (round-8 verdict ask #8): a 5-row
-    // scan + trivial agg through the IDENTICAL timing path (by-name
-    // construction, noop sink, sweep+GC+warmup). Its median IS the
-    // per-rep driver-side floor (Catalyst planning + codegen + the
-    // footer job) that was previously only inferred from stage data —
-    // every sub-0.5 s in-sweep median can now be floor-subtracted
-    // mechanically from the artifact alone.
-    probe(spark, "q00_floor", reps = 11) {
-      import org.apache.spark.sql.{functions => F}
+  /** The frame an entry times; `x10Path` is staged on first use. */
+  private def body(spark: SparkSession, name: String, sfDir: String,
+                   x10Path: => String, cpus: Int): () => DataFrame = name match {
+    // the per-rep driver floor (planning + codegen + footer job): a
+    // 5-row scan and trivial agg through the identical timing path
+    case "q00_floor" => () =>
       spark.read.parquet(s"$sfDir/region.parquet")
         .groupBy("r_name").agg(F.count(F.lit(1)).as("n"))
-    }
-    tracer.drain()
-
-    // Throughput probe at the reference's published sf1 ROW COUNT: the
-    // identical Q1 aggregation over the pre-staged REAL 6M-row table
-    // (same volume as BASELINE.md's sf1 = 0.707 s row; see stageX10),
-    // with the no-ingest raw-layout twin (10 paths of the driver's
-    // single-row-group file) beside it. Runs FIRST (clean heap).
-    //
-    // INTERLEAVED reps (round-8 verdict ask #2): round 8 timed the two
-    // probes as separate 11-rep blocks and machine drift between the
-    // blocks inflated the gate-deciding spread to 3.3× min-to-max.
-    // Here every cycle times staged → raw → canary back-to-back, so a
-    // load excursion hits all three series in the same rep and the
-    // medians stay comparable; the per-cycle canary series is emitted
-    // as q06_x10_canary so the excursions themselves are visible in
-    // the artifact.
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      def stagedQ = SparkEntry.q1Agg(spark.read.parquet(x10Path))
-      def rawQ = SparkEntry.q1Agg(
-        spark.read.parquet(Seq.fill(10)(s"$rawSfDir/lineitem.parquet"): _*))
-      def canaryQ = spark.range(0, 3200000L, 1, 32).agg(F.sum("id"))
-      sweepPersisted(spark); System.gc()
-      execTime(stagedQ); execTime(rawQ); execTime(canaryQ) // warmups
-      val s = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val r = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val c = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val ioSeries = scala.collection.mutable.ArrayBuffer.empty[Double]
-      def oneCycle(): Unit = {
-        sweepPersisted(spark); System.gc()
-        s += execTimeMetered("q06_x10_6Mrows", stagedQ)
-        r += execTimeMetered("q06_x10_rawlayout", rawQ)
-        c += execTimeMetered("q06_x10_canary", canaryQ)
-        val io = execTime(ioCanaryJob(spark))
-        ioSeries += io
-        recordCanary(c.last, io)
-        repTimes += "q06_x10_6Mrows" -> s.toSeq
-        repTimes += "q06_x10_rawlayout" -> r.toSeq
-        repTimes += "q06_x10_canary" -> c.toSeq
-        // the per-cycle canaries double as every series' per-rep pair
-        Seq("q06_x10_6Mrows", "q06_x10_rawlayout", "q06_x10_canary")
-          .foreach { n =>
-            repCanaries += n -> c.toSeq
-            repIoCanaries += n -> ioSeries.toSeq
-          }
-      }
-      for (_ <- 1 to 11) oneCycle()
-      // ONE shared hook instance for the trio: requeueing ANY of them
-      // re-runs one interleaved cycle that appends a rep to all three
-      // series (they share the per-cycle canary, so their qualified
-      // counts move together and no subset can trigger duplicate
-      // cycles — the round-12 advice's over-weighting hazard). The
-      // hook RE-WARMS both table reads untimed first: requeued cycles
-      // run minutes after the sweep evicted the staged table from the
-      // page cache, and round 13's ~1.53 s "calm" x10 reps vs its
-      // 0.36-0.75 s in-sweep reps were that cold-read condition, not a
-      // plan regression.
-      val cycleHook: () => Unit = () => {
-        sweepPersisted(spark); System.gc()
-        execTime(stagedQ): Unit
-        execTime(rawQ): Unit
-        oneCycle()
-      }
-      requeueHooks += "q06_x10_6Mrows" -> cycleHook
-      requeueHooks += "q06_x10_rawlayout" -> cycleHook
-      requeueHooks += "q06_x10_canary" -> cycleHook
-      def med(xs: Seq[Double]) = xs.sorted.apply(xs.length / 2)
-      spreads += "q06_x10_6Mrows" -> ((s.min, s.max))
-      spreads += "q06_x10_rawlayout" -> ((r.min, r.max))
-      spreads += "q06_x10_canary" -> ((c.min, c.max))
-      (med(s.toSeq), med(r.toSeq), med(c.toSeq))
-    }
-    tracer.drain()
-
-    // the flagship over the driver's RAW single-row-group file — reported
-    // alongside the staged number so the ingest-layout delta is explicit
-    probe(spark, "q06_rawlayout_600krows", reps = 11) {
-      SparkEntry.q1Agg(spark.read.parquet(s"$rawSfDir/lineitem.parquet"))
-    }
-    tracer.drain()
-
-    // LSH scale probe: the q29 minhash pipeline over a 10×-replicated
-    // documents corpus (distinct ids per copy, identical text — i.e. a
-    // corpus that is 90% duplicates, the workload a dedup pass exists
-    // for). This is the data behind the claim that the eager staging +
-    // bucket caps amortize with volume: the signature/banding work grows
-    // linearly in rows while mega-buckets of boilerplate hit the
-    // [2, maxBucket] cap instead of exploding quadratically — so the
-    // probe should scale SUB-linearly vs q29_minhash_pairs × 10.
-    probe(spark, "q29_x10_50kdocs") {
-      graft.operators.Dedup.minhashLsh(docs10(spark, sfDir, cpus.toInt),
+    case "q06_x10_6Mrows" => () => SparkEntry.q1Agg(spark.read.parquet(x10Path))
+    // the q29 minhash pipeline over the 10x corpus: bucket caps keep
+    // boilerplate mega-buckets from exploding quadratically
+    case "q29_x10_50kdocs" => () =>
+      graft.operators.Dedup.minhashLsh(docs10(spark, sfDir, cpus),
         "text", "doc_id",
         numBands = 4, rowsPerBand = 8, shingleN = 1, threshold = 0.8,
         maxBucket = 64)
-    }
-    tracer.drain()
-
-    // Bloom-decontamination scale probe: the q112 pipeline over the same
-    // 10×-replicated corpus as the LSH probe. The sketch build cost is
-    // FIXED (eval side unchanged); the corpus side is a narrow gram
-    // explode + codegen'd probe, so the probe should scale ~linearly in
-    // corpus rows with no blowup from the 10× duplicate mass — the
-    // measured form of "the bloom path is a scan, not a join".
-    probe(spark, "q112_x10_50kdocs") {
-      import org.apache.spark.sql.{functions => F}
-      val all = docs10(spark, sfDir, cpus.toInt)
+    // bloom decontamination: a fixed sketch build plus a narrow corpus scan
+    case "q112_x10_50kdocs" => () => {
+      val all = docs10(spark, sfDir, cpus)
       graft.operators.Dedup.decontaminateBloom(
         all.filter(F.col("doc_id") % 1000000000L >= 20), "text", "doc_id",
         all.filter(F.col("doc_id") < 20), "text",
         k = 2, minShared = 3)
     }
-    tracer.drain()
-
-    // Serving-path scale probes over the same 10×-replicated corpus:
-    //
-    // (a) BM25 against a PREBUILT index (build untimed — a serving
-    //     query amortizes the layout across the corpus version): the
-    //     tbucket partition prune + token pushdown mean per-query cost
-    //     tracks matching postings, so 10× the corpus should cost far
-    //     less than 10× the query time (and ≪ q115's per-query corpus
-    //     aggregation at the same volume).
-    // (b) connected-components clustering over the 10× minhash pair set
-    //     — the remaining heavy family without a scale probe: pairs grow
-    //     with the duplicate mass but the label-propagation loop is
-    //     bounded by cluster diameter, not corpus size.
-    locally {
-      val idxPath = newTempDir("graft_bm25_x10") + "/idx"
-      graft.operators.TextAnalysis.writeBm25Index(
-        docs10(spark, sfDir, cpus.toInt), "text", "doc_id",
-        idxPath, numBuckets = 64) // untimed: per-corpus-version cost
-      val a = probe(spark, "q126_x10_50kdocs") {
-        graft.operators.TextAnalysis.bm25TopKIndexed(spark, idxPath,
-          query = "spark window join", k = 10)
-      }
-      val b = probe(spark, "q51_x10_50kdocs") {
-        graft.operators.Dedup.clusters(
-          graft.operators.Dedup.minhashLsh(docs10(spark, sfDir, cpus.toInt),
-            "text", "doc_id",
-            numBands = 4, rowsPerBand = 8, shingleN = 1, threshold = 0.8,
-            maxBucket = 64))
-      }
-      (a, b)
-    }
-    tracer.drain()
-
-    // Fuzzy-decontamination scale probe — the LSH family's cross-table
-    // member (q129's shape) over the 10×-replicated corpus against the
-    // FIXED 20-doc eval side: eval banding is constant, corpus-side work
-    // grows linearly in rows, and candidate pairs are bounded by the
-    // eval set — so 10× corpus should cost far less than 10× the q129
-    // time (sub-linear, like q29_x10/q112_x10).
-    probe(spark, "q129_x10_50kdocs") {
-      import org.apache.spark.sql.{functions => F}
-      graft.operators.Dedup.minhashLshCross(
-        docs10(spark, sfDir, cpus.toInt)
-          .filter(F.col("doc_id") % 1000000000L >= 20), "text", "doc_id",
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .select("doc_id", "text").filter(F.col("doc_id") < 20),
-        "text", "doc_id",
-        numBands = 4, rowsPerBand = 8, shingleN = 1, threshold = 0.5,
-        maxBucket = 64)
-    }
-    tracer.drain()
-
-    // Duplicated-n-gram-removal scale probe: the 10×-replicated corpus
-    // is 90% duplicates, so nearly every gram becomes corpus-duplicated
-    // and nearly every position gets marked — the worst case for the
-    // mark join-back. Gram votes aggregate 8-byte hashes (never text),
-    // so the probe should scale ~linearly in rows.
-    probe(spark, "q152_x10_50kdocs") {
+    // connected components over the 10x minhash pair set
+    case "q51_x10_50kdocs" => () =>
+      graft.operators.Dedup.clusters(
+        graft.operators.Dedup.minhashLsh(docs10(spark, sfDir, cpus),
+          "text", "doc_id",
+          numBands = 4, rowsPerBand = 8, shingleN = 1, threshold = 0.8,
+          maxBucket = 64))
+    // duplicated-n-gram removal: nearly every gram is duplicated here,
+    // the worst case for the rewrite
+    case "q152_x10_50kdocs" => () =>
       graft.operators.Dedup.removeDuplicatedNgrams(
-        docs10(spark, sfDir, cpus.toInt), "text", "doc_id", n = 8, minDocs = 2)
-    }
-    tracer.drain()
-
-    // FFD-packing scale probe: one shuffle + a per-shard linear native
-    // fold, so 10× docs should cost ~10× the fold (linear), with shard
-    // width held constant by scaling the shard count with the corpus —
-    // exactly how the 100 TB deployment keeps collect_list bounded.
-    probe(spark, "q219_x10_50kdocs") {
-      graft.operators.Pack.ffdPack(
-        docs10(spark, sfDir, cpus.toInt), "doc_id",
-        graft.operators.TextAnalysis.tokenCount(
-          org.apache.spark.sql.functions.col("text")),
-        budget = 256, numShards = 160)
-    }
-    tracer.drain()
-
-    // Containment scale probe: 10× the corpus as 10× the SOURCES (the
-    // replication index joins the block key) — the growth mode blocked
-    // containment is designed for: block size stays ~constant, block
-    // COUNT grows 10×, so pair work grows ~linearly with volume and no
-    // task ever exceeds the maxBlock bound. The other growth mode — one
-    // block ballooning past the cap — is handled before any text moves
-    // (narrow-count semi-join in blockedShinglePairs), so its cost is a
-    // count, not a pair explosion; this probe measures the real work.
-    probe(spark, "q143_x10_50kdocs") {
-      import org.apache.spark.sql.{functions => F}
+        docs10(spark, sfDir, cpus), "text", "doc_id", n = 8, minDocs = 2)
+    // blocked containment: 10x the corpus as 10x the SOURCES (the copy
+    // index joins the block key), so block count grows, not block size
+    case "q143_x10_50kdocs" => () => {
       val d = spark.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "text", "lang", "source")
       val docs10w = (0 until 10).map(i => d.select(
           (F.col("doc_id") + F.lit(i.toLong * 1000000000L)).as("doc_id"),
           F.col("text"), F.col("lang"), F.col("source")))
         .reduce(_.union(_))
-        .coalesce(cpus.toInt) // see the shared docs10 helper's scaladoc
+        .coalesce(cpus) // see docs10
       graft.operators.Dedup.containmentPairs(docs10w, "text", "doc_id",
         F.struct(F.col("lang"), F.col("source"),
           (F.col("doc_id") / 1000000000L).cast("int").as("copy")),
         shingleN = 1, threshold = 0.9, maxBlock = 1024)
     }
-    tracer.drain()
+    case other =>
+      val fn = SparkEntry.queries.getOrElse(other, throw new IllegalArgumentException(
+        s"unknown bench entry $other: not a headline entry or SparkEntry query"))
+      () => fn(spark, sfDir)
+  }
 
-    // The reference's NATIVE BlockFile format as a first-class INPUT:
-    // the flagship Q1 aggregation over a .bin written once (untimed —
-    // a format conversion is a per-corpus cost). Block-granular read
-    // partitions + size-prefix column pruning are what make the compat
-    // path a real input rather than a demo; this measures it against
-    // the parquet flagship at the same row count.
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      val binPath = newTempDir("graft_bench_bin") + "/lineitem.bin"
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").select(
-        F.col("l_returnflag"), F.col("l_linestatus"),
-        F.col("l_quantity").cast("float").as("l_quantity"),
-        F.col("l_extendedprice").cast("float").as("l_extendedprice"),
-        F.col("l_discount").cast("float").as("l_discount"),
-        F.col("l_tax").cast("float").as("l_tax"),
-        F.col("l_shipdate"))
-      graft.sources.Tables.blockFileWrite(li, binPath, rowsPerBlock = 16384)
-      probe(spark, "q06_blockfile_600krows") {
-        SparkEntry.q1Agg(graft.sources.Tables.blockFileRead(spark, binPath))
-      }
-    }
-    tracer.drain()
+  /** Unpersist every RDD and collect the heap (untimed), then time one
+    * construction + `noop` write; returns (seconds, host steal ms). Each
+    * construction stages fresh blocks, and blocks or garbage inherited
+    * from the previous rep once cost a heavy rep 12.9 s against a
+    * 2.9-3.5 s family. */
+  private def timedRep(spark: SparkSession, q: () => DataFrame): (Double, Long) = {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    System.gc()
+    val steal0 = ProcMeters.statJiffies._2
+    val t0 = System.nanoTime()
+    q().write.format("noop").mode("overwrite").save()
+    val t = (System.nanoTime() - t0) / 1e9
+    (t, (ProcMeters.statJiffies._2 - steal0) * 10) // USER_HZ 100: 10 ms a jiffy
+  }
 
-    // Zone-map block skipping, measured: the same selective filtered
-    // aggregation over a SORTED .bin — once without a sidecar (every
-    // block scheduled + decoded) and once with (only range-intersecting
-    // blocks scheduled). The write + sidecar build are untimed
-    // per-corpus costs, like every other layout probe.
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      val binPath = newTempDir("graft_bench_zones") + "/lineitem_sorted.bin"
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").select(
-          F.col("l_orderkey").cast("int").as("l_orderkey"),
-          F.col("l_quantity").cast("float").as("l_quantity"),
-          F.col("l_returnflag"))
-        .orderBy("l_orderkey")
-      graft.sources.Tables.blockFileWrite(li, binPath, rowsPerBlock = 16384)
-      def q = graft.sources.Tables.blockFileRead(spark, binPath)
-        .filter(F.col("l_orderkey") >= 10000 && F.col("l_orderkey") < 20000)
-        .groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("double")).as("sum_qty"))
-      val un = probe(spark, "q06_blockfile_unzoned") { q }
-      graft.sources.ZoneMap.write(binPath)
-      // the zone map just landed: a requeued "unzoned" rep would now
-      // read zoned — the body is invalidated, so it leaves the pool
-      requeueHooks.remove("q06_blockfile_unzoned")
-      val zn = probe(spark, "q06_blockfile_zoned") { q }
-      (un, zn)
-    }
-    tracer.drain()
+  private def num(x: Double): String = f"$x%.4f"
+  private def numOrNull(x: Option[Double]): String = x.fold("null")(num)
 
-    // The PARQUET side of the same experiment (round-7 verdict ask #7):
-    // the identical selective filtered aggregation over parquet written
-    // in two layouts — key-shuffled (every 16384-row file spans the full
-    // l_orderkey range, so footer min/max stats prune NOTHING) vs
-    // key-sorted (file/row-group stats exclude non-intersecting files
-    // before any decode). Like-for-like with q06_blockfile_unzoned/
-    // zoned: same rows per unit (16384), same filter, same agg — the
-    // comparison shows what the zone-map sidecar buys the .bin path
-    // relative to what parquet's built-in statistics buy the same
-    // workload. Writes are untimed per-corpus layout costs, as always.
-    val (_, _, _, _, rgNote, pruneStats) = {
-      import org.apache.spark.sql.{functions => F}
-      val dirP = newTempDir("graft_bench_pqprune")
-      // 6M-ROW input (the x10 staged table): at 600 k rows the whole
-      // scan costs less than the measured q00_floor, so no layout could
-      // show a timing delta — the probe volume must put real decode
-      // work on the table for pruning to have something to save
-      val li = spark.read.parquet(x10Path).select(
-          F.col("l_orderkey").cast("int").as("l_orderkey"),
-          F.col("l_quantity").cast("float").as("l_quantity"),
-          F.col("l_returnflag"))
-      // BOUNDED row groups (round-8 verdict ask #4): round 8 wrote
-      // 16384-row files that each held ONE row group, so row-group
-      // statistics had nothing to skip inside a split and the probe was
-      // inconclusive. 64 KB groups inside 150k-row files give the
-      // sorted layout many groups per file; the footer accounting below
-      // reports how many groups the filter's [10000, 20000) range
-      // actually intersects, so the number in the notes — not an
-      // inference — explains whatever the timing shows.
-      // shuffled twin: order by a hash so every group's [min,max] spans
-      // the whole key domain (lineitem's NATURAL order is already
-      // near-sorted by orderkey — it would prune almost as well as the
-      // sorted twin and measure nothing)
-      li.orderBy(F.hash(F.col("l_orderkey"), F.col("l_quantity")))
-        .write.option("maxRecordsPerFile", "150000")
-        .option("parquet.block.size", (64 * 1024).toString)
-        .mode("overwrite").parquet(s"$dirP/shuffled")
-      li.orderBy("l_orderkey")
-        .write.option("maxRecordsPerFile", "150000")
-        .option("parquet.block.size", (64 * 1024).toString)
-        .mode("overwrite").parquet(s"$dirP/sorted")
-      // footer-level row-group accounting: (groups, groups whose
-      // l_orderkey [min,max] intersects the probe filter's range)
-      def rgStats(path: String): (Int, Int) = {
-        import scala.jdk.CollectionConverters._
-        val conf = spark.sparkContext.hadoopConfiguration
-        val files = Option(new java.io.File(path).listFiles())
-          .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-        var total = 0; var hit = 0
-        files.foreach { f =>
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.getPath), conf))
-          try rdr.getRowGroups.asScala.foreach { rg =>
-            total += 1
-            rg.getColumns.asScala
-              .find(_.getPath.toDotString == "l_orderkey").foreach { c =>
-                val st = c.getStatistics
-                val mn = st.genericGetMin.asInstanceOf[Number].longValue()
-                val mx = st.genericGetMax.asInstanceOf[Number].longValue()
-                if (mx >= 10000L && mn < 20000L) hit += 1
-              }
-          } finally rdr.close()
-        }
-        (total, hit)
-      }
-      val (totS, hitS) = rgStats(s"$dirP/sorted")
-      val (totU, hitU) = rgStats(s"$dirP/shuffled")
-      def q(path: String) = spark.read.parquet(path)
-        .filter(F.col("l_orderkey") >= 10000 && F.col("l_orderkey") < 20000)
-        .groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("double")).as("sum_qty"))
-      val Seq(a, b) = probeInterleaved(spark, Seq(
-        "q06_parquet_unpruned" -> (() => q(s"$dirP/shuffled")),
-        "q06_parquet_pruned" -> (() => q(s"$dirP/sorted"))))
-      // Z-ORDER twin (the q277 statement's layout): cluster on
-      // (l_orderkey, l_quantity) and filter on the SECOND column —
-      // the case the linear sort above cannot prune (its groups carry
-      // full-range l_quantity stats). Same group sizing, same volume;
-      // the footer accounting below makes the skip measurable even
-      // where the 32-core wall hides it behind the driver floor.
-      graft.sources.Versioned.zorderLayout(
-          li, Seq("l_orderkey", "l_quantity"), numPartitions = Some(32))
-        .write.option("maxRecordsPerFile", "150000")
-        .option("parquet.block.size", (64 * 1024).toString)
-        .mode("overwrite").parquet(s"$dirP/zorder")
-      // STAGE BOTH LAYOUTS BACK-TO-BACK, then sync+settle (round-15
-      // verdict ask #2, the replica pair's round-14 pattern): round 15
-      // proved per-rep interleaving alone cannot fix this pair — the
-      // published ordering still contradicted the row-group accounting
-      // (0.444 s over 91 groups vs 0.206 s over 1213) because the
-      // zorder directory was written SECONDS before its timed reps
-      // (dirty pages still flushing, its own write wake) while the
-      // sorted twin had been settled for ~80 probes. Interleaving
-      // cancels shared load, not a one-sided staging wake. Re-writing
-      // the sorted twin here makes the asymmetry symmetric; the sync
-      // forces both layouts' dirty pages out; waitForCalm holds the
-      // pair until both canaries read quiet.
-      li.orderBy("l_orderkey")
-        .write.option("maxRecordsPerFile", "150000")
-        .option("parquet.block.size", (64 * 1024).toString)
-        .mode("overwrite").parquet(s"$dirP/sorted2")
-      try new ProcessBuilder("sync").start().waitFor()
-      catch { case _: Throwable => () }
-      waitForCalm(spark): Unit
-      def rgStatsQty(path: String): (Int, Int) = {
-        import scala.jdk.CollectionConverters._
-        val conf = spark.sparkContext.hadoopConfiguration
-        val files = Option(new java.io.File(path).listFiles())
-          .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
-        var total = 0; var hit = 0
-        files.foreach { f =>
-          val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(f.getPath), conf))
-          try rdr.getRowGroups.asScala.foreach { rg =>
-            total += 1
-            rg.getColumns.asScala
-              .find(_.getPath.toDotString == "l_quantity").foreach { c =>
-                val st = c.getStatistics
-                val mn = st.genericGetMin.asInstanceOf[Number].doubleValue()
-                val mx = st.genericGetMax.asInstanceOf[Number].doubleValue()
-                if (mx >= 10.0 && mn < 13.0) hit += 1
-              }
-          } finally rdr.close()
-        }
-        (total, hit)
-      }
-      val (totZ, hitZ) = rgStatsQty(s"$dirP/zorder")
-      val (totL, hitL) = rgStatsQty(s"$dirP/sorted2")
-      def qQty(path: String) = spark.read.parquet(path)
-        .filter(F.col("l_quantity") >= 10 && F.col("l_quantity") < 13)
-        .groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("double")).as("sum_qty"))
-      val Seq(zl, ll) = probeInterleaved(spark, Seq(
-        "q06_zorder_2ndcol" -> (() => qQty(s"$dirP/zorder")),
-        "q06_linear_2ndcol" -> (() => qQty(s"$dirP/sorted2"))))
-      val note = s"parquet row-group accounting: sorted layout $totS " +
-        s"groups / $hitS intersect the filter range, shuffled twin " +
-        s"$totU / $hitU; 2nd-column twin (filter l_quantity in [10,13)): " +
-        s"zorder layout $totZ groups / $hitZ intersect, linear-by-orderkey " +
-        s"$totL / $hitL"
-      // machine-readable prune accounting (round-10 verdict ask #5):
-      // the same numbers as structured per-probe fields, not prose
-      val stats = Seq(
-        "q06_parquet_pruned" -> ((totS, hitS)),
-        "q06_parquet_unpruned" -> ((totU, hitU)),
-        "q06_zorder_2ndcol" -> ((totZ, hitZ)),
-        "q06_linear_2ndcol" -> ((totL, hitL)))
-      (a, b, zl, ll, note, stats)
-    }
-    tracer.drain()
-
-    // Tokenizer THROUGHPUT probe: the q279 gate times train(8)+encode
-    // end-to-end; at corpus scale training amortizes to zero (one
-    // word-count pass + a vocabulary-bounded driver loop) and the
-    // recurring cost is the ENCODE pass. Train a 200-merge table once
-    // (untimed), then time encode+histogram over the staged documents —
-    // the per-row native-expression path a 100 TB tokenization job is
-    // made of.
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val merges =
-        graft.operators.TextAnalysis.bpeTrain(docs, "text", numMerges = 200)
-      probe(spark, "q279_bpe_encode200") {
-        docs.select(F.explode(graft.operators.TextAnalysis
-            .bpeEncode(F.col("text"), merges)).as("token"))
-          .groupBy("token").agg(F.count(F.lit(1)).as("n"))
-          .orderBy(F.col("n").desc, F.col("token").asc).limit(30)
-      }
-    }
-    tracer.drain()
-
-    // PRODUCTION-vocabulary tokenizer probe (round-10 verdict ask #3):
-    // a real tokenizer is 32k+ merges, so this measures the trainer's
-    // two halves SEPARATELY at that scale — the distributed word-count
-    // pass over the x10 corpus, then the driver merge loop to 32768 —
-    // plus the 32k-table ENCODE pass, the recurring per-corpus cost.
-    // The fixture text draws on a 31-word pool (total merge capacity
-    // ~89), nothing like an open web vocabulary, so the corpus is
-    // widened with one md5-hex word per x10 row: ~50k distinct words,
-    // capacity ~1.5M — deep ranks actually train AND fire at encode
-    // time (the q288 gate pins the same construction's correctness).
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      // ROUND-16 PROBE REDEFINITION (baselines reset; see probe_notes
-      // .q279_bpe): the widened corpus is STAGED to parquet once,
-      // untimed, like every other staging — previously both timed
-      // bodies re-built the union+md5 corpus EXPRESSION inside every
-      // rep, charging corpus synthesis (a fixture cost) to
-      // training/encode. A real tokenizer job reads its corpus from
-      // storage; that is the condition both probes now measure.
-      val corpusPath = newTempDir("graft_bench_bpecorpus") + "/corpus.parquet"
-      locally {
-        val d = docs10(spark, sfDir, cpus.toInt)
-        d.select(F.col("text")).unionAll(
-          d.select(F.md5(F.col("doc_id").cast("string")).as("text")))
-          .write.mode("overwrite").parquet(corpusPath)
-      }
-      def corpus = spark.read.parquet(corpusPath)
-      var freqs: Array[(String, Long)] = null
-      sweepPersisted(spark); System.gc()
-      freqs = graft.operators.TextAnalysis.bpeWordFreqsTop(corpus, "text") // warmup
-      // reps recorded into repTimes/repCanaries (not just the spread)
-      // so the end-of-sweep qualification pass covers these two custom
-      // entries like every probe — the driver-side merge loop is the
-      // sweep's single most load-sensitive number (round-12: 1.65x on
-      // a loaded box), exactly what requeueing exists for
-      def oneWcRep(): Unit = {
-        sweepPersisted(spark); System.gc()
-        val t = meteredSec("q279_bpe_train32k_wordcount") {
-          freqs = graft.operators.TextAnalysis.bpeWordFreqsTop(corpus, "text")
-        }
-        // drain own wake (see settledCanaryPair): GC, settle, throwaway
-        sweepPersisted(spark); System.gc(); Thread.sleep(150)
-        execTime(canaryJob(spark)): Unit
-        val c = execTime(canaryJob(spark))
-        repTimes += "q279_bpe_train32k_wordcount" ->
-          (repTimes.getOrElse("q279_bpe_train32k_wordcount", Seq.empty) :+ t)
-        repCanaries += "q279_bpe_train32k_wordcount" ->
-          (repCanaries.getOrElse("q279_bpe_train32k_wordcount", Seq.empty) :+ c)
-      }
-      (1 to 3).foreach(_ => oneWcRep())
-      requeueHooks += "q279_bpe_train32k_wordcount" -> (() => oneWcRep())
-      val wcRuns = repTimes("q279_bpe_train32k_wordcount").sorted
-      spreads += "q279_bpe_train32k_wordcount" -> ((wcRuns.head, wcRuns.last))
-      var merges32k: Seq[(String, String)] = null
-      // driver-only loop: no warmup discard (JIT warms inside the run —
-      // exactly what a one-shot training job pays), 3 timed reps
-      def oneLoopRep(): Unit = {
-        System.gc()
-        val t = meteredSec("q279_bpe_train32k_mergeloop") {
-          merges32k = graft.operators.TextAnalysis
-            .bpeTrainFromFreqs(freqs, 32768)
-        }
-        // drain the loop's driver garbage before the canary (plus the
-        // settle + throwaway of settledCanaryPair)
-        System.gc(); Thread.sleep(150)
-        execTime(canaryJob(spark)): Unit
-        val c = execTime(canaryJob(spark))
-        repTimes += "q279_bpe_train32k_mergeloop" ->
-          (repTimes.getOrElse("q279_bpe_train32k_mergeloop", Seq.empty) :+ t)
-        repCanaries += "q279_bpe_train32k_mergeloop" ->
-          (repCanaries.getOrElse("q279_bpe_train32k_mergeloop", Seq.empty) :+ c)
-      }
-      (1 to 3).foreach(_ => oneLoopRep())
-      requeueHooks += "q279_bpe_train32k_mergeloop" -> (() => oneLoopRep())
-      val loopRuns = repTimes("q279_bpe_train32k_mergeloop").sorted
-      spreads += "q279_bpe_train32k_mergeloop" -> ((loopRuns.head, loopRuns.last))
-      require(merges32k.length == 32768,
-        s"32k probe exhausted at ${merges32k.length} merges")
-      val enc = probe(spark, "q279_bpe_encode32k") {
-        corpus.select(F.explode(graft.operators.TextAnalysis
-            .bpeEncode(F.col("text"), merges32k)).as("token"))
-          .groupBy("token").agg(F.count(F.lit(1)).as("n"))
-          .orderBy(F.col("n").desc, F.col("token").asc).limit(30)
-      }
-      (wcRuns(1), loopRuns(1), enc)
-    }
-    tracer.drain()
-
-    // Avro SYNC-SPLIT probe: the same aggregation over ONE multi-MB OCF
-    // file read whole (one task — what file-granular parallelism gives a
-    // single Kafka-archive shard) vs sync-marker byte-range split (the
-    // default read path). The file write is an untimed per-corpus cost;
-    // at a real multi-GB shard the whole-file number scales with file
-    // size while the split number scales with file size / cores.
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      val avroDir = new java.io.File(newTempDir("graft_bench_avrosplit"))
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").select(
-        F.col("l_returnflag"), F.col("l_linestatus"),
-        F.col("l_quantity").cast("double").as("l_quantity"))
-      val schema = li.schema
-      // one LOCAL file via the driver-streamed iterator (bounded memory)
-      graft.sources.Avro.writeFile(
-        new java.io.File(avroDir, "lineitem.avro"), schema,
-        scala.jdk.CollectionConverters.IteratorHasAsScala(
-          li.toLocalIterator()).asScala, "null")
-      def agg(df: DataFrame) = df.groupBy("l_returnflag")
-        .agg(F.sum("l_quantity").as("sum_qty"))
-      val whole = probe(spark, "q280_avro_1file_whole") {
-        agg(graft.sources.Avro.read(spark, s"$avroDir/lineitem.avro",
-          maxSplitBytes = Long.MaxValue))
-      }
-      val split = probe(spark, "q280_avro_1file_split") {
-        agg(graft.sources.Avro.read(spark, s"$avroDir/lineitem.avro"))
-      }
-      (whole, split)
-    }
-    tracer.drain()
-
-    // Skewed-key x10 probe (round-8 verdict ask #6): a 10x events table
-    // where ONE user owns ~50% of rows — the shape a 100 TB web corpus
-    // presents (one giant domain). The same shuffled equi-join + agg
-    // runs twice: UNSALTED through AQE's skew-join split (thresholds
-    // sized for the probe volume — the 256 MB default targets real
-    // clusters, the probe's hot partition is tens of MB) and SALTED
-    // through Scale.saltedJoin. The dim side is 1501 rows but broadcast
-    // is disabled for both probes — a broadcast join would dissolve the
-    // skew and measure nothing; the salted-vs-AQE delta is the point.
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      val ev = spark.read.parquet(s"$rawSfDir/events.parquet")
-        .select("event_id", "user_id", "value")
-      val rows = ev.count()
-      val skewPath = newTempDir("graft-bench-skew") + "/events_x10.parquet"
-      (0 until 10).map(i => ev.select(
-          (F.col("event_id") + F.lit(i.toLong * 1000000000L)).as("event_id"),
-          F.when(F.col("event_id") % 2 === 0, F.lit(0L))
-            .otherwise(F.col("user_id")).as("user_id"),
-          F.col("value")))
-        .reduce(_.union(_))
-        .write.option("maxRecordsPerFile", (rows * 10 / 32 + 1).toString)
-        .mode("overwrite").parquet(skewPath)
-      // staged to parquet, not localCheckpoint: the probe's between-rep
-      // sweep unpersists every block, which would orphan a checkpoint
-      val dimPath = newTempDir("graft-bench-skewdim") + "/dim.parquet"
-      ev.select(F.col("user_id").as("d_user_id")).distinct()
-        .union(spark.range(1).select(F.lit(0L).as("d_user_id"))).distinct()
-        .withColumn("segment", F.pmod(F.col("d_user_id"), F.lit(10L)))
-        .coalesce(1).write.mode("overwrite").parquet(dimPath)
-      def dim = spark.read.parquet(dimPath)
-      def agg(j: DataFrame) = j.groupBy("segment")
-        .agg(F.round(F.sum("value"), 2).as("v"), F.count(F.lit(1)).as("n"))
-      val saved = Seq(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.autoBroadcastJoinThreshold")
-        .map(k => k -> spark.conf.getOption(k))
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2m")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val un = probe(spark, "q44_x10_skewed_unsalted") {
-        agg(spark.read.parquet(skewPath)
-          .join(dim.hint("merge"), F.col("user_id") === F.col("d_user_id")))
-      }
-      val sa = probe(spark, "q44_x10_skewed_salted") {
-        agg(graft.operators.Scale.saltedJoin(
-          spark.read.parquet(skewPath), dim, "user_id", "d_user_id",
-          F.hash(F.col("event_id")), salts = 16))
-      }
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-      // requeued skew reps must run under the SAME conf (no broadcast,
-      // probe-sized skew thresholds) — wrap the auto-registered hooks
-      // so each extra rep re-pins and restores the session state
-      Seq("q44_x10_skewed_unsalted", "q44_x10_skewed_salted").foreach { n =>
-        val inner = requeueHooks(n)
-        requeueHooks += n -> (() => {
-          val saved2 = Seq(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            "spark.sql.autoBroadcastJoinThreshold")
-            .map(k => k -> spark.conf.getOption(k))
-          spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "2m")
-          spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-          try inner()
-          finally saved2.foreach {
-            case (k, Some(v)) => spark.conf.set(k, v)
-            case (k, None)    => spark.conf.unset(k)
-          }
-        })
-      }
-      (un, sa)
-    }
-    tracer.drain()
-
-    // Footer statistics vs the scan they replace, at the 6M-row probe
-    // volume: SUMMARIZE-style exact aggregates need a full decode; the
-    // footer path reads KB-sized metadata — the delta is what the
-    // at-scale profile question costs with and without the shortcut.
-    val (_, _, footerPrune) = {
-      import org.apache.spark.sql.{functions => F}
-      // prune accounting for the footer-vs-scan pair: the x10 table's
-      // row-group count; the footer path decodes 0 of them (footers are
-      // metadata), the exact-scan twin decodes all of them
-      val x10Groups = {
-        import scala.jdk.CollectionConverters._
-        val conf = spark.sparkContext.hadoopConfiguration
-        Option(new java.io.File(x10Path).listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet")).map { f =>
-            val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                new org.apache.hadoop.fs.Path(f.getPath), conf))
-            try rdr.getRowGroups.asScala.length finally rdr.close()
-          }.sum
-      }
-      val a = probe(spark, "q275_footer_6Mrows") {
-        graft.sources.Tables.parquetFooterStats(spark, x10Path)
-          .filter(F.col("column") === "l_orderkey")
-          .groupBy("column")
-          .agg(F.sum("n_values").as("n_rows"),
-            F.min("min_val").as("min_val"), F.max("max_val").as("max_val"))
-      }
-      val b = probe(spark, "q275_scan_6Mrows") {
-        spark.read.parquet(x10Path)
-          .agg(F.count(F.lit(1)).as("n_rows"),
-            F.min("l_orderkey").as("min_val"),
-            F.max("l_orderkey").as("max_val"))
-      }
-      (a, b, Seq(
-        "q275_footer_6Mrows" -> ((x10Groups, 0)),
-        "q275_scan_6Mrows" -> ((x10Groups, x10Groups))))
-    }
-    tracer.drain()
-
-    // The Versioned publishing layer's read-path overhead, measured:
-    // the identical flagship aggregation over the SAME lineitem rows
-    // committed as a Versioned snapshot (manifest resolution + merged-
-    // schema segment read) vs the staged parquet read the flagship
-    // uses. The delta is the cost of the abstraction every pipeline
-    // deliverable pays at read time — it should be one manifest read +
-    // per-segment footer merges, i.e. ~0 against the scan.
-    locally {
-      val vPath = newTempDir("graft_bench_versioned") + "/lineitem_ds"
-      graft.sources.Versioned.commit(
-        spark.read.parquet(s"$sfDir/lineitem.parquet"), vPath,
-        append = false) // untimed: the publish is a per-corpus cost
-      probe(spark, "q06_versioned_600krows") {
-        SparkEntry.q1Agg(graft.sources.Versioned.read(spark, vPath))
-      }
-    }
-    tracer.drain()
-
-    // MANIFEST-LEVEL DATA SKIPPING (round 11): the 6M-row x10 table
-    // published as 16 l_orderkey-range segments; a one-bucket range
-    // aggregate through Versioned.read (sidecar skipping: 15 of 16
-    // segments never open a footer, never schedule a task) vs the
-    // IDENTICAL files as a raw multi-path parquet read (row-group
-    // pruning only — every footer opened, every file a task). The
-    // planned-segment accounting lands under "prune" as
-    // segments_total/segments_read; at 100 TB the skipped segments
-    // are skipped LISTING + footer I/O + scheduling, which is what a
-    // 100k-segment manifest spends its latency on.
-    val (_, _, segPrune) = {
-      import org.apache.spark.sql.{functions => F}
-      val li = spark.read.parquet(x10Path)
-      val b = li.agg(F.min("l_orderkey"), F.max("l_orderkey"))
-        .collect().head
-      val (mnK, mxK) = (b.getLong(0), b.getLong(1))
-      val nSeg = 16
-      val width = (mxK - mnK) / nSeg + 1
-      val path = stageRangeSegments(spark, li, mnK, width, nSeg,
-        Seq("skip")).head // untimed: per-corpus publish cost
-      val lo = mnK + 5 * width
-      val hi = lo + width - 1
-      def pred = F.col("l_orderkey").between(lo, hi)
-      val segPaths = graft.sources.Versioned.headSegments(spark, path)
-        .map(s => s"$path/data/$s")
-      def agg(df: org.apache.spark.sql.DataFrame) =
-        df.where(pred).agg(F.count("*").as("n"),
-          F.sum("l_quantity").as("qty"))
-      val pruned = probe(spark, "q06_skipping_16segs") {
-        agg(graft.sources.Versioned.read(spark, path))
-      }
-      val raw = probe(spark, "q06_skipping_noskip") {
-        agg(spark.read.parquet(segPaths: _*))
-      }
-      val (tot, kept) = graft.sources.Versioned.pruneCount(spark, path, pred)
-      (pruned, raw, Seq("q06_skipping_16segs" -> ((tot, kept))))
-    }
-    tracer.drain()
-
-    // DML DELETE SHAPE COMPARISON (round 11): a scattered takedown —
-    // 16 single rows, one per segment of a 16-segment 6M-row table —
-    // through copy-on-write (every affected segment REWRITES: the
-    // whole table here, since every segment is hit) vs deletion
-    // vectors (every segment carries byte-identical; the write is 16
-    // position lists). Each rep deletes a FRESH id set, so every rep
-    // does real work; version history accumulates (the lakehouse
-    // behavior being measured).
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      val li = spark.read.parquet(x10Path)
-      val b = li.agg(F.min("l_orderkey"), F.max("l_orderkey"))
-        .collect().head
-      val (mnK, mxK) = (b.getLong(0), b.getLong(1))
-      val nSeg = 16
-      val width = (mxK - mnK) / nSeg + 1
-      val Seq(cowPath, dvPath) = stageRangeSegments(spark, li, mnK,
-        width, nSeg, Seq("dml_cow", "dml_dv"))
-      var rep = 0
-      def ids(): Seq[Long] = {
-        rep += 1 // l_linenumber spreads ids across rows; the exact hit
-        (0 until nSeg).map(i => mnK + i * width + rep)
-      }
-      def pred = F.col("l_orderkey").isInCollection(ids())
-      val cow = probe(spark, "q06_delete_cow_16segs", reps = 3,
-          rewarmOnRequeue = false) {
-        graft.sources.Versioned.deleteWhere(spark, cowPath, pred)
-        spark.range(0).toDF() // probe returns a frame; the work is the delete
-      }
-      val dv = probe(spark, "q06_delete_dv_16segs", reps = 3,
-          rewarmOnRequeue = false) {
-        graft.sources.Versioned.deleteWhereVectored(spark, dvPath, pred)
-        spark.range(0).toDF()
-      }
-      (cow, dv)
-    }
-    tracer.drain()
-
-    // CDC REPLICATION CROSSOVER (round-12 verdict ask #2): keep a
-    // 72M-row 128-segment replica in sync after a 16-key update
-    // confined to ONE source segment — apply the row-level change feed
-    // (cost = a FIXED driver-planning constant of ~4 s + the delta +
-    // the ONE ~560k-row replica segment the MERGE rewrites; 127 of 128
-    // carry by reference) vs re-copying the snapshot (cost ∝ 2× the
-    // whole table). Round 12 measured the pair at 6M rows where
-    // apply's fixed constant swamped the asymptotics and apply LOST
-    // 4.6×; round-13 per-step MERGE wall tracing confirmed the
-    // constant is multi-statement planning + the job-count floor —
-    // FLAT in table size at fixed segment size — while recopy scales
-    // linearly (measured 2.4 s at 18M, 4.3 s at 36M), so the volume
-    // here sits decisively past the crossover. The budget field
-    // carries the records math that extrapolates it (at 100 TB recopy
-    // moves ~130 000× more rows than apply). Each rep applies a FRESH
-    // pre-staged version range, so every rep does real work.
-    val (_, _, replBudget, agedAbJson) = {
-      import org.apache.spark.sql.{functions => F}
-      val li = (0 until 12).map(_ => spark.read.parquet(x10Path))
-        .reduce(_.union(_)) // 72,014,580 rows = 12× the staged x10 table
-      val b = spark.read.parquet(x10Path)
-        .agg(F.min("l_orderkey"), F.max("l_orderkey")).collect().head
-      val (mnK, mxK) = (b.getLong(0), b.getLong(1))
-      val nSeg = 128
-      val width = (mxK - mnK) / nSeg + 1
-      // two-pass staging via the shared bucketed helper — 3 table
-      // passes total instead of 256 filtered full scans
-      val Seq(srcPath, repPath) = stageRangeSegments(spark, li, mnK,
-        width, nSeg, Seq("repl_src", "repl_rep"))
-      // real keys from segment 0 (l_orderkey is sparse — synthesized
-      // ids could match nothing and fake a free apply), bounded collect
-      val seg0Keys = spark.read.parquet(x10Path)
-        .filter(F.col("l_orderkey") < mnK + width)
-        .select("l_orderkey").distinct().orderBy("l_orderkey")
-        .limit(400).collect().map(_.getLong(0))
-      require(seg0Keys.nonEmpty, "replication probe: segment 0 is empty")
-      val eng = graft.Engine(spark)
-      // pre-stage one 16-key single-segment source update per probe
-      // EXECUTION (warmup + reps + requeue headroom), so the timed body
-      // is ONLY the replication consumer: feed read + net-effect MERGE.
-      // Key picks wrap modulo the available set: a small-SF smoke run
-      // has fewer distinct keys in segment 0 than 9 disjoint 16-key
-      // sets need, and re-updating a key in a LATER version is still
-      // real work for every apply (the feed always carries fresh rows)
-      val nExec = 15 // 1 warmup + 3 reps + 1 aged-A/B + 6 fork + requeue headroom
-      val ranges = (1 to nExec).map { r =>
-        val ids = (0 until 16)
-          .map(j => seg0Keys((r * 16 + j) % seg0Keys.length)).distinct
-        val hv0 = graft.sources.Versioned.versions(spark, srcPath).last
-        eng.sql(s"UPDATE '$srcPath' SET l_tax = l_tax + 0.001 WHERE " +
-          s"l_orderkey IN (${ids.mkString(", ")})"): Unit
-        (hv0, graft.sources.Versioned.versions(spark, srcPath).last)
-      }
-      // WRITEBACK SETTLE (round-13 verdict ask #4): the two 72M-row
-      // stagings plus 8 UPDATE statements leave gigabytes of dirty
-      // pages flushing asynchronously, and round 13's apply reps ran
-      // DURING that flush (rep canary ratios 4.7-5.9× while the
-      // later recopy's sat at 1.0-1.1×) — the pair was measured under
-      // unequal conditions. Force the flush out (sync), then wait for
-      // both canaries to read calm, so the apply reps start on the
-      // same quiet box the recopy reps get.
-      try new ProcessBuilder("sync").start().waitFor()
-      catch { case _: Throwable => () }
-      waitForCalm(spark): Unit
-      var rep = 0
-      def applyBody(): Unit = {
-        // each execution applies a DISTINCT staged version range: the
-        // feed's MERGE touches ONE replica segment, 127 carry
-        val (from, to) = ranges(rep % nExec); rep += 1
-        val feed = graft.sources.Versioned.changeFeed(
-          spark, srcPath, from, Some(to))
-        graft.streaming.Streams.applyChanges(spark, repPath, feed,
-          Seq("l_orderkey", "l_linenumber"))
-      }
-      // rewarmOnRequeue = true SINCE ROUND 16 (apply only — recopy
-      // stays false): a requeued apply rep ran cold-cache after the
-      // sweep streamed GBs (published 3.8-4.5s = ReplicaTrace's
-      // drop_caches number 4.34, not the warm 2.35 the in-sweep reps
-      // measure), while the io canary read warm and qualified it —
-      // the exact round-13 bimodality, recurring here because this
-      // stateful probe opted out of the rewarm. Apply's rewarm is
-      // safe where recopy's is not: it consumes one pre-staged range
-      // (they wrap) and writes ONE ~20 MB segment — no writeback
-      // storm — and restores the feed+segment read warmth the timed
-      // rep needs for cache parity with its in-sweep siblings.
-      val apply = probe(spark, "q06_replica72M_apply_delta", reps = 3,
-          rewarmOnRequeue = true) {
-        applyBody()
-        spark.range(0).toDF()
-      }
-      // AGED-vs-FRESH A/B (round-15 verdict ask #1): the same apply
-      // body once more in THIS driver — which has planned ~90 probes —
-      // then four disjoint pre-staged ranges through a freshly forked
-      // JVM (graft.trace.FreshApply: same flags, same classpath, same
-      // staged datasets, same box, same minute; 2 warmups for JIT
-      // parity, 2 timed). The settled canary pair brackets the window,
-      // so the artifact can now SHOW aged-vs-fresh instead of
-      // attributing it by elimination: aged_sec >> fresh reps with a
-      // calm canary = driver state, named; aged ≈ fresh = the
-      // inflation was environmental and the attribution retires.
-      // aged_gc_ms/jit_ms vs the fork's per-rep deltas split the gap
-      // into measurable components (heap aging / recompile storms) vs
-      // the remainder (Catalyst/listener state).
-      val agedAb = {
-        sweepPersisted(spark); System.gc()
-        val (g0, j0) = (gcTotalMs, jitTotalMs)
-        val (io0, st0) = procStatJiffies()
-        val t0 = System.nanoTime()
-        applyBody()
-        val agedSec = (System.nanoTime() - t0) / 1e9
-        val (agedGc, agedJit) = (gcTotalMs - g0, jitTotalMs - j0)
-        val (io1, st1) = procStatJiffies()
-        val (agedIo, agedSteal) = ((io1 - io0) * 10, (st1 - st0) * 10)
-        val (c, io) = settledCanaryPair(spark)
-        // 4 fork warmups, not 2: the round-16 first run's fork reps
-        // carried 6.6-8.5 s of background C2 compilation (the MERGE
-        // path codegens fresh classes every statement) and published
-        // JIT-contaminated 4.8-5.1 s "fresh" numbers — matching the
-        // aged side but proving nothing. jit_ms per fork rep shows
-        // convergence in the artifact.
-        val forkRanges = (0 until 6).map { _ =>
-          val r = ranges(rep % nExec); rep += 1; r
-        }
-        val (fj, status) = forkFreshApply(srcPath, repPath, forkRanges)
-        // STEAL GATE (round-17 verdict ask #8): the A/B's verdict is a
-        // comparison of two measurements on the same box — if EITHER
-        // side ran stolen past the same per-rep bar every sweep rep is
-        // held to, the aged-vs-fresh conclusion is unreadable and the
-        // status must say so instead of "ok" (round 17's A/B carried
-        // 18.6 s/10.7 s of fresh-side steal and published ok).
-        val cores = Runtime.getRuntime.availableProcessors()
-        val agedStealFrac =
-          if (agedSec > 0) agedSteal / (agedSec * 1000.0 * cores) else 0.0
-        val freshStealFracMax = fj.map { j =>
-          def arr(field: String): Seq[Double] =
-            ("\"" + field + "\":\\[([^\\]]*)\\]").r
-              .findFirstMatchIn(j).map(_.group(1).split(",")
-                .filter(_.nonEmpty).map(_.trim.toDouble).toSeq)
-              .getOrElse(Seq.empty)
-          val reps = arr("reps"); val steals = arr("steal_ms")
-          reps.zip(steals).collect {
-            case (r, st) if r > 0 => st / (r * 1000.0 * cores)
-          }.foldLeft(0.0)(math.max)
-        }.getOrElse(0.0)
-        val gatedStatus =
-          if (status == "ok" &&
-              (agedStealFrac > BenchPolicy.StealFracCap ||
-               freshStealFracMax > BenchPolicy.StealFracCap))
-            "steal-disqualified"
-          else status
-        s"""{"aged_sec":${f"$agedSec%.4f"},"aged_gc_ms":$agedGc,"aged_jit_ms":$agedJit,"aged_iowait_ms":$agedIo,"aged_steal_ms":$agedSteal,"aged_steal_frac":${f"$agedStealFrac%.4f"},"fresh_steal_frac_max":${f"$freshStealFracMax%.4f"},"window_canary_sec":${f"$c%.4f"},"window_io_canary_sec":${f"$io%.4f"},"status":"$gatedStatus","fresh":${fj.getOrElse("null")}}"""
-      }
-      val copy = probe(spark, "q06_replica72M_recopy", reps = 3,
-          rewarmOnRequeue = false) {
-        graft.sources.Versioned.commit(
-          graft.sources.Versioned.read(spark, srcPath),
-          newTempDir("graft_bench_repl_copy") + "/ds"): Unit
-        spark.range(0).toDF()
-      }
-      // records budget, from metadata (footer row counts — no scan):
-      // apply reads the feed (≤ 16 keys × copies, ×2 for pre/post) +
-      // the ONE touched replica segment (match-join scan bounds-pruned
-      // to it — q313 pins that plan) and REWRITES that segment; recopy
-      // reads and writes the whole table. The ratio is the crossover's
-      // scale story: it grows linearly with table size at fixed delta.
-      val tableRows = graft.sources.Versioned.rowCount(spark, srcPath)
-      val segRows = tableRows / nSeg // range-uniform staging
-      val feedRows = graft.sources.Versioned.changeFeed(
-        spark, srcPath, ranges.last._1, Some(ranges.last._2)).count()
-      val budget = Seq(
-        "q06_replica72M_apply_delta" ->
-          s"""{"records_read":${segRows + feedRows},"records_written":$segRows,"feed_rows":$feedRows,"segments_total":$nSeg,"segments_rewritten":1,"table_rows":$tableRows}""",
-        "q06_replica72M_recopy" ->
-          s"""{"records_read":$tableRows,"records_written":$tableRows,"segments_total":$nSeg,"segments_rewritten":$nSeg,"table_rows":$tableRows}""")
-      (apply, copy, budget, agedAb)
-    }
-    tracer.drain()
-
-    // the LSH family's dominant stages ranged 0.35-1.50s across one
-    // process in round 5 (bench_stages.json 524/535/546) — a median of 3
-    // manufactured a phantom 61% regression there; these get 5 reps
-    val highVariance = Set("q29_minhash_pairs", "q30_simhash_pairs",
-      "q51_dedup_clusters", "q59_pipeline_keep")
-    val stageJson = new StringBuilder("{")
-    headline.zipWithIndex.foreach { case (name, i) =>
-      val fn = qs(name)
-      // medians, not single runs: JVM/scheduler noise at sub-second scale
-      // is ±0.15s and single samples of fixed queries vary up to 5x
-      // q59's round-7 spread ([0.945, 1.822], width 0.88s) exceeded the
-      // judge's 0.5s target; an isolated 8-rep run measured [1.148,
-      // 1.296] on an idle box, so the width is inter-query machine
-      // state, not the plan — extra reps make the median robust to it
-      val reps =
-        if (name == "q59_pipeline_keep") 7
-        else if (name == "q06_q1_flagship" || highVariance(name)) 5 else 3
-      probe(spark, name, reps, afterWarmup = () => {
-        tracer.drain(): Unit // attribute stages to the timed runs only
-      })(fn(spark, sfDir)): Unit
-      val stages = tracer.drain()
-      if (i > 0) stageJson.append(",")
-      stageJson.append(s""""$name":[${stages.map(_.toJson).mkString(",")}]""")
-    }
-    stageJson.append("}")
-
-    // q113's gated entry deliberately times the bucketed LAYOUT WRITE
-    // inside the measured region (the honest one-shot cost) — which is
-    // also why its isolated band ran 0.697–1.152 (round-16 verdict ask
-    // #7: two table writes dominate and jitter the body). This twin
-    // follows the staging discipline every other probe uses: both
-    // bucketed tables staged UNTIMED once, the timed body is the
-    // exchange-free agg+join alone — the RECURRING cost the layout
-    // exists to buy, and the one that scales with query count at 100 TB.
-    locally {
-      import org.apache.spark.sql.{functions => F}
-      val staging = newTempDir("graft_bucketed_joinonly")
-      graft.operators.Scale.writeBucketed(
-        spark.read.parquet(s"$sfDir/orders.parquet")
-          .select("o_orderkey", "o_custkey", "o_totalprice"),
-        "graft_orders_bjo", s"$staging/orders_b", "o_custkey", 8)
-      graft.operators.Scale.writeBucketed(
-        spark.read.parquet(s"$sfDir/customer.parquet")
-          .select("c_custkey", "c_mktsegment"),
-        "graft_customer_bjo", s"$staging/customer_b", "c_custkey", 8)
-      probe(spark, "q113_bucketed_join_only") {
-        spark.table("graft_orders_bjo")
-          .groupBy("o_custkey")
-          .agg(F.round(F.sum("o_totalprice"), 4).as("spend"),
-               F.count(F.lit(1)).as("n_orders"))
-          .filter(F.col("spend") > 200000)
-          .join(spark.table("graft_customer_bjo"),
-            F.col("o_custkey") === F.col("c_custkey"))
-          .select("o_custkey", "c_mktsegment", "spend", "n_orders")
-      }: Unit
-      tracer.drain(): Unit
-    }
-
-    val (canaryAfter, ioCanaryAfter) = canaryTime(spark)
-
-    // ---- the pre-run artifact, read BEFORE this run overwrites it:
-    // per-query medians for the regressions block, and the previous
-    // sweep's canary floors as the qualification hints (the defense
-    // for a box loaded end-to-end, where today's own canary minimum
-    // never dips to idle and would inflate the bar until everything
-    // "qualifies") ----
-    // label, medians, per-entry qualified counts, per-entry stale-since
-    // (entries the PRIOR artifact itself published as stale fallbacks,
-    // with the label of the sweep that actually measured them), and
-    // the prior artifact's generated stamp — the last three feed the
-    // round-17 stale-fallback publication (see SweepPublication
-    // .staleFallback)
-    // round-18 additions ride alongside: the prior sweep's whole-sweep
-    // steal (the calmer-prior policy's trust signal), per-entry stale
-    // rounds counts, and the prior calmer_prior block (for chain
-    // inheritance) — see SweepPublication.calmerPrior
-    case class PrevArtifact(
-        label: String, medians: Map[String, Double],
-        qualified: Map[String, Int], staleSince: Map[String, String],
-        generated: String, sweepStealSec: Option[Double] = None,
-        staleRounds: Map[String, Int] = Map.empty,
-        calmerPrior: Map[String, (String, Int)] = Map.empty)
-    // CORE-COUNT KEYING (round-19, the round-18 verdict's #1b ask): a
-    // sweep's floors, stale/calmer-prior chains and regression baseline
-    // may only come from a prior sweep AT THE SAME BENCH CORE COUNT —
-    // round 18's 8-core scaling sweep inherited the 32-core artifact's
-    // canary floor (a 32-task canary legitimately runs ~4x slower on
-    // local[8], so qualification failed everywhere) and then
-    // republished 32-core values as the 8-core run's published numbers
-    // (83/103 stale). The prior lookup now prefers bench_c<cpus>.json
-    // (written per core count below), falls back to bench.json, and in
-    // EITHER case trusts the artifact only when its recorded bench_cpus
-    // matches this run's — env.cores is availableProcessors() and
-    // cannot distinguish local[8] from local[32] on a 32-CPU box.
-    val prevBench: PrevArtifact = {
-      val keyed = new java.io.File(s"bench_c$cpus.json")
-      val f = if (keyed.exists()) keyed else new java.io.File("bench.json")
-      if (!f.exists()) PrevArtifact("", Map.empty, Map.empty, Map.empty, "")
-      else {
-        val txt = Files.readString(f.toPath)
-        val prevCpus = """"bench_cpus":([0-9]+)""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-        if (!prevCpus.contains(cpus)) {
-          // missing field (pre-round-19 artifact) or a different core
-          // count: the artifact is not this configuration's prior —
-          // no floor hints, no fallback chains, no regression baseline;
-          // this sweep publishes what it measures
-          PrevArtifact(
-            s"${f.getName}(pre-run, bench_cpus=${prevCpus.getOrElse("absent")} != $cpus — prior ignored)",
-            Map.empty, Map.empty, Map.empty, "")
-        } else {
-        def braceBlock(field: String): String = {
-          val start = txt.indexOf(s""""$field":{""")
-          if (start < 0) return ""
-          // balanced-brace walk, not indexOf("}"): the stale block
-          // nests objects
-          var i = txt.indexOf('{', start)
-          var depth = 0
-          val from = i
-          while (i < txt.length && (depth > 0 || i == from)) {
-            if (txt.charAt(i) == '{') depth += 1
-            else if (txt.charAt(i) == '}') depth -= 1
-            i += 1
-          }
-          txt.substring(from, i)
-        }
-        val qs = """"(q[A-Za-z0-9_]+)":([0-9]+(?:\.[0-9]+)?)""".r
-          .findAllMatchIn(braceBlock("queries"))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val qual = """"(q[A-Za-z0-9_]+)":([0-9]+)""".r
-          .findAllMatchIn(braceBlock("qualified_reps"))
-          .map(m => m.group(1) -> m.group(2).toInt).toMap
-        val staleSince =
-          """"(q[A-Za-z0-9_]+)":\{[^}]*"since":"([^"]*)"""".r
-            .findAllMatchIn(braceBlock("stale"))
-            .map(m => m.group(1) -> m.group(2)).toMap
-        val generated = """"generated":"([^"]*)"""".r
-          .findFirstMatchIn(txt).map(_.group(1))
-          .getOrElse("bench.json(pre-run)")
-        floorHintC = """"canary_floor_sec":([0-9]+(?:\.[0-9]+)?)""".r
-          .findFirstMatchIn(txt).map(_.group(1).toDouble)
-        floorHintIo = """"io_canary_floor_sec":([0-9]+(?:\.[0-9]+)?)""".r
-          .findFirstMatchIn(txt).map(_.group(1).toDouble)
-        val prevSteal = """"steal_sec":(-?[0-9]+(?:\.[0-9]+)?)""".r
-          .findFirstMatchIn(braceBlock("box_sweep_delta"))
-          .map(_.group(1).toDouble)
-        val staleRounds =
-          """"(q[A-Za-z0-9_]+)":\{[^}]*"rounds":([0-9]+)""".r
-            .findAllMatchIn(braceBlock("stale"))
-            .map(m => m.group(1) -> m.group(2).toInt).toMap
-        val calmerPrior =
-          """"(q[A-Za-z0-9_]+)":\{[^}]*"since":"([^"]*)"[^}]*"rounds":([0-9]+)""".r
-            .findAllMatchIn(braceBlock("calmer_prior"))
-            .map(m => m.group(1) -> ((m.group(2), m.group(3).toInt)))
-            .toMap
-        PrevArtifact(s"${f.getName}(pre-run, ${qs.size} queries, bench_cpus=$cpus)",
-          qs, qual, staleSince, generated, prevSteal, staleRounds,
-          calmerPrior)
-        }
-      }
-    }
-
-    // ---- END-OF-SWEEP QUALIFICATION PASS (round-11 verdict ask #1,
-    // wired in round 13, policy fixed in round 14): a rep counts
-    // toward the published median only when BOTH its back-to-back
-    // canaries (compute + I/O) ran within their ratios of the floors
-    // of the phase the rep ran in — requeued reps are judged against
-    // the requeue window's OWN floors, never only the whole-sweep
-    // floor. Every query short of 3 qualified reps gets requeued —
-    // wait for a calm window, RE-WARM, run one more rep through its
-    // registered hook — under a global wall budget; if the box never
-    // goes calm the pass aborts (further polling is waste) and the
-    // artifact says so. The published medians below switch to
-    // qualified-reps-only at >= 3 qualified reps (BenchPolicy
-    // .MinQualifiedReps), all-reps otherwise — with qualified_reps
-    // carrying the count per query, so the artifact never lies about
-    // what the median is. ----
-    val requeuePassT0 = System.nanoTime()
-    var requeuedTotal = 0
-    var calmReached = true
-    requeuePhase = true
-    repTimes.foreach { case (n, ts) => preRequeueReps += n -> ts.length }
-    locally {
-      val budgetNs = 300L * 1000000000L // global requeue wall budget
-      // the BASELINE-gate pair first (the judge reads value and the
-      // matched-volume x10 number against BASELINE.md — they must not
-      // lose the requeue budget to a slow probe), then the LSH scaling
-      // family (round-14 ask #4: the dedup-at-volume story is the
-      // north-star workload and its four entries published 0-2
-      // qualified reps when they only competed slowest-first for the
-      // tail of the budget), then slowest-first: calm windows are
-      // scarce on a loaded box, so they go to the entries where an
-      // unqualified median distorts the artifact most, not to
-      // sub-floor queries
-      // round-15 ask #4's two thin entries get standing priority:
-      // q112_x10 published 2 qualified reps (its LSH siblings reached
-      // 3-5), q98_inverted_index published on 1 — both now run before
-      // the slowest-first tail AND get a higher per-entry attempt cap
-      // (the cap, not the priority order, was what starved q112 last
-      // round: it was already prioritized and still fell short)
-      // q113_bucketed_join_only rides the priority list since round 18
-      // (verdict ask #5): it is the flagship's diagnostic twin — a
-      // wide band there (45% on round 17's dirty sweep vs the <=15%
-      // ask) makes the join-cost attribution unreadable, so its reps
-      // deserve calm windows as much as the headline pair's
-      val priority = Seq("q06_q1_flagship", "q06_x10_6Mrows",
-        "q113_bucketed_join_only",
-        "q29_x10_50kdocs", "q51_x10_50kdocs", "q112_x10_50kdocs",
-        "q129_x10_50kdocs", "q98_inverted_index")
-      // round-17 (verdict ask #4): entries the PRIOR artifact published
-      // thin (<3 qualified reps there) drained no calm-window budget in
-      // round 16 and stayed thin two rounds running — they requeue
-      // right after the standing priorities, before the slowest-first
-      // tail, so a backlog cannot roll over a third time
-      val prevThin = repTimes.keys.toSeq
-        .filter(n => !priority.contains(n) &&
-          prevBench.qualified.get(n).exists(_ < BenchPolicy.MinQualifiedReps))
-        .sortBy(n => prevBench.qualified(n))
-      val names = priority.filter(repTimes.contains) ++ prevThin ++
-        repTimes.keys.toSeq
-          .filterNot(n => priority.contains(n) || prevThin.contains(n))
-          .sortBy(n => -medOf(repTimes(n)))
-      var stop = false
-      var failedCalms = 0
-      for (name <- names if !stop) {
-        var extra = 0
-        val extraCap = if (priority.contains(name)) 7 else 4
-        // the BASELINE-gate pair anchors the judge's cross-round
-        // compare — it requeues to one rep PAST the qualification bar,
-        // so a single borderline canary cannot leave the headline
-        // number resting on the minimum evidence (round-16 ask #1's
-        // ">=4 steal-clean reps" done-bar)
-        val target =
-          if (name == "q06_q1_flagship" || name == "q06_x10_6Mrows")
-            BenchPolicy.MinQualifiedReps + 1
-          else BenchPolicy.MinQualifiedReps
-        var skipName = false
-        while (!stop && !skipName &&
-               requeueHooks.contains(name) && extra < extraCap &&
-               qualifiedOf(name).length < target &&
-               System.nanoTime() - requeuePassT0 < budgetNs) {
-          if (!waitForCalm(spark)) {
-            // the box would not go quiet for this entry — record it,
-            // move on (an intermittently-busy box may calm later);
-            // three strikes ends the pass, further polling is waste
-            calmReached = false
-            failedCalms += 1
-            skipName = true
-            if (failedCalms >= 3) stop = true
-          } else {
-            requeueHooks(name)()
-            extra += 1
-            requeuedTotal += 1
-          }
-        }
-        if (System.nanoTime() - requeuePassT0 >= budgetNs) stop = true
-      }
-    }
-    tracer.drain(): Unit // requeued reps' stages are not re-attributed
-    val requeueWallSec = (System.nanoTime() - requeuePassT0) / 1e9
-    // effective floors at publication time (per phase; requeue floors
-    // are min'd against sweep floors so a dirty window can only
-    // tighten the bar)
-    val (fSweepC, fSweepIo) = (floorSweepC, floorSweepIo)
-    val (fReqC, fReqIo) = (floorRequeueC, floorRequeueIo)
-    val floorUsed = math.min(fSweepC, fReqC)
-    val ioFloorUsed = math.min(fSweepIo, fReqIo)
-
-    // recompute every entry's published numbers over the final rep sets
-    // (requeued reps included) through the EXTRACTED publication wiring
-    // (SweepPublication — round-14 verdict ask #6: the same path a
-    // recorded fixture replays in BenchPolicySpec): median over
-    // qualified reps at >= 3 of them (BenchPolicy.MinQualifiedReps —
-    // round-13 verdict #1: 1-2 lucky-canary reps must not override 11
-    // honest ones), over all reps otherwise; spreads stay all-reps (the
-    // noise-adjudication raw material)
-    val entryOrder = repTimes.keys.toSeq
-    // whole-sweep /proc/stat delta, measured ONCE here so the
-    // publication policy and the env fingerprint carry the same number
-    val (sweepIowaitSec, sweepStealSec) = {
-      val (io1, st1) = procStatJiffies()
-      ((io1 - iowait0) / 100, (st1 - steal0) / 100.0)
-    }
-    val pub = SweepPublication(
-      entryOrder, repTimes.toMap, repCanaries.toMap, repIoCanaries.toMap,
-      preRequeueReps.toMap, fSweepC, fReqC, fSweepIo, fReqIo,
-      prevBench.medians,
-      SweepPublication.loadIsolatedLedger("bench_isolated.json"),
-      repStealMs.toMap, Runtime.getRuntime.availableProcessors(),
-      prevQualified = prevBench.qualified,
-      prevStaleSince = prevBench.staleSince,
-      prevGenerated = prevBench.generated,
-      curSweepStealSec = sweepStealSec,
-      prevSweepStealSec = prevBench.sweepStealSec,
-      prevStaleRounds = prevBench.staleRounds,
-      prevCalmerPrior = prevBench.calmerPrior)
-    def finalMedian(name: String): Double = pub.publishedValue(name)
-    entryOrder.foreach { n => spreads += n -> pub.spreadOf(n) }
-
-    val loadAfter = loadAvg()
-    val tmpFsType =
-      try Files.getFileStore(Paths.get("/tmp")).`type`()
-      catch { case _: Throwable => "" }
-
-    val flagship = finalMedian("q06_q1_flagship")
-    // every timed entry, in execution order, at its FINAL median
-    // (qualified reps when any exist — see the qualification pass)
-    val qjson = pub.qjson
-    // how many reps qualified per entry: 0 = the published median is
-    // over ALL reps (none ran on a quiet box) — the artifact's own
-    // "do not trust this number for cross-round compares" flag
-    val qualifiedJson = pub.qualifiedJson
-    // entries where the qualified median (>= 3 reps) and the all-reps
-    // median disagree by >1.2x — BOTH are published so no judge has to
-    // reverse-engineer which reps produced the headline number
-    // (round-13 verdict ask #1's "publish both when they disagree")
-    val divergenceJson = pub.divergenceJson
-    // per-query [min, max] across the timed reps: lets a judge tell a
-    // real regression (tight spread, moved median) from machine noise
-    // (spread swallowing the delta) without re-running
-    val spreadJson = spreads
-      .map { case (k, (lo, hi)) => s""""$k":[${f"$lo%.4f"},${f"$hi%.4f"}]""" }
-      .mkString("{", ",", "}")
-    // per-rep canary attribution (round-10 verdict ask #1): every timed
-    // rep ran a fixed-cost 32-task compute canary AND a fixed ~100 MB
-    // I/O canary back-to-back; each ratio is the EXACT quantity its
-    // qualification bar compares — compute against the entry's own
-    // canary floor (>QualRatio = that rep disqualified; the entry-vs-
-    // global cap is a separate, per-entry condition), I/O against the
-    // global phase floor (>IoQualRatio = disqualified)
-    val canaryFloor = floorUsed
-    val repCanaryJson = pub.repCanaryJson
-    val repIoCanaryJson = pub.repIoCanaryJson
-    // the entry-vs-global cap condition, per entry: the WORST over the
-    // phases present of (phase entry floor / that phase's global
-    // floor) — the exact quantity repQualifies caps, so this field and
-    // qualified_reps can never contradict each other.
-    // >EntryFloorCapRatio means that phase of the entry ran in a
-    // loaded patch and published 0 qualified reps from it
-    val entryFloorRatioJson = pub.entryFloorRatioJson
-    // machine-readable prune accounting (round-10 verdict ask #5)
-    val pruneJson = ((pruneStats ++ footerPrune)
-      .map { case (k, (tot, hit)) =>
-        s""""$k":{"groups_total":$tot,"groups_read":$hit}""" } ++
-      // manifest-level skipping: whole SEGMENTS planned away before
-      // any footer I/O (the layer above row groups)
-      segPrune.map { case (k, (tot, hit)) =>
-        s""""$k":{"segments_total":$tot,"segments_read":$hit}""" })
-      .mkString("{", ",", "}")
-    // records budget for the replication crossover pair (round-12
-    // verdict ask #2's "records_read budget in the artifact")
-    val budgetJson = replBudget
-      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    // cross-round regression attribution IN the artifact (round-10
-    // verdict ask #1's "done" bar): parse the previous round's
-    // BENCH_r{N}.json from the working directory and, for every common
-    // entry regressed >1.2x (and >50 ms absolute — the driver floor
-    // makes tiny ratios meaningless), name a cause mechanically:
-    //   noise        — this sweep's min overlaps the prior median, so
-    //                  the median moved inside the spread;
-    //   machine-load — a rep-interleaved canary exceeded 1.25x the
-    //                  sweep floor while this query's reps ran;
-    //   unattributed — neither; re-measure isolated (BenchOne) and
-    //                  suspect the plan.
-    // the previous sweep's per-query medians come from the bench.json
-    // this run is ABOUT to overwrite (read once, up top, before the
-    // qualification pass — prevBench also carried the floor hint);
-    // the canary series is excluded (machine state, not a query)
-    // machine-load evidence mirrors the qualification bar (entry-local
-    // per-phase canary excursion + the loaded-patch cap), adjudication
-    // consumes the qualification (round-13 verdict #2), and the
-    // quiet-box isolated ledger refines otherwise-unattributed entries
-    // (round-14 ask #2) — all inside SweepPublication.regressions, the
-    // same wiring the fixture spec replays
-    val regressionsJson = pub.regressionsJson
-    // environment fingerprint + fixed-cost canary: a drifted canary or
-    // load average attributes a fleet-wide delta to machine state.
-    // `qualification` records how the published medians were taken:
-    // ratio = the canary bar, floor/hint the bar's base, calm_reached
-    // false = the box never went quiet during the requeue pass (its
-    // budget then went unspent and unqualified medians are flagged by
-    // qualified_reps 0 per query).
-    val qualJson =
-      s"""{"ratio":${BenchPolicy.QualRatio},"io_ratio":${BenchPolicy.IoQualRatio},"entry_floor_cap":${BenchPolicy.EntryFloorCapRatio},"min_qualified_reps":${BenchPolicy.MinQualifiedReps},"floor_sec":${f"$floorUsed%.4f"},"floor_sweep_sec":${f"$fSweepC%.4f"},"floor_requeue_sec":${f"$fReqC%.4f"},"io_floor_sec":${f"$ioFloorUsed%.4f"},"io_floor_sweep_sec":${f"$fSweepIo%.4f"},"io_floor_requeue_sec":${f"$fReqIo%.4f"},"floor_hint_sec":${floorHintC.fold("null")(h => f"$h%.4f")},"io_floor_hint_sec":${floorHintIo.fold("null")(h => f"$h%.4f")},"calm_reached":$calmReached,"requeued_reps":$requeuedTotal,"requeue_wall_sec":${f"$requeueWallSec%.1f"}}"""
-    // JIT/codegen JVM-state fingerprint (round-14 ask #3's residual):
-    // ~100 codegen'd queries fill the code cache late in the sweep and
-    // late-arriving paths (the MERGE apply is probe ~90) then run
-    // flush-throttled — a uniform inflation a per-rep canary CANNOT
-    // see (the canary's own hot path compiled long ago). Occupancy in
-    // the artifact makes the condition attributable after the fact.
-    val jitJson = {
-      import scala.jdk.CollectionConverters._
-      val pools = java.lang.management.ManagementFactory
-        .getMemoryPoolMXBeans.asScala
-      def mb(name: String): Long = pools.filter(_.getName.contains(name))
-        .map(p => p.getUsage.getUsed / (1024 * 1024)).sum
-      val max = pools.filter(_.getName.startsWith("CodeHeap"))
-        .map(p => p.getUsage.getMax / (1024 * 1024)).sum
-      s""""code_cache_used_mb":${mb("CodeHeap")},"code_cache_max_mb":$max,"metaspace_used_mb":${mb("Metaspace")}"""
-    }
-    val envJson =
-      s"""{"cores":${Runtime.getRuntime.availableProcessors()},"bench_cpus":$cpus,"load_before":"$loadBefore","load_after":"$loadAfter","tmp_fs":"$tmpFsType",$jitJson,"jvm_start":$jvmStartJson,"jvm_end":${jvmAgeJson()},"box_sweep_delta":{"iowait_sec":$sweepIowaitSec,"steal_sec":${sweepStealSec.toLong}},"canary_32task_sec":[${f"$canaryBefore%.4f"},${f"$canaryAfter%.4f"}],"io_canary_100mb_sec":[${f"$ioCanaryBefore%.4f"},${f"$ioCanaryAfter%.4f"}],"canary_floor_sec":${f"$canaryFloor%.4f"},"io_canary_floor_sec":${f"$ioFloorUsed%.4f"},"qualification":$qualJson,"prev_bench":"${prevBench.label}"}"""
-    // per-probe explanations as a STRUCTURED map (round-12 verdict ask
-    // #7): the old single `notes` blob grew past the driver wrapper's
-    // 2000-char stdout tail and its most important sentences got
-    // truncated away; a keyed map survives whole in bench.json and the
-    // short `notes` below carries only the reading instructions.
-    // Values must stay double-quote-free (they are interpolated raw).
-    val probeNotes: Seq[(String, String)] = Seq(
-      "qualification" -> ("a rep counts toward the published median " +
-        "only when BOTH its back-to-back canaries ran within their " +
-        "bars. ROUND 15: each pair is now measured SETTLED - the " +
-        "rep's own wake drained first (unpersist + GC + an untimed " +
-        "warm read of the io-canary file) - because on an idle box " +
-        "every GB-streaming probe self-disqualified: its footprint " +
-        "evicted the canary file (io 1.8-4.7x) and its un-collected " +
-        "garbage held the entry canary floor over the loaded-patch " +
-        "cap (entry_floor_ratio 2.4-6.1), so the LSH x10 family could " +
-        "never reach 3 qualified reps however quiet the machine; " +
-        "external load and disk contention persist through the ~0.3s " +
-        "drain and still disqualify. Bars: " +
-        "the 32-task compute canary within ratio x its ENTRY's " +
-        "own canary floor - the canary wall is task-scheduling cost " +
-        "that JIT-warms across the sweep (CanarySettle measured 0.13s " +
-        "run 1, 0.05s by run 60, 0.03s fully warm), so a global-" +
-        "minimum floor is an end-of-sweep state early reps cannot " +
-        "reach and judging against it zeroed 75/102 entries on an " +
-        "idle box - with the entry floor itself capped at " +
-        "entry_floor_cap x the global phase floor (entry_floor_ratio " +
-        "per entry; past the cap the whole entry ran in a loaded " +
-        "patch and publishes 0 qualified reps) AND " +
-        "the ~100MB I/O canary within io_ratio x the GLOBAL io_floor " +
-        "(the compute canary is blind to page-cache eviction and disk " +
-        "contention - round 13 qualified cold-cache reps through it; " +
-        "the I/O bar stays global because an entry-local I/O floor " +
-        "would mask entry-long eviction, the exact condition it " +
-        "exists to catch); AND (round 16) the rep's own /proc/stat " +
-        "STEAL share under 5% of wall x cores - the direct bar for " +
-        "the hypervisor throttling both canaries can under-read " +
-        "(see aged_ab; stolen replica reps measured 10-17% with " +
-        "near-calm compute canaries, calm reps <=0.5%); " +
-        "global floors are the 5th-smallest observation of the PHASE " +
-        "the rep ran in (sweep vs requeue window) merged with the " +
-        "prior artifact's floor, requeue floors min'd against sweep " +
-        "floors so a dirty window can only tighten the bar. The " +
-        "published " +
-        "median switches to qualified-reps-only at >= " +
-        "min_qualified_reps (never on 1-2 lucky reps - the round-13 " +
-        "phantom-regression bug), with even-length medians averaging " +
-        "the two middles; median_divergence carries BOTH medians " +
-        "where they disagree >1.2x. Queries short of 3 qualified " +
-        "reps were requeued in calm windows under a global budget, " +
-        "headline pair first then slowest-first, each requeued rep " +
-        "RE-WARMED untimed first for cache parity with in-sweep reps; " +
-        "qualified_reps carries the per-query count, 0 = median is " +
-        "over all reps and should not anchor cross-round compares - " +
-        "on a never-quiet box (calm_reached false) read spread[0] as " +
-        "the best-of-reps fallback beside each median"),
-      "stale_fallback" -> ("ROUND-17 (the round-16 ask: make " +
-        "publication steal-aware end-to-end): an entry that never " +
-        "reached min_qualified_reps steal-clean reps NO LONGER anchors " +
-        "its published number on this sweep's all-reps median - that " +
-        "number is a weather report (round 16 published 31 such " +
-        "entries through 1,171 steal-seconds, qualified-vs-all " +
-        "medians disagreeing >1.2x where both existed). Instead it " +
-        "republishes the PRIOR artifact's qualified median, listed in " +
-        "the stale field with: fallback (the value queries carries), " +
-        "since (when that value was actually measured - inherited " +
-        "through consecutive dirty sweeps, so it always names the " +
-        "sweep that earned it), measured_all_reps (this sweep's dirty " +
-        "median, kept for transparency), qualified_reps. The fallback " +
-        "fires only when the prior value is itself trustworthy (>= " +
-        "min_qualified_reps there, or already a marked fallback); " +
-        "with no trustworthy prior the all-reps median publishes as " +
-        "before, flagged by qualified_reps 0-2. Stale entries cannot " +
-        "appear in regressions (no new evidence). Entries the prior " +
-        "artifact published thin also requeue FIRST after the " +
-        "headline pair, so a thin backlog drains instead of rolling"),
-      "isolated_ledger" -> ("STANDING RULE (round-15 ask #3): an " +
-        "unattributed regression label survives at most one round - " +
-        "each is re-measured on a quiet box and recorded in " +
-        "bench_isolated.json, which feeds the adjudicator AND the " +
-        "isolated field beside queries. Round 16 cleared round-15's " +
-        "four: q44_salted_agg 0.33 isolated (warm tail to 0.269 = " +
-        "r14's 0.2744; r15's 0.4399 was sweep context); " +
-        "q113_bucketed_join isolated band 0.697-1.152 median 0.838 " +
-        "(the timed body WRITES both bucketed tables by design, so " +
-        "the band honestly covers r14's 0.659 and r15's 0.8779 - " +
-        "write variance, not plan; 6 stages both rounds); " +
-        "q280_avro_1file_whole 0.4727 isolated (r15's 0.4784 " +
-        "REPRODUCES; r14's 0.336 sat at the band floor of a " +
-        "single-task I/O-wall probe); q279_bpe_train32k_wordcount " +
-        "1.01 isolated still converging (r15's 0.9588 reproduces; " +
-        "r14's 0.7982 was the lucky number; the body is unchanged " +
-        "since round 12). Earlier rows (q27, q251, zorder, the " +
-        "replica pair) carry round-15's adjudications"),
-      "r18_ledger_clear" -> ("ROUND-18 clear of the eight r17 " +
-        "unattributed labels (q36/q55/q80/q98/q129/q132/q152/q168): " +
-        "all eight re-measured on a near-calm box over the SWEEP'S " +
-        "staged layout (BenchOne SPARK_GRAFT_STAGE=1, like-for-like) " +
-        "and all eight REPRODUCE their r17 in-sweep values, not their " +
-        "r16 baselines - the same host-era per-stage scheduling shift " +
-        "the r17 ledger measured fleet-wide (~20-30ms/stage), " +
-        "stage-count-proportional, with PlanCheck verifying the " +
-        "q129/q168 broadcast shapes and q44's salted two-stage shape " +
-        "byte-identical to design. The r16-era medians are " +
-        "re-baselined, not regressed-from; see bench_isolated.json " +
-        "notes per entry. q44_salted_agg's reproduced-isolated row " +
-        "closes the same way (see q44_rebaseline)"),
-      "r18_apply_floor" -> ("ROUND-18 apply-floor work: the CDC " +
-        "apply statement now runs 13 jobs / ~25 tasks (was 20 / " +
-        "~250): explicit-schema reads kill three per-statement " +
-        "parquet schema-inference jobs (changeFeed cdc+insert reads, " +
-        "MERGE small-source via footer-recorded schema, " +
-        "readSegmentsAligned), a per-SEGMENT listing cache makes " +
-        "snapshot opens incremental (a new version re-listed all 128 " +
-        "segments it shares with its predecessor - two 64-task jobs " +
-        "per statement), small-source MERGE pins AQE off (broadcast " +
-        "plans gain nothing; each exchange cost a stage-job floor), " +
-        "and the driver-built delta relations coalesce(1) " +
-        "(LocalTableScan parallelized 112 rows over 32 cores in every " +
-        "broadcast build). Isolated wall is parity (~1.85 vs r17 " +
-        "1.84 at MULT=12 NSEG=128): the floor is now Catalyst " +
-        "per-statement planning + write-commit I/O, not scheduling - " +
-        "the reduced task surface is the in-sweep resilience win"),
-      "aged_ab" -> ("ROUND-16 aged-vs-fresh A/B (the round-15 ask): " +
-        "right after the in-sweep replica apply reps, the SAME apply " +
-        "body runs once more in this aged driver (aged_sec, with " +
-        "aged_gc_ms/aged_jit_ms metered inside the window and a " +
-        "settled canary pair bracketing it) and then six disjoint " +
-        "pre-staged ranges run through a FRESHLY FORKED JVM on the " +
-        "same box in the same minute (aged_ab.fresh: 4 warmups for " +
-        "C2 convergence + 2 timed reps with per-rep gc/jit deltas). " +
-        "MECHANISM NAMED (the round-15 ask, with per-rep numbers in " +
-        "THIS artifact): HYPERVISOR CPU STEAL. The box is a VM on a " +
-        "shared host; a sustained 32-core sweep depletes host CPU " +
-        "credit and the guest runs throttled - rep_steal_ms shows " +
-        "the round-16 aged A/B rep at 9.0s wall carrying 44,450ms " +
-        "of steal, the three inflated in-sweep apply reps carrying " +
-        "17,500-34,920ms each while their calm requeued siblings " +
-        "carry 150-2,000ms, q51_x10's five in-sweep reps 5-8s each, " +
-        "and env.box_sweep_delta totalling 1,320 steal-SECONDS " +
-        "across the sweep vs 13 iowait-seconds. Steal explains " +
-        "every round-15 observation: uniform per-step inflation " +
-        "(throttling is plan-blind), identical aged and fresh-fork " +
-        "walls (both A/B runs: fresh 4.1-5.3s vs aged equal-or-" +
-        "worse - it hits processes indiscriminately), no idle-box " +
-        "reproduction (no sustained load, no credit depletion), and " +
-        "late-sweep concentration. The JVM-state components are " +
-        "bounded by their own meters: gc_ms 100-500 of a 4-9s rep, " +
-        "jit_ms (ROUND 17 cut the round-16-measured 1-2.7s/statement " +
-        "MERGE codegen tax: the per-delta key bounds now ride the " +
-        "generated code's references array via stable_const instead " +
-        "of being inlined, so the statement template compiles ONCE - " +
-        "ReplicaTrace meters codegen_units=0 on every post-warmup " +
-        "apply, isolated converged apply 2.35 -> ~1.7-1.9s at MULT=12 " +
-        "NSEG=128, and a snapshot index cache collapsed the repeated " +
-        "per-statement segment-listing jobs, 22 -> 20). " +
-        "Version-history growth was separately REFUTED: " +
-        "ReplicaTrace holds 1.4-1.7s FLAT across " +
-        "13 accumulated versions. rep_gc_ms / rep_jit_ms carry the " +
-        "meters for EVERY entry; rep_iowait_ms / rep_steal_ms add " +
-        "the BOX-level /proc/stat counters a process meter cannot " +
-        "see (this is a VM on a shared host - nonzero steal during " +
-        "late-sweep reps would name hypervisor CPU throttling, the " +
-        "one cause that hits an aged driver and a fresh fork " +
-        "IDENTICALLY, which is what both A/B runs observed; " +
-        "env.box_sweep_delta totals both across the sweep); " +
-        "env.jvm_start/jvm_end fingerprint " +
-        "what grew over the sweep; the isolated field republishes " +
-        "each bench_isolated.json row as in_sweep/isolated/inflation " +
-        "so the primary table is self-correcting"),
-      "q00_floor" -> ("the MEASURED per-rep driver floor (5-row scan " +
-        "+ agg through the identical probe path: Catalyst planning + " +
-        "codegen + footer job, ~0.1-0.15s) — subtract its median from " +
-        "any sub-0.5s in-sweep median before cross-round compares; at " +
-        "real scale the floor amortizes to zero. It is also why " +
-        "in-sweep medians of q44/q52 sit that constant above their " +
-        "isolated BenchOne medians with identical plans"),
-      "q06_x10" -> ("q06_x10_6Mrows reads a pre-staged real 6M-row " +
-        "table (BASELINE.md sf1 row count), q06_x10_rawlayout its " +
-        "no-ingest twin (10 paths of the driver single-row-group " +
-        "file, single-task by construction); the trio including " +
-        "q06_x10_canary is INTERLEAVED per rep over 11 cycles so a " +
-        "load excursion lands in the same rep of all three series. " +
-        "ROUND-13 BIMODALITY EXPLAINED: in-sweep cycles run " +
-        "back-to-back with the staged table page-cache-WARM " +
-        "(0.36-0.75s), while requeued reps ran minutes later after " +
-        "the sweep streamed GBs through the cache and read the table " +
-        "COLD from disk (~1.53s) - a cache-state split the compute " +
-        "canary cannot see (it reads no bytes), which is why those " +
-        "reps 'qualified'. Round 14 closes both ends: the I/O canary " +
-        "disqualifies busy-disk/evicted-cache windows, and requeued " +
-        "cycles re-warm both table reads untimed first so every " +
-        "published rep measures the warm-cache condition the in-sweep " +
-        "reps (and the reference's avg-of-runs methodology) measure"),
-      "q06_skipping" -> ("q06_skipping_16segs (Versioned.read, " +
-        "sidecar stats prune 15/16 segments at planning — no footer " +
-        "opens, no tasks) vs q06_skipping_noskip (same files raw: " +
-        "every footer opened, row-group pruning only); prune carries " +
-        "segments_total/segments_read; at 100 TB skipped segments " +
-        "are skipped listing/footer/scheduling cost"),
-      "q06_parquet_prune" -> ("the prune pair reads the 6M-row x10 " +
-        "table (at 600k rows the whole scan costs less than the " +
-        "floor); read it floor-subtracted — the ~15x group skip " +
-        "appears in (median - q00_floor), not the raw wall ratio. " +
-        "q06_zorder_2ndcol vs q06_linear_2ndcol: the same selective " +
-        "filter on the SECOND clustered column; the z-layout's " +
-        "row-group accounting in prune is the 100 TB number. BOTH " +
-        "pairs run INTERLEAVED per-rep (round-14 ask #1, the x10 trio " +
-        "pattern) with one shared canary pair and a shared requeue " +
-        "cycle, so the published pair ordering is load-invariant — " +
-        "round 14's inverted prune pair was drift between its two " +
-        "sequential rep blocks. ROUND 16 closed the zorder pair's " +
-        "residual inversion (round-15 ask #2): the sorted twin is now " +
-        "RE-STAGED beside the zorder write, then sync+settle before " +
-        "the pair — the asymmetry interleaving could not cancel was " +
-        "the zorder dir's own staging wake (written seconds before " +
-        "its reps vs a twin settled for ~80 probes). Result: the " +
-        "2.2x inversion collapsed to a statistical tie at the driver " +
-        "floor (both ~0.21s, 5 qualified reps each; the 89-vs-1211 " +
-        "group skip is real but the 6M-row decode sits under the " +
-        "floor at 32 cores — LayoutTrace's freshly-staged isolated " +
-        "pair shows the ordering: zorder 0.2055 < linear 0.2571)"),
-      "q06_delete" -> ("cow vs dv: a 16-row scattered takedown (one " +
-        "row per segment, fresh ids per rep) — copy-on-write " +
-        "rewrites every affected segment (the whole table here), " +
-        "deletion vectors write 16 position lists and carry every " +
-        "segment byte-identical; the ratio is the merge-on-read " +
-        "story and scales with segment size"),
-      "q06_replica" -> ("q06_replica72M_* REDEFINE round 12's " +
-        "q06_replica_* pair at 12x the volume (hence the rename — a " +
-        "prev-round compare would be probe-definition change, not a " +
-        "regression): syncing a 72M-row " +
-        "128-segment replica after a 16-key single-segment source " +
-        "update — the timed body is the replication CONSUMER only " +
-        "(feed read + net-effect MERGE) vs re-copying the snapshot " +
-        "(full read + full write); apply cost = a fixed driver-" +
-        "planning constant (flat in table size at fixed segment " +
-        "size — the named MERGE jobs break it down; round 14 cut the " +
-        "16-row apply from ~4.5s/34 jobs to ~2.0-2.3s at the full " +
-        "72M/128-segment probe volume on an idle box, ReplicaTrace " +
-        "MULT=12 NSEG=128: the match-pair rollup rides the " +
-        "checkpoint via observe(), small sources and small match " +
-        "sets collect to LocalRelations so every downstream join " +
-        "broadcasts, survivor non-emptiness comes from footers " +
-        "instead of a take(1) materialization, and the staging " +
-        "bounds ride the staging write) + O(delta + " +
-        "touched segment + one pruned scan), recopy O(2x table: " +
-        "measured 2.4s at 18M, 4.3s at 36M, linear). Round 12 ran " +
-        "the pair at 6M rows where the fixed constant swamped the " +
-        "asymptotics and apply lost 4.6x; 72M sits decisively past " +
-        "the crossover. Round 14 also syncs+settles after the pair's " +
-        "own staging (its dirty-page writeback was loading the apply " +
-        "reps' canaries 4.7-5.9x). The budget field carries the " +
-        "records math: " +
-        "apply reads feed + ONE segment and rewrites it, recopy " +
-        "moves the whole table — the gap grows linearly with table " +
-        "size at fixed delta. ROUND-15 in-sweep-vs-idle attribution " +
-        "(round-14 ask #3): the residual between the idle apply " +
-        "(2.2-2.4s warm reps, ReplicaTrace at the exact probe volume " +
-        "WITH the bench session config - shuffle 32 + openCost 256K " +
-        "measured equal to the trace defaults) and the in-sweep " +
-        "3.5-3.7s is AGED-DRIVER state, by elimination: not config " +
-        "(A/B equal), not code-cache exhaustion (512MB reserved, 148MB " +
-        "used at end of sweep - see env.code_cache_used_mb), not " +
-        "transient load (the published reps' canaries read 1.0-1.3x), " +
-        "not cache eviction (drop_caches=3 before isolated reps " +
-        "penalizes ONLY the first rep ~+1.8s, later reps self-rewarm " +
-        "to 2.3-2.6s, while in-sweep reps sit FLAT at 3.6s), and " +
-        "per-step MERGE tracing showed every step inflated UNIFORMLY ~1.5x " +
-        "(planning+scheduling, not one hot I/O). The same aging " +
-        "inflates recopy ~2.4x (2.6-3.0s cold-cache idle vs 6.7s " +
-        "in-sweep), so the pair ordering and the crossover story are " +
-        "preserved under identical conditions. NOT resequenced " +
-        "earlier on purpose: an early slot would read the just-staged " +
-        "snapshot page-cache-warm and publish a recopy number only a " +
-        "128GB-RAM single box can produce - cold data is the honest " +
-        "100TB condition for a table-copy probe. bench_isolated.json " +
-        "carries both idle numbers for the adjudicator. ROUND 16 " +
-        "NAMES the mechanism (see aged_ab): HYPERVISOR CPU STEAL, " +
-        "measured per rep - the inflated in-sweep apply reps carry " +
-        "17.5-34.9 steal-SECONDS each (rep_steal_ms) while calm " +
-        "requeued reps carry ~0; a same-minute fresh-JVM fork ran " +
-        "the identical body no faster (steal hits processes " +
-        "indiscriminately); GC measures 100-500ms/rep and version-" +
-        "history growth is refuted (flat across 13 versions). NOT " +
-        "JVM aging - round-15's elimination chain was right to " +
-        "clear the driver's own state and wrong only in the label. " +
-        "The io-canary bar disqualifies the stolen reps; requeued " +
-        "apply reps now REWARM (round 16) so the published median " +
-        "measures the warm condition, with the cold number " +
-        "(drop_caches 4.34s) and warm idle (2.35s) both in the " +
-        "ledger. The pair ordering and crossover story hold: both " +
-        "sides inflate together under identical conditions"),
-      "q279_bpe" -> ("train32k_wordcount / _mergeloop / encode32k: " +
-        "the production-vocabulary tokenizer at 32768 merges over " +
-        "the x10 corpus widened with one md5-hex word per row (~50k " +
-        "distinct words; q288 gates the construction) — wordcount is " +
-        "the only distributed training cost, the merge loop is " +
-        "driver-side and vocabulary-bounded (and maximally " +
-        "load-sensitive — check its qualified_reps), encode32k the " +
-        "recurring per-corpus pass. ROUND-16 REDEFINITION (baselines " +
-        "reset for wordcount + encode32k): the widened corpus is now " +
-        "STAGED to parquet untimed like every staging — both bodies " +
-        "previously re-built the union+md5 corpus expression inside " +
-        "every timed rep, charging corpus synthesis to " +
-        "training/encode; a real tokenizer job reads its corpus from " +
-        "storage. Round 16 also interned the ENCODE hot loop " +
-        "(packed-long pair table + per-task word cache): the " +
-        "expression pass measures 0.47-0.63s isolated (EncodeProfile, " +
-        "persisted corpus) vs 1.25s in round 15. " +
-        "q279_bpe_encode200 times ENCODE " +
-        "ONLY with a 200-merge table trained untimed; q279_bpe_encode " +
-        "in the headline set is the gate-identical train(8)+encode"),
-      "q44_x10_skew" -> ("1M-row events with one user owning ~50% of " +
-        "rows, identical shuffled join+agg, AQE skew-split " +
-        "(thresholds sized to probe volume) vs Scale.saltedJoin; " +
-        "broadcast disabled so the skew is real"),
-      "q44_rebaseline" -> ("ROUND-18 RE-BASELINE of q44_salted_agg: " +
-        "the round-17 reproduced-isolated shift (0.231 -> 0.330) is " +
-        "attributed, not a plan change — PlanCheck shows the designed " +
-        "two-stage salted shape unchanged (4 stages, map-side combine " +
-        "throughout, code untouched since it landed), and the delta " +
-        "equals 4 stages x the ~25ms/stage host scheduling shift the " +
-        "round-17 ledger measured fleet-wide on multi-stage entries. " +
-        "The 0.231 era median is unrepresentative of the current " +
-        "host; 0.33 reproduces across two rounds of BenchOne"),
-      "q280_avro" -> ("one multi-MB OCF file read whole (one task) " +
-        "vs sync-marker byte-range split; at a multi-GB shard the " +
-        "whole-file number scales with file size, the split number " +
-        "with size/cores"),
-      "staging" -> ("order-preserving maxRecordsPerFile splits, " +
-        "untimed (BASELINE.md likewise times queries after its " +
-        "excluded CSV-to-BlockFile conversion): string-heavy tables " +
-        "fan out by rows (documents = 10 splits; measured q87 " +
-        "0.420s@1, 0.167s@10, 0.109s@32 — 32 taxed every aggregating " +
-        "query and regressed the ANN family), narrow numeric tables " +
-        "keep 512KB/50k-row floors (flagship flat 0.21-0.22s from 8 " +
-        "through 32 lineitem splits); embeddings stays un-fanned"),
-      "methodology" -> ("every timed rep is followed back-to-back by " +
-        "a fixed-cost 32-task compute canary AND a fixed ~100MB " +
-        "parquet-read I/O canary (rep_canary_ratio / " +
-        "rep_io_canary_ratio = canary/phase-floor per rep); " +
-        "regressions names a mechanical cause for every entry " +
-        "regressed >1.2x and >50ms vs prev_bench, adjudicated from " +
-        "all-reps data and labeled insufficient-qualified-reps when " +
-        "fewer than min_qualified_reps reps qualified; every entry " +
-        "carries a [min,max] spread over ALL reps (requeued " +
-        "included); raw-layout probes get 11 reps"))
-    val probeNotesJson = probeNotes
-      .map { case (k, v) => s""""$k":"$v"""" }
-      .mkString("{", ",", "}")
-    val notes = s"$rgNote. " +
-      "Read probe_notes (structured, per probe family) for what each " +
-      "pair measures; env.qualification + qualified_reps for how the " +
-      "medians were taken. The headline object at the END of this " +
-      "line restates the gate-relevant numbers so the driver's " +
-      "2000-char stdout tail always carries them."
-    // the gate-relevant numbers RESTATED LAST: the driver wrapper
-    // keeps only the final 2000 chars of stdout when it cannot parse
-    // the full line, and these must never be the part that truncation
-    // eats (round-12 verdict ask #7)
-    // the matched-volume BASELINE gate ratios, computed HERE once
-    // (round-13 verdict ask #7): published median / reference sf1 Q1,
-    // plus the best-of-reps ratio — the judge reads both off the
-    // artifact instead of re-deriving them
-    val x10Median = finalMedian("q06_x10_6Mrows")
-    val x10Best = spreads.get("q06_x10_6Mrows").map(_._1).getOrElse(x10Median)
-    val headlineJson =
-      s"""{"metric":"q1_flagship_avg","value":${f"$flagship%.4f"},"unit":"sec","flagship_source":"${pub.publishedSource("q06_q1_flagship")}","qualified_reps_flagship":${qualifiedOf("q06_q1_flagship").length},"q06_x10_6Mrows":${f"$x10Median%.4f"},"x10_source":"${pub.publishedSource("q06_x10_6Mrows")}","qualified_reps_x10":${qualifiedOf("q06_x10_6Mrows").length},"x10_vs_baseline_sf1":${f"${x10Median / BenchPolicy.BaselineSf1Q1Sec}%.2f"},"x10_best_vs_baseline_sf1":${f"${x10Best / BenchPolicy.BaselineSf1Q1Sec}%.2f"},"canary_floor_sec":${f"$floorUsed%.4f"},"calm_reached":$calmReached,"requeued_reps":$requeuedTotal}"""
-    // per-rep GC/JIT wall inside the timed windows — the measurable
-    // components of driver aging, per entry (round-15 ask #1)
-    val repGcJson = repGcMs
-      .map { case (k, v) => s""""$k":[${v.mkString(",")}]""" }
-      .mkString("{", ",", "}")
-    val repJitJson = repJitMs
-      .map { case (k, v) => s""""$k":[${v.mkString(",")}]""" }
-      .mkString("{", ",", "}")
-    // box-level per-rep iowait/steal (machine-wide, process-blind):
-    // only entries where either series is ever nonzero are emitted —
-    // an all-zeros row per entry is noise in the artifact
-    def statJson(m: scala.collection.Map[String, Seq[Long]]): String = m
-      .filter(_._2.exists(_ != 0L))
-      .map { case (k, v) => s""""$k":[${v.mkString(",")}]""" }
-      .mkString("{", ",", "}")
-    val repIowaitJson = statJson(repIowaitMs)
-    val repStealJson = statJson(repStealMs)
-    // when this sweep actually ran — the label a FUTURE sweep's stale
-    // fallback carries as "since", so a frozen value always names the
-    // sweep that measured it
-    val generatedStamp = java.time.Instant.now()
-      .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).toString
-    val json =
-      s"""{"metric":"q1_flagship_avg","value":${f"$flagship%.4f"},"unit":"sec","layout":"staged","generated":"$generatedStamp","queries":$qjson,"qualified_reps":$qualifiedJson,"stale":${pub.staleJson},"stale_expired":${pub.staleExpiredJson},"calmer_prior_expired":${pub.calmerPriorExpiredJson},"calmer_prior":${pub.calmerPriorJson},"median_divergence":$divergenceJson,"spread":$spreadJson,"rep_canary_ratio":$repCanaryJson,"rep_io_canary_ratio":$repIoCanaryJson,"entry_floor_ratio":$entryFloorRatioJson,"rep_gc_ms":$repGcJson,"rep_jit_ms":$repJitJson,"rep_iowait_ms":$repIowaitJson,"rep_steal_ms":$repStealJson,"isolated":${pub.isolatedJson},"aged_ab":$agedAbJson,"prune":$pruneJson,"budget":$budgetJson,"probe_notes":$probeNotesJson,"regressions":$regressionsJson,"notes":"$notes","sf":"$rawSfDir","env":$envJson,"headline":$headlineJson}"""
-
-    // STDOUT ARTIFACT CONTRACT (round-19, the round-18 verdict's #1a
-    // ask — the full line is tens of KB and the driver failed to parse
-    // it twice, losing the whole round-over-round comparison and the
-    // scaling block):
-    //  - bench.json (and bench_c<cpus>.json, the per-core-count prior
-    //    chain) keep the FULL artifact — every per-rep diagnostic
-    //    series stays machine-readable on disk;
-    //  - stdout's primary line drops the bulky per-rep arrays
-    //    (spread/rep_*_ratio/rep_*_ms/aged_ab/probe_notes — ~85% of
-    //    the bytes; read bench.json for them) so the line a driver
-    //    must parse is ~10 KB, not ~70 KB;
-    //  - the LAST stdout line is a compact restatement — metric +
-    //    queries + headline, ~3 KB, headline object last so even a
-    //    2000-char stdout tail always ends with the gate numbers.
-    val jsonSlim =
-      s"""{"metric":"q1_flagship_avg","value":${f"$flagship%.4f"},"unit":"sec","layout":"staged","generated":"$generatedStamp","queries":$qjson,"qualified_reps":$qualifiedJson,"stale":${pub.staleJson},"stale_expired":${pub.staleExpiredJson},"calmer_prior_expired":${pub.calmerPriorExpiredJson},"calmer_prior":${pub.calmerPriorJson},"median_divergence":$divergenceJson,"isolated":${pub.isolatedJson},"prune":$pruneJson,"budget":$budgetJson,"regressions":$regressionsJson,"notes":"per-rep diagnostics (spread, rep_canary_ratio, rep_io_canary_ratio, entry_floor_ratio, rep_gc_ms, rep_jit_ms, rep_iowait_ms, rep_steal_ms, aged_ab, probe_notes) live in bench.json beside this repo root - stdout carries the parse-critical fields only","sf":"$rawSfDir","env":$envJson,"headline":$headlineJson}"""
-    val jsonCompact =
-      s"""{"metric":"q1_flagship_avg","value":${f"$flagship%.4f"},"unit":"sec","sf":"$rawSfDir","bench_cpus":$cpus,"generated":"$generatedStamp","queries":$qjson,"headline":$headlineJson}"""
-    val outDirs = Seq(".") ++ sys.env.get("SPARK_GRAFT_OUT").toSeq
-    outDirs.foreach { d =>
+  /** Stage `rawSfDir`, warm every entry once, time `rounds` interleaved
+    * rounds and render this run's artifacts. */
+  def run(spark: SparkSession, rawSfDir: String, cpus: Int, rounds: Int,
+          names: Seq[String]): Output = {
+    val root = Files.createTempDirectory("graft-bench-").toString
+    try {
+      val sfDir = s"$root/tables"
+      lazy val x10Path = stageX10(spark, rawSfDir, s"$root/x10/lineitem_x10.parquet")
+      val todo = names.map(n => n -> body(spark, n, sfDir, x10Path, cpus))
+      stageSplittable(spark, rawSfDir, cpus, sfDir): Unit
+      val tracer = new StageTraceListener
+      spark.sparkContext.addSparkListener(tracer)
+      val times = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
+      val steals = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Long]]
+      val stages = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[String]]
       try {
-        Files.createDirectories(Paths.get(d))
-        Files.writeString(Paths.get(d, "bench.json"), json + "\n")
-        Files.writeString(Paths.get(d, s"bench_c$cpus.json"), json + "\n")
-        Files.writeString(Paths.get(d, "bench_stages.json"), stageJson.toString + "\n")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $d: ${e.getMessage}")
-      }
+        todo.foreach { case (_, q) => timedRep(spark, q): Unit } // warm-ups
+        for (_ <- 1 to rounds; (name, q) <- todo) {
+          tracer.drain(): Unit // late stage events of the previous rep
+          val (t, steal) = timedRep(spark, q)
+          times.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += t
+          steals.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += steal
+          stages.getOrElseUpdate(name, mutable.ArrayBuffer.empty) +=
+            tracer.drain().map(_.toJson).mkString("[", ",", "]")
+        }
+      } finally spark.sparkContext.removeSparkListener(tracer)
+
+      val sums = times.map { case (n, ts) => n -> summarize(ts.toSeq) }
+      val entriesJson = times.keys.map { n =>
+        val s = sums(n)
+        s""""$n":{"median":${num(s.median)},"min":${num(s.min)},"max":${num(s.max)},""" +
+          s""""q1":${num(s.q1)},"q3":${num(s.q3)},""" +
+          s""""reps":${times(n).map(num).mkString("[", ",", "]")},""" +
+          s""""steal_ms":${steals(n).mkString("[", ",", "]")}}"""
+      }.mkString("{", ",", "}")
+      val queriesJson = sums.map { case (n, s) => s""""$n":${num(s.median)}""" }
+        .mkString("{", ",", "}")
+      val flagship = sums.get("q06_q1_flagship").map(_.median)
+      val x10 = sums.get("q06_x10_6Mrows").map(_.median)
+      val ratio = x10.map(_ / BaselineSf1Q1Sec)
+      val headline =
+        s"""{"bench_cpus":$cpus,"q06_q1_flagship":${numOrNull(flagship)},""" +
+          s""""q06_x10_6Mrows":${numOrNull(x10)},""" +
+          s""""x10_vs_baseline_sf1":${numOrNull(ratio)},""" +
+          s""""baseline_sf1_q1_sec":$BaselineSf1Q1Sec,""" +
+          s""""gate_ok":${ratio.fold("null")(r => (r < 2.0).toString)}}"""
+      val env = s"""{"cores":${Runtime.getRuntime.availableProcessors()},""" +
+        s""""bench_cpus":$cpus,"steal_ms":${steals.values.flatten.sum}}"""
+      val generated = java.time.Instant.now()
+        .truncatedTo(java.time.temporal.ChronoUnit.SECONDS).toString
+      val json =
+        s"""{"metric":"q1_flagship_avg","value":${numOrNull(flagship)},"unit":"sec",""" +
+          s""""sf":"$rawSfDir","bench_cpus":$cpus,"rounds":$rounds,""" +
+          s""""generated":"$generated","queries":$queriesJson,""" +
+          s""""entries":$entriesJson,"env":$env,"headline":$headline}"""
+      val stagesJson = stages.map { case (n, reps) =>
+        s""""$n":${reps.mkString("[", ",", "]")}""" }.mkString("{", ",", "}")
+      Output(json, stagesJson)
+    } finally deleteRec(new java.io.File(root))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val rawSfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val names = if (args.isEmpty) HeadlineEntries else args.toSeq
+    val out = run(spark, rawSfDir, cpus, Rounds, names)
+    (Seq(".") ++ sys.env.get("SPARK_GRAFT_OUT")).foreach { d =>
+      Files.createDirectories(Paths.get(d))
+      Files.writeString(Paths.get(d, "bench.json"), out.json + "\n")
+      Files.writeString(Paths.get(d, "bench_stages.json"), out.stagesJson + "\n")
     }
-    println(jsonSlim)
-    println(jsonCompact)
-    System.err.println(s"GRAFT_BENCH_JSON $json")
-    cleanupTempDirs()
+    println(out.json)
     spark.stop()
   }
 }

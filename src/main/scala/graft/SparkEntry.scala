@@ -139,7 +139,7 @@ object SparkEntry {
 
   /** The flagship TPC-H Q1-variant aggregation over a lineitem frame
     * (reference: examples/benchmark.py:51-68) — shared by the q06 gate
-    * and Bench's replicated-input throughput probe. */
+    * and Bench's `q06_x10_6Mrows` at BASELINE.md's sf1 row count. */
   private[graft] def q1Agg(lineitem: DataFrame): DataFrame =
     lineitem
       .filter(F.col("l_shipdate") <= F.lit("1998-12-01").cast("timestamp"))

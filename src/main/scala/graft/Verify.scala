@@ -30,7 +30,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // staged LSH intermediates are dead once the dump lands; 77 queries
-      // in one JVM would otherwise accumulate them (see Bench.sweepPersisted)
+      // in one JVM would otherwise accumulate them (Bench does the same
+      // before every rep)
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

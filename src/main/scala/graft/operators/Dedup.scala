@@ -109,7 +109,7 @@ object Dedup {
   }
 
   /** Round-robin repartition to full parallelism, but ONLY when the input
-    * has markedly fewer splits than the session's shuffle width (e.g. one
+    * has markedly fewer splits than the cores that run it (e.g. one
     * unsplittable gzip shard, a single large row group — common for raw
     * corpus drops). The expensive per-document signature work downstream
     * then uses every core. The width probe reads the ACTUAL partition
@@ -120,7 +120,8 @@ object Dedup {
     * the core count, the condition is false, and no exchange is added —
     * the narrow (id, key) explode stays the only shuffle. */
   private[graft] def spreadForCompute(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sessionState.conf.numShufflePartitions
+    // cores, not shuffle width: a 4-split input on 4 cores uses them all
+    val target = df.sparkSession.sparkContext.defaultParallelism
     val parts = df.queryExecution.sparkPlan.collectLeaves().map {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.inputRDDs().map(_.getNumPartitions).sum

@@ -1,10 +1,8 @@
 package graft.trace
 
-/** ONE implementation of the JVM/box meters the bench harness and its
-  * isolated runners share — [[graft.Bench]]'s per-rep metering and
-  * [[FreshApply]]'s fork-side readings exist to be COMPARED, so the
-  * /proc/stat field indices and the USER_HZ assumption must not be
-  * able to drift between copies (the round-16 review finding).
+/** JVM and box meters: GC and JIT wall, and the machine-wide iowait and
+  * steal counters from /proc/stat. [[graft.Bench]] brackets every timed
+  * rep with the steal counter.
   */
 object ProcMeters {
   /** Cumulative GC wall (ms) across all collectors. */

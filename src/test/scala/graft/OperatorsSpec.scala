@@ -45,6 +45,29 @@ class OperatorsSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L)) // unrelated doc
   }
 
+  test("spreadForCompute compares input splits with the cores, not the shuffle width") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def spreads(df: org.apache.spark.sql.DataFrame): Boolean =
+      Dedup.spreadForCompute(df).queryExecution.sparkPlan.exists {
+        case s: ShuffleExchangeExec => s.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      }
+    val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString
+    val corpus = (0L until 400L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    corpus.repartition(4).write.parquet(s"$dir/four")
+    corpus.coalesce(1).write.parquet(s"$dir/one")
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try {
+      assert(spark.sparkContext.defaultParallelism == 4)
+      val four = spark.read.parquet(s"$dir/four")
+      assert(four.rdd.getNumPartitions == 4)
+      assert(!spreads(four)) // as wide as the cores: read as split
+      assert(spreads(spark.read.parquet(s"$dir/one")))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("reliable checkpointing yields identical LSH pairs and clusters") {
     // reliable = true swaps executor-local checkpoint blocks for real
     // checkpoint files under SparkContext.setCheckpointDir — the

@@ -67,10 +67,11 @@ class ScaleSpec extends SparkSpec {
   test("q113 probe shape: bucketed agg+filter+join is shuffle-free " +
     "and REP-STABLE — AQE converges to the same physical shape every " +
     "execution (the bench probe's band must be noise, never re-plans)") {
-    // exact mirror of Bench's q113_bucketed_join_only body over small
-    // synthetic tables: if this shape ever re-plans across executions
-    // (strategy flip, shuffle appearing), the probe's wall-clock band
-    // stops measuring the engine and this pins the cause
+    // the serving shape q113's bucketed layout exists to buy (agg +
+    // filter + join over pre-bucketed tables), over small synthetic
+    // tables: if it ever re-plans across executions (strategy flip,
+    // shuffle appearing), a timed run of it stops measuring the engine
+    // and this pins the cause
     val staging = java.nio.file.Files.createTempDirectory("graft_q113_spec")
     Scale.writeBucketed(
       (1 to 5000).map(i => (i.toLong % 400, i * 7.0)).toDF(

@@ -38,6 +38,19 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
 
+  // deployment settings only: the data dir, the core count, the artifact
+  // dir, and Verify's dump filter; experiment knobs do not ship
+  test("src/main reads no SPARK_GRAFT_* variable beyond SF_DIR, CPUS, OUT and ONLY") {
+    val allowed = Set("SF_DIR", "CPUS", "OUT", "ONLY").map("SPARK_GRAFT_" + _)
+    val knob = "SPARK_GRAFT_[A-Z0-9_]*".r
+    val hits = for {
+      f <- mainFiles
+      (line, n) <- lines(f)
+      v <- knob.findAllIn(line) if !allowed(v)
+    } yield s"$f:$n: $v"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
   test("no regex over SQL text in Engine.scala") {
     val engine = Paths.get("src/main/scala/graft/Engine.scala")
     val hits = lines(engine).collect {
