@@ -284,10 +284,9 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     case Delete(target, where, vectored) =>
       val resolved = versionedPath("DELETE", target)
       noSubqueries("DELETE predicates", where)
-      val pred = where.compile(Versioned.read(spark, resolved, None).schema)
-      val v = semantic(
-        if (vectored) Versioned.deleteWhereVectored(spark, resolved, pred)
-        else Versioned.deleteWhere(spark, resolved, pred))
+      val snap = semantic(Versioned.pin(spark, resolved, "DELETE"))
+      val v = semantic(Versioned.rowLevel(snap, where.compile(snap.schema),
+        None, vectored))._1
       // status row from FOOTER metadata over the new manifest, never a
       // count of the new head
       statusRow("version" -> v,
@@ -618,118 +617,15 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     * column's committed type so the schema never drifts across
     * versions. Copy-on-write rewrites the affected segments; VECTORED
     * vectors the matched positions and appends one segment of their
-    * updated copies — write cost ∝ matched rows. */
+    * updated copies — write cost ∝ matched rows. Both run through the
+    * row-level core ([[Versioned.rowLevel]]). */
   private def update(u: Update): GraftFrame = {
-    val Update(target, assigns, where, vectored) = u
-    val resolved = versionedPath("UPDATE", target)
-    noSubqueries("UPDATE expressions", where +: assigns.map(_._2): _*)
-    // resolve the head version ONCE (detection read, segment list and
-    // rewrite all describe the same snapshot; a concurrent commit
-    // fails the final rename loudly instead of desynchronizing them)
-    val hv = Versioned.headVersion(spark, resolved)
-    val head = Versioned.read(spark, resolved, Some(hv))
-    // same reserved-name guard as MERGE: the rewrite appends
-    // provenance columns to the scan, so a colliding user column
-    // would fail deep inside with an ambiguous-reference error
-    (Versioned.ReservedProvenanceCols ++ Versioned.CdcReservedCols).foreach { c =>
-      if (head.columns.contains(c))
-        throw new SemanticError(s"UPDATE: reserved column name '$c'")
-    }
-    assigns.foreach { case (n, _) =>
-      if (!head.columns.contains(n)) throw new SemanticError(
-        s"UPDATE SET references unknown column '$n'")
-    }
-    import org.apache.spark.sql.{functions => F}
-    // standard UPDATE row-match semantics: only predicate-TRUE rows
-    // change; a NULL predicate leaves the row as-is — which the RAW
-    // predicate already gives both consumers (Filter keeps TRUE only;
-    // when() sends NULL to otherwise), and the bare comparison shape
-    // is what parquet pushdown + row-group pruning consume: wrapping
-    // it in coalesce(.., false) forced the detection pass into a
-    // full-table scan
-    val pred = where.compile(head.schema)
-    if (vectored) {
-      val sets = assigns.map { case (n, rhs) => n -> rhs.compile(head.schema) }
-      val (v, nUpd) =
-        semantic(Versioned.updateWhereVectored(spark, resolved, pred, sets))
-      return statusRow("version" -> v, "n_updated" -> nUpd)
-    }
-    // SEGMENT-PRUNED copy-on-write: one detection pass (predicate
-    // pushed into the scan) finds which segments hold matched rows
-    // and how many — the per-segment collect is bounded by the
-    // manifest length. Only those segments rewrite; untouched ones
-    // carry into the new manifest by reference. A selective UPDATE
-    // on a 100 TB corpus costs the matched segments, not the table.
-    val segsAll = Versioned.headSegments(spark, resolved, Some(hv))
-    // ONE detection scan, staged: per-segment counts, the status
-    // row, and the change-feed pre/postimages all read the
-    // matched-row-sized staging file, never the table again
-    val detection = Versioned
-      .readWithProvenance(spark, resolved, Some(hv)).filter(pred)
-    // the predicate is evaluated TWICE on this path (detection scan,
-    // then F.when(pred, ...) in the rewrite) — the same double-eval
-    // hazard deleteWhere guards against: a nondeterministic predicate
-    // (rand()) would silently under-update rows the detection pass
-    // didn't flag. Reject loudly, same analyzed-Filter check.
-    detection.queryExecution.analyzed.foreach {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        if (!f.condition.deterministic) throw new SemanticError(
-          "UPDATE predicates must be deterministic (the predicate is " +
-            "evaluated once to find affected segments and again to " +
-            s"rewrite them): ${f.condition.sql}")
-      case _ => ()
-    }
-    val (stagingDir, staged, _) = Versioned.stageMatched(detection, resolved)
-    val (v, nUpdated) = try {
-      val perSeg = staged
-        .groupBy("__seg").agg(F.count(F.lit(1)).as("c"))
-        .collect()
-      val nUpd = perSeg.map(_.getLong(1)).sum
-      val affected = perSeg.map(_.getString(0)).toSet
-      val dvMap = Versioned.readDvMap(spark, resolved, hv)
-      val v0 =
-        if (affected.isEmpty)
-          Versioned.commitSegments(spark, resolved, segsAll,
-            dvMap, expectedBase = Some(hv), op = "update")
-        else {
-          val updated = Versioned
-            .readSegmentsAligned(spark, resolved,
-              segsAll.filter(affected), head.schema, dvMap)
-            .select(head.schema.fields.map { f =>
-              assigns.find(_._1 == f.name) match {
-                case Some((_, rhs)) =>
-                  F.when(pred, rhs.compile(head.schema).cast(f.dataType))
-                    .otherwise(F.col(f.name)).as(f.name)
-                case None => F.col(f.name)
-              }
-            }.toSeq: _*)
-          // writeSegment directly, not writeSegmentIfNonEmpty: an
-          // UPDATE never removes rows, and every affected segment
-          // holds at least one LIVE matched row (detection read
-          // dv-applied provenance), so `updated` cannot be empty —
-          // the emptiness probe would be a wasted second scan of the
-          // affected segments
-          val fresh = Some(Versioned.writeSegment(updated, resolved))
-          val post = staged.select(head.schema.fields.map { f =>
-            assigns.find(_._1 == f.name) match {
-              case Some((_, rhs)) =>
-                rhs.compile(head.schema).cast(f.dataType).as(f.name)
-              case None => F.col(f.name)
-            }
-          }.toSeq: _*)
-          val cdc = Versioned.cdcTag(staged, "update_preimage")
-            .unionByName(Versioned.cdcTag(post, "update_postimage"))
-          Versioned.commitPruned(spark, resolved,
-            segsAll.filterNot(affected), fresh, head.schema, dvMap,
-            cdc = Versioned.CdcRows(cdc),
-            expectedBase = Some(hv), op = "update")
-        }
-      (v0, nUpd)
-    } finally {
-      new org.apache.hadoop.fs.Path(stagingDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(stagingDir), true): Unit
-    }
+    val resolved = versionedPath("UPDATE", u.target)
+    noSubqueries("UPDATE expressions", u.where +: u.set.map(_._2): _*)
+    val snap = semantic(Versioned.pin(spark, resolved, "UPDATE"))
+    val sets = u.set.map { case (n, rhs) => n -> rhs.compile(snap.schema) }
+    val (v, nUpdated) = semantic(Versioned.rowLevel(snap,
+      u.where.compile(snap.schema), Some(sets), u.vectored))
     statusRow("version" -> v, "n_updated" -> nUpdated)
   }
 
@@ -798,16 +694,14 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     // statement's driver-built LocalRelations scan as one task (see
     // [[Engine.withSmallStmtConfs]]).
     withSmallStmtConfs(srcSmall) {
-    // resolve the head version ONCE for the whole statement (the
-    // UPDATE/DELETE rule): match join, segment list and rewrite all
-    // describe the same snapshot
-    val hv = Versioned.headVersion(spark, resolved)
-    val head = Versioned.read(spark, resolved, Some(hv))
-    (Versioned.ReservedProvenanceCols ++ Versioned.CdcReservedCols ++
-        Seq("__srid", "__trow")).foreach { c =>
-      if (head.columns.contains(c) || srcFrame.columns.contains(c))
-        throw new SemanticError(s"MERGE: reserved column name '$c'")
-    }
+    // one pinned snapshot for the whole statement (the row-level
+    // core's rule): match join, segment list and rewrite all describe
+    // it. MERGE also reserves its source-id and target-row columns, in
+    // the target and the source alike
+    val snap = semantic(Versioned.pin(spark, resolved, "MERGE",
+      extraReserved = Seq("__srid", "__trow"),
+      otherColumns = srcFrame.columns.toSeq))
+    val schema = snap.schema
     // TARGET row identity is storage-level: parquet `_metadata`
     // file-path/row-index provenance — deterministic across jobs with
     // ZERO materialization (no full-table checkpoint) — plus the
@@ -821,7 +715,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     // insert anti-join BROADCAST the source instead of shuffling
     // both sides; a checkpointed RDD reports unknown stats and
     // forces shuffle joins however small it is.
-    val tDf = Versioned.readWithProvenance(spark, resolved, Some(hv))
+    val tDf = Versioned.readWithProvenance(spark, resolved, Some(snap.version))
     val srcRows: Option[Array[Row]] =
       if (!srcSmall) None
       else {
@@ -848,13 +742,13 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     val tScoped =
       if (matchedClauses.isEmpty) tDf
       else tDf.withColumn("__trow",
-        F.struct(head.schema.fieldNames.toSeq.map(F.col): _*))
+        F.struct(schema.fieldNames.toSeq.map(F.col): _*))
     val scope = Map(tName -> GraftFrame.fromDF(tScoped),
       sName -> GraftFrame.fromDF(sDf))
     // validate every clause's SET column names against the target
     matchedClauses.foreach {
       case MergeUpdate(_, as) => as.foreach { case (n, _) =>
-        if (!head.columns.contains(n)) throw new SemanticError(
+        if (!schema.fieldNames.contains(n)) throw new SemanticError(
           s"MERGE SET references unknown target column '$n'")
       }
       case _ => ()
@@ -894,33 +788,20 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       F.lit(null).cast("int")) { (i, acc) =>
       F.when(F.col(s"__m_$i"), F.lit(i)).otherwise(acc)
     }
-    // manifest metadata for the rewrite — driver-side, KB-sized
-    val segsAll = Versioned.headSegments(spark, resolved, Some(hv))
-    val dvMap = Versioned.readDvMap(spark, resolved, hv)
-    // the checkpoint's row count rides the SAME job via observe() —
-    // zero extra actions — and a small match set (the common DML /
-    // replication-apply case) is then collected into a LocalRelation:
+    // the match set is pinned by the row-level core's one helper: the
+    // checkpoint's row count rides the same job, and a small match set
+    // (the common DML / replication-apply case) comes to the driver —
     // the byWin rollup below becomes driver-side Scala, the fired
-    // positions become an in-scan filter of the rewrite, and the
-    // insert side needs no shuffle
-    val pairsObs = new org.apache.spark.sql.Observation()
-    val (pairsCkpt, pairsLocal) =
-      Engine.withJobDescription(spark, "MERGE: match scan") {
-        val mq = evalCompound(matchedCq, scope).df
-        val p = (if (matchedClauses.isEmpty) mq
-            else mq.select(F.col("__trow.*") +: mq.columns.toSeq
-              .filter(_ != "__trow").map(F.col): _*))
-          .withColumn("__win", winCol)
-          .observe(pairsObs, F.count(F.lit(1)).as("n"))
-          .localCheckpoint(true)
-        val nPairs: Option[Long] =
-          try Some(scala.concurrent.Await
-            .result(pairsObs.future,
-              scala.concurrent.duration.Duration("30s")).getLong(0))
-          catch { case _: java.util.concurrent.TimeoutException => None }
-        (p, if (nPairs.exists(_ <= Engine.smallMatchRowCap(p.schema)))
-          Some(p.collect()) else None)
-      }
+    // positions an in-scan filter of the rewrite, and the insert side
+    // needs no shuffle
+    val pinned = Engine.withJobDescription(spark, "MERGE: match scan") {
+      val mq = evalCompound(matchedCq, scope).df
+      Versioned.pinMatched((if (matchedClauses.isEmpty) mq
+          else mq.select(F.col("__trow.*") +: mq.columns.toSeq
+            .filter(_ != "__trow").map(F.col): _*))
+        .withColumn("__win", winCol))
+    }
+    val (pairsCkpt, pairsLocal) = (pinned.ckpt, pinned.rows)
     val pairs: DataFrame = pairsLocal match {
       // a bare LocalRelation, like sDf
       case Some(rows) => spark.createDataFrame(
@@ -997,7 +878,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     // fired UPDATE pair into its postimage, for the fresh segment
     // and the change rows alike
     val updatedCols: Seq[org.apache.spark.sql.Column] =
-      head.schema.fields.toSeq.map { f =>
+      schema.fields.toSeq.map { f =>
         val updsOnField = matchedClauses.zipWithIndex.collect {
           case (MergeUpdate(_, as), i) if as.exists(_._1 == f.name) =>
             (i, as.indexWhere(_._1 == f.name))
@@ -1013,34 +894,18 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
               .otherwise(acc)
         }.as(f.name)
       }
-    val headCols = head.schema.fieldNames.toSeq.map(F.col)
-    // ONE-PASS REWRITE of the affected segments: their rows read
-    // through the deletion-vector filter with the FIRED positions
-    // added to it (the rows no clause touched come through as they
-    // are), plus the UPDATE postimages straight from the pairs.
-    // DELETE-won rows are simply absent. No re-join of the pairs to
-    // the target, nothing persisted. A match set over the collect
-    // cap excludes its fired positions with the shuffled anti join
-    // the over-cap vectors use.
+    // the rewrite drops every FIRED position from the affected
+    // segments (the rows no clause touched come through as they are)
+    // and adds the UPDATE postimages straight from the pairs;
+    // DELETE-won rows are simply absent. No re-join of the pairs to the
+    // target, nothing persisted.
     val fired = pairs.filter(F.col("__win").isNotNull)
-    val kept: Option[DataFrame] =
-      if (affected.isEmpty) None
-      else Some((pairsLocal match {
-        case Some(rows) =>
-          val (fi, pi, wi) = (pairsCkpt.schema.fieldIndex("__file"),
-            pairsCkpt.schema.fieldIndex("__pos"),
-            pairsCkpt.schema.fieldIndex("__win"))
-          Versioned.readSegmentsAligned(spark, resolved,
-            segsAll.filter(affected), head.schema, dvMap,
-            excluded = graft.functions.DeletedPositions.of(
-              rows.iterator.filterNot(_.isNullAt(wi))
-                .map(r => (r.getString(fi), r.getLong(pi)))))
-        case None =>
-          graft.sources.DeletionVectors.antiJoin(
-            Versioned.readSegmentsAligned(spark, resolved,
-              segsAll.filter(affected), head.schema, dvMap),
-            fired)
-      }).select(headCols: _*))
+    val firedPinned = Versioned.Matched(
+      pairsCkpt.filter(F.col("__win").isNotNull),
+      pairsLocal.map { rows =>
+        val wi = pairsCkpt.schema.fieldIndex("__win")
+        rows.filterNot(_.isNullAt(wi))
+      }, nUpdated + nDeleted)
     val postimages: Option[DataFrame] =
       if (affected.isEmpty || updIdxs.isEmpty) None
       else Some(fired.filter(F.col("__win").isInCollection(updIdxs))
@@ -1068,18 +933,18 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     }
     val inserts: Option[DataFrame] = m.notMatched.map {
       case MergeInsert(_, None) =>
-        head.columns.foreach { c =>
+        schema.fieldNames.foreach { c =>
           if (!sDf.columns.contains(c)) throw new SemanticError(
             s"MERGE INSERT *: source lacks target column '$c' — use " +
             "INSERT (cols) VALUES (exprs) to map explicitly")
         }
-        insertSrc.select(head.schema.fields.map(f =>
+        insertSrc.select(schema.fields.map(f =>
           F.col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
       case MergeInsert(_, Some((cols, vals))) =>
         if (cols.length != vals.length) throw new SemanticError(
           s"MERGE INSERT: ${cols.length} columns but ${vals.length} values")
         cols.foreach { c =>
-          if (!head.columns.contains(c)) throw new SemanticError(
+          if (!schema.fieldNames.contains(c)) throw new SemanticError(
             s"MERGE INSERT references unknown target column '$c'")
         }
         // VALUES expressions compile against the SOURCE alias; the
@@ -1090,55 +955,12 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
             vals.zip(cols).map { case (v, c) => v.alias(s"__ins_$c") })
         noSubqueries("MERGE expressions", vals: _*)
         evalCompound(insCq, Map(sName -> GraftFrame.fromDF(insertSrc))).df
-          .select(head.schema.fields.map { f =>
+          .select(schema.fields.map { f =>
             if (cols.contains(f.name))
               F.col(s"__ins_${f.name}").cast(f.dataType).as(f.name)
             else F.lit(null).cast(f.dataType).as(f.name)
           }.toSeq: _*)
     }
-    // survivor count is KNOWN from metadata alone: live rows of the
-    // affected segments (footer totals − dv header counts, KB-sized
-    // reads) minus the rows a DELETE clause won — when positive the
-    // fresh union below is provably non-empty and the write skips
-    // writeSegmentIfNonEmpty's take(1) probe, a second scan just to
-    // learn what the footers already say. Also reused for the
-    // nInserted status row below.
-    val liveAffected: Long =
-      if (affected.isEmpty) 0L
-      else {
-        val totals = Versioned
-          .footerRowCountBySeg(spark, resolved, affected.toSeq)
-          .valuesIterator.sum
-        val dvDel = Versioned.dvCounts(spark, resolved,
-          dvMap.collect { case (s, d) if affected(s) => d }.toSeq)
-          .valuesIterator.sum
-        totals - dvDel
-      }
-    val survivorsNonEmpty = liveAffected - nDeleted > 0
-    // new version = untouched segments carried by reference + one
-    // fresh segment holding the affected segments' kept rows, the
-    // postimages and the inserted rows, written in ONE job
-    val fresh = Engine.withJobDescription(spark, "MERGE: rewrite") {
-      (kept.toSeq ++ postimages.toSeq ++ inserts.toSeq)
-        .reduceOption(_ unionAll _)
-        .flatMap { df =>
-          if (survivorsNonEmpty)
-            Some(Versioned.writeSegment(df, resolved))
-          else Versioned.writeSegmentIfNonEmpty(df, resolved)
-        }
-    }
-    // nInserted DERIVED from metadata, not a second execution of the
-    // source anti-join: fresh-segment rows (sidecar/footer) minus the
-    // survivor rows of the affected segments, where survivors = live
-    // rows (footer totals − dv header counts) − rows won by DELETE
-    // clauses. All exact, all KB-sized reads.
-    val nInserted: Long =
-      if (inserts.isEmpty) 0L
-      else {
-        val freshRows = fresh.fold(0L)(s =>
-          Versioned.segmentRowCount(spark, resolved, s))
-        freshRows - (liveAffected - nDeleted)
-      }
     // change-feed rows, per fired clause kind, from the same pairs.
     // An insert-only MERGE records nothing: its fresh segment holds
     // ONLY inserts, which the feed synthesizes lazily from the
@@ -1156,7 +978,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
         def tagged(cols: Seq[org.apache.spark.sql.Column], tag: String) =
           F.struct((cols :+
             F.lit(tag).as("_change_type")): _*)
-        val origCols = head.schema.fieldNames.toSeq
+        val origCols = schema.fieldNames.toSeq
           .map(n => F.col(n).as(n))
         val pre = tagged(origCols, "update_preimage")
         val post = tagged(updatedCols, "update_postimage")
@@ -1174,11 +996,22 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           inserts.map(i => Versioned.cdcTag(i, "insert"))
         Versioned.CdcRows(parts.reduce(_.unionByName(_)))
       }
-    val v = Engine.withJobDescription(spark, "MERGE: change rows") {
-      Versioned.commitPruned(spark, resolved,
-        segsAll.filterNot(affected), fresh, head.schema, dvMap,
-        cdc = cdcSpec, expectedBase = Some(hv), op = "merge")
-    }
+    // new version = untouched segments carried by reference + one
+    // fresh segment holding the affected segments' kept rows, the
+    // postimages and the inserted rows, written in ONE job
+    val (v, fresh, liveAffected) =
+      Engine.withJobDescription(spark, "MERGE: rewrite") {
+        Versioned.rewrite(snap, firedPinned, affected, nDeleted,
+          postimages.toSeq ++ inserts.toSeq, cdcSpec, "merge")
+      }
+    // nInserted DERIVED from metadata, not a second execution of the
+    // source anti-join: fresh-segment rows (sidecar/footer) minus the
+    // affected segments' survivors, i.e. their live rows less the rows
+    // DELETE clauses won
+    val nInserted: Long =
+      if (inserts.isEmpty) 0L
+      else fresh.fold(0L)(Versioned.segmentRowCount(spark, resolved, _)) -
+        (liveAffected - nDeleted)
     statusRow("version" -> v, "n_updated" -> nUpdated,
       "n_deleted" -> nDeleted, "n_inserted" -> nInserted)
     } // withSmallStmtConfs(srcSmall)
@@ -2672,20 +2505,21 @@ object Engine {
   private[graft] val MergeSmallSourceRows = 65536L
   private[graft] val MergeSmallSourceBytes = 16L * 1024 * 1024
 
-  /** Small-match gate: a MERGE match set at or under this many rows
-    * (the observed checkpoint count — exact, no extra job) is
-    * collected so the cardinality/action rollup runs driver-side, its
-    * fired positions filter the rewrite inside the scan, and
-    * downstream joins against it broadcast; a vectored UPDATE/DELETE
-    * under it builds its vectors and change rows on the driver. The
-    * row cap is scaled down for wide rows (see [[smallMatchRowCap]]). */
+  /** Small-match gate: a row-level statement's match set at or under
+    * this many rows (the observed checkpoint count — exact, no extra
+    * job) is collected by [[graft.sources.Versioned.pinMatched]], so
+    * MERGE's cardinality/action rollup runs driver-side, the matched
+    * positions filter the rewrite inside the scan, downstream joins
+    * against the set broadcast, and vectors and change rows build on
+    * the driver. The row cap is scaled down for wide rows (see
+    * [[smallMatchRowCap]]). */
   private[graft] val MergeSmallMatchRows = 65536L
   private[graft] val MergeSmallMatchBytes = 32L * 1024 * 1024
 
   /** The small-match row cap for rows of `schema`:
     * [[MergeSmallMatchRows]], scaled down for wide rows so the driver
     * copy also stays within [[MergeSmallMatchBytes]] of schema-estimated
-    * width. Shared by MERGE's pairs and the vectored DML's matched rows. */
+    * width. Applied by the one pin helper every row-level statement uses. */
   private[graft] def smallMatchRowCap(
       schema: org.apache.spark.sql.types.StructType): Long = {
     val rowW = math.max(8, schema.fields.map(_.dataType.defaultSize).sum)

@@ -30,8 +30,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     no reader ever resolves an empty set mid-update; legacy
   *     single-file `constraints.txt` reads as index −1);
   *   - `dv/` (`.dv` files)   — deletion-vector position files;
-  *   - `_cdc/c-<uuid>/`      — recorded change-feed rows (plus
-  *     `.staging-*` detection/apply scratch, vacuum-swept).
+  *   - `_cdc/c-<uuid>/`      — recorded change-feed rows (plus the
+  *     change-feed apply's `.staging-apply-*` scratch and the
+  *     `.staging-*` DML scratch earlier graft releases wrote; vacuum
+  *     sweeps both).
   *
   * Isolation guarantees, by construction:
   *   - a reader resolves ONE manifest and then touches only immutable
@@ -417,12 +419,12 @@ object Versioned {
 
   /** Write `df` as a fresh immutable segment under `path/data` and
     * return its name — the data half of a commit, invisible until a
-    * manifest references it. Shared by [[commit]] and the
-    * segment-pruned DML paths in [[graft.Engine]] — which makes it the
+    * manifest references it. Shared by [[commit]] and the row-level
+    * DML core ([[rewrite]], the vectored UPDATE's copies) — which makes it the
     * CHECK-CONSTRAINT enforcement point: one validation pass over the
     * incoming rows (cost ∝ rows written, never the table), failing
     * LOUDLY with a sample row before any data lands. */
-  private[graft] def writeSegment(df: DataFrame, path: String,
+  private def writeSegment(df: DataFrame, path: String,
       writerOptions: Map[String, String] = Map.empty): String = {
     val cs = constraints(df.sparkSession, path)
     if (cs.nonEmpty) {
@@ -458,16 +460,17 @@ object Versioned {
     * run BEFORE the write: Spark's single-directory writer opens its
     * part file eagerly per task, so an after-the-fact file listing
     * cannot distinguish empty output from small output. */
-  private[graft] def writeSegmentIfNonEmpty(df: DataFrame, path: String,
+  private def writeSegmentIfNonEmpty(df: DataFrame, path: String,
       writerOptions: Map[String, String] = Map.empty): Option[String] =
     if (df.isEmpty) None else Some(writeSegment(df, path, writerOptions))
 
-  /** Commit the result of a pruned DML: `carried` untouched segments
-    * (by reference) plus the optional freshly written one. A DML that
+  /** Commit the result of the row-level [[rewrite]] (or a vector
+    * purge): `carried` untouched segments (by reference, keeping their
+    * vectors) plus the optional freshly written one. A statement that
     * empties the dataset entirely still commits a READABLE version: a
     * metadata-only empty segment carrying `schema` (an empty manifest
     * would leave `read` with no footers to resolve a schema from). */
-  private[graft] def commitPruned(spark: SparkSession, path: String,
+  private def commitPruned(spark: SparkSession, path: String,
       carried: Seq[String], fresh: Option[String],
       schema: org.apache.spark.sql.types.StructType,
       dvs: Map[String, String] = Map.empty,
@@ -709,31 +712,6 @@ object Versioned {
     df.drop(ReservedProvenanceCols: _*)
       .withColumn("_change_type", org.apache.spark.sql.functions
         .lit(changeType))
-  }
-
-  /** Materialize a DML statement's MATCHED rows (provenance-tagged)
-    * once, to a parquet staging dir under `_cdc/` — the single
-    * detection scan then serves segment pruning, status counts,
-    * replacement/postimage construction AND the change-feed rows,
-    * instead of re-scanning the table for each consumer. Cost ∝
-    * matched rows, never the table. Returns (staging dir, re-reader);
-    * the caller deletes the dir after commit ([[vacuum]] sweeps
-    * crash orphans). */
-  private[graft] def stageMatched(df: DataFrame, path: String)
-      : (String, DataFrame, Long) = {
-    val spark = df.sparkSession
-    val dir = s"$path/_cdc/.staging-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    df.write.parquet(dir)
-    // matched-row COUNT from the just-written footers (KB metadata
-    // reads, no job) — lets callers decide survivor emptiness from
-    // arithmetic instead of a take(1) probe job (round 18; the same
-    // shortcut the MERGE path's liveAffected uses)
-    val n = try Tables.parquetRows(spark.sparkContext.hadoopConfiguration,
-        new Path(dir))
-      catch { case scala.util.control.NonFatal(_) => -1L }
-    // explicit schema: an empty match writes no part files to infer from
-    (dir, spark.read.schema(df.schema).parquet(dir), n)
   }
 
   /** EXACT row count of a committed snapshot from parquet FOOTER
@@ -1098,6 +1076,14 @@ object Versioned {
       readDvMap(spark, path, v))
   }
 
+  /** The named segments' live rows aligned to `schema`, without
+    * provenance — an incremental reader's view of added segments. */
+  private[graft] def readSegments(spark: SparkSession, path: String,
+      segs: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      dvMap: Map[String, String]): DataFrame =
+    readSegmentsAligned(spark, path, segs, schema, dvMap)
+      .drop(ReservedProvenanceCols: _*)
+
   /** Read ONLY the named segments, provenance-tagged and aligned to
     * `schema` (the head's merged schema): segments written before a
     * widening append serve explicit NULLs for the evolved columns, so
@@ -1106,7 +1092,7 @@ object Versioned {
     * segments carry. `excluded` adds positions to drop on top of the
     * segments' vectors, in the same in-scan filter (how MERGE leaves
     * out the rows its clauses rewrote). */
-  private[graft] def readSegmentsAligned(
+  private def readSegmentsAligned(
       spark: SparkSession, path: String, segs: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
       dvMap: Map[String, String] = Map.empty,
@@ -1134,190 +1120,235 @@ object Versioned {
       dvMap.filter { case (s, _) => segSet.contains(s) }, excluded)
   }
 
-  /** Copy-on-write DELETE: commit a new version holding the head's rows
-    * that do NOT match `predicate` — the takedown/GDPR primitive on the
-    * publishing layer. The delete is itself a version: prior snapshots
-    * stay readable (audit trail) until [[vacuum]] retires them, exactly
-    * like a lakehouse table format.
-    *
-    * SEGMENT-PRUNED: a detection pass (predicate pushed into the
-    * parquet scan, `__seg`-distinct collect bounded by the manifest
-    * length) finds the segments holding matched rows; only THOSE are
-    * rewritten — every untouched segment carries into the new manifest
-    * by reference, files byte-identical. A selective delete on a 100 TB
-    * corpus costs the matched segments, not the table. A no-match
-    * delete is a manifest-only commit. Returns the new version. */
-  def deleteWhere(spark: SparkSession, path: String,
-                  predicate: org.apache.spark.sql.Column): Long = {
-    // standard DELETE semantics: remove rows where the predicate is TRUE.
-    // Survivors are everything else — including rows where the predicate
-    // is NULL (e.g. `lang != 'en'` with NULL lang). A bare `!predicate`
-    // would keep only FALSE rows and silently drop the NULL ones.
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    // resolve the head ONCE: every read below pins this version, so a
-    // commit landing mid-statement cannot desynchronize the detection
-    // pass from the carried-segment list (it fails the final rename
-    // loudly instead — the single-writer contract)
+  /** A row-level statement's pinned snapshot: the head version and, from
+    * that one manifest, its segments, committed schema and
+    * deletion-vector map. The matched-row scan, the carried-segment
+    * list, the rewrite and the commit's compare-and-swap all describe
+    * this version, so a commit landing mid-statement fails the final
+    * rename loudly instead of desynchronizing them. */
+  private[graft] final case class Snapshot(spark: SparkSession,
+      path: String, version: Long, segs: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      dvMap: Map[String, String])
+
+  /** Pin the head of `path` for a `kind` statement (DELETE, UPDATE or
+    * MERGE) and run the reserved-name guard: the core appends
+    * provenance columns to the scan and change columns to the feed, so
+    * a table column — or one of `otherColumns`, MERGE's source — named
+    * like one of them or like `extraReserved` would otherwise fail deep
+    * inside as an ambiguous reference. */
+  private[graft] def pin(spark: SparkSession, path: String, kind: String,
+      extraReserved: Seq[String] = Nil,
+      otherColumns: Seq[String] = Nil): Snapshot = {
     val hv = headVersion(spark, path)
-    val segsAll = headSegments(spark, path, Some(hv))
-    val headSchema = read(spark, path, Some(hv)).schema
-    (ReservedProvenanceCols ++ CdcReservedCols).foreach { c =>
-      require(!headSchema.fieldNames.contains(c),
-        s"deleteWhere: dataset at $path has reserved column name '$c' — " +
-          "the copy-on-write rewrite appends it for row provenance")
+    val schema = openRelation(spark, path, Some(hv))._1.schema
+    (ReservedProvenanceCols ++ CdcReservedCols ++ extraReserved).foreach { c =>
+      require(!schema.fieldNames.contains(c) && !otherColumns.contains(c),
+        s"$kind: reserved column name '$c' at $path")
     }
-    val matched = coalesce(predicate, lit(false))
-    // detection filters on the RAW predicate: a Filter already keeps
-    // only TRUE rows (NULLs drop), and the bare comparison shape is
-    // what parquet row-group pruning + pushdown can consume — the
-    // coalesce wrapper would block both and force a full-table
-    // detection scan (the survivor filter below still needs it: there
-    // NULL-predicate rows must be KEPT)
-    val detection = readWithProvenance(spark, path, Some(hv)).filter(predicate)
-    // the predicate is evaluated TWICE (detection, then the rewrite) —
-    // a non-deterministic one (rand()) could match rows in segments the
-    // detection pass did not flag, which would then never rewrite;
-    // reject loudly instead of silently under-deleting
-    detection.queryExecution.analyzed.foreach {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        require(f.condition.deterministic,
-          "deleteWhere predicates must be deterministic (the predicate " +
-            "is evaluated once to find affected segments and again to " +
-            s"rewrite them): ${f.condition.sql}")
-      case _ => ()
-    }
-    val dvMap = readDvMap(spark, path, hv)
-    // ONE detection scan, staged: segment pruning and the change-feed
-    // rows both read the (matched-row-sized) staging file, never the
-    // table again
-    val (stagingDir, staged, nMatched) = stageMatched(detection, path)
-    try {
-      val affected = staged
-        .select("__seg").distinct().collect().map(_.getString(0)).toSet
-      if (affected.isEmpty) commitSegments(spark, path, segsAll, dvMap,
-        expectedBase = Some(hv), op = "delete")
-      else {
-        val survivors = readSegmentsAligned(spark, path,
-            segsAll.filter(affected), headSchema, dvMap)
-          .filter(!matched)
-          .select(headSchema.fieldNames.map(org.apache.spark.sql
-            .functions.col).toSeq: _*)
-        // survivor emptiness from metadata (round 18): live rows of
-        // the affected segments (stats sidecar / footer totals − dv
-        // header counts) minus the staged matched count — when
-        // positive the rewrite is provably non-empty and
-        // writeSegmentIfNonEmpty's take(1) probe job is skipped (the
-        // MERGE path's liveAffected rule). segmentRowCount is
-        // sidecar-first (KB driver reads, no scheduler job), which is
-        // only a win while the affected set is small — a massively
-        // pruned-but-wide delete keeps the single probe job rather
-        // than paying O(affected) serial driver reads.
-        val survivorsKnownNonEmpty =
-          affected.size <= 128 && nMatched >= 0 && {
-            val liveAffected =
-              segsAll.filter(affected)
-                .map(s => segmentRowCount(spark, path, s)).sum -
-                dvCounts(spark, path, dvMap.collect {
-                  case (s, d) if affected(s) => d }.toSeq)
-                  .valuesIterator.sum
-            liveAffected - nMatched > 0
-          }
-        val fresh =
-          if (survivorsKnownNonEmpty) Some(writeSegment(survivors, path))
-          else writeSegmentIfNonEmpty(survivors, path)
-        commitPruned(spark, path, segsAll.filterNot(affected), fresh,
-          headSchema, dvMap, cdc = CdcRows(cdcTag(staged, "delete")),
-          expectedBase = Some(hv), op = "delete")
-      }
-    } finally fsOf(spark, path).delete(new Path(stagingDir), true)
+    Snapshot(spark, path, hv, headSegments(spark, path, Some(hv)), schema,
+      readDvMap(spark, path, hv))
   }
 
-  /** MERGE-ON-READ delete: like [[deleteWhere]], but matched rows are
-    * recorded in per-segment DELETION VECTORS instead of rewriting the
-    * segments — every segment carries into the new manifest
-    * byte-identical, and the statement's write cost is proportional to
-    * the MATCHED ROW COUNT (position lists), not to the affected
-    * segments' size. The right half of the delete spectrum: a
-    * takedown of scattered single rows at 100 TB. Vectors union with
-    * any prior vector on the same segment. A matched set within the
-    * small-match cap builds its vectors and change rows on the driver;
-    * a larger one is staged and its vectors build in tasks grouped by
-    * segment (see [[withMatchedVectors]]). [[compact]]/OPTIMIZE and any COW
-    * rewrite of the segment later materialize them. Returns the new
-    * version. */
-  def deleteWhereVectored(spark: SparkSession, path: String,
-                          predicate: org.apache.spark.sql.Column): Long = {
-    val hv = headVersion(spark, path)
-    val segsAll = headSegments(spark, path, Some(hv))
-    val headSchema = read(spark, path, Some(hv)).schema
-    (ReservedProvenanceCols ++ CdcReservedCols).foreach { c =>
-      require(!headSchema.fieldNames.contains(c),
-        s"deleteWhereVectored: dataset at $path has reserved column " +
-          s"name '$c' — the vector build keys on it for row provenance")
-    }
-    val dvOld = readDvMap(spark, path, hv)
-    // detection reads DV-applied provenance: an already-deleted row can
-    // neither re-match nor be recorded twice
-    val detection = readWithProvenance(spark, path, Some(hv))
-      .filter(predicate)
-    detection.queryExecution.analyzed.foreach {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        require(f.condition.deterministic,
-          "deleteWhereVectored predicates must be deterministic: " +
-            f.condition.sql)
-      case _ => ()
-    }
-    withMatchedVectors(detection, path, dvOld) { (matched, newEntries) =>
-      if (newEntries.isEmpty) commitSegments(spark, path, segsAll, dvOld,
-        expectedBase = Some(hv), op = "delete-vectored")
-      else commitSegments(spark, path, segsAll, dvOld ++ newEntries,
-        cdc = CdcRows(cdcTag(matched, "delete")),
-        expectedBase = Some(hv), op = "delete-vectored")
-    }
+  /** A statement's matched rows, pinned: `ckpt` is the local checkpoint
+    * of the one scan that found them, `rows` the same rows on the driver
+    * when they fit the small-match cap, `n` their exact count. */
+  private[graft] final case class Matched(ckpt: DataFrame,
+      rows: Option[Array[org.apache.spark.sql.Row]], n: Long) {
+    /** The rows as a frame: one local partition within the cap (one
+      * file per write), the checkpoint past it. */
+    lazy val frame: DataFrame = rows.fold(ckpt)(rs => ckpt.sparkSession
+      .createDataFrame(java.util.Arrays.asList(rs: _*), ckpt.schema)
+      .coalesce(1))
   }
 
-  /** Pin a vectored DML's matched rows (provenance-tagged) with ONE
-    * scan whose row count rides the same job, build their vectors, and
-    * run `body(matched rows, segment → new vector file)`. Within MERGE's
-    * small-match cap the rows come to the driver: vectors are built and
-    * written there and `body` gets a one-partition local frame — no
-    * staging round-trip, no shuffle. Past it the rows are staged to
-    * parquet ([[stageMatched]]) and the vectors build in tasks
-    * ([[buildVectors]]); the staging dir is deleted after `body`. */
-  private def withMatchedVectors[T](matched: DataFrame, path: String,
-      dvOld: Map[String, String])(
-      body: (DataFrame, Map[String, String]) => T): T = {
+  /** Pin `matched` with ONE scan: its row count rides the checkpoint's
+    * job through `observe`, and a set within
+    * [[graft.Engine.smallMatchRowCap]] then comes to the driver, so its
+    * vectors, positions and change rows need no further scan. Cost ∝
+    * matched rows, never the table. */
+  private[graft] def pinMatched(matched: DataFrame): Matched = {
     import org.apache.spark.sql.{functions => F}
-    val spark = matched.sparkSession
     val obs = new org.apache.spark.sql.Observation()
-    val pinned = matched.observe(obs, F.count(F.lit(1)).as("n"))
+    val ckpt = matched.observe(obs, F.count(F.lit(1)).as("n"))
       .localCheckpoint(true)
-    val n: Option[Long] =
-      try Some(scala.concurrent.Await.result(obs.future,
-        scala.concurrent.duration.Duration("30s")).getLong(0))
-      catch { case _: java.util.concurrent.TimeoutException => None }
-    if (n.exists(_ <= graft.Engine.smallMatchRowCap(matched.schema))) {
-      val rows = pinned.collect()
-      val conf = spark.sparkContext.hadoopConfiguration
-      val Seq(fi, pi, si) =
-        Seq("__file", "__pos", "__seg").map(matched.schema.fieldIndex)
-      // vectors key positions by part-file name, the path's last part
-      def fileName(r: org.apache.spark.sql.Row) = {
-        val f = r.getString(fi)
-        f.substring(f.lastIndexOf('/') + 1)
-      }
-      val newEntries = rows.groupBy(_.getString(si)).map { case (seg, rs) =>
-        seg -> publishVector(conf, path, seg, dvOld.get(seg),
-          rs.toSeq.groupMap(fileName)(_.getLong(pi)))
-      }
-      body(spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        matched.schema).coalesce(1), newEntries)
-    } else {
-      val (dir, staged, _) = stageMatched(pinned, path)
-      try body(staged, buildVectors(spark, path, staged, dvOld))
-      finally fsOf(spark, path).delete(new Path(dir), true)
-    }
+    // the observed count lands with the job's end; a late one costs a
+    // count over the checkpoint, never a second table scan
+    val n =
+      try scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration("30s")).getLong(0)
+      catch { case _: java.util.concurrent.TimeoutException => ckpt.count() }
+    Matched(ckpt,
+      if (n <= graft.Engine.smallMatchRowCap(ckpt.schema)) Some(ckpt.collect())
+      else None, n)
   }
+
+  /** THE row-level rewrite: the `affected` segments' live rows minus the
+    * `excluded` positions, plus the `added` frames, written as ONE fresh
+    * segment and committed with every untouched segment carried by
+    * reference (files byte-identical; a rewritten segment materializes
+    * its vector). Within the small-match cap the excluded positions
+    * leave inside the scan, through the vector filter; past it, through
+    * the shuffled anti join. `dropped` counts the affected rows that
+    * leave for good: when the affected segments' live rows (footer or
+    * sidecar totals − vector header counts, KB-sized reads) exceed it,
+    * the write is provably non-empty and skips the take(1) emptiness
+    * probe. An empty `affected` with nothing added is a manifest-only
+    * commit. Returns (new version, fresh segment, live affected rows). */
+  private[graft] def rewrite(snap: Snapshot, excluded: Matched,
+      affected: Set[String], dropped: Long, added: Seq[DataFrame],
+      cdc: CdcSpec, op: String): (Long, Option[String], Long) = {
+    import org.apache.spark.sql.{functions => F}
+    val Snapshot(spark, path, hv, segs, schema, dvMap) = snap
+    val touched = segs.filter(affected)
+    val kept = if (touched.isEmpty) None else Some((excluded.rows match {
+      case Some(rows) =>
+        val Seq(fi, pi) = Seq("__file", "__pos").map(excluded.ckpt.schema.fieldIndex)
+        readSegmentsAligned(spark, path, touched, schema, dvMap,
+          excluded = graft.functions.DeletedPositions.of(
+            rows.iterator.map(r => (r.getString(fi), r.getLong(pi)))))
+      case None => DeletionVectors.antiJoin(
+        readSegmentsAligned(spark, path, touched, schema, dvMap), excluded.ckpt)
+    }).select(schema.fieldNames.toSeq.map(F.col): _*))
+    val live =
+      if (touched.isEmpty) 0L
+      else footerRowCountBySeg(spark, path, touched).valuesIterator.sum -
+        dvCounts(spark, path, touched.flatMap(dvMap.get)).valuesIterator.sum
+    val fresh = (kept.toSeq ++ added).reduceOption(_ unionAll _).flatMap { df =>
+      if (live - dropped > 0) Some(writeSegment(df, path))
+      else writeSegmentIfNonEmpty(df, path)
+    }
+    (commitPruned(spark, path, segs.filterNot(affected), fresh, schema,
+      dvMap, cdc, Some(hv), op), fresh, live)
+  }
+
+  /** Copy-on-write DELETE: commit a new version without the head's rows
+    * where `predicate` is TRUE (a NULL keeps the row) — the
+    * takedown/GDPR primitive on the publishing layer. The delete is
+    * itself a version: prior snapshots stay readable until [[vacuum]]
+    * retires them. The matched rows are pinned once and their positions
+    * leave the affected segments in one [[rewrite]]; untouched segments
+    * carry by reference, so a selective delete on a 100 TB corpus costs
+    * the matched segments, not the table. Returns the new version. */
+  def deleteWhere(spark: SparkSession, path: String,
+                  predicate: org.apache.spark.sql.Column): Long =
+    rowLevel(pin(spark, path, "DELETE"), predicate, None, vectored = false)._1
+
+  /** MERGE-ON-READ delete: like [[deleteWhere]], but the matched
+    * positions land in per-segment DELETION VECTORS (unioned with any
+    * prior vector) and every segment carries byte-identical — write
+    * cost ∝ matched rows, the takedown of scattered single rows at
+    * 100 TB. [[compact]]/OPTIMIZE and any copy-on-write rewrite of the
+    * segment later materialize them. Returns the new version. */
+  def deleteWhereVectored(spark: SparkSession, path: String,
+                          predicate: org.apache.spark.sql.Column): Long =
+    rowLevel(pin(spark, path, "DELETE"), predicate, None, vectored = true)._1
+
+  /** Copy-on-write UPDATE: rows where `predicate` is TRUE carry the
+    * `sets` values (column name → expression, cast here to the
+    * committed type so the schema never drifts); a NULL keeps the row.
+    * One [[rewrite]] writes the affected segments' other rows and the
+    * postimages. Returns (new version, rows updated). */
+  def updateWhere(spark: SparkSession, path: String,
+      predicate: org.apache.spark.sql.Column,
+      sets: Seq[(String, org.apache.spark.sql.Column)]): (Long, Long) =
+    rowLevel(pin(spark, path, "UPDATE"), predicate, Some(sets), vectored = false)
+
+  /** MERGE-ON-READ UPDATE: vector away the matched positions and APPEND
+    * one segment of their updated copies — write cost ∝ matched rows,
+    * never the segments holding them. Returns (new version, rows
+    * updated). */
+  def updateWhereVectored(spark: SparkSession, path: String,
+      predicate: org.apache.spark.sql.Column,
+      sets: Seq[(String, org.apache.spark.sql.Column)]): (Long, Long) =
+    rowLevel(pin(spark, path, "UPDATE"), predicate, Some(sets), vectored = true)
+
+  /** DELETE (`sets` empty) or UPDATE over a pinned snapshot, in either
+    * write mode: the matched rows are pinned once ([[pinMatched]]) and
+    * feed the change rows, the postimages and either the vectors
+    * (`vectored`) or the [[rewrite]]. A statement matching nothing
+    * commits the head's segments and vectors unchanged. Returns (new
+    * version, rows matched). */
+  private[graft] def rowLevel(snap: Snapshot,
+      predicate: org.apache.spark.sql.Column,
+      sets: Option[Seq[(String, org.apache.spark.sql.Column)]],
+      vectored: Boolean): (Long, Long) = {
+    import org.apache.spark.sql.{functions => F}
+    val Snapshot(spark, path, hv, segs, schema, dvMap) = snap
+    val kind = if (sets.isEmpty) "DELETE" else "UPDATE"
+    sets.toSeq.flatten.foreach { case (n, _) =>
+      require(schema.fieldNames.contains(n), s"$kind SET references unknown column '$n'")
+    }
+    // the raw predicate filters (a Filter keeps TRUE rows only, and the
+    // bare comparison is what parquet pushdown and row-group pruning
+    // consume) over the vector-filtered provenance read: an
+    // already-deleted row can neither re-match nor be recorded twice
+    val scan = readWithProvenance(spark, path, Some(hv)).filter(predicate)
+    // evaluated once, yet a statement's matched set must still be a
+    // function of its snapshot: one retried after losing its
+    // compare-and-swap must match the same rows
+    scan.queryExecution.analyzed.foreach {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        require(f.condition.deterministic,
+          s"$kind predicates must be deterministic: ${f.condition.sql}")
+      case _ => ()
+    }
+    val m = pinMatched(scan)
+    val post = sets.map(s => m.frame.select(schema.fields.map { f =>
+      s.find(_._1 == f.name) match {
+        case Some((_, rhs)) => rhs.cast(f.dataType).as(f.name)
+        case None => F.col(f.name)
+      }
+    }.toSeq: _*))
+    val op = kind.toLowerCase(java.util.Locale.ROOT) +
+      (if (vectored) "-vectored" else "")
+    val v =
+      if (m.n == 0) rewrite(snap, m, Set.empty, 0L, Nil, CdcNone, op)._1
+      else {
+        val cdc = CdcRows(post.fold(cdcTag(m.frame, "delete"))(p =>
+          cdcTag(m.frame, "update_preimage")
+            .unionByName(cdcTag(p, "update_postimage"))))
+        if (vectored)
+          commitSegments(spark, path, segs ++ post.map(writeSegment(_, path)),
+            dvMap ++ vectors(snap, m), cdc, expectedBase = Some(hv), op = op)
+        else {
+          val affected = m.rows match {
+            case Some(rows) =>
+              val si = m.ckpt.schema.fieldIndex("__seg")
+              rows.iterator.map(_.getString(si)).toSet
+            case None => m.ckpt.select("__seg").distinct().collect()
+              .map(_.getString(0)).toSet
+          }
+          // an UPDATE's postimages replace every row it excludes
+          rewrite(snap, m, affected, if (post.isEmpty) m.n else 0L,
+            post.toSeq, cdc, op)._1
+        }
+      }
+    (v, m.n)
+  }
+
+  /** The matched positions as deletion vectors, each unioned with its
+    * segment's prior vector: built and written on the driver within the
+    * small-match cap, in tasks grouped by segment past it
+    * ([[buildVectors]] over the checkpoint). Returns segment → new
+    * vector file. */
+  private def vectors(snap: Snapshot, m: Matched): Map[String, String] =
+    m.rows match {
+      case Some(rows) =>
+        val conf = snap.spark.sparkContext.hadoopConfiguration
+        val Seq(fi, pi, si) =
+          Seq("__file", "__pos", "__seg").map(m.ckpt.schema.fieldIndex)
+        // vectors key positions by part-file name, the path's last part
+        def fileName(r: org.apache.spark.sql.Row) = {
+          val f = r.getString(fi)
+          f.substring(f.lastIndexOf('/') + 1)
+        }
+        rows.groupBy(_.getString(si)).map { case (seg, rs) =>
+          seg -> publishVector(conf, snap.path, seg, snap.dvMap.get(seg),
+            rs.toSeq.groupMap(fileName)(_.getLong(pi)))
+        }
+      case None => buildVectors(snap.spark, snap.path, m.ckpt, snap.dvMap)
+    }
 
   /** Publish a segment's new vector: its prior vector (if any) ∪ the
     * newly deleted positions per part-file name. Returns the file name.
@@ -1337,7 +1368,7 @@ object Versioned {
     * of matched rows: hash-cluster by segment, each task unions its
     * segments' positions with any prior vector and publishes a fresh
     * one; only (segment → vector name) pairs return to the driver.
-    * The staged path of the vectored DELETE and UPDATE. */
+    * The over-cap path of the vectored DELETE and UPDATE. */
   private def buildVectors(spark: SparkSession, path: String,
       matched: DataFrame,
       dvOld: Map[String, String]): Map[String, String] = {
@@ -1369,77 +1400,6 @@ object Versioned {
         seg -> publishVector(conf, path, seg, dvOld.get(seg), files.toMap)
       }
     }.collect().toMap
-  }
-
-  /** MERGE-ON-READ UPDATE: vector away the matched rows' positions and
-    * APPEND one fresh segment holding their updated copies — the
-    * positional-delete-plus-append shape. Write cost is proportional
-    * to the MATCHED ROWS (position lists + their rewritten copies),
-    * never to the segments that hold them: the scattered-update dual
-    * of [[deleteWhereVectored]], with the same driver and staged paths.
-    * `sets` maps column name → replacement expression (already cast to
-    * the committed type by the caller). Returns (new version, rows
-    * updated). */
-  def updateWhereVectored(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column,
-      sets: Seq[(String, org.apache.spark.sql.Column)]): (Long, Long) = {
-    import org.apache.spark.sql.{functions => F}
-    val hv = headVersion(spark, path)
-    val segsAll = headSegments(spark, path, Some(hv))
-    val headSchema = read(spark, path, Some(hv)).schema
-    (ReservedProvenanceCols ++ CdcReservedCols).foreach { c =>
-      require(!headSchema.fieldNames.contains(c),
-        s"updateWhereVectored: dataset at $path has reserved column " +
-          s"name '$c' — the vector build keys on it for row provenance")
-    }
-    sets.foreach { case (n, _) =>
-      require(headSchema.fieldNames.contains(n),
-        s"updateWhereVectored: unknown column '$n'")
-    }
-    val dvOld = readDvMap(spark, path, hv)
-    val matched = readWithProvenance(spark, path, Some(hv))
-      .filter(predicate)
-    matched.queryExecution.analyzed.foreach {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        require(f.condition.deterministic,
-          "updateWhereVectored predicates must be deterministic (the " +
-            "matched set is evaluated for the vector build and again " +
-            s"for the replacement rows): ${f.condition.sql}")
-      case _ => ()
-    }
-    withMatchedVectors(matched, path, dvOld) { (m, newEntries) =>
-      if (newEntries.isEmpty)
-        (commitSegments(spark, path, segsAll, dvOld,
-          expectedBase = Some(hv), op = "update-vectored"), 0L)
-      else {
-        // the replacement rows: every matched row with assignments
-        // applied. Non-empty vectors imply >= 1 matched row, so the
-        // segment is written without an emptiness probe
-        val replacements = m.select(headSchema.fields.map { f =>
-          sets.find(_._1 == f.name) match {
-            case Some((_, rhs)) => rhs.cast(f.dataType).as(f.name)
-            case None => F.col(f.name)
-          }
-        }.toSeq: _*)
-        val fresh = writeSegment(replacements, path)
-        val v = commitSegments(spark, path, segsAll :+ fresh,
-          dvOld ++ newEntries,
-          cdc = CdcRows(cdcTag(m, "update_preimage")
-            .unionByName(cdcTag(replacements, "update_postimage"))),
-          expectedBase = Some(hv), op = "update-vectored")
-        // updated count from vector headers: new total minus old total
-        // — metadata, not a scan. Untouched segments cancel out of the
-        // difference, so only TOUCHED segments' vectors are read,
-        // through batched dvCounts
-        val touched = newEntries.keySet
-        val names = (newEntries.values ++ dvOld.collect {
-          case (s, d) if touched.contains(s) => d }).toSeq.distinct
-        val counts = dvCounts(spark, path, names)
-        def total(m: Map[String, String]) = m.collect {
-          case (s, d) if touched.contains(s) => counts(d) }.sum
-        (v, total(dvOld ++ newEntries) - total(dvOld))
-      }
-    }
   }
 
   /** On-disk byte size per segment: serial `getContentSummary` up to a
@@ -1731,7 +1691,8 @@ object Versioned {
     * z-range segments keep each clustered dimension's selective
     * predicates down to the overlapping slice of the table for reads
     * and DML alike. One data pass: the z-coded frame is
-    * range-bucketed by zcode quantile cutpoints, written ONCE
+    * range-partitioned on the z-code into `k` partitions, each
+    * partition's id is its bucket, the frame is written ONCE
     * partitioned by bucket into a staging dir under `path`, and each
     * bucket directory RENAMES into place as an immutable segment
     * (same-filesystem move, zero byte copies) before the usual
@@ -1746,18 +1707,15 @@ object Versioned {
     val src = read(spark, path, Some(hv))
     val dataSchema = src.schema
     val (zdf, zname) = withZcode(src, cols)
-    // bounded driver collect: k-1 doubles, data-volume-free
-    val cuts = zdf.stat.approxQuantile(zname,
-      (1 until k).map(_.toDouble / k).toArray, 0.001).distinct.sorted
-    val bk = cuts.foldLeft(F.lit(0)) { (acc, c) =>
-      acc + F.when(F.col(zname) > c, 1).otherwise(0)
-    }
     val tmp =
       s"$path/.optimize-tmp-${java.util.UUID.randomUUID().toString.take(8)}"
     val fs = fsOf(spark, path)
     try {
-      zdf.withColumn("__zbk", bk)
-        .repartitionByRange(k, F.col("__zbk"), F.col(zname))
+      // the range partition IS the bucket: its sample job cuts the
+      // z-code ranges (an explicit partition count is never coalesced
+      // by AQE, so every bucket keeps its own partition)
+      zdf.repartitionByRange(k, F.col(zname))
+        .withColumn("__zbk", F.spark_partition_id())
         .sortWithinPartitions("__zbk", zname)
         .drop(zname)
         .write.options(writerOptions).partitionBy("__zbk").parquet(tmp)
@@ -1886,9 +1844,10 @@ object Versioned {
     }
     // change-feed dirs retire when no RETAINED manifest references
     // them; the same sweep collects crash orphans (a cdc dir written
-    // before a manifest rename that never happened) and DML
-    // detection-scan staging (the single-writer maintenance contract,
-    // like .optimize-tmp-)
+    // before a manifest rename that never happened), the change-feed
+    // apply's staging, and the DML staging earlier graft releases
+    // wrote (the single-writer maintenance contract, like
+    // .optimize-tmp-)
     val cdcDir = new Path(s"$path/_cdc")
     var cdcDeleted = 0
     if (fs.exists(cdcDir)) {

@@ -934,8 +934,8 @@ object Streams {
     // DISTRIBUTED STAGING PATH (feed past the estimate gate): the net
     // frame stages on the TARGET's storage (cluster-visible — a
     // driver-local temp dir would break the MERGE's executor reads on
-    // a real cluster), named like the DML detection staging so a crash
-    // orphan is swept by the target's vacuum. Bounds + COUNT are
+    // a real cluster), under `_cdc/.staging-*` so a crash orphan is
+    // swept by the target's vacuum. Bounds + COUNT are
     // observe()d DURING the staging write — one job, not a write plus
     // a second aggregation pass.
     val tmp = s"$targetPath/_cdc/.staging-apply-" +

@@ -332,7 +332,7 @@ class VersionedStreamSource(sqlContext: SQLContext, path: String,
     val have = adds.columns.toSet
     // project onto the PINNED schema: evolved trailing columns from
     // commits after source creation drop; pre-widening segments serve
-    // explicit NULLs (the readSegmentsAligned discipline)
+    // explicit NULLs (the Versioned.readSegments discipline)
     val aligned = adds.select(schema.fields.map { f =>
       if (have(f.name)) F.col(f.name).cast(f.dataType).as(f.name)
       else F.lit(null).cast(f.dataType).as(f.name)
@@ -393,8 +393,7 @@ class VersionedStreamSource(sqlContext: SQLContext, path: String,
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
     else
-      Versioned.readSegmentsAligned(spark, path, added, tableSchema, dvTo)
-        .drop(Versioned.ReservedProvenanceCols: _*)
+      Versioned.readSegments(spark, path, added, tableSchema, dvTo)
   }
 
   override def stop(): Unit = ()

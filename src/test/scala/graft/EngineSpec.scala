@@ -1740,6 +1740,31 @@ class EngineSpec extends SparkSpec {
       }
       assert(rows(engine.sql(s"SELECT COUNT() AS n FROM '$ds'").df) ==
         Set(Seq(592L)))
+      // copy-on-write DML and a multi-segment OPTIMIZE on a numeric
+      // fixture: same labels, and no more jobs than each ran while UPDATE
+      // staged its matched rows to parquet and re-evaluated its
+      // predicate in the rewrite (5, 5 and 7 jobs on this fixture). The
+      // SEGMENTS form must run one fewer: its buckets are the range
+      // partitions, with no quantile pass over the z-codes first
+      val num = s"$out/num"
+      (0 until 2).foreach { k =>
+        graft.sources.Versioned.commit((k * 300L + 1 to k * 300L + 300)
+          .map(i => (i, i * 7 % 101)).toDF("id", "score"), num)
+      }
+      Seq(
+        ("UPDATE", s"UPDATE '$num' SET score = score + 1 WHERE id >= 10 AND id < 20", 5),
+        ("DELETE", s"DELETE FROM '$num' WHERE id >= 30 AND id < 40", 5),
+        ("OPTIMIZE", s"OPTIMIZE '$num' ZORDER BY (id, score) SEGMENTS 2", 6)
+      ).foreach { case (kind, stmt, maxJobs) =>
+        val descs = jobDescriptions(stmt)
+        assert(descs.nonEmpty, s"$kind ran no job")
+        assert(descs.forall(_ == kind), s"$kind jobs: ${descs.mkString(", ")}")
+        assert(descs.size <= maxJobs,
+          s"$kind ran ${descs.size} jobs, more than $maxJobs")
+      }
+      assert(rows(engine.sql(s"SELECT COUNT() AS n FROM '$num'").df) ==
+        Set(Seq(590L)))
+      assert(graft.sources.Versioned.segmentCount(spark, num) == 2)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

@@ -8,9 +8,9 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.sources.Versioned
 
 /** Row positions instead of joins: deletion vectors filter inside the
-  * scan, MERGE rewrites its affected segments in one pass (fired
-  * positions excluded, postimages added), and vectored UPDATE/DELETE
-  * build small vectors on the driver. Every expectation here is computed
+  * scan, MERGE, UPDATE and DELETE rewrite their affected segments in one
+  * pass (matched positions excluded, postimages added), and vectored
+  * UPDATE/DELETE build small vectors on the driver. Every expectation here is computed
   * by the spec itself — from raw parquet reads of the segment files or
   * from plain Scala over the ids — never by the code under test. */
 class RowPositionSpec extends SparkSpec {
@@ -124,10 +124,10 @@ class RowPositionSpec extends SparkSpec {
     assert(jVectored <= jPlain, s"vectored $jVectored vs plain $jPlain jobs")
   }
 
-  /** 80k rows in 4 segments: the size at which a match set passes the
-    * 65,536-row small-match cap. */
-  private def big(tag: String): String = ds(tag, nSeg = 4, perSeg = 20000,
-    files = 2)
+  /** 80k rows in 4 segments (or `nSeg` of 20k): the size at which a
+    * match set passes the 65,536-row small-match cap. */
+  private def big(tag: String, nSeg: Int = 4): String =
+    ds(tag, nSeg = nSeg, perSeg = 20000, files = 2)
 
   private def changesAt(path: String): DataFrame = {
     val hv = Versioned.versions(spark, path).last
@@ -173,32 +173,54 @@ class RowPositionSpec extends SparkSpec {
       expectedChanges)
   }
 
-  /** Run a vectored UPDATE and a vectored DELETE whose matched sets are
-    * `ids` (as id ranges), checking reads, status rows and change rows
-    * against the spec's own arithmetic. */
+  /** Run an UPDATE and a DELETE — vectored, or copy-on-write when
+    * `vectored` is false — whose matched sets are the id ranges
+    * [updLo, updHi) and [delLo, delHi) of a `nSeg`-segment table,
+    * checking reads, status rows and change rows against the spec's own
+    * arithmetic, and how each statement left the segments. */
   private def vectoredDml(tag: String, updLo: Long, updHi: Long,
-                          delLo: Long, delHi: Long): Unit = {
-    val path = big(tag)
+                          delLo: Long, delHi: Long,
+                          vectored: Boolean = true, nSeg: Int = 4): Unit = {
+    val path = big(tag, nSeg)
+    val total = 20000L * nSeg
     val eng = Engine(spark)
-    val upd = eng.sql(s"UPDATE VECTORED '$path' SET score = score + 1 " +
-      s"WHERE id >= $updLo AND id < $updHi").df.collect().head
+    val mode = if (vectored) "VECTORED " else ""
+    /** Run `stmt`; for copy-on-write, check the rewritten segments carry
+      * no vectors and some untouched segment carries by reference. */
+    def run(stmt: String) = {
+      val before = Versioned.headSegments(spark, path).toSet
+      val r = eng.sql(stmt).df.collect().head
+      val hv = Versioned.versions(spark, path).last
+      val after = Versioned.headSegments(spark, path).toSet
+      if (!vectored) {
+        val dvs = Versioned.readDvMap(spark, path, hv)
+        assert((after -- before).nonEmpty &&
+          (after -- before).forall(s => !dvs.contains(s)),
+          s"rewritten segments ${after -- before} vs vectors $dvs")
+        assert(before.intersect(after).nonEmpty,
+          s"$stmt carried no segment by reference")
+      }
+      r
+    }
+    val upd = run(s"UPDATE $mode'$path' SET score = score + 1 " +
+      s"WHERE id >= $updLo AND id < $updHi")
     val updated = updLo until updHi
     assert(upd.getLong(1) == updated.size.toLong)
     assert(rows(changesAt(path).select("id", "score", "_change_type")) ===
       (updated.map(id => Seq[Any](id, 2 * id, "update_preimage")).toSet ++
         updated.map(id => Seq[Any](id, 2 * id + 1, "update_postimage"))))
-    val del = eng.sql(s"DELETE VECTORED FROM '$path' " +
-      s"WHERE id >= $delLo AND id < $delHi").df.collect().head
+    val del = run(s"DELETE ${mode}FROM '$path' " +
+      s"WHERE id >= $delLo AND id < $delHi")
     val deleted = (delLo until delHi).toSet
-    assert(del.getLong(1) == 80000L - deleted.size)
+    assert(del.getLong(1) == total - deleted.size)
     def score(id: Long) = if (updated.contains(id)) 2 * id + 1 else 2 * id
     assert(rows(changesAt(path).select("id", "score", "_change_type")) ===
       deleted.map(id => Seq[Any](id, score(id), "delete")))
     assert(rows(Versioned.read(spark, path)) ===
-      (0L until 80000L).filterNot(deleted).map(id =>
+      (0L until total).filterNot(deleted).map(id =>
         Seq[Any](id, s"p$id", score(id))).toSet)
-    // vectors, not rewrites, carry the change
-    assert(Versioned.readDvMap(spark, path,
+    // vectors, not rewrites, carry a vectored change
+    if (vectored) assert(Versioned.readDvMap(spark, path,
       Versioned.versions(spark, path).last).nonEmpty)
   }
 
@@ -213,5 +235,18 @@ class RowPositionSpec extends SparkSpec {
     assert(Engine.MergeSmallMatchRows < 70000L)
     vectoredDml("dml-big", updLo = 5000L, updHi = 75000L,
       delLo = 4000L, delHi = 74000L)
+  }
+
+  test("copy-on-write UPDATE and DELETE under the small-match cap " +
+    "rewrite only the touched segments, without vectors") {
+    vectoredDml("cow-small", updLo = 19900L, updHi = 20100L,
+      delLo = 20050L, delHi = 20150L, vectored = false)
+  }
+
+  test("copy-on-write UPDATE and DELETE over the small-match cap " +
+    "rewrite only the touched segments, without vectors") {
+    assert(Engine.MergeSmallMatchRows < 70000L)
+    vectoredDml("cow-big", updLo = 5000L, updHi = 75000L,
+      delLo = 4000L, delHi = 74000L, vectored = false, nSeg = 5)
   }
 }

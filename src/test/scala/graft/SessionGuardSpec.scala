@@ -75,4 +75,18 @@ class SessionGuardSpec extends AnyFunSuite {
     } yield s"$f:$n: $code"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  // DELETE, UPDATE and MERGE share one row-level core in Versioned: the
+  // segment rewrite, its provenance read and its commit stay there
+  test("no row-level rewrite outside sources/Versioned.scala") {
+    val rewriteParts = Seq("commitPruned(", "readSegmentsAligned(", "stageMatched")
+    val files = mainFiles.filterNot(_.toString.endsWith("sources/Versioned.scala"))
+    assert(files.nonEmpty)
+    val hits = for {
+      f <- files
+      (line, n) <- lines(f)
+      pat <- rewriteParts if line.contains(pat)
+    } yield s"$f:$n: $pat"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }
