@@ -4,7 +4,11 @@ import scala.collection.mutable.ListBuffer
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.catalyst.expressions.{Exists, OuterReference, SubExprUtils, ScalarSubquery => CatalystScalar}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.graft.ExprColumn
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
 
 import graft.api.{Col, GraftFrame}
@@ -116,13 +120,14 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
 
   /** Execute a parsed statement. Its Spark jobs carry the statement's
     * kind as their job description (MERGE labels its steps more
-    * finely). The scalar-subquery memo is per statement: a long-lived
-    * Engine (the shell) must not serve a stale collected value after
-    * the underlying table changed on disk. */
-  def execute(stmt: Statement): GraftFrame = {
-    scalarCache.clear()
-    Engine.withJobDescription(spark, stmt.kind)(run(stmt))
-  }
+    * finely). A query is planned, not run: its subqueries are Catalyst
+    * subquery expressions, so no job runs before the caller's action.
+    * A shape Catalyst's analyzer rejects is the statement's
+    * [[SemanticError]]. */
+  def execute(stmt: Statement): GraftFrame =
+    try Engine.withJobDescription(spark, stmt.kind)(run(stmt))
+    catch { case e: AnalysisException =>
+      throw new SemanticError(e.getMessage).initCause(e) }
 
   /** A statement's one status row: `(column, value)` pairs, each
     * column typed from its value (Long, Int, Boolean, else String) and
@@ -164,7 +169,11 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
 
   /** DML expressions have no evaluation scope for subqueries. */
   private def noSubqueries(what: String, cs: Col*): Unit =
-    if (cs.exists(c => collectScalarSubs(c).nonEmpty || containsInSubquery(c)))
+    if (cs.exists(_.exists {
+        case _: ScalarSubquery | _: ExistsSubquery | _: InSubquery |
+             _: QuantifiedCmp => true
+        case _ => false
+      }))
       throw new SemanticError(s"$what cannot contain subqueries")
 
   private def run(stmt: Statement): GraftFrame = stmt match {
@@ -435,7 +444,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
         throw new SemanticError("SUMMARIZE FOOTERS reads a raw parquet " +
           "directory's footers; resolve a Versioned dataset's segments " +
           "explicitly (footers cannot see manifest membership)")
-      import org.apache.spark.sql.{functions => F}
       // null-PROPAGATING aggregation: a file whose footer omitted a
       // statistic makes that statistic unknown for the whole table —
       // sum/min/max skip nulls, which would present a PARTIAL count or
@@ -454,7 +462,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     // ONE aggregation pass — exact, so a differential oracle replays it
     case Summarize(ref) =>
       val df = table(ref).df
-      import org.apache.spark.sql.{functions => F}
       // the single collected row is 4·ncols + 1 scalars — bounded by the
       // schema, never the data
       val fields = df.schema.fields.toSeq
@@ -539,14 +546,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
         case other => throw new SemanticError(
           s"EXPLAIN takes a query, not ${other.kind}")
       }
-      // uncorrelated scalar subqueries are resolved by collecting a real
-      // value — a scan job — before the outer plan exists: reject rather
-      // than run work under a statement that promises none. Uncorrelated
-      // EXISTS still pays its bounded one-row emptiness probe.
-      if (compoundHasScalarSub(parsed))
-        throw new SemanticError("EXPLAIN does not take scalar " +
-          "subqueries (resolving one executes a real scan to collect " +
-          "the value); inline the value or run the query itself")
       val mode = org.apache.spark.sql.execution.ExplainMode.fromString(
         if (formatted) "formatted" else "simple")
       rowsFrame(schemaOf("plan" -> StringType),
@@ -639,7 +638,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     * values and conditions the source alias only. `INSERT *` maps
     * source columns to target columns BY NAME. */
   private def merge(m: Merge): GraftFrame = {
-    import org.apache.spark.sql.{functions => F}
     val resolved = versionedPath("MERGE", m.target)
     val matchedClauses = m.matched
     // reachability: only the LAST matched clause may be unconditioned
@@ -1101,7 +1099,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
         if (incoming.columns.length != cs.length) throw new SemanticError(
           s"INSERT arity mismatch: column list names ${cs.length} " +
           s"columns, the inserted query produces ${incoming.columns.length}")
-        import org.apache.spark.sql.{functions => F}
         val byName = cs.zip(incoming.columns).toMap
         incoming.select(ts.fields.toSeq.map { f =>
           byName.get(f.name) match {
@@ -1151,36 +1148,27 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     * from the scan (the repo's known fan-out recompute hazard —
     * BroadcastExchange vs shuffle branches defeat ReuseExchange), so an
     * analyst's `FROM t a JOIN t b` would pay the CTE's subtree twice.
-    * Single-use CTEs stay un-staged (zero overhead). */
+    * Single-use CTEs stay un-staged (zero overhead).
+    *
+    * `enclosing` is set when the compound is a subquery's body: the
+    * frame of the query it sits in, whose columns its blocks may
+    * reference (see [[plan]]). */
   private def evalCompound(cq: CompoundQuery,
-                           outer: Map[String, GraftFrame]): GraftFrame = {
+                           outer: Map[String, GraftFrame],
+                           enclosing: Option[GraftFrame] = None): GraftFrame = {
     // a derived table contributes its subquery's paths, not its alias —
     // a CTE referenced only inside (SELECT ...) must still count as used
     def refPaths(t: graft.sql.TableRef): Seq[String] =
       t.subquery.fold(Seq(t.path))(compoundPaths)
     // ... and so do expression-level subqueries (IN-membership sets and
     // scalar subqueries), wherever an expression can sit
-    def colPaths(c: Col): Seq[String] = c match {
-      case InSubquery(e, sub) => colPaths(e) ++ compoundPaths(sub)
-      case ScalarSubquery(sub) => compoundPaths(sub)
-      case ExistsSubquery(sub) => compoundPaths(sub)
-      case QuantifiedCmp(e, _, _, sub) => colPaths(e) ++ compoundPaths(sub)
-      case BinOp(_, l, r)     => colPaths(l) ++ colPaths(r)
-      case Not(ch)            => colPaths(ch)
-      case Alias(ch, _)       => colPaths(ch)
-      case Like(ch, _)        => colPaths(ch)
-      case Cast(ch, _)        => colPaths(ch)
-      case IsNull(ch)         => colPaths(ch)
-      case AggCol(_, ch, _)   => colPaths(ch)
-      case FuncCall(_, as)    => as.flatMap(colPaths)
-      case CaseWhen(bs, e) =>
-        bs.flatMap { case (w, v) => colPaths(w) ++ colPaths(v) } ++
-          e.toSeq.flatMap(colPaths)
-      case WindowFn(_, as, pb, ob, _, _) =>
-        as.flatMap(colPaths) ++ pb.flatMap(colPaths) ++
-          ob.flatMap { case (oc, _) => colPaths(oc) }
-      case _                  => Seq.empty
-    }
+    def colPaths(c: Col): Seq[String] = (c match {
+      case InSubquery(_, sub)          => compoundPaths(sub)
+      case ScalarSubquery(sub)         => compoundPaths(sub)
+      case ExistsSubquery(sub)         => compoundPaths(sub)
+      case QuantifiedCmp(_, _, _, sub) => compoundPaths(sub)
+      case _                           => Nil
+    }) ++ c.children.flatMap(colPaths)
     def blockExprs(q: SqlQuery): Seq[Col] =
       q.select.map(_.expr) ++ q.where ++ q.groupBy ++ q.having ++ q.qualify ++
         q.orderBy.map(_._1) ++ q.joins.map(_.on)
@@ -1293,20 +1281,21 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     // first, then fold UNION/EXCEPT left-associatively
     var acc: GraftFrame = null
     var accOp: (String, Boolean) = null
-    var term = plan(cq.head, scope)
+    var term = plan(cq.head, scope, enclosing)
     cq.tail.foreach { case (op, all, q) =>
-      if (op == "intersect") term = setOp(term, op, all, plan(q, scope))
+      if (op == "intersect")
+        term = setOp(term, op, all, plan(q, scope, enclosing))
       else {
         acc = if (acc == null) term else setOp(acc, accOp._1, accOp._2, term)
         accOp = (op, all)
-        term = plan(q, scope)
+        term = plan(q, scope, enclosing)
       }
     }
     var out = if (acc == null) term else setOp(acc, accOp._1, accOp._2, term)
     if (cq.orderBy.nonEmpty)
-      // compound-level ORDER BY is an expression position too — scalar
-      // subqueries in it substitute like per-block ones
-      out = out.sort(cq.orderBy.map { case (c, a) => (resolveScalars(c, scope), a) })
+      // compound-level ORDER BY is an expression position too
+      out = out.sort(cq.orderBy.map { case (c, a) =>
+        (lowerSubqueries(c, out, scope), a) })
     cq.limit.foreach(n => out = out.limit(n))
     out
   }
@@ -1440,7 +1429,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     }
   }
 
-  def plan(q: SqlQuery): GraftFrame = { scalarCache.clear(); plan(q, Map.empty) }
+  def plan(q: SqlQuery): GraftFrame = plan(q, Map.empty)
 
   /** METADATA-ONLY aggregates: a SELECT of pure `COUNT()` /
     * `COUNT(col)` / `MIN(col)` / `MAX(col)` items over a bare
@@ -1536,87 +1525,40 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       java.util.List.of(row), StructType(resolvedItems.map(_._1)))))
   }
 
-  private def plan(q0: SqlQuery, scope: Map[String, GraftFrame]): GraftFrame = {
-    // scalar subqueries evaluate ONCE at plan time (bounded single-value
-    // collect) and substitute as literals before anything compiles
-    val q = q0.copy(
-      select = q0.select.map(i => i.copy(expr = resolveScalars(i.expr, scope))),
-      where = q0.where.map(resolveScalars(_, scope)),
-      groupBy = q0.groupBy.map(resolveScalars(_, scope)),
-      having = q0.having.map(resolveScalars(_, scope)),
-      qualify = q0.qualify.map(resolveScalars(_, scope)),
-      orderBy = q0.orderBy.map { case (c, a) => (resolveScalars(c, scope), a) },
-      joins = q0.joins.map(j => j.copy(on = resolveScalars(j.on, scope))))
+  /** Plan one query block under a CTE scope. `enclosing` is set when
+    * the block is (part of) a subquery's body: every reference the block
+    * does not resolve itself ([[blockFrame]]'s rule; in ORDER BY, HAVING
+    * and QUALIFY a select-list output name resolves too) is a Catalyst
+    * outer reference to that frame's column ([[outerRef]]), bound once
+    * before any clause compiles. Subqueries in the block's own clauses lower
+    * per clause ([[lowerSubqueries]]), against the frame the clause
+    * compiles on. */
+  private def plan(q0: SqlQuery, scope: Map[String, GraftFrame],
+                   enclosing: Option[GraftFrame] = None): GraftFrame = {
     // pure COUNT/MIN/MAX over a bare Versioned FROM: serve from
     // manifest statistics, no scan (falls through on any gap)
-    metadataAggFastPath(q, scope) match {
+    metadataAggFastPath(q0, scope) match {
       case Some(fr) => return fr
       case None => ()
     }
-    // a FROM/JOIN target is a derived table (planned under the enclosing
-    // CTE scope), an inline VALUES table, or resolves against the scope
-    // first, then disk
-    def resolve(t: graft.sql.TableRef): GraftFrame = t.subquery match {
-      case Some(sub) => evalCompound(sub, scope)
-      case None => t.values match {
-        case Some((names, rows)) => valuesFrame(names, rows)
-        case None if t.cdc.isDefined =>
-          // FOR CHANGES/REMOVALS FROM v [TO v]: the segment-level CDC
-          // pair over a Versioned dataset — adds are rows of segments
-          // committed in the range, removals rows of segments dropped
-          // by it (a consumer retracts removals, upserts changes)
-          val (kind, from, to) = t.cdc.get
-          val resolved = Tables.resolve(t.path, baseDir)
-          val df =
-            try kind match {
-              case "changes" =>
-                graft.sources.Versioned.changes(spark, resolved, from, to)
-              case "removals" =>
-                graft.sources.Versioned.removals(spark, resolved, from, to)
-              case _ =>
-                graft.sources.Versioned.changeFeed(spark, resolved, from, to)
-            } catch { case e: IllegalArgumentException =>
-              throw new SemanticError(e.getMessage) }
-          GraftFrame.fromDF(df)
-        case None => t.version match {
-          // FOR VERSION AS OF n: that committed snapshot, exactly
-          case Some(v) => GraftFrame.fromDF(graft.sources.Versioned.read(
-            spark, Tables.resolve(t.path, baseDir), Some(v)))
-          case None if t.asOfTs.isDefined =>
-            // FOR TIMESTAMP AS OF '<ts>': the snapshot that was head
-            // at that instant (UTC unless an offset is given)
-            val resolved = Tables.resolve(t.path, baseDir)
-            val ms = parseAsOfTimestamp(t.asOfTs.get)
-            val v =
-              try graft.sources.Versioned.versionAt(spark, resolved, ms)
-              catch { case e: IllegalArgumentException =>
-                throw new SemanticError(e.getMessage) }
-            GraftFrame.fromDF(
-              graft.sources.Versioned.read(spark, resolved, Some(v)))
-          case None => scope.get(t.path) match {
-            // a CTE's NAME is its default alias (standard SQL): without
-            // this, `FROM r JOIN ... ON r.q = ...` fails to resolve the
-            // dotted ref unless the user re-aliases r AS r
-            case Some(fr) => if (t.alias.isEmpty) fr.alias(t.path) else fr
-            case None => table(t.path)
-          }
-        }
+    val (from, isOuterRef) = blockFrame(q0, scope)
+    val q = enclosing.fold(q0) { outer =>
+      val outputs = q0.select.filterNot(_.star).map(_.expr.name)
+      def bind(c: Col, outputsResolve: Boolean = false): Col = c.transform {
+        case ColRef(r) if isOuterRef(r) &&
+            !(outputsResolve && outputs.exists(_.equalsIgnoreCase(r))) =>
+          outerRef(outer, r)
       }
+      def late(c: Col): Col = bind(c, outputsResolve = true)
+      q0.copy(
+        select = q0.select.map(i => i.copy(expr = bind(i.expr))),
+        where = q0.where.map(bind(_)), groupBy = q0.groupBy.map(bind(_)),
+        having = q0.having.map(late), qualify = q0.qualify.map(late),
+        orderBy = q0.orderBy.map { case (c, a) => (late(c), a) })
     }
-    // FROM + table alias
-    var frame = resolve(q.from)
-    q.from.alias.foreach(a => frame = frame.alias(a))
-
-    // JOINs in declaration order
-    q.joins.foreach { case JoinClause(t, on, how) =>
-      var right = resolve(t)
-      t.alias.foreach(a => right = right.alias(a))
-      frame = frame.join(right, on, how)
-    }
-
-    // WHERE: top-level AND conjuncts split so IN (SELECT ...) predicates
-    // plan as semi/anti joins; plain predicates stay row filters
-    q.where.foreach(c => frame = applyWhere(frame, c, scope))
+    def lower(c: Col, at: GraftFrame): Col = lowerSubqueries(c, at, scope)
+    var frame = from
+    q.where.foreach(c => frame = frame.filter(lower(c, frame)))
 
     val selectAggs = q.select.flatMap(i => collectAggs(i.expr))
     val hasGrouping = q.groupBy.nonEmpty || selectAggs.nonEmpty ||
@@ -1635,7 +1577,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       var name = "_qualify"
       while (df.columns.contains(name)) name += "_"
       frame = GraftFrame.fromDF(
-        df.withColumn(name, qual.compile(df.schema))
+        df.withColumn(name, lower(qual, frame).compile(df.schema))
           .filter(org.apache.spark.sql.functions.col(name)).drop(name))
     }
     // DISTINCT ON (keys): keep the FIRST row per key under the block's
@@ -1685,7 +1627,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     // order/group by), not just the select list.
     val groupedExprs = q.select.map(_.expr) ++ q.having ++ q.groupBy ++
       q.orderBy.map(_._1)
-    if (hasGrouping && groupedExprs.exists(containsWindow))
+    if (hasGrouping && groupedExprs.exists(_.exists(_.isInstanceOf[WindowFn])))
       throw new GroupByError(
         "Window functions cannot appear in a grouped query block; " +
         "aggregate in a derived table or CTE, then window over it")
@@ -1693,7 +1635,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     var out: GraftFrame =
       if (!hasGrouping) {
         if (q.select.forall(_.star)) frame.select(Star)
-        else frame.select(q.select.map(_.expr): _*)
+        else frame.select(q.select.map(i => lower(i.expr, frame)): _*)
       } else {
         // GROUP BY validity (reference: parser.py:143-151); compare the
         // expression under any alias against the grouping keys
@@ -1703,10 +1645,12 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
             case Alias(c, _) => c
             case c           => c
           }
-          // a bare LITERAL is group-invariant (`SELECT 1 AS version,
-          // COUNT(*) ...`) — standard SQL admits it without a key
+          // a bare LITERAL or scalar subquery is group-invariant
+          // (`SELECT 1 AS version, COUNT(*) ...`) — standard SQL admits
+          // it without a key
           if (collectAggs(item.expr).isEmpty &&
               !underlying.isInstanceOf[Lit] &&
+              !underlying.isInstanceOf[ScalarSubquery] &&
               !keyNames.contains(underlying.name))
             throw new GroupByError(
               s"Column '${underlying.name}' must appear in GROUP BY or an aggregate")
@@ -1727,23 +1671,8 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           else q.groupBy.zipWithIndex.collect {
             case (k, i) if !k.isInstanceOf[ColRef] => (k, s"_gkey$i")
           }.toMap
-        def substKeys(c: Col): Col = hiddenKeys.get(c) match {
-          case Some(n) => ColRef(n)
-          case None => c match {
-            case Alias(ch, n)   => Alias(substKeys(ch), n)
-            case BinOp(o, l, r) => BinOp(o, substKeys(l), substKeys(r))
-            case Not(ch)        => Not(substKeys(ch))
-            case Like(ch, p)    => Like(substKeys(ch), p)
-            case Cast(ch, d)    => Cast(substKeys(ch), d)
-            case IsNull(ch)     => IsNull(substKeys(ch))
-            case AggCol(f, ch, n) => AggCol(f, substKeys(ch), n)
-            case FuncCall(f, as)  => FuncCall(f, as.map(substKeys))
-            case CaseWhen(bs, e)  =>
-              CaseWhen(bs.map { case (w, v) => (substKeys(w), substKeys(v)) },
-                e.map(substKeys))
-            case other          => other
-          }
-        }
+        def substKeys(c: Col): Col =
+          c.transform { case k if hiddenKeys.contains(k) => ColRef(hiddenKeys(k)) }
         val selectRewritten = q.select.map { item =>
           val r = substKeys(item.expr)
           r match {
@@ -1757,7 +1686,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           }
         }
         val groupCols = q.groupBy.map(k =>
-          hiddenKeys.get(k).fold(k)(n => Alias(k, n): Col))
+          lower(hiddenKeys.get(k).fold(k)(n => Alias(k, n): Col), frame))
 
         // name every select aggregate so the final projection can refer to it
         val named = ListBuffer.empty[Col] // aggregates to compute
@@ -1771,605 +1700,205 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
 
         val groupedFrame = q.groupKind match {
           case None           => frame.groupBy(groupCols: _*)
-          case Some("rollup") => frame.rollup(q.groupBy: _*)
-          case Some("cube")   => frame.cube(q.groupBy: _*)
+          case Some("rollup") => frame.rollup(groupCols: _*)
+          case Some("cube")   => frame.cube(groupCols: _*)
           case Some("sets")   => frame.groupingSets(q.groupingSets, q.groupBy: _*)
           case Some(other) =>
             throw new IllegalStateException(s"unknown group kind $other")
         }
-        var g = groupedFrame.agg(named.toSeq: _*)
-        havingRewritten.foreach(h => g = g.filter(h))
+        var g = groupedFrame.agg(named.toSeq.map(lower(_, frame)): _*)
+        havingRewritten.foreach(h => g = g.filter(lower(h, g)))
         // final projection: grouping keys + visible select outputs, hidden
         // columns dropped (reference: parser.py:161); the aggregated frame
         // exposes group keys by their bare name, so qualifiers are gone
         // (analog of the reference's alias-prefix cleanup, plan.py:206-222)
-        g.select(finalCols: _*)
+        g.select(finalCols.map(lower(_, g)): _*)
       }
 
     if (q.distinct) out = out.distinct()
-    if (q.orderBy.nonEmpty) out = out.sort(q.orderBy)
+    if (q.orderBy.nonEmpty)
+      out = out.sort(q.orderBy.map { case (c, a) => (lower(c, out), a) })
     // OFFSET skips before LIMIT counts (standard pagination order)
     q.offset.foreach(m => out = GraftFrame.fromDF(out.df.offset(m)))
     q.limit.foreach(n => out = out.limit(n))
     out
   }
 
-  /** Apply a WHERE condition: AND conjuncts recurse, `IN (SELECT ...)`
-    * becomes a LEFT SEMI join (`NOT IN` → LEFT ANTI — the null-free
-    * reading, see [[Col.InSubquery]]), everything else filters. An IN
-    * subquery under OR / inside an expression has no join rendering;
-    * reject it loudly rather than mis-evaluate. */
-  private def applyWhere(frame: GraftFrame, cond: Col,
-                         scope: Map[String, GraftFrame]): GraftFrame = cond match {
-    case BinOp("&", l, r)        => applyWhere(applyWhere(frame, l, scope), r, scope)
-    case InSubquery(e, sub)      => inJoin(frame, e, sub, scope, anti = false)
-    case Not(InSubquery(e, sub)) => inJoin(frame, e, sub, scope, anti = true)
-    case ExistsSubquery(sub)      => existsJoin(frame, sub, scope, anti = false)
-    case Not(ExistsSubquery(sub)) => existsJoin(frame, sub, scope, anti = true)
-    case QuantifiedCmp(e, op, forAll, sub) =>
-      quantifiedFilter(frame, resolveScalars(e, scope), op, forAll, sub, scope)
-    case other if containsInSubquery(other) =>
-      throw new SemanticError(
-        "IN (SELECT ...) / EXISTS (SELECT ...) must be a top-level AND " +
-        "conjunct of WHERE (it plans as a semi/anti join and cannot sit " +
-        "under OR or inside an expression)")
-    // whatever ScalarSubquery nodes survive resolveScalars are correlated
-    case other if collectScalarSubs(other).nonEmpty =>
-      correlatedScalarFilter(frame, other, scope)
-    case other => frame.filter(other)
-  }
-
-  /** Plan `[NOT] EXISTS (SELECT ...)` as a LEFT SEMI (`NOT` → LEFT ANTI)
-    * join by DECORRELATION: build the subquery's FROM/JOIN frame, split
-    * its WHERE into top-level AND conjuncts, and partition them by
-    * whether every column reference resolves INSIDE the subquery
-    * (innermost-scope-first, like standard SQL): local conjuncts stay
-    * subquery-side filters (pushed to its scan), correlated ones become
-    * the join condition. The select list is irrelevant to EXISTS and is
-    * ignored. An uncorrelated EXISTS degenerates to a bounded one-row
-    * emptiness probe (`take(1)`) choosing all-rows or no-rows.
-    *
-    * Correlated subqueries must be a single SELECT block without
-    * GROUP BY/HAVING/ORDER BY/LIMIT or set ops — those have no join
-    * rendering here; reject loudly rather than mis-evaluate. */
-  private def existsJoin(frame: GraftFrame, sub: CompoundQuery,
-                         scope: Map[String, GraftFrame], anti: Boolean): GraftFrame = {
-    def emptinessProbe(planned: GraftFrame): GraftFrame = {
-      val nonEmpty = planned.df.take(1).nonEmpty
-      if (nonEmpty != anti) frame else GraftFrame.fromDF(frame.df.limit(0))
+  /** A FROM/JOIN target: a derived table (planned under the enclosing
+    * CTE scope), an inline VALUES table, a change feed or snapshot of a
+    * Versioned dataset, or a name resolved against the scope first,
+    * then disk. */
+  private def resolveTable(t: TableRef, scope: Map[String, GraftFrame]): GraftFrame =
+    t.subquery match {
+      case Some(sub) => evalCompound(sub, scope)
+      case None => t.values match {
+        case Some((names, rows)) => valuesFrame(names, rows)
+        case None if t.cdc.isDefined =>
+          // FOR CHANGES/REMOVALS FROM v [TO v]: the segment-level CDC
+          // pair over a Versioned dataset — adds are rows of segments
+          // committed in the range, removals rows of segments dropped
+          // by it (a consumer retracts removals, upserts changes)
+          val (kind, from, to) = t.cdc.get
+          val resolved = Tables.resolve(t.path, baseDir)
+          val df =
+            try kind match {
+              case "changes" =>
+                graft.sources.Versioned.changes(spark, resolved, from, to)
+              case "removals" =>
+                graft.sources.Versioned.removals(spark, resolved, from, to)
+              case _ =>
+                graft.sources.Versioned.changeFeed(spark, resolved, from, to)
+            } catch { case e: IllegalArgumentException =>
+              throw new SemanticError(e.getMessage) }
+          GraftFrame.fromDF(df)
+        case None => t.version match {
+          // FOR VERSION AS OF n: that committed snapshot, exactly
+          case Some(v) => GraftFrame.fromDF(graft.sources.Versioned.read(
+            spark, Tables.resolve(t.path, baseDir), Some(v)))
+          case None if t.asOfTs.isDefined =>
+            // FOR TIMESTAMP AS OF '<ts>': the snapshot that was head
+            // at that instant (UTC unless an offset is given)
+            val resolved = Tables.resolve(t.path, baseDir)
+            val ms = parseAsOfTimestamp(t.asOfTs.get)
+            val v =
+              try graft.sources.Versioned.versionAt(spark, resolved, ms)
+              catch { case e: IllegalArgumentException =>
+                throw new SemanticError(e.getMessage) }
+            GraftFrame.fromDF(
+              graft.sources.Versioned.read(spark, resolved, Some(v)))
+          case None => scope.get(t.path) match {
+            // a CTE's NAME is its default alias (standard SQL): without
+            // this, `FROM r JOIN ... ON r.q = ...` fails to resolve the
+            // dotted ref unless the user re-aliases r AS r
+            case Some(fr) => if (t.alias.isEmpty) fr.alias(t.path) else fr
+            case None => table(t.path)
+          }
+        }
+      }
     }
-    val simple = sub.tail.isEmpty && sub.orderBy.isEmpty && sub.limit.isEmpty &&
-      sub.ctes.isEmpty && sub.head.groupBy.isEmpty && sub.head.having.isEmpty &&
-      sub.head.orderBy.isEmpty && sub.head.limit.isEmpty &&
-      // QUALIFY/OFFSET/grouping-sets change which rows the subquery
-      // yields; the decorrelation below rebuilds only FROM/JOIN+WHERE
-      // and would drop them (e.g. OFFSET past the match count must make
-      // EXISTS false)
-      sub.head.qualify.isEmpty && sub.head.offset.isEmpty &&
-      sub.head.groupKind.isEmpty &&
-      // an aggregate select (`EXISTS (SELECT COUNT(*) ...)`) makes the
-      // subquery ALWAYS one row in standard SQL — that is grouped
-      // semantics, not a row subquery; route it through the full planner
-      sub.head.select.forall(i => collectAggs(i.expr).isEmpty)
-    if (!simple)
-      // set ops / grouping / LIMIT: only the UNCORRELATED reading exists
-      // (a correlated reference fails resolution inside evalCompound)
-      return emptinessProbe(evalCompound(sub, scope))
-    val q = sub.head
-    val (inner0, isOuterRef) = blockFrame(q, scope)
-    var inner = inner0
-    val conjuncts = q.where.toSeq.flatMap(splitAnd)
-      .map(resolveScalars(_, scope))
-    val (correlated, local) = conjuncts.partition(c =>
-      collectRefs(c).exists(isOuterRef))
-    local.foreach(c => inner = applyWhere(inner, c, scope))
-    if (correlated.isEmpty) emptinessProbe(inner)
-    else frame.join(inner, correlated.reduce(_ && _),
-      if (anti) "left_anti" else "left_semi")
-  }
 
-  /** Build a single block's FROM/JOIN frame (no WHERE applied) plus the
-    * outer-ref test used by every decorrelation: a reference is OUTER
-    * when, innermost-scope-first like standard SQL, it resolves against
-    * neither the block's table aliases (dotted refs) nor its columns
-    * (bare refs). Schema-only — nothing executes. */
+  /** Build a block's FROM/JOIN frame (no WHERE applied) plus its
+    * outer-ref test: a reference is OUTER when, innermost scope first
+    * like standard SQL, it does not resolve against that frame under
+    * the session's resolver (case-insensitive, as compiling it would;
+    * an ambiguous reference is the block's own, and fails there).
+    * Schema-only — nothing executes. */
   private def blockFrame(q: SqlQuery, scope: Map[String, GraftFrame])
       : (GraftFrame, String => Boolean) = {
-    def resolve(t: graft.sql.TableRef): GraftFrame = t.subquery match {
-      case Some(s2) => evalCompound(s2, scope)
-      case None     => scope.get(t.path) match {
-        // CTE name = default alias, mirroring the main planner
-        case Some(fr) => if (t.alias.isEmpty) fr.alias(t.path) else fr
-        case None => table(t.path)
-      }
-    }
     // a scope-resolved (CTE) table without an explicit alias carries its
-    // NAME as default alias (resolve() above) — record it, or dotted
-    // refs like `c.grp` on an unaliased CTE would be misclassified as
-    // OUTER references and mis-trigger correlation handling
-    def defaultAlias(t: graft.sql.TableRef): Option[String] =
-      if (t.alias.isEmpty && t.subquery.isEmpty && scope.contains(t.path))
-        Some(t.path)
-      else t.alias
-    val innerAliases = ListBuffer.empty[String]
-    var inner = resolve(q.from)
-    q.from.alias.foreach(a => inner = inner.alias(a))
-    defaultAlias(q.from).foreach(innerAliases += _)
+    // NAME as default alias (resolveTable), so `c.grp` on an unaliased
+    // CTE resolves inside the block
+    def side(t: TableRef): GraftFrame = {
+      val fr = resolveTable(t, scope)
+      t.alias.fold(fr)(fr.alias)
+    }
+    var frame = side(q.from)
     q.joins.foreach { case JoinClause(t, on, how) =>
-      var right = resolve(t)
-      t.alias.foreach(a => right = right.alias(a))
-      defaultAlias(t).foreach(innerAliases += _)
-      inner = inner.join(right, on, how)
+      val right = side(t)
+      frame = frame.join(right, lowerSubqueries(on, frame, scope), how)
     }
-    val innerCols = inner.df.columns.toSet
+    val inner = frame.df.queryExecution.analyzed
     def isOuterRef(r: String): Boolean =
-      if (r.contains('.')) !innerAliases.contains(r.split('.').head)
-      else !innerCols.contains(r)
-    (inner, isOuterRef)
+      try inner.resolve(r.split('.').toSeq, SQLConf.get.resolver).isEmpty
+      catch { case _: AnalysisException => false }
+    (frame, isOuterRef)
   }
 
-  private def splitAnd(c: Col): Seq[Col] = c match {
-    case BinOp("&", l, r) => splitAnd(l) ++ splitAnd(r)
-    case o                => Seq(o)
+  /** A subquery's reference `r` to a column of its enclosing query: a
+    * Catalyst outer reference to that frame's attribute, typed from it. */
+  private def outerRef(outer: GraftFrame, r: String): Col = {
+    val attr = outer.df.queryExecution.analyzed
+      .resolve(r.split('.').toSeq, SQLConf.get.resolver)
+      .getOrElse(throw new SemanticError(
+        s"Column '$r' resolves neither in its subquery nor in the enclosing query"))
+    Lowered(ExprColumn(OuterReference(attr)), attr.dataType)
   }
 
-  /** True when `sub` is a simple single-aggregate block whose WHERE
-    * references enclosing-scope columns — the TPC-H Q2/Q17/Q20 shape
-    * `(SELECT agg(...) FROM t WHERE t.k = outer.k [AND local...])`.
-    * Such subqueries cannot inline as a literal; [[applyWhere]] rewrites
-    * them into a group-by-correlation-keys aggregate join instead. */
-  private def isCorrelatedScalar(sub: CompoundQuery,
-                                 scope: Map[String, GraftFrame]): Boolean = {
-    val shapeOk = sub.tail.isEmpty && sub.ctes.isEmpty && sub.orderBy.isEmpty &&
-      sub.limit.isEmpty && {
-        val q = sub.head
-        q.groupBy.isEmpty && q.having.isEmpty && q.orderBy.isEmpty &&
-        q.limit.isEmpty && q.qualify.isEmpty && q.offset.isEmpty &&
-        q.groupKind.isEmpty && !q.distinct &&
-        q.select.size == 1 && !q.select.head.star &&
-        collectAggs(q.select.head.expr).nonEmpty
-      }
-    shapeOk && {
-      val q = sub.head
-      val (_, isOuterRef) = blockFrame(q, scope)
-      q.where.toSeq.flatMap(splitAnd)
-        .exists(c => collectRefs(c).exists(isOuterRef))
+  /** Lower every subquery in `c` to Catalyst's own subquery expression.
+    * Each body plans under the CTE scope with `at` — the frame `c`
+    * compiles against — as its enclosing query; its outer references
+    * become the expression's outer attributes, and Catalyst decorrelates
+    * it (the unnesting of Neumann & Kemper, BTW 2015). Nothing executes
+    * here: cardinality and NULL checks are part of the expression and
+    * fail at the action.
+    *   - scalar: exactly one column; an uncorrelated one must yield one
+    *     non-NULL value (more rows: SCALAR_SUBQUERY_TOO_MANY_ROWS);
+    *   - `IN` / `= ANY`: EXISTS over the subquery's rows equal to the
+    *     operand, the two-valued reading; `NOT IN` / `<> ALL` is NOT over
+    *     it wherever the NOT sits (the anti-join reading,
+    *     [[Col.InSubquery]]);
+    *   - EXISTS ignores a single-block body's DISTINCT, which cannot
+    *     change whether rows exist (without an OFFSET);
+    *   - range ANY/ALL: one scalar `(count, non-null count, min, max)`
+    *     — ALL over an empty set is TRUE, ANY FALSE; NULLs fail. */
+  private def lowerSubqueries(c: Col, at: GraftFrame,
+                              scope: Map[String, GraftFrame]): Col = {
+    def body(kind: String, sub: CompoundQuery): GraftFrame = {
+      val planned = evalCompound(sub, scope, Some(at))
+      val n = planned.df.columns.length
+      if (n != 1) throw new SemanticError(
+        s"$kind subquery must produce exactly one column, got $n")
+      planned
     }
-  }
-
-  /** Every [[ScalarSubquery]] node remaining in an expression (after
-    * [[resolveScalars]] these are exactly the correlated ones). Does not
-    * descend into IN/EXISTS subquery bodies — their own plan pass owns
-    * those. */
-  private def collectScalarSubs(c: Col): Seq[ScalarSubquery] = c match {
-    case s: ScalarSubquery => Seq(s)
-    case Alias(ch, _)      => collectScalarSubs(ch)
-    case BinOp(_, l, r)    => collectScalarSubs(l) ++ collectScalarSubs(r)
-    case Not(ch)           => collectScalarSubs(ch)
-    case Like(ch, _)       => collectScalarSubs(ch)
-    case Cast(ch, _)       => collectScalarSubs(ch)
-    case IsNull(ch)        => collectScalarSubs(ch)
-    case AggCol(_, ch, _)  => collectScalarSubs(ch)
-    case FuncCall(_, as)   => as.flatMap(collectScalarSubs)
-    case CaseWhen(bs, e) =>
-      bs.flatMap { case (w, v) => collectScalarSubs(w) ++ collectScalarSubs(v) } ++
-        e.toSeq.flatMap(collectScalarSubs)
-    case InSubquery(e, _)  => collectScalarSubs(e)
-    case QuantifiedCmp(e, _, _, _) => collectScalarSubs(e)
-    case _                 => Seq.empty
-  }
-
-  /** EXPLAIN guard: does ANY expression position in the compound —
-    * blocks, set-op tails, CTEs, derived tables, IN/EXISTS/quantified
-    * bodies — hold a scalar subquery? Unlike [[collectScalarSubs]] this
-    * DOES descend into subquery bodies: planning those bodies resolves
-    * their own scalar subqueries eagerly too. */
-  private def compoundHasScalarSub(cq: CompoundQuery): Boolean = {
-    def colHas(c: Col): Boolean = c match {
-      case _: ScalarSubquery => true
-      case InSubquery(e, sub) => colHas(e) || go(sub)
-      case ExistsSubquery(sub) => go(sub)
-      case QuantifiedCmp(e, _, _, sub) => colHas(e) || go(sub)
-      case BinOp(_, l, r)     => colHas(l) || colHas(r)
-      case Not(ch)            => colHas(ch)
-      case Alias(ch, _)       => colHas(ch)
-      case Like(ch, _)        => colHas(ch)
-      case Cast(ch, _)        => colHas(ch)
-      case IsNull(ch)         => colHas(ch)
-      case AggCol(_, ch, _)   => colHas(ch)
-      case FuncCall(_, as)    => as.exists(colHas)
-      case CaseWhen(bs, e) =>
-        bs.exists { case (w, v) => colHas(w) || colHas(v) } || e.exists(colHas)
-      case WindowFn(_, as, pb, ob, _, _) =>
-        as.exists(colHas) || pb.exists(colHas) ||
-          ob.exists { case (oc, _) => colHas(oc) }
-      case _ => false
+    def analyzed(f: GraftFrame): LogicalPlan = f.df.queryExecution.analyzed
+    def outers(p: LogicalPlan) = SubExprUtils.getOuterReferences(p)
+    def scalar(p: LogicalPlan): Column = ExprColumn(CatalystScalar(p, outers(p)))
+    def exists(p: LogicalPlan): Column = ExprColumn(Exists(p, outers(p)))
+    def compiled(e: Col): Column = lowerSubqueries(e, at, scope).compile(at.schema)
+    def in(e: Col, sub: CompoundQuery): Col = {
+      val key = lowerSubqueries(e, at, scope)
+        .transform { case ColRef(r) => outerRef(at, r) }
+      val equal = GraftFrame.fromDF(body("IN", sub).df.toDF("_in"))
+        .filter(ColRef("_in") === key)
+      Lowered(exists(analyzed(equal)), BooleanType)
     }
-    def refHas(t: graft.sql.TableRef): Boolean = t.subquery.exists(go)
-    def blockHas(q: SqlQuery): Boolean =
-      (q.select.map(_.expr) ++ q.where ++ q.groupBy ++ q.having ++
-        q.qualify ++ q.orderBy.map(_._1) ++ q.joins.map(_.on)).exists(colHas) ||
-      (q.from +: q.joins.map(_.table)).exists(refHas)
-    def go(c: CompoundQuery): Boolean =
-      (c.head +: c.tail.map(_._3)).exists(blockHas) ||
-        c.orderBy.map(_._1).exists(colHas) ||
-        c.ctes.exists { case (_, b) => go(b) }
-    go(cq)
-  }
-
-  private def substituteScalar(c: Col, target: ScalarSubquery, repl: Col): Col =
-    c match {
-      case s: ScalarSubquery if s == target => repl
-      case Alias(ch, n)   => Alias(substituteScalar(ch, target, repl), n)
-      case BinOp(o, l, r) => BinOp(o, substituteScalar(l, target, repl),
-                                   substituteScalar(r, target, repl))
-      case Not(ch)        => Not(substituteScalar(ch, target, repl))
-      case Like(ch, p)    => Like(substituteScalar(ch, target, repl), p)
-      case Cast(ch, d)    => Cast(substituteScalar(ch, target, repl), d)
-      case IsNull(ch)     => IsNull(substituteScalar(ch, target, repl))
-      case AggCol(f, ch, n) => AggCol(f, substituteScalar(ch, target, repl), n)
-      case FuncCall(f, as) => FuncCall(f, as.map(substituteScalar(_, target, repl)))
-      case CaseWhen(bs, e) =>
-        CaseWhen(bs.map { case (w, v) =>
-          (substituteScalar(w, target, repl), substituteScalar(v, target, repl)) },
-          e.map(substituteScalar(_, target, repl)))
-      case other          => other
-    }
-
-  /** Plan a WHERE conjunct containing CORRELATED scalar subqueries
-    * (TPC-H Q2/Q17/Q20's `x < (SELECT agg(...) WHERE inner.k = outer.k)`)
-    * by classic aggregate decorrelation: group the subquery's FROM/JOIN
-    * frame (local WHERE conjuncts pushed inside) by its correlation key
-    * columns, compute the aggregate per key, INNER-join the result to
-    * the outer frame on the correlation equalities, substitute the
-    * aggregate column into the comparison, filter, and drop the helper
-    * columns. One distributed agg + one equi-join — no per-row
-    * re-execution, broadcast-able when the keyed aggregate is small.
-    *
-    * Semantics note (null-free engine reading, like [[resolveScalars]]'
-    * empty-result error): an outer row whose correlation key has NO
-    * subquery rows fails the predicate (the inner join drops it) —
-    * which matches SQL's NULL-comparison outcome for every aggregate
-    * except COUNT-of-empty, which SQL defines as 0. A bare correlated
-    * COUNT therefore renders as a LEFT join + `coalesce(value, 0)`
-    * (exact SQL semantics); a COUNT nested inside a larger select
-    * expression (`COUNT(*) + 1`) has no coalesce rendering for the
-    * empty group and is rejected loudly rather than mis-evaluated.
-    * The conjunct must BE the comparison (under OR the drop-on-empty
-    * rendering would be wrong — rejected loudly). */
-  private def correlatedScalarFilter(frame: GraftFrame, cond: Col,
-      scope: Map[String, GraftFrame]): GraftFrame = {
-    cond match {
-      case BinOp(op, _, _) if op != "&" && op != "|" => ()
-      case _ => throw new SemanticError(
-        "A correlated scalar subquery must appear in a comparison that is " +
-        "its own top-level AND conjunct of WHERE, e.g. " +
-        "`x < (SELECT avg(...) FROM t WHERE t.k = outer.k)`")
-    }
-    var fr = frame
-    var cond2 = cond
-    val helperCols = ListBuffer.empty[String]
-    var remaining = collectScalarSubs(cond2)
-    while (remaining.nonEmpty) {
-      val target = remaining.head
-      val (joined, ref) = attachCorrelatedScalar(fr, target, scope, helperCols)
-      fr = joined
-      cond2 = substituteScalar(cond2, target, ref)
-      remaining = collectScalarSubs(cond2)
-    }
-    fr = fr.filter(cond2)
-    GraftFrame.fromDF(fr.df.drop(helperCols.toSeq: _*))
-  }
-
-  /** Join one correlated scalar subquery's per-key aggregate onto
-    * `outer`; returns the joined frame and the ref standing in for the
-    * subquery's value. Helper output names are freshened against the
-    * outer frame and recorded in `helperCols` for the caller to drop. */
-  private def attachCorrelatedScalar(outer: GraftFrame, s: ScalarSubquery,
-      scope: Map[String, GraftFrame],
-      helperCols: ListBuffer[String]): (GraftFrame, Col) = {
-    val q = s.subquery.head
-    val (_, isOuterRef) = blockFrame(q, scope)
-    val conjs = q.where.toSeq.flatMap(splitAnd)
-    val (correlated, local) = conjs.partition(c =>
-      collectRefs(c).exists(isOuterRef))
-    // each correlated conjunct must be inner-column = outer-column — the
-    // only shape with a group-by rendering; anything else has no keyed
-    // aggregate reading (reject rather than mis-evaluate)
-    val keyPairs: Seq[(String, String)] = correlated.map {
-      case BinOp("==", ColRef(a), ColRef(b)) =>
-        (isOuterRef(a), isOuterRef(b)) match {
-          case (true, false)  => (a, b) // (outer, inner)
-          case (false, true)  => (b, a)
-          case _ => throw new SemanticError(
-            s"Correlated scalar subquery predicate must compare an inner " +
-            s"column with an outer column: $a = $b")
-        }
-      case other => throw new SemanticError(
-        "Correlated scalar subquery predicates must be top-level AND " +
-        s"equality comparisons between columns; got: $other")
-    }
-    val innerKeys = keyPairs.map(_._2).distinct
-    def fresh(base: String): String = {
-      var n = base
-      while (outer.df.columns.contains(n) || helperCols.contains(n)) n += "_"
-      n
-    }
-    val keyNames = innerKeys.map(k => fresh("_ck_" + k.replace('.', '_')))
-    val keyName = innerKeys.zip(keyNames).toMap
-    val valName = fresh("_scalar")
-    val selExpr = q.select.head.expr match {
-      case Alias(e, _) => e
-      case e           => e
-    }
-    // COUNT over an empty correlation group is 0 in SQL, but the keyed
-    // aggregate has no row for it — a bare COUNT gets the left-join +
-    // coalesce rendering below; a COUNT buried in arithmetic has no
-    // such rendering (COUNT(*)+1 over empty is 1, not coalesce-0) and
-    // is rejected rather than mis-evaluated
-    val isBareCount = selExpr match {
-      case AggCol(f, _, _) => f == "count" || f == "count_distinct"
-      case _               => false
-    }
-    if (!isBareCount && collectNestedCounts(selExpr))
-      throw new SemanticError(
-        "A correlated scalar subquery may use COUNT only as the bare " +
-        "select expression (COUNT over an empty group is 0, which has " +
-        s"no keyed-aggregate rendering inside a larger expression): $selExpr")
-    // the keyed aggregate, planned through the normal grouped machinery
-    // (agg naming, GROUP BY validity, qualifier cleanup all reused)
-    val innerQ = SqlQuery(
-      select = innerKeys.map(k =>
-          SelectItem(Alias(ColRef(k), keyName(k)), star = false)) :+
-        SelectItem(Alias(selExpr, valName), star = false),
-      from = q.from, joins = q.joins,
-      where = local.reduceOption(_ && _),
-      groupBy = innerKeys.map(ColRef(_)),
-      having = None, orderBy = Nil, limit = None, distinct = false)
-    val agged = plan(innerQ, scope)
-    val joinCond = keyPairs.map { case (o, i) =>
-      (ColRef(o): Col) === ColRef(keyName(i))
-    }.reduce(_ && _)
-    helperCols ++= keyNames += valName
-    if (isBareCount)
-      (outer.join(agged, joinCond, "left"),
-        FuncCall("coalesce", Seq(ColRef(valName), Lit(0L))))
-    else
-      (outer.join(agged, joinCond, "inner"), ColRef(valName))
-  }
-
-  /** True when any COUNT/COUNT DISTINCT aggregate appears in the tree. */
-  private def collectNestedCounts(c: Col): Boolean = c match {
-    case AggCol(f, ch, _) => f == "count" || f == "count_distinct" ||
-      collectNestedCounts(ch)
-    case Alias(ch, _)    => collectNestedCounts(ch)
-    case BinOp(_, l, r)  => collectNestedCounts(l) || collectNestedCounts(r)
-    case Not(ch)         => collectNestedCounts(ch)
-    case Like(ch, _)     => collectNestedCounts(ch)
-    case Cast(ch, _)     => collectNestedCounts(ch)
-    case IsNull(ch)      => collectNestedCounts(ch)
-    case FuncCall(_, as) => as.exists(collectNestedCounts)
-    case CaseWhen(bs, e) =>
-      bs.exists { case (w, v) =>
-        collectNestedCounts(w) || collectNestedCounts(v) } ||
-        e.exists(collectNestedCounts)
-    case _               => false
-  }
-
-  /** Every column reference in an expression tree (subquery bodies
-    * excluded — their refs resolve in their own scope). */
-  private def collectRefs(c: Col): Seq[String] = c match {
-    case ColRef(r)       => Seq(r)
-    case Alias(ch, _)    => collectRefs(ch)
-    case BinOp(_, l, r)  => collectRefs(l) ++ collectRefs(r)
-    case Not(ch)         => collectRefs(ch)
-    case Like(ch, _)     => collectRefs(ch)
-    case Cast(ch, _)     => collectRefs(ch)
-    case IsNull(ch)      => collectRefs(ch)
-    case AggCol(_, ch, _) => collectRefs(ch)
-    case FuncCall(_, as) => as.flatMap(collectRefs)
-    case CaseWhen(bs, e) =>
-      bs.flatMap { case (w, v) => collectRefs(w) ++ collectRefs(v) } ++
-        e.toSeq.flatMap(collectRefs)
-    case WindowFn(_, as, pb, ob, _, _) =>
-      as.flatMap(collectRefs) ++ pb.flatMap(collectRefs) ++
-        ob.flatMap { case (oc, _) => collectRefs(oc) }
-    case InSubquery(e, _) => collectRefs(e)
-    case QuantifiedCmp(e, _, _, _) => collectRefs(e)
-    case _               => Seq.empty
-  }
-
-  private def inJoin(frame: GraftFrame, e: Col, sub: CompoundQuery,
-                     scope: Map[String, GraftFrame], anti: Boolean): GraftFrame = {
-    val planned = evalCompound(sub, scope)
-    val cols = planned.df.columns
-    if (cols.length != 1)
-      throw new SemanticError(
-        s"IN subquery must produce exactly one column, got ${cols.length} " +
-        cols.mkString("(", ", ", ")"))
-    // rename the subquery output away from any left-side column so the
-    // join condition compiles unambiguously
-    var name = "_in_sq"
-    while (frame.df.columns.contains(name)) name += "_"
-    val right = GraftFrame.fromDF(planned.df.select(planned.df.col(cols(0)).as(name)))
-    frame.join(right, e === ColRef(name), if (anti) "left_anti" else "left_semi")
-  }
-
-  /** Replace every [[ScalarSubquery]] with the literal it evaluates to:
-    * plan the subquery under the enclosing CTE scope, demand exactly one
-    * column, take 2 rows to prove there is exactly one (never an
-    * unbounded collect), and inline the value. Empty → loud error
-    * rather than SQL's NULL (null-free world, [[Col.ScalarSubquery]]).
-    * Textually repeated subqueries evaluate ONCE per scope
-    * ([[scalarCache]] — the AST is a case class, so structural equality
-    * keys the memo). Does NOT descend into [[InSubquery]]/derived-table
-    * compounds — their own plan() pass substitutes their blocks. */
-  private val scalarCache =
-    scala.collection.mutable.Map.empty[(CompoundQuery, Map[String, GraftFrame]), Col]
-
-  private def resolveScalars(c: Col, scope: Map[String, GraftFrame]): Col = c match {
-    // CORRELATED scalar subqueries cannot inline as a literal — leave
-    // the node for applyWhere's aggregate-decorrelation rewrite
-    case s @ ScalarSubquery(sub) if isCorrelatedScalar(sub, scope) => s
-    case ScalarSubquery(sub) =>
-      scalarCache.getOrElseUpdate((sub, scope), {
-      val planned = evalCompound(sub, scope)
-      if (planned.df.columns.length != 1)
-        throw new SemanticError(
-          s"Scalar subquery must produce one column, got ${planned.df.columns.length}")
-      val rows = planned.df.take(2)
-      if (rows.isEmpty)
-        throw new SemanticError("Scalar subquery returned no rows")
-      if (rows.length > 1)
-        throw new SemanticError("Scalar subquery returned more than one row")
-      rows(0).get(0) match {
-        case null => throw new SemanticError("Scalar subquery returned NULL")
-        case t: java.time.Instant => Lit(java.sql.Timestamp.from(t))
-        case d: java.time.LocalDate => Lit(java.sql.Date.valueOf(d))
-        case d: java.math.BigDecimal => Lit(scala.math.BigDecimal(d))
-        case v => Lit(v)
-      }
-      })
-    case Alias(ch, n)    => Alias(resolveScalars(ch, scope), n)
-    case BinOp(o, l, r)  => BinOp(o, resolveScalars(l, scope), resolveScalars(r, scope))
-    case Not(ch)         => Not(resolveScalars(ch, scope))
-    case Like(ch, p)     => Like(resolveScalars(ch, scope), p)
-    case Cast(ch, d)     => Cast(resolveScalars(ch, scope), d)
-    case IsNull(ch)      => IsNull(resolveScalars(ch, scope))
-    case AggCol(f, ch, n) => AggCol(f, resolveScalars(ch, scope), n)
-    case FuncCall(f, as) => FuncCall(f, as.map(resolveScalars(_, scope)))
-    case CaseWhen(bs, e) =>
-      CaseWhen(bs.map { case (w, v) =>
-        (resolveScalars(w, scope), resolveScalars(v, scope)) },
-        e.map(resolveScalars(_, scope)))
-    case WindowFn(f, as, pb, ob, fr, rng) =>
-      WindowFn(f, as.map(resolveScalars(_, scope)), pb.map(resolveScalars(_, scope)),
-        ob.map { case (oc, asc) => (resolveScalars(oc, scope), asc) }, fr, rng)
-    case InSubquery(e, sub) => InSubquery(resolveScalars(e, scope), sub)
-    case QuantifiedCmp(e, op, fa, sub) =>
-      QuantifiedCmp(resolveScalars(e, scope), op, fa, sub)
-    case other           => other
-  }
-
-  /** Plan `expr <op> ANY|ALL (SELECT ...)` (uncorrelated): `= ANY` IS
-    * the IN semi join and `<> ALL` IS the NOT IN anti join; the four
-    * range operators reduce to a comparison against ONE plan-time
-    * 4-scalar aggregate of the subquery column —
-    *   x > ALL(S) ⇔ x > max(S)    x > ANY(S) ⇔ x > min(S)
-    *   x < ALL(S) ⇔ x < min(S)    x < ANY(S) ⇔ x < max(S)
-    * (≥/≤ likewise) — never a value collect, so the subquery may be any
-    * size. An empty subquery makes ALL vacuously true and ANY false
-    * (standard SQL); a NULL among the values would make the comparison
-    * three-valued, which has no rendering in the engine's null-free
-    * world — rejected loudly, like every other unsupported shape.
-    * `= ALL` / `<> ANY` (useful only for single-valued or constant
-    * subqueries) are rejected with a pointer at the scalar-subquery
-    * spelling that covers the meaningful case. */
-  private def quantifiedFilter(frame: GraftFrame, e: Col, op: String,
-                               forAll: Boolean, sub: CompoundQuery,
-                               scope: Map[String, GraftFrame]): GraftFrame = {
-    (op, forAll) match {
-      case ("=", false)  => return inJoin(frame, e, sub, scope, anti = false)
-      case ("!=", true)  => return inJoin(frame, e, sub, scope, anti = true)
-      case ("=", true) => throw new SemanticError(
+    c.transform {
+      case ScalarSubquery(sub) =>
+        val p = analyzed(body("Scalar", sub))
+        val s = scalar(p)
+        Lowered(if (outers(p).nonEmpty) s
+          else F.coalesce(s, F.raise_error(F.lit(
+            "Scalar subquery returned no rows or a NULL value"))),
+          p.output.head.dataType)
+      case ExistsSubquery(sub) =>
+        val rows = if (sub.tail.nonEmpty || sub.head.offset.nonEmpty) sub
+          else sub.copy(head = sub.head.copy(distinct = false))
+        Lowered(exists(analyzed(evalCompound(rows, scope, Some(at)))), BooleanType)
+      case QuantifiedCmp(e, "!=", true, sub) => Not(in(e, sub))
+      case InSubquery(e, sub)                => in(e, sub)
+      case QuantifiedCmp(e, "=", false, sub) => in(e, sub)
+      case QuantifiedCmp(_, "=", true, _) => throw new SemanticError(
         "= ALL (SELECT ...) is not supported — compare to a scalar " +
         "subquery, or use = ANY / IN for membership")
-      case ("!=", false) => throw new SemanticError(
+      case QuantifiedCmp(_, "!=", false, _) => throw new SemanticError(
         "<> ANY (SELECT ...) is not supported — use NOT IN / <> ALL " +
         "for non-membership")
-      case _ => ()
+      case QuantifiedCmp(e, op, forAll, sub) =>
+        val v = body("ANY/ALL", sub).df.toDF("_v")
+        val s = scalar(analyzed(GraftFrame.fromDF(v.select(F.struct(
+          F.count(F.lit(1)).as("n"), F.count(F.col("_v")).as("nn"),
+          F.min("_v").as("lo"), F.max("_v").as("hi"))))))
+        // x > ALL(S) ⇔ x > max(S), x > ANY(S) ⇔ x > min(S); < mirrors it
+        val bound = Lowered(s.getField(if (forAll == op.startsWith("<")) "lo" else "hi"),
+          v.schema.head.dataType)
+        Lowered(F.when(s.getField("n") === 0, F.lit(forAll))
+          .when(s.getField("nn") < s.getField("n"), F.raise_error(F.lit(
+            "ANY/ALL subquery returned NULL values — the three-valued " +
+            "comparison has no rendering here (filter them in the subquery)")))
+          .otherwise(compiled(BinOp(op, e, bound))), BooleanType)
     }
-    val planned = evalCompound(sub, scope)
-    val cols = planned.df.columns
-    if (cols.length != 1)
-      throw new SemanticError(
-        s"ANY/ALL subquery must produce exactly one column, got ${cols.length}")
-    import org.apache.spark.sql.{functions => F}
-    val c = planned.df.col(cols(0))
-    val row = planned.df.agg(F.count(F.lit(1)), F.count(c), F.min(c), F.max(c))
-      .head()
-    val (cnt, nonNull) = (row.getLong(0), row.getLong(1))
-    if (cnt == 0)
-      // ALL over an empty set is vacuously TRUE, ANY is FALSE
-      return if (forAll) frame else GraftFrame.fromDF(frame.df.limit(0))
-    if (nonNull < cnt)
-      throw new SemanticError(
-        "ANY/ALL subquery returned NULL values — the three-valued " +
-        "comparison has no rendering here (filter them in the subquery)")
-    val bound = Lit(row.get(if (forAll == (op == "<" || op == "<=")) 2 else 3)
-      match {
-        case t: java.time.Instant    => java.sql.Timestamp.from(t)
-        case d: java.time.LocalDate  => java.sql.Date.valueOf(d)
-        case d: java.math.BigDecimal => scala.math.BigDecimal(d)
-        case v => v
-      })
-    val pred = op match {
-      case ">"  => e > bound
-      case ">=" => e >= bound
-      case "<"  => e < bound
-      case "<=" => e <= bound
-      case other => throw new SemanticError(s"unsupported quantified op $other")
-    }
-    frame.filter(pred)
-  }
-
-  private def containsInSubquery(c: Col): Boolean = c match {
-    case _: InSubquery      => true
-    case _: ExistsSubquery  => true
-    case _: QuantifiedCmp   => true
-    case Alias(ch, _)    => containsInSubquery(ch)
-    case BinOp(_, l, r)  => containsInSubquery(l) || containsInSubquery(r)
-    case Not(ch)         => containsInSubquery(ch)
-    case Like(ch, _)     => containsInSubquery(ch)
-    case Cast(ch, _)     => containsInSubquery(ch)
-    case IsNull(ch)      => containsInSubquery(ch)
-    case AggCol(_, ch, _) => containsInSubquery(ch)
-    case FuncCall(_, as) => as.exists(containsInSubquery)
-    case CaseWhen(bs, e) =>
-      bs.exists { case (w, v) => containsInSubquery(w) || containsInSubquery(v) } ||
-        e.exists(containsInSubquery)
-    case WindowFn(_, as, pb, ob, _, _) =>
-      as.exists(containsInSubquery) || pb.exists(containsInSubquery) ||
-        ob.exists { case (oc, _) => containsInSubquery(oc) }
-    case _               => false
   }
 
   private def collectAggs(c: Col): Seq[AggCol] = c match {
-    case a: AggCol      => Seq(a)
+    case a: AggCol => Seq(a)
     // a window's inner aggregate is per-row output, not a grouping agg
-    case _: WindowFn    => Seq.empty
-    case BinOp(_, l, r) => collectAggs(l) ++ collectAggs(r)
-    case Alias(ch, _)   => collectAggs(ch)
-    case Not(ch)        => collectAggs(ch)
-    case Like(ch, _)    => collectAggs(ch)
-    case Cast(ch, _)    => collectAggs(ch)
-    case IsNull(ch)     => collectAggs(ch)
-    case FuncCall(_, as) => as.flatMap(collectAggs)
-    case CaseWhen(bs, e) =>
-      bs.flatMap { case (w, v) => collectAggs(w) ++ collectAggs(v) } ++
-        e.toSeq.flatMap(collectAggs)
-    case _              => Seq.empty
-  }
-
-  private def containsWindow(c: Col): Boolean = c match {
-    case _: WindowFn     => true
-    case Alias(ch, _)    => containsWindow(ch)
-    case BinOp(_, l, r)  => containsWindow(l) || containsWindow(r)
-    case Not(ch)         => containsWindow(ch)
-    case Like(ch, _)     => containsWindow(ch)
-    case Cast(ch, _)     => containsWindow(ch)
-    case IsNull(ch)      => containsWindow(ch)
-    case AggCol(_, ch, _) => containsWindow(ch)
-    case FuncCall(_, as) => as.exists(containsWindow)
-    case CaseWhen(bs, e) =>
-      bs.exists { case (w, v) => containsWindow(w) || containsWindow(v) } ||
-        e.exists(containsWindow)
-    case _               => false
+    case _: WindowFn => Seq.empty
+    case other => other.children.flatMap(collectAggs)
   }
 
   /** Give every aggregate a stable output name, collect it into `acc`, and
     * return the select item rewritten to refer to computed columns. */
-  private def nameAggs(c: Col, acc: ListBuffer[Col]): Col = c match {
+  private def nameAggs(c: Col, acc: ListBuffer[Col]): Col = c.transform {
     case a @ AggCol(_, _, Some(n)) => acc += a; ColRef(n)
     case a @ AggCol(_, child, None) =>
       // simple children keep the readable derived name (sum_x); complex
@@ -2383,44 +1912,20 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       }
       acc += a.aliased(n); ColRef(n)
     case Alias(a: AggCol, n) => acc += a.aliased(n); ColRef(n)
-    case Alias(ch, n)        => Alias(nameAggs(ch, acc), n)
-    case BinOp(op, l, r)     => BinOp(op, nameAggs(l, acc), nameAggs(r, acc))
-    case IsNull(ch)          => IsNull(nameAggs(ch, acc))
-    case Cast(ch, dt)        => Cast(nameAggs(ch, acc), dt)
-    case Not(ch)             => Not(nameAggs(ch, acc))
-    case FuncCall(f, as)     => FuncCall(f, as.map(nameAggs(_, acc)))
-    case CaseWhen(bs, e) =>
-      CaseWhen(bs.map { case (w, v) => (nameAggs(w, acc), nameAggs(v, acc)) },
-        e.map(nameAggs(_, acc)))
-    case other               => other
   }
 
   /** Post-aggregation, table-alias qualifiers no longer resolve
     * (`u.country` → `country`); rewrite dotted refs to their bare name
     * (reference: plan.py:206-222 final de-aliasing projection). */
-  private def stripQualifiers(c: Col): Col = c match {
+  private def stripQualifiers(c: Col): Col = c.transform {
     case ColRef(r) if r.contains('.') => ColRef(r.split('.').last)
-    case Alias(ch, n)    => Alias(stripQualifiers(ch), n)
-    case BinOp(op, l, r) => BinOp(op, stripQualifiers(l), stripQualifiers(r))
-    case Not(ch)         => Not(stripQualifiers(ch))
-    case Like(ch, p)     => Like(stripQualifiers(ch), p)
-    case Cast(ch, d)     => Cast(stripQualifiers(ch), d)
-    case IsNull(ch)      => IsNull(stripQualifiers(ch))
-    case FuncCall(f, as) => FuncCall(f, as.map(stripQualifiers))
-    case CaseWhen(bs, e) =>
-      CaseWhen(bs.map { case (w, v) => (stripQualifiers(w), stripQualifiers(v)) },
-        e.map(stripQualifiers))
-    case WindowFn(f, as, pb, ob, fr, rng) =>
-      WindowFn(f, as.map(stripQualifiers), pb.map(stripQualifiers),
-        ob.map { case (c, asc) => (stripQualifiers(c), asc) }, fr, rng)
-    case other           => other
   }
 
   /** Replace aggregates inside a HAVING predicate with hidden columns
     * named `_having_<agg-name>` (reference: parser.py:153-157), reusing an
     * already-computed aggregate when the same expression appears in the
     * select list (reference: sql.py:433-434 normalize_agg_columns). */
-  private def rewriteHaving(c: Col, acc: ListBuffer[Col]): Col = c match {
+  private def rewriteHaving(c: Col, acc: ListBuffer[Col]): Col = c.transform {
     case a: AggCol =>
       val existing = acc.collectFirst {
         case e @ AggCol(f, ch, Some(n)) if f == a.fn && ch == a.child => n
@@ -2432,15 +1937,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           acc += a.aliased(n)
           ColRef(n)
       }
-    case BinOp(op, l, r) => BinOp(op, rewriteHaving(l, acc), rewriteHaving(r, acc))
-    case Not(ch)         => Not(rewriteHaving(ch, acc))
-    case Alias(ch, n)    => Alias(rewriteHaving(ch, acc), n)
-    case IsNull(ch)      => IsNull(rewriteHaving(ch, acc))
-    case FuncCall(f, as) => FuncCall(f, as.map(rewriteHaving(_, acc)))
-    case CaseWhen(bs, e) =>
-      CaseWhen(bs.map { case (w, v) => (rewriteHaving(w, acc), rewriteHaving(v, acc)) },
-        e.map(rewriteHaving(_, acc)))
-    case other           => other
   }
 }
 

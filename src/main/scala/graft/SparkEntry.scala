@@ -3069,7 +3069,7 @@ object SparkEntry {
     }),
 
     // ---- vector search through the dialect: brute-force cosine top-k
-    //      as ONE SQL statement — the query vector is an inlined scalar
+    //      as ONE SQL statement — the query vector is a scalar
     //      subquery over the same table, the cosine the codegen'd
     //      native expression; ordering on the rounded score + id so
     //      both engines cut the same top-10 ----
@@ -3292,9 +3292,9 @@ object SparkEntry {
           |  OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id) <= 2""".stripMargin).df),
 
     // ---- correlated EXISTS / NOT EXISTS through the graft DIALECT
-    //      (TPC-H Q21's wait-chain shape, q81's ANSI twin): the engine
-    //      decorrelates each subquery into a semi/anti self-join whose
-    //      condition is the correlated conjuncts ----
+    //      (TPC-H Q21's wait-chain shape, q81's ANSI twin): each lowers to
+    //      a Catalyst EXISTS subquery, which Catalyst decorrelates into a
+    //      semi/anti self-join on the correlated conjuncts ----
     "q128_sql_exists" -> ((s, dir) =>
       Engine(s, dir).sql(
         """SELECT s.s_name, COUNT() AS numwait
@@ -4352,10 +4352,9 @@ object SparkEntry {
 
     // ---- CORRELATED COUNT through the dialect: customers with fewer
     //      than 5 orders INCLUDING zero-order customers — COUNT over an
-    //      empty correlation group is 0 in SQL, the one aggregate the
-    //      inner-join decorrelation would silently drop; the engine
-    //      renders it as a left join + coalesce(0)
-    //      (Engine.attachCorrelatedScalar) ----
+    //      empty correlation group is 0 in SQL, the one aggregate an
+    //      inner-join decorrelation would silently drop; Catalyst's
+    //      decorrelation of the scalar subquery handles that case ----
     "q172_sql_correlated_count" -> ((s, dir) =>
       Engine(s, dir).sql(
         """SELECT c.c_custkey AS c_custkey
@@ -4407,11 +4406,11 @@ object SparkEntry {
           |GROUP BY l_returnflag, l_linestatus
           |ORDER BY l_returnflag, l_linestatus""".stripMargin).df),
 
-    // ---- quantified comparisons in the DIALECT: `> ALL (...)` reduces
-    //      at plan time to one 4-scalar aggregate of the subquery (a
-    //      comparison against its max — never a value collect), and
-    //      `= ANY (...)` IS the IN semi join; DuckDB evaluates the same
-    //      statement natively ----
+    // ---- quantified comparisons in the DIALECT: `> ALL (...)` compares
+    //      against the max from ONE scalar subquery of (count, non-null
+    //      count, min, max) — never a value collect — and `= ANY (...)`
+    //      IS the IN subquery; DuckDB evaluates the same statement
+    //      natively ----
     "q181_sql_any_all" -> ((s, dir) =>
       Engine(s, dir).sql(
         """SELECT s_suppkey, s_acctbal FROM supplier
@@ -4442,9 +4441,9 @@ object SparkEntry {
     }),
 
     // ---- TPC-H Q17 through the GRAFT DIALECT (q74 runs the same shape
-    //      via Spark SQL): a CORRELATED scalar subquery, decorrelated by
-    //      the engine into one per-partkey aggregate + an equi-join —
-    //      never a per-row re-execution (Engine.attachCorrelatedScalar) ----
+    //      via Spark SQL): a CORRELATED scalar subquery, which Catalyst
+    //      decorrelates into one per-partkey aggregate + an equi-join —
+    //      never a per-row re-execution ----
     "q158_sql_tpch_q17d" -> ((s, dir) =>
       Engine(s, dir).sql(
         """SELECT round(SUM(l_extendedprice) / 7.0, 4) AS avg_yearly
@@ -4465,8 +4464,9 @@ object SparkEntry {
           |WHERE s.s_acctbal = (SELECT MAX(s2.s_acctbal) FROM supplier s2
           |                     WHERE s2.s_nationkey = s.s_nationkey)""".stripMargin).df),
 
-    // ---- TPC-H Q11 shape: scalar subquery inside HAVING (inlined at
-    //      plan time — integer counts, so no float-boundary risk) ----
+    // ---- TPC-H Q11 shape: scalar subquery inside HAVING (a Catalyst
+    //      scalar subquery over integer counts, so no float-boundary
+    //      risk) ----
     "q160_sql_tpch_q11" -> ((s, dir) =>
       Engine(s, dir).sql(
         """SELECT o_custkey, COUNT() AS n_orders,
@@ -5151,7 +5151,8 @@ object SparkEntry {
     // ---- scalar subqueries through the SQL dialect front-end
     //      (extension §2.5): the TPC-H Q17 shape — small-order filter
     //      bound derived from a global aggregate, membership from a
-    //      part-table subquery; the scalar inlines at plan time ----
+    //      part-table subquery; both are Catalyst subquery expressions,
+    //      so building the frame runs no job ----
     "q119_sql_scalar_subquery" -> ((s, dir) =>
       Engine(s, dir).sql(
         """SELECT round(SUM(l_extendedprice) / 7.0, 4) AS avg_yearly
@@ -5161,9 +5162,10 @@ object SparkEntry {
           |  AND l_quantity < (SELECT 0.2 * AVG(l_quantity) FROM lineitem)""".stripMargin).df),
 
     // ---- IN (SELECT ...) through the SQL dialect front-end (extension
-    //      §2.5): a semi-join membership predicate AND an anti-join
-    //      NOT IN in one query — planned as left_semi/left_anti, never
-    //      a row expression ----
+    //      §2.5): a membership predicate AND a NOT IN in one query — the
+    //      IN a Catalyst EXISTS over the equal rows, the NOT IN its NOT
+    //      (the anti-join reading); Catalyst plans them as
+    //      left semi / left anti joins ----
     "q118_sql_in_subquery" -> ((s, dir) =>
       Engine(s, dir).sql(
         """SELECT c_custkey, c_mktsegment FROM customer

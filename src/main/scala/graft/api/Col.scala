@@ -67,6 +67,52 @@ sealed trait Col {
     case AggCol(_, _, Some(n)) => n
     case _              => toString
   }
+
+  /** The direct sub-expressions. A subquery's body is its own query
+    * block, not a child; the outer-side operand of IN and ANY/ALL is. */
+  def children: Seq[Col] = this match {
+    case Alias(c, _)      => Seq(c)
+    case BinOp(_, l, r)   => Seq(l, r)
+    case Like(c, _)       => Seq(c)
+    case Not(c)           => Seq(c)
+    case Cast(c, _)       => Seq(c)
+    case IsNull(c)        => Seq(c)
+    case AggCol(_, c, _)  => Seq(c)
+    case FuncCall(_, as)  => as
+    case CaseWhen(bs, e)  => bs.flatMap { case (w, v) => Seq(w, v) } ++ e
+    case WindowFn(_, as, pb, ob, _, _) => as ++ pb ++ ob.map(_._1)
+    case InSubquery(e, _) => Seq(e)
+    case QuantifiedCmp(e, _, _, _) => Seq(e)
+    case _                => Nil
+  }
+
+  /** This node with `f` applied to each of its [[children]]. */
+  def mapChildren(f: Col => Col): Col = this match {
+    case Alias(c, n)      => Alias(f(c), n)
+    case BinOp(o, l, r)   => BinOp(o, f(l), f(r))
+    case Like(c, p)       => Like(f(c), p)
+    case Not(c)           => Not(f(c))
+    case Cast(c, d)       => Cast(f(c), d)
+    case IsNull(c)        => IsNull(f(c))
+    case AggCol(fn, c, n) => AggCol(fn, f(c), n)
+    case FuncCall(fn, as) => FuncCall(fn, as.map(f))
+    case CaseWhen(bs, e)  =>
+      CaseWhen(bs.map { case (w, v) => (f(w), f(v)) }, e.map(f))
+    case w: WindowFn      => w.copy(args = w.args.map(f),
+      partitionBy = w.partitionBy.map(f),
+      orderBy = w.orderBy.map { case (c, asc) => (f(c), asc) })
+    case InSubquery(e, q) => InSubquery(f(e), q)
+    case q: QuantifiedCmp => q.copy(expr = f(q.expr))
+    case leaf             => leaf
+  }
+
+  /** True when `p` holds at this node or anywhere below it. */
+  def exists(p: Col => Boolean): Boolean = p(this) || children.exists(_.exists(p))
+
+  /** Top-down rewrite: where `f` is defined it replaces the node whole;
+    * elsewhere the rewrite descends into the children. */
+  def transform(f: PartialFunction[Col, Col]): Col =
+    f.applyOrElse(this, (c: Col) => c.mapChildren(_.transform(f)))
 }
 
 object Col {
@@ -121,37 +167,44 @@ object Col {
                             // true = RANGE (value-distance) frame over a
                             // single numeric ORDER BY key; false = ROWS
                             rangeFrame: Boolean = false) extends Col
-  /** `expr IN (SELECT ...)` membership predicate (extension). Not a
-    * row-local expression — the engine plans it as a LEFT SEMI join
-    * (`NOT IN` → LEFT ANTI), so it is only legal as a top-level AND
-    * conjunct of WHERE; [[compileNode]] rejects it anywhere else. The
-    * anti-join reading of NOT IN matches a null-free corpus (the
-    * reference's world has no nulls); standard SQL's null-poisoned
-    * NOT IN semantics are deliberately not reproduced. */
+  /** `expr IN (SELECT ...)` membership predicate (extension). The
+    * engine lowers it, when it plans the query block, to Catalyst's
+    * `EXISTS (SELECT ... WHERE col = expr)`, so it may sit anywhere a
+    * boolean expression may (under OR, in CASE, in a SELECT item).
+    * That is the two-valued reading: no equal row is FALSE, also for a
+    * NULL `expr` or a NULL in the subquery column. `NOT IN` is NOT over
+    * it wherever the NOT sits (the anti-join reading: a NULL in the
+    * subquery column never poisons the result and a NULL `expr` row is
+    * kept); standard SQL's null-aware IN is deliberately not
+    * reproduced. */
   final case class InSubquery(expr: Col, subquery: graft.sql.CompoundQuery) extends Col
-  /** `(SELECT <one value>)` scalar subquery (extension). The engine
-    * evaluates it at PLAN time — one bounded driver value, the SQL
-    * analog of `Similarity.trainCentroids`' k·dim collect — and
-    * substitutes the literal before compilation, so [[compileNode]]
-    * never sees one. Exactly one column and one row required; an empty
-    * result raises instead of yielding SQL's NULL (the engine's world
-    * is null-free). */
+  /** `(SELECT <one value>)` scalar subquery (extension), lowered by the
+    * engine to Catalyst's scalar subquery; Catalyst decorrelates a
+    * correlated one. One column is required at planning. An
+    * uncorrelated one must yield exactly one non-NULL value: more rows
+    * fail at the action with Spark's SCALAR_SUBQUERY_TOO_MANY_ROWS, no
+    * row or a NULL through `raise_error`. A correlated one over an
+    * empty group is SQL NULL. */
   final case class ScalarSubquery(subquery: graft.sql.CompoundQuery) extends Col
-  /** `[NOT] EXISTS (SELECT ...)` predicate (extension). Like
-    * [[InSubquery]] it is not a row-local expression: the engine
-    * decorrelates it into a LEFT SEMI join (`NOT EXISTS` → LEFT ANTI)
-    * whose condition is the subquery's correlated WHERE conjuncts, so it
-    * is only legal as a top-level AND conjunct of WHERE. */
+  /** `[NOT] EXISTS (SELECT ...)` predicate (extension), lowered by the
+    * engine to Catalyst's EXISTS subquery; correlated conjuncts of its
+    * WHERE become the semi/anti join condition when Catalyst
+    * decorrelates it. */
   final case class ExistsSubquery(subquery: graft.sql.CompoundQuery) extends Col
   /** `expr <op> ANY|SOME|ALL (SELECT ...)` quantified comparison
-    * (extension). `= ANY` is exactly IN (semi join), `<> ALL` exactly
-    * NOT IN (anti join); range operators reduce at PLAN time to a
-    * comparison against the subquery's min/max — one bounded 4-scalar
-    * aggregate, never a value collect. Like [[InSubquery]], only legal
-    * as a top-level AND conjunct of WHERE. `op` is the comparison as
-    * the parser spells it (`=`, `!=`, `<`, `<=`, `>`, `>=`). */
+    * (extension). `= ANY` is exactly IN and `<> ALL` exactly NOT IN;
+    * the range operators compare against the min or max of one scalar
+    * subquery `(count, non-null count, min, max)`:
+    * an empty set makes ALL true and ANY false, a NULL among the values
+    * fails at the action. `= ALL` and `<> ANY` are rejected. `op` is
+    * the comparison as the parser spells it (`=`, `!=`, `<`, `<=`,
+    * `>`, `>=`). */
   final case class QuantifiedCmp(expr: Col, op: String, forAll: Boolean,
                                  subquery: graft.sql.CompoundQuery) extends Col
+  /** An expression the engine has already lowered to Catalyst while
+    * planning a query block: a subquery expression, or a reference to a
+    * column of the enclosing query. Compiles to itself. */
+  final case class Lowered(column: Column, dataType: DataType) extends Col
   /** `INTERVAL n DAY|MONTH|YEAR` literal (extension — TPC-H's date
     * arithmetic, `date '1998-12-01' - interval '90' day`). Only
     * meaningful as an operand of `+`/`-` against a timestamp (or a
@@ -222,21 +275,6 @@ object Col {
       (F.lit(bd), DecimalType(math.max(bd.precision, bd.scale), bd.scale))
     case bd: java.math.BigDecimal =>
       (F.lit(bd), DecimalType(math.max(bd.precision, bd.scale), bd.scale))
-    // array literal — reaches here when a scalar subquery over an ARRAY
-    // column inlines (SELECT embedding FROM ... WHERE id = k); element
-    // type from the first element (an empty array has no inferable type)
-    case s: scala.collection.Seq[_] if s.nonEmpty => s.head match {
-      case _: Float =>
-        (F.lit(s.map(_.asInstanceOf[Float]).toArray), ArrayType(FloatType))
-      case _: Double =>
-        (F.lit(s.map(_.asInstanceOf[Double]).toArray), ArrayType(DoubleType))
-      case _: Int =>
-        (F.lit(s.map(_.asInstanceOf[Int]).toArray), ArrayType(IntegerType))
-      case _: Long =>
-        (F.lit(s.map(_.asInstanceOf[Long]).toArray), ArrayType(LongType))
-      case other => throw new IllegalArgumentException(
-        s"Unsupported array literal element: $other")
-    }
     // SQL NULL literal (parser `NULL` keyword, VALUES rows, CASE ELSE
     // NULL): an untyped null — Spark coerces NullType to the context's
     // type wherever one exists
@@ -355,9 +393,8 @@ object Col {
         // runs without dropping to the Scala API. All are narrow
         // per-row expressions — whole-stage-codegen friendly.
         // vector similarity (extension): the engine's codegen'd native
-        // cosine surfaced in the dialect — with an inlined scalar
-        // subquery as the query vector, brute-force ANN is a plain SQL
-        // statement. f64 so a differential oracle's double replay
+        // cosine surfaced in the dialect — with a scalar subquery as
+        // the query vector, brute-force ANN is a plain SQL statement. f64 so a differential oracle's double replay
         // (list_dot_product) lands the same value.
         case "vec_cosine" =>
           arity(2)
@@ -547,25 +584,10 @@ object Col {
         case other => throw new IllegalArgumentException(s"Unsupported aggregate: $other")
       }
       (aliasOpt.fold(c)(c.as(_)), dt)
-    case InSubquery(_, _) =>
+    case Lowered(c, dt) => (c, dt)
+    case _: InSubquery | _: ScalarSubquery | _: ExistsSubquery | _: QuantifiedCmp =>
       throw new IllegalArgumentException(
-        "IN (SELECT ...) is only supported as a top-level AND conjunct " +
-        "of WHERE (it plans as a semi/anti join, not a row expression)")
-    case ScalarSubquery(_) =>
-      throw new IllegalArgumentException(
-        "Scalar subquery escaped plan-time substitution — correlated " +
-        "scalar subqueries are only supported as WHERE comparisons " +
-        "(decorrelated by the Engine); evaluate through the Engine, " +
-        "not Col.compile")
-    case ExistsSubquery(_) =>
-      throw new IllegalArgumentException(
-        "EXISTS (SELECT ...) is only supported as a top-level AND conjunct " +
-        "of WHERE (it plans as a semi/anti join, not a row expression)")
-    case QuantifiedCmp(_, _, _, _) =>
-      throw new IllegalArgumentException(
-        "ANY/ALL (SELECT ...) is only supported as a top-level AND conjunct " +
-        "of WHERE (it plans as a join or a plan-time bound, not a row " +
-        "expression)")
+        "subqueries compile through graft.Engine, which plans their bodies")
     case WindowFn(fn, args, pb, ob, frame, range) =>
       import org.apache.spark.sql.expressions.Window
       val base =

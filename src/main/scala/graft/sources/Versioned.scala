@@ -750,12 +750,6 @@ object Versioned {
       seg: String): Long =
     footerRowCountBySeg(spark, path, Seq(seg))(seg)
 
-  /** Exact PER-SEGMENT row counts from parquet footers: ONE distributed
-    * job does both the per-segment listing and the footer walks (one
-    * task per segment, the analyzeStats model) — driver cost is O(1)
-    * round trips, not O(segments) listStatus calls, and callers that
-    * need many segments' counts ([[purgeVectors]]) must not launch one
-    * job per segment either. */
   /** One segment's exact footer row count: list its dir, sum
     * `getRecordCount` over the part files. THE shared body of both
     * [[footerRowCountBySeg]] paths — the filtering rule and footer
@@ -766,6 +760,14 @@ object Versioned {
       path: String, seg: String): Long =
     Tables.parquetRows(conf, new Path(s"$path/data/$seg"))
 
+  /** Exact PER-SEGMENT row counts. Up to 32 segments count on the
+    * driver, each from its stats sidecar or, without one, its parquet
+    * footers. More segments count in ONE distributed job that does both
+    * the per-segment listing and the footer walks (one task per
+    * segment, the analyzeStats model): driver cost stays O(1) round
+    * trips, not O(segments) listStatus calls, and callers that need
+    * many segments' counts ([[purgeVectors]]) never launch one job per
+    * segment. */
   private[graft] def footerRowCountBySeg(spark: SparkSession, path: String,
       segs: Seq[String]): Map[String, Long] = {
     if (segs.isEmpty) return Map.empty
@@ -1737,16 +1739,6 @@ object Versioned {
     } finally { fs.delete(new Path(tmp), true); () }
   }
 
-  /** Garbage-collect history: retain the newest `keepVersions`
-    * manifests and delete (a) every older manifest, then (b) every
-    * `data/seg-*` directory no retained manifest references — which
-    * also sweeps segments orphaned by crashed commits. Ordering is the
-    * crash-safety argument: manifests die BEFORE their segments, so at
-    * every instant each existing manifest's segments all exist; a crash
-    * mid-vacuum leaves only harmless orphans for the next vacuum.
-    * Maintenance-window contract (like any table format's vacuum):
-    * readers still pinned to a dropped version lose their segments —
-    * run it when no reader holds versions older than the cutoff. */
   /** What a [[vacuum]] deleted — or, for a DRY RUN, WOULD delete:
     * versions dropped, data segments removed, deletion-vector files
     * retired, change-feed entries swept, and the data bytes freed
@@ -1757,6 +1749,16 @@ object Versioned {
                                dvFilesDeleted: Int, cdcEntriesDeleted: Int,
                                bytesFreed: Long)
 
+  /** Garbage-collect history: retain the newest `keepVersions`
+    * manifests and delete (a) every older manifest, then (b) every
+    * `data/seg-*` directory no retained manifest references — which
+    * also sweeps segments orphaned by crashed commits. Ordering is the
+    * crash-safety argument: manifests die BEFORE their segments, so at
+    * every instant each existing manifest's segments all exist; a crash
+    * mid-vacuum leaves only harmless orphans for the next vacuum.
+    * Maintenance-window contract (like any table format's vacuum):
+    * readers still pinned to a dropped version lose their segments —
+    * run it when no reader holds versions older than the cutoff. */
   def vacuum(spark: SparkSession, path: String,
              keepVersions: Int = Int.MaxValue,
              dryRun: Boolean = false): VacuumStats = {
@@ -2133,13 +2135,6 @@ object Versioned {
     (df, idx)
   }
 
-  /** PLANNING-ONLY data-skipping accounting: of the snapshot's
-    * segments, how many could satisfy `predicate` per their
-    * [[SegmentStats]] sidecars — `(total, kept)` — without reading a
-    * row. This is the deterministic number the skipping gates pin into
-    * their oracle hash: a regression that stops writing sidecars (or
-    * stops consulting them) inflates `kept` back to `total` and fails
-    * the gate, not just a benchmark. */
   /** ROW-LEVEL CDC for vectored deletes: the rows whose positions were
     * newly recorded in deletion vectors in `(fromVersion, toVersion]`
     * — the retraction feed a downstream consumer applies (the
@@ -2539,6 +2534,13 @@ object Versioned {
     Some(MetaStats(rows, schema, cols))
   }
 
+  /** PLANNING-ONLY data-skipping accounting: of the snapshot's
+    * segments, how many could satisfy `predicate` per their
+    * [[SegmentStats]] sidecars — `(total, kept)` — without reading a
+    * row. This is the deterministic number the skipping gates pin into
+    * their oracle hash: a regression that stops writing sidecars (or
+    * stops consulting them) inflates `kept` back to `total` and fails
+    * the gate, not just a benchmark. */
   def pruneCount(spark: SparkSession, path: String,
                  predicate: org.apache.spark.sql.Column,
                  version: Option[Long] = None): (Int, Int) = {

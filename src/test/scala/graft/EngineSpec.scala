@@ -236,33 +236,99 @@ class EngineSpec extends SparkSpec {
     assert(rows(out.df) == Set(Seq(2), Seq(3), Seq(4), Seq(5)))
   }
 
-  test("correlated COUNT nested in a larger expression is rejected loudly") {
-    // COUNT()+1 over an empty group is 1, which coalesce-0 cannot
-    // render — reject rather than mis-evaluate
-    assertThrows[graft.sql.SemanticError](engine.sql(
+  test("correlated COUNT nested in a larger expression counts an empty group as 0") {
+    // COUNT()+1 per user: Alice 3, Bob 2, Cara 2, and 1 for Dan and Eve,
+    // who have no orders — Catalyst's decorrelation keeps COUNT's 0
+    val out = engine.sql(
       """SELECT u.user_id FROM users u
         |WHERE 2 > (SELECT COUNT() + 1 FROM orders o
-        |           WHERE o.user_id = u.user_id)""".stripMargin))
+        |           WHERE o.user_id = u.user_id)""".stripMargin)
+    assert(rows(out.df) == Set(Seq(4), Seq(5)))
   }
 
-  test("correlated scalar under OR is rejected loudly") {
-    val e = intercept[graft.sql.SemanticError] {
-      engine.sql(
-        """SELECT u.user_id FROM users u
-          |WHERE u.age > 100 OR u.age > (SELECT AVG(o.price) FROM orders o
-          |                              WHERE o.user_id = u.user_id)""".stripMargin)
-    }
-    assert(e.getMessage.contains("top-level AND conjunct"))
+  test("correlated scalar under OR") {
+    // Eve (22) by the first disjunct, Bob (30 > avg 25) by the second;
+    // Dan has no orders, so his second disjunct is NULL and drops him
+    val out = engine.sql(
+      """SELECT u.user_id FROM users u
+        |WHERE u.age < 23 OR u.age > (SELECT AVG(o.price) FROM orders o
+        |                             WHERE o.user_id = u.user_id)""".stripMargin)
+    assert(rows(out.df) == Set(Seq(2), Seq(5)))
   }
 
-  test("correlated scalar with a non-equality correlation predicate is rejected") {
-    val e = intercept[graft.sql.SemanticError] {
-      engine.sql(
-        """SELECT u.user_id FROM users u
-          |WHERE u.age > (SELECT AVG(o.price) FROM orders o
-          |               WHERE o.user_id < u.user_id)""".stripMargin)
+  test("correlated scalar with a non-equality correlation predicate") {
+    // orders of LOWER user ids: no age beats their average price
+    // (640, 435, 401.25, 401.25; Alice's set is empty, so NULL)...
+    assert(rows(engine.sql(
+      """SELECT u.user_id FROM users u
+        |WHERE u.age > (SELECT AVG(o.price) FROM orders o
+        |               WHERE o.user_id < u.user_id)""".stripMargin).df).isEmpty)
+    // ...but Cara (35) and Dan (28) beat their minimum price 25
+    assert(rows(engine.sql(
+      """SELECT u.user_id FROM users u
+        |WHERE u.age > (SELECT MIN(o.price) FROM orders o
+        |               WHERE o.user_id < u.user_id)""".stripMargin).df) ==
+      Set(Seq(3), Seq(4)))
+  }
+
+  test("NOT IN keeps the anti-join reading with NULLs on both sides") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft-notin-null").toString
+    Seq(Some(1), Some(2), Some(3), None).toDF("k")
+      .write.mode("overwrite").parquet(s"$d/t.parquet")
+    Seq(Some(2), None).toDF("k").write.mode("overwrite").parquet(s"$d/s.parquet")
+    // a NULL in the subquery column does not empty the result (standard
+    // SQL's null-aware NOT IN would), and the NULL outer key is kept:
+    // no subquery row equals it
+    val out = Engine(spark, d).sql(
+      "SELECT k FROM t WHERE k NOT IN (SELECT k FROM s)").df
+    assert(rows(out) == Set(Seq(1), Seq(3), Seq(null)))
+    assert(rows(Engine(spark, d).sql(
+      "SELECT k FROM t WHERE k <> ALL (SELECT k FROM s)").df) == rows(out))
+    // the same reading wherever the NOT sits: IN is EXISTS over the equal
+    // rows, so NOT over a larger predicate keeps the same rows
+    assert(rows(Engine(spark, d).sql(
+      "SELECT k FROM t WHERE NOT (k IN (SELECT k FROM s) AND 1 = 1)").df) ==
+      rows(out))
+    // and IN itself is two-valued: no equal row is FALSE, even for NULL
+    assert(rows(Engine(spark, d).sql(
+      """SELECT k, CASE WHEN NOT (k IN (SELECT k FROM s)) THEN 1 ELSE 0 END
+        |AS m FROM t""".stripMargin).df) ==
+      Set(Seq(1, 1), Seq(2, 0), Seq(3, 1), Seq(null, 1)))
+  }
+
+  test("a subquery body resolves its own columns first, case-insensitively") {
+    import spark.implicits._
+    val d = Files.createTempDirectory("graft-subq-scope").toString
+    Seq((1, 10, 5), (2, 20, 4), (3, 30, 3), (4, 40, 2), (5, 50, 1))
+      .toDF("id", "g", "p").write.mode("overwrite").parquet(s"$d/t.parquet")
+    Seq(5, 4, 3, 2, 1).toDF("k").write.mode("overwrite").parquet(s"$d/s.parquet")
+    val eng = Engine(spark, d)
+    // `ID` is the body's own `id`: AVG over ids 1-3 is 20, uncorrelated
+    assert(rows(eng.sql(
+      "SELECT id FROM t WHERE g > (SELECT AVG(g) FROM t WHERE ID < 4)").df) ==
+      Set(Seq(3), Seq(4), Seq(5)))
+    // a select-list alias in the body's ORDER BY is the body's own
+    // output, also when the enclosing query has a column of that name
+    assert(rows(eng.sql(
+      "SELECT k FROM s WHERE k IN (SELECT k AS p FROM s ORDER BY p LIMIT 3)").df) ==
+      Set(Seq(1), Seq(2), Seq(3)))
+    assert(rows(eng.sql(
+      "SELECT id FROM t WHERE id IN (SELECT k AS p FROM s ORDER BY p LIMIT 3)").df) ==
+      Set(Seq(1), Seq(2), Seq(3)))
+    // a reference resolving nowhere is a SemanticError
+    intercept[graft.sql.SemanticError] {
+      eng.sql("SELECT id FROM t WHERE EXISTS (SELECT k FROM s WHERE k = nope)")
     }
-    assert(e.getMessage.contains("equality"))
+  }
+
+  test("a correlated EXISTS ignores its body's DISTINCT") {
+    // users with orders: Alice, Bob and Cara; order 5's user 9 is absent
+    assert(rows(engine.sql(
+      """SELECT u.user_id FROM users u
+        |WHERE EXISTS (SELECT DISTINCT o.user_id FROM orders o
+        |              WHERE o.user_id = u.user_id)""".stripMargin).df) ==
+      Set(Seq(1), Seq(2), Seq(3)))
   }
 
   test("uncorrelated scalar subqueries still inline as literals") {
@@ -1324,12 +1390,11 @@ class EngineSpec extends SparkSpec {
     assertThrows[graft.sql.SemanticError] {
       engine.sql("EXPLAIN CREATE TABLE 'x.parquet' AS SELECT * FROM fruits")
     }
-    // scalar subqueries resolve by EXECUTING a collect — EXPLAIN promises
-    // planning without execution, so they reject like CTAS does
-    assertThrows[graft.sql.SemanticError] {
-      engine.sql("EXPLAIN SELECT fruit FROM fruits " +
-        "WHERE quantity > (SELECT AVG(quantity) AS a FROM fruits)")
-    }
+    // a scalar subquery is part of the plan: EXPLAIN shows it
+    val sub = engine.sql("EXPLAIN SELECT fruit FROM fruits " +
+      "WHERE quantity > (SELECT AVG(quantity) AS a FROM fruits)")
+      .df.collect().map(_.getString(0)).mkString("\n")
+    assert(sub.contains("Subquery"), sub)
   }
 
   test("vec_cosine + array scalar-subquery literal: vector search in SQL") {
@@ -1765,6 +1830,55 @@ class EngineSpec extends SparkSpec {
       assert(rows(engine.sql(s"SELECT COUNT() AS n FROM '$num'").df) ==
         Set(Seq(590L)))
       assert(graft.sources.Versioned.segmentCount(spark, num) == 2)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+      }
+      rm(out.toFile)
+    }
+  }
+
+  test("a query's subqueries are planned, not run: no job before the action") {
+    val out = Files.createTempDirectory("graft-subquery-jobs")
+    try {
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      import spark.implicits._
+      val ds = s"$out/ds"
+      graft.sources.Versioned.commit(
+        (1L to 50L).map(i => (i, i % 7)).toDF("id", "g"), ds)
+      val e = Engine(spark)
+      def jobsWhile(body: => Unit): Int = {
+        val n = new java.util.concurrent.atomic.AtomicInteger
+        val l = new SparkListener {
+          override def onJobStart(j: SparkListenerJobStart): Unit = {
+            n.incrementAndGet(); ()
+          }
+        }
+        spark.sparkContext.addSparkListener(l)
+        try {
+          body
+          // listener delivery is asynchronous: wait for the count to settle
+          var last = -1
+          while (last != n.get) { last = n.get; Thread.sleep(300) }
+          n.get
+        } finally spark.sparkContext.removeSparkListener(l)
+      }
+      // g = id % 7 over ids 1..50: AVG(g) = 2.96, so g in 3..6 (28 rows);
+      // a g = 6 row exists (all 50); ids 1..3 carry g 1..3 (g in 4..6, 21)
+      Seq(
+        s"SELECT id FROM '$ds' WHERE g > (SELECT AVG(g) FROM '$ds')" -> 28L,
+        s"SELECT id FROM '$ds' WHERE EXISTS (SELECT * FROM '$ds' WHERE g = 6)" -> 50L,
+        s"SELECT id FROM '$ds' WHERE g > ALL (SELECT g FROM '$ds' WHERE id < 4)" -> 21L
+      ).foreach { case (q, n) =>
+        var frame: graft.api.GraftFrame = null
+        assert(jobsWhile { frame = e.sql(q) } == 0, q)
+        assert(frame.count() == n, q)
+      }
+      var explained: graft.api.GraftFrame = null
+      assert(jobsWhile { explained = e.sql(
+        s"EXPLAIN SELECT id FROM '$ds' WHERE g > (SELECT AVG(g) FROM '$ds')") } == 0)
+      val text = explained.df.collect().map(_.getString(0)).mkString("\n")
+      assert(text.contains("Subquery"), text)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()

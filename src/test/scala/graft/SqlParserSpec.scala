@@ -544,9 +544,17 @@ class SqlParserSpec extends SparkSpec {
         |SELECT fruit FROM fruits WHERE color IN (SELECT color FROM hot)""".stripMargin)
       .df.collect().map(_.getString(0)).toSet
     assert(viaCte == Set("banana"))
-    // under OR there is no join rendering — loud error, not wrong rows
-    assertThrows[SemanticError](Engine(spark, d).sql(
-      "SELECT fruit FROM fruits WHERE quantity = 2 OR color IN (SELECT color FROM fruits)").df)
+    // under OR the IN is Catalyst's IN subquery: every color is in the
+    // subquery, so every row; with the high-quantity colors only, the
+    // orange (quantity 2) joins the yellow rows
+    assert(Engine(spark, d).sql(
+      "SELECT fruit FROM fruits WHERE quantity = 2 OR color IN (SELECT color FROM fruits)")
+      .df.count() == 5)
+    assert(Engine(spark, d).sql(
+      """SELECT fruit, quantity FROM fruits
+        |WHERE quantity = 2 OR color IN (SELECT color FROM fruits WHERE quantity > 4)""".stripMargin)
+      .df.collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
+      Set(("orange", 2), ("banana", 5), ("banana", 7)))
     // a multi-column subquery is not a membership set
     assertThrows[SemanticError](Engine(spark, d).sql(
       "SELECT fruit FROM fruits WHERE color IN (SELECT color, quantity FROM fruits)").df)
@@ -664,9 +672,16 @@ class SqlParserSpec extends SparkSpec {
         |SELECT f.fruit, f.quantity FROM fruits f
         |WHERE EXISTS (SELECT * FROM hot h WHERE h.color = f.color)""".stripMargin)
     assert(viaCte == Set(("banana", 5), ("banana", 7)))
-    // under OR there is no join rendering — loud error, not wrong rows
-    assertThrows[SemanticError](Engine(spark, d).sql(
-      "SELECT fruit FROM fruits WHERE quantity = 2 OR EXISTS (SELECT * FROM fruits)").df)
+    // under OR: an uncorrelated EXISTS over a non-empty table keeps
+    // every row; a correlated one adds the outshone banana5 to orange2
+    assert(run(
+      "SELECT fruit, quantity FROM fruits WHERE quantity = 2 OR EXISTS (SELECT * FROM fruits)")
+      .size == 5)
+    assert(run(
+      """SELECT f.fruit, f.quantity FROM fruits f
+        |WHERE f.quantity = 2 OR EXISTS (SELECT * FROM fruits g
+        |  WHERE g.color = f.color AND g.quantity > f.quantity)""".stripMargin) ==
+      Set(("orange", 2), ("banana", 5)))
   }
 
   test("scalar subqueries: plan-time literal, anywhere an expression sits, cardinality errors (extension)") {
@@ -689,11 +704,23 @@ class SqlParserSpec extends SparkSpec {
         |SELECT fruit FROM fruits WHERE quantity = (SELECT m FROM caps)""".stripMargin)
       .df.collect().map(_.getString(0)).toSeq
     assert(viaCte == Seq("banana"))
-    // cardinality violations are loud: >1 row, 0 rows, 2 columns
-    assertThrows[SemanticError](Engine(spark, d).sql(
-      "SELECT fruit FROM fruits WHERE quantity = (SELECT quantity FROM fruits)").df)
-    assertThrows[SemanticError](Engine(spark, d).sql(
-      "SELECT fruit FROM fruits WHERE quantity = (SELECT quantity FROM fruits WHERE quantity > 99)").df)
+    // cardinality violations are loud: >1 row and 0 rows at the action
+    // (planning runs nothing), 2 columns at planning
+    def failure(sql: String): String = {
+      val frame = Engine(spark, d).sql(sql).df
+      val e = intercept[Exception](frame.collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    }
+    assert(failure(
+      "SELECT fruit FROM fruits WHERE quantity = (SELECT quantity FROM fruits)")
+      .contains("SCALAR_SUBQUERY_TOO_MANY_ROWS"))
+    assert(failure(
+      "SELECT fruit FROM fruits WHERE quantity = (SELECT quantity FROM fruits WHERE quantity > 99)")
+      .contains("Scalar subquery returned no rows or a NULL value"))
+    assert(failure(
+      "SELECT fruit FROM fruits WHERE quantity = (SELECT MAX(CASE WHEN quantity > 99 THEN quantity END) FROM fruits)")
+      .contains("Scalar subquery returned no rows or a NULL value"))
     assertThrows[SemanticError](Engine(spark, d).sql(
       "SELECT fruit FROM fruits WHERE quantity = (SELECT fruit, quantity FROM fruits)").df)
   }
@@ -756,20 +783,30 @@ class SqlParserSpec extends SparkSpec {
                |WHERE quantity > ANY (SELECT quantity FROM fruits
                |                      WHERE quantity > 99)""".stripMargin)
       .count() == 0)
-    // NULLs among the values: three-valued comparison — rejected loudly
-    assertThrows[SemanticError](q(
+    // NULLs among the values: three-valued comparison — loud at the action
+    val nulls = intercept[Exception](q(
       """SELECT fruit FROM fruits
         |WHERE quantity > ALL (SELECT CASE WHEN quantity > 99 THEN quantity END
         |                      FROM fruits)""".stripMargin).collect())
+    assert(Iterator.iterate[Throwable](nulls)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("ANY/ALL subquery returned NULL values")))
     // = ALL / <> ANY have no useful rendering here — loud errors
     assertThrows[SemanticError](q(
       "SELECT fruit FROM fruits WHERE quantity = ALL (SELECT quantity FROM fruits)"))
     assertThrows[SemanticError](q(
       "SELECT fruit FROM fruits WHERE quantity != ANY (SELECT quantity FROM fruits)"))
-    // like IN/EXISTS, a quantified comparison cannot sit under OR
-    assertThrows[SemanticError](q(
-      """SELECT fruit FROM fruits WHERE quantity = 2
-        |OR quantity > ALL (SELECT quantity FROM fruits)""".stripMargin))
+    // like IN/EXISTS, a quantified comparison may sit under OR: nothing
+    // beats the max 7, so only the orange; over the apples (max 4) the
+    // bananas join it
+    assert(q("""SELECT fruit FROM fruits WHERE quantity = 2
+               |OR quantity > ALL (SELECT quantity FROM fruits)""".stripMargin)
+      .collect().map(_.getString(0)).toSeq == Seq("orange"))
+    assert(q("""SELECT fruit, quantity FROM fruits WHERE quantity = 2
+               |OR quantity > ALL (SELECT quantity FROM fruits
+               |                   WHERE fruit = 'apple')""".stripMargin)
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
+      Set(("orange", 2), ("banana", 5), ("banana", 7)))
   }
 
   test("a CTE referenced twice is staged: one source scan, correct self-join") {
