@@ -43,7 +43,7 @@ case class GramHashesExpr(left: Expression, right: Expression)
 
 object GramHashesExpr {
 
-  private def isWs(b: Byte): Boolean =
+  private[functions] def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
   /** Tokenize lowercased bytes into (start, end) offset pairs, packed as

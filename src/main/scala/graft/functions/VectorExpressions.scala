@@ -273,7 +273,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             s"minhash_bands $what must be a literal, got: $other")
         }
         MinhashBandsExpr(Cast(children(0), StringType),
-          lit(children(1), "numBands"), lit(children(2), "rowsPerBand"))
+          lit(children(1), "numBands"), lit(children(2), "rowsPerBand"),
+          if (children.length > 3) lit(children(3), "shingleN") else 1)
       }))
     ext.injectFunction((
       new FunctionIdentifier("stable_const"),

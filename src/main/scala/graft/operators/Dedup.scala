@@ -66,9 +66,6 @@ object Dedup {
   def md5Hash60(s: Column): Column =
     F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 15), 16, 10).cast("long")
 
-  /** Base hash for the affine minhash family, in [0, 2^31-1). */
-  def md5BaseHash(s: Column): Column = md5Hash60(s) % MinhashP
-
   /** Deterministic affine rehash parameters (a_i, b_i): seed hash i is
     * `(a_i * base + b_i) mod P`. One md5 per shingle + numHashes cheap
     * integer transforms replaces numHashes independent string hashes. */
@@ -78,35 +75,6 @@ object Dedup {
       val b = (104729L * (i + 1) + 7919L) % MinhashP
       (a, b)
     }
-
-  /** LSH band keys of a document: minhash signature (numBands*rowsPerBand
-    * affine hashes, all folded in ONE pass over the shingle array) sliced
-    * into per-band keys. The whole thing is a single expression: shingle
-    * hashes and the signature are lambda-bound, so nothing is recomputed
-    * however many times the bands reference it — the structural fix for
-    * Catalyst's CollapseProject recompute hazard (no persist needed). */
-  def minhashBandKeys(text: Column, numBands: Int, rowsPerBand: Int,
-                      shingleN: Int,
-                      baseHash: Column => Column = md5BaseHash): Column = {
-    val numHashes = numBands * rowsPerBand
-    val params = minhashAffineParams(numHashes)
-    val paramArr = F.array(params.map { case (a, b) =>
-      F.struct(F.lit(a).as("a"), F.lit(b).as("b"))
-    }: _*)
-    let(F.transform(shingles(text, shingleN), (s: Column) => baseHash(s))) { hs =>
-      F.aggregate(
-        hs,
-        F.array_repeat(F.lit(MinhashP), numHashes),
-        (acc: Column, h: Column) =>
-          F.zip_with(acc, paramArr, (m: Column, pr: Column) =>
-            F.least(m, (pr.getField("a") * h + pr.getField("b")) % MinhashP)),
-        (sig: Column) => F.array((0 until numBands).map { b =>
-          F.concat_ws(",",
-            (b * rowsPerBand until (b + 1) * rowsPerBand).map(i =>
-              F.element_at(sig, i + 1).cast("string")): _*)
-        }: _*))
-    }
-  }
 
   /** Round-robin repartition to full parallelism, but ONLY when the input
     * has markedly fewer splits than the cores that run it (e.g. one
@@ -174,42 +142,86 @@ object Dedup {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.foreach(_.unpersist(false))
 
-  /** All i<j pairs of an array's elements as `struct<a, b>`, preserving
-    * array order (sort the array first for id_a < id_b). Bounded by the
-    * caller's bucket cap, so the explode is at most maxBucket²/2 rows. */
-  private def elementPairs(arr: Column): Column =
-    let(arr) { v =>
-      F.flatten(F.transform(v, (a: Column, i: Column) =>
-        F.transform(F.slice(v, i + 2, F.size(v)), (b: Column) =>
-          F.struct(a.as("a"), b.as("b")))))
-    }
+  /** The one capped pair explode of every bucketed operator: ONE
+    * map-side-combinable aggregation collects each bucket's `member`
+    * values (bucket = `keyCols`), buckets outside [2, maxBucket] are
+    * dropped (a mega-bucket means near-identical boilerplate where
+    * pairwise output would be quadratic; at corpus scale you cap it, you
+    * don't join it), and the i<j pairs of the sorted member list explode
+    * as `p: struct<a, b>` — no self-join, no window; the cap bounds the
+    * explode at maxBucket²/2 rows per bucket. Members sort by their
+    * first field, so an id-first member gives `p.a.id < p.b.id`. Each
+    * caller filters and projects `p` its own way. */
+  private def bucketPairs(df: DataFrame, keyCols: Seq[String], member: Column,
+                          maxBucket: Int): DataFrame =
+    df.groupBy(keyCols.map(F.col): _*)
+      .agg(F.collect_list(member).as("ms"))
+      .filter(F.size(F.col("ms")).between(2, maxBucket))
+      .select(F.explode(let(F.array_sort(F.col("ms"))) { v =>
+        F.flatten(F.transform(v, (a: Column, i: Column) =>
+          F.transform(F.slice(v, i + 2, F.size(v)), (b: Column) =>
+            F.struct(a.as("a"), b.as("b")))))
+      }).as("p"))
 
-  /** Candidate pairs from bucketed rows (`keyCols...`, `id`): ONE
-    * map-side-combinable aggregation collects each bucket's members,
-    * buckets outside [2, maxBucket] are dropped (a mega-bucket means
-    * near-identical boilerplate where pairwise output would be quadratic;
-    * at corpus scale you cap it, you don't join it), and pairs explode
-    * from the bounded member list — no self-join, no window. */
+  /** Distinct candidate pairs (id_a < id_b) from bucketed (`keyCols...`,
+    * `id`) rows: [[bucketPairs]] over bare ids. */
   private[graft] def cappedBucketPairs(banded: DataFrame, keyCols: Seq[String],
                                        maxBucket: Int): DataFrame =
-    banded.groupBy(keyCols.map(F.col): _*)
-      .agg(F.collect_list(F.col("id")).as("ids"))
-      .filter(F.size(F.col("ids")).between(2, maxBucket))
-      .select(F.explode(elementPairs(F.array_sort(F.col("ids")))).as("p"))
+    bucketPairs(banded, keyCols, F.col("id"), maxBucket)
       .select(F.col("p.a").as("id_a"), F.col("p.b").as("id_b"))
       .dropDuplicates("id_a", "id_b")
 
-  /** Band-keys expression: native one-pass banding for unigram
-    * shingles; otherwise the composable fold over the native
-    * `md5_hash60` base hash (same values either way — parity-spec'd).
-    * Shared by [[minhashLsh]] and the streaming candidate stage
-    * ([[graft.streaming.Streams.minhashCandidatesStream]]). */
+  /** The one verify of the candidate→verify operators: exact scores for
+    * a candidate pair set (`id_a`, `id_b`), returned as (id_a, id_b,
+    * `score`) where `score` >= threshold.
+    *
+    * The pairs are staged LAZILY: they feed the output spine plus both
+    * verify-side joins, and Catalyst does not dedupe common subplans —
+    * unstaged, the full scan→bucketing pipeline would execute three times
+    * (the round-2 plan audit's finding). They are tiny relative to the
+    * corpus (bounded by the bucket cap). `source` is pruned to the
+    * candidate ids with ONE left-semi join BEFORE `featureExpr` is
+    * computed (no pre-distinct: the semi-join's build side dedupes
+    * inherently, so a distinct would only add an exchange), and the
+    * (id, `feature`) frame is staged EAGERLY: both join sides read it, so
+    * the feature work and its source scan run ONE pass, candidates only.
+    * Its job also materializes the lazy pair stage (checkpointing
+    * cascades through the RDD lineage), so both stages cost ONE job
+    * barrier instead of two — the round-3 plan audit found the time at
+    * toy scale was going to sequential job scheduling, not compute. */
+  private def verified(pairs: DataFrame, source: DataFrame, idCol: String,
+                       feature: String, featureExpr: Column,
+                       score: String, scoreFn: (Column, Column) => Column,
+                       threshold: Double, reliable: Boolean): DataFrame = {
+    val cands = stage(pairs, eager = false, reliable)
+    val candIds = cands
+      .select(F.explode(F.array(F.col("id_a"), F.col("id_b"))).as("id"))
+    val feats = stage(source
+      .join(candIds, source(idCol) === candIds("id"), "left_semi")
+      .select(F.col(idCol).as("id"), featureExpr.as(feature)),
+      eager = true, reliable)
+    def side(s: String) =
+      feats.select(F.col("id").as(s"id_$s"), F.col(feature).as(s"${feature}_$s"))
+    cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .withColumn(score, scoreFn(F.col(s"${feature}_a"), F.col(s"${feature}_b")))
+      .filter(F.col(score) >= threshold)
+      .select("id_a", "id_b", score)
+  }
+
+  /** [[verified]] on exact Jaccard over [[sortedHashedShingles]] (or a
+    * stored column of them): the MinHash family's verify. */
+  private def jaccardVerified(pairs: DataFrame, source: DataFrame, idCol: String,
+                              shingles: Column, threshold: Double,
+                              reliable: Boolean): DataFrame =
+    verified(pairs, source, idCol, "sh", shingles, "jaccard", jaccardSorted,
+      threshold, reliable)
+
+  /** LSH band keys: the native one-pass `minhash_bands`
+    * ([[graft.functions.MinhashBandsExpr]]) at any shingle width. */
   private[graft] def lshBandKeys(text: Column, numBands: Int,
                                  rowsPerBand: Int, shingleN: Int): Column =
-    if (shingleN == 1)
-      F.call_function("minhash_bands", text, F.lit(numBands), F.lit(rowsPerBand))
-    else minhashBandKeys(text, numBands, rowsPerBand, shingleN,
-      (c: Column) => F.call_function("md5_hash60", c) % MinhashP)
+    F.call_function("minhash_bands", text, F.lit(numBands), F.lit(rowsPerBand),
+      F.lit(shingleN))
 
   /** MinHash + LSH near-duplicate pairs.
     *
@@ -226,43 +238,13 @@ object Dedup {
                  shingleN: Int = 3, threshold: Double = 0.8,
                  maxBucket: Int = 64, reliable: Boolean = false): DataFrame = {
     val nonEmpty = df.filter(F.col(textCol).rlike("\\S"))
-    val bandKeysExpr = lshBandKeys(F.col(textCol),
-      numBands, rowsPerBand, shingleN)
     val banded = spreadForCompute(nonEmpty).select(
       F.col(idCol).as("id"),
-      F.posexplode(bandKeysExpr).as(Seq("band", "bucket")))
-    // Stage the candidate pairs ONCE: the pair set feeds the output spine
-    // plus both verify-side joins, and Catalyst does not dedupe common
-    // subplans — without staging, the full scan→banding→bucket pipeline
-    // executes three times (the round-2 plan audit's finding). The pair
-    // set is tiny relative to the corpus (bounded by the bucket cap).
-    // LAZY, not eager: candSh's eager materialization below computes and
-    // persists these blocks as a side effect (checkpointing cascades
-    // through the RDD lineage), so both staged frames cost ONE job
-    // barrier instead of two — the round-3 plan audit found the time at
-    // toy scale was going to sequential job scheduling, not compute.
-    val pairs = stage(
-      cappedBucketPairs(banded, Seq("band", "bucket"), maxBucket),
-      eager = false, reliable)
-
-    // No pre-distinct: the semi-join's build side dedupes inherently, so
-    // a distinct here would only add an exchange.
-    val candIds = pairs
-      .select(F.explode(F.array(F.col("id_a"), F.col("id_b"))).as("id"))
-    // candSh is referenced twice (id_a and id_b join sides); staging it
-    // keeps the semi-join-pruned shingle recompute — and its full corpus
-    // scan — to ONE pass. Candidates-only, so it is small by construction.
-    val candSh = stage(nonEmpty
-      .join(candIds, nonEmpty(idCol) === candIds("id"), "left_semi")
-      .select(F.col(idCol).as("id"),
-        sortedHashedShingles(F.col(textCol), shingleN).as("sh")),
-      eager = true, reliable)
-    pairs
-      .join(candSh.select(F.col("id").as("id_a"), F.col("sh").as("sh_a")), "id_a")
-      .join(candSh.select(F.col("id").as("id_b"), F.col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard", jaccardSorted(F.col("sh_a"), F.col("sh_b")))
-      .filter(F.col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      F.posexplode(lshBandKeys(F.col(textCol), numBands, rowsPerBand, shingleN))
+        .as(Seq("band", "bucket")))
+    jaccardVerified(cappedBucketPairs(banded, Seq("band", "bucket"), maxBucket),
+      nonEmpty, idCol, sortedHashedShingles(F.col(textCol), shingleN),
+      threshold, reliable)
   }
 
   /** Write a minhash dedup INDEX: per document, its LSH band keys and
@@ -362,34 +344,20 @@ object Dedup {
         F.posexplode(F.col("bands")).as(Seq("band", "bucket")))
     val allBanded = explodeBands(index, isNew = false)
       .unionByName(explodeBands(newPrep, isNew = true))
-    // the cappedBucketPairs shape with an is_new tag riding along;
     // members sort by id (unique across sides), so id_a < id_b like the
     // batch pipeline, and only new-involving pairs survive
-    val pairs = stage(
-      allBanded.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct(F.col("id"), F.col("is_new"))).as("ms"))
-        .filter(F.size(F.col("ms")).between(2, maxBucket))
-        .select(F.explode(elementPairs(F.array_sort(F.col("ms")))).as("p"))
-        .filter(F.col("p.a.is_new") || F.col("p.b.is_new"))
-        // a re-ingested duplicate id (index ∩ batch) would otherwise
-        // surface as a degenerate self-pair with jaccard 1.0 — drop it
-        // rather than let an id-uniqueness violation corrupt the output
-        .filter(F.col("p.a.id") =!= F.col("p.b.id"))
-        .select(F.col("p.a.id").as("id_a"), F.col("p.b.id").as("id_b"))
-        .dropDuplicates("id_a", "id_b"),
-      eager = false, reliable)
-    val sh = index.select("id", "sh").unionByName(newPrep.select("id", "sh"))
-    val candIds = pairs
-      .select(F.explode(F.array(F.col("id_a"), F.col("id_b"))).as("id"))
-    val candSh = stage(sh.join(candIds, Seq("id"), "left_semi"),
-      eager = true, reliable)
-    pairs
-      .join(candSh.select(F.col("id").as("id_a"), F.col("sh").as("sh_a")), "id_a")
-      .join(candSh.select(F.col("id").as("id_b"), F.col("sh").as("sh_b")), "id_b")
-      .withColumn("jaccard",
-        jaccardSorted(F.col("sh_a"), F.col("sh_b")))
-      .filter(F.col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    val pairs = bucketPairs(allBanded, Seq("band", "bucket"),
+        F.struct(F.col("id"), F.col("is_new")), maxBucket)
+      .filter(F.col("p.a.is_new") || F.col("p.b.is_new"))
+      // a re-ingested duplicate id (index ∩ batch) would otherwise
+      // surface as a degenerate self-pair with jaccard 1.0 — drop it
+      // rather than let an id-uniqueness violation corrupt the output
+      .filter(F.col("p.a.id") =!= F.col("p.b.id"))
+      .select(F.col("p.a.id").as("id_a"), F.col("p.b.id").as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    jaccardVerified(pairs,
+      index.select("id", "sh").unionByName(newPrep.select("id", "sh")),
+      "id", F.col("sh"), threshold, reliable)
   }
 
   /** FUZZY DECONTAMINATION: near-duplicate pairs BETWEEN a corpus and an
@@ -418,7 +386,6 @@ object Dedup {
                       shingleN: Int = 3, threshold: Double = 0.8,
                       maxBucket: Int = 64,
                       reliable: Boolean = false): DataFrame = {
-    val spark = corpus.sparkSession
     def tagged(df: DataFrame, textCol: String, idCol: String, isEval: Boolean) =
       df.filter(F.col(textCol).rlike("\\S"))
         .select(F.col(idCol).as("id"), F.lit(isEval).as("is_eval"),
@@ -429,39 +396,24 @@ object Dedup {
       F.col("id"), F.col("is_eval"),
       F.posexplode(lshBandKeys(F.col("text_"),
         numBands, rowsPerBand, shingleN)).as(Seq("band", "bucket")))
-    val pairs = stage(
-      banded.groupBy("band", "bucket")
-        .agg(F.collect_list(F.struct(F.col("id"), F.col("is_eval"))).as("ms"))
-        .filter(F.size(F.col("ms")).between(2, maxBucket))
-        .select(F.explode(elementPairs(F.array_sort(F.col("ms")))).as("p"))
-        .filter(F.col("p.a.is_eval") =!= F.col("p.b.is_eval")) // cross only
-        .filter(F.col("p.a.id") =!= F.col("p.b.id"))           // shared-id guard
-        .select(
-          F.when(F.col("p.a.is_eval"), F.col("p.b.id"))
-            .otherwise(F.col("p.a.id")).as("corpus_id"),
-          F.when(F.col("p.a.is_eval"), F.col("p.a.id"))
-            .otherwise(F.col("p.b.id")).as("eval_id"))
-        .dropDuplicates("corpus_id", "eval_id"),
-      eager = false, reliable)
-    val candIds = pairs
-      .select(F.explode(F.array(F.col("corpus_id"), F.col("eval_id"))).as("id"))
-    // candidates-only verify side: semi-join-pruned BEFORE the shingle
-    // recompute, un-spread like the batch pipeline (re-shuffling full
-    // text a second time would cost more than the pruned compute saves)
-    val candSh = stage(
-      union.join(candIds, Seq("id"), "left_semi")
-        .select(F.col("id"),
-          sortedHashedShingles(F.col("text_"), shingleN).as("sh")),
-      eager = true, reliable)
-    pairs
-      .join(candSh.select(F.col("id").as("corpus_id"), F.col("sh").as("sh_a")),
-        "corpus_id")
-      .join(candSh.select(F.col("id").as("eval_id"), F.col("sh").as("sh_b")),
-        "eval_id")
-      .withColumn("jaccard",
-        jaccardSorted(F.col("sh_a"), F.col("sh_b")))
-      .filter(F.col("jaccard") >= threshold)
-      .select("corpus_id", "eval_id", "jaccard")
+    // id_a is the corpus side, id_b the eval side
+    val pairs = bucketPairs(banded, Seq("band", "bucket"),
+        F.struct(F.col("id"), F.col("is_eval")), maxBucket)
+      .filter(F.col("p.a.is_eval") =!= F.col("p.b.is_eval")) // cross only
+      .filter(F.col("p.a.id") =!= F.col("p.b.id"))           // shared-id guard
+      .select(
+        F.when(F.col("p.a.is_eval"), F.col("p.b.id"))
+          .otherwise(F.col("p.a.id")).as("id_a"),
+        F.when(F.col("p.a.is_eval"), F.col("p.a.id"))
+          .otherwise(F.col("p.b.id")).as("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    // the verify side reads the union un-spread like the batch pipeline
+    // (re-shuffling full text a second time would cost more than the
+    // pruned compute saves)
+    jaccardVerified(pairs, union, "id",
+        sortedHashedShingles(F.col("text_"), shingleN), threshold, reliable)
+      .select(F.col("id_a").as("corpus_id"), F.col("id_b").as("eval_id"),
+        F.col("jaccard"))
   }
 
   /** Exact Jaccard similarity of two distinct-element arrays. Union size
@@ -538,10 +490,7 @@ object Dedup {
         F.col("block"))
       .select(F.col("id"), F.col("block"),
         sortedHashedShingles(F.col("_text"), shingleN).as("sh"))
-    prepared.groupBy("block")
-      .agg(F.collect_list(F.struct(F.col("id"), F.col("sh"))).as("ms"))
-      .filter(F.size(F.col("ms")).between(2, maxBlock))
-      .select(F.explode(elementPairs(F.array_sort(F.col("ms")))).as("p"))
+    bucketPairs(prepared, Seq("block"), F.struct(F.col("id"), F.col("sh")), maxBlock)
       .select(F.col("p.a.id").as("id_a"), F.col("p.b.id").as("id_b"),
               F.col("p.a.sh").as("sh_a"), F.col("p.b.sh").as("sh_b"))
   }
@@ -746,10 +695,8 @@ object Dedup {
         }).as(Seq("chunk", "ck")))
       .select(F.col("id"), F.col("ck.sig").as("sig"),
         F.col("chunk"), F.col("ck.key").as("key"))
-    chunked.groupBy("chunk", "key")
-      .agg(F.collect_list(F.struct(F.col("id"), F.col("sig"))).as("ms"))
-      .filter(F.size(F.col("ms")).between(2, maxBucket))
-      .select(F.explode(elementPairs(F.array_sort(F.col("ms")))).as("p"))
+    bucketPairs(chunked, Seq("chunk", "key"),
+        F.struct(F.col("id"), F.col("sig")), maxBucket)
       .select(F.col("p.a.id").as("id_a"), F.col("p.b.id").as("id_b"),
         F.bit_count(F.col("p.a.sig").bitwiseXOR(F.col("p.b.sig"))).as("hamming"))
       .dropDuplicates("id_a", "id_b")
@@ -948,13 +895,8 @@ object Dedup {
                        maxBucket: Int = 4096, reliable: Boolean = false): DataFrame = {
     val banded = df.select(F.col(idCol).as("id"),
       planeBucket(vecCol, planes).as("bucket"))
-    // Staged once for the same reason as minhashLsh: the pair set feeds
-    // the spine plus both verify joins, and without staging the full
-    // scan→bucket-assignment pipeline would execute three times. Lazy —
-    // cosineVerify's eager vector staging materializes it in the same job.
-    val pairs = stage(cappedBucketPairs(banded, Seq("bucket"), maxBucket),
-      eager = false, reliable)
-    cosineVerify(df, vecCol, idCol, pairs, threshold, reliable)
+    cosineVerified(cappedBucketPairs(banded, Seq("bucket"), maxBucket),
+      df, vecCol, idCol, threshold, reliable)
   }
 
   /** Multi-table random-hyperplane LSH: candidates are the UNION over
@@ -971,9 +913,8 @@ object Dedup {
     val buckets = F.array(planeSets.map(planeBucket(vecCol, _)): _*)
     val banded = df.select(F.col(idCol).as("id"),
       F.posexplode(buckets).as(Seq("pset", "bucket")))
-    val pairs = stage(cappedBucketPairs(banded, Seq("pset", "bucket"), maxBucket),
-      eager = false, reliable)
-    cosineVerify(df, vecCol, idCol, pairs, threshold, reliable)
+    cosineVerified(cappedBucketPairs(banded, Seq("pset", "bucket"), maxBucket),
+      df, vecCol, idCol, threshold, reliable)
   }
 
   /** Local-overlap pairs via shared winnowing fingerprints (Schleimer et
@@ -991,10 +932,7 @@ object Dedup {
     val fps = spreadForCompute(df).select(F.col(idCol).as("id"),
       F.explode(TextAnalysis.winnowingFingerprint(F.col(textCol), k, w,
         gramHash = md5Hash60)).as("fp"))
-    fps.groupBy("fp")
-      .agg(F.collect_list(F.col("id")).as("ids"))
-      .filter(F.size(F.col("ids")).between(2, maxBucket))
-      .select(F.explode(elementPairs(F.array_sort(F.col("ids")))).as("p"))
+    bucketPairs(fps, Seq("fp"), F.col("id"), maxBucket)
       .select(F.col("p.a").as("id_a"), F.col("p.b").as("id_b"))
       .groupBy("id_a", "id_b")
       // fingerprints are distinct per doc, so each contributes once
@@ -1381,24 +1319,12 @@ object Dedup {
     }.reduce(_ + _)
   }
 
-  /** Exact-cosine verification over a staged candidate pair set: prune
-    * the corpus to candidate ids with ONE semi-join, stage the candidate
-    * vectors (referenced by both join sides), score, filter. */
-  private def cosineVerify(df: DataFrame, vecCol: String, idCol: String,
-                           pairs: DataFrame, threshold: Double,
-                           reliable: Boolean = false): DataFrame = {
-    // no pre-distinct: the semi-join's build side dedupes inherently
-    val candIds = pairs
-      .select(F.explode(F.array(F.col("id_a"), F.col("id_b"))).as("id"))
-    val vecs = stage(df.join(candIds, df(idCol) === candIds("id"), "left_semi")
-      .select(F.col(idCol).as("id"), F.col(vecCol).as("vec")),
-      eager = true, reliable)
-    pairs
-      .join(vecs.select(F.col("id").as("id_a"), F.col("vec").as("vec_a")), "id_a")
-      .join(vecs.select(F.col("id").as("id_b"), F.col("vec").as("vec_b")), "id_b")
-      .withColumn("cosine",
-        F.call_function("vec_cosine_f64", F.col("vec_a"), F.col("vec_b")))
-      .filter(F.col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-  }
+  /** [[verified]] on exact cosine over the candidates' vectors: the
+    * embedding family's verify. */
+  private def cosineVerified(pairs: DataFrame, df: DataFrame, vecCol: String,
+                             idCol: String, threshold: Double,
+                             reliable: Boolean): DataFrame =
+    verified(pairs, df, idCol, "vec", F.col(vecCol), "cosine",
+      (a: Column, b: Column) => F.call_function("vec_cosine_f64", a, b),
+      threshold, reliable)
 }

@@ -56,6 +56,12 @@ object Tables {
     else spark.read.parquet(path)
   }
 
+  /** Extensions that name a non-parquet ingestion format — these refs
+    * resolve base-relative WITHOUT the `.parquet` suffix rule. */
+  private val IngestExts =
+    Seq(".bin", ".warc", ".warc.gz", ".tar", ".tar.gz", ".tgz", ".zip",
+      ".avro", ".tfrecord", ".csv", ".csv.gz", ".jsonl", ".ndjson")
+
   /** The on-disk path a table reference resolves to — ONE rule shared
     * by FROM (via [[load]]) and CTAS (Engine): CTAS must write to the
     * exact path a subsequent read of the same reference resolves to,
@@ -63,12 +69,6 @@ object Tables {
     * `<baseDir>/out.parquet` — silently a different (possibly
     * pre-existing) table. Idempotent: resolving an already-resolved
     * path returns it unchanged. */
-  /** Extensions that name a non-parquet ingestion format — these refs
-    * resolve base-relative WITHOUT the `.parquet` suffix rule. */
-  private val IngestExts =
-    Seq(".bin", ".warc", ".warc.gz", ".tar", ".tar.gz", ".tgz", ".zip",
-      ".avro", ".tfrecord", ".csv", ".csv.gz", ".jsonl", ".ndjson")
-
   def resolve(ref: String, baseDir: Option[String]): String =
     if (IngestExts.exists(ref.endsWith)) {
       val p = new java.io.File(ref)

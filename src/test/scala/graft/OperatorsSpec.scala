@@ -1906,28 +1906,140 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  /** The composable band-key fold, the reference for the native
+    * `minhash_bands`: `Dedup.shingles` → md5-60 base hash mod P → affine
+    * minima folded in ONE `aggregate`/`zip_with` pass → per-band
+    * comma-joined keys. */
+  private def minhashBandKeys(text: org.apache.spark.sql.Column, numBands: Int,
+                              rowsPerBand: Int, shingleN: Int) = {
+    import org.apache.spark.sql.Column
+    import graft.functions.ExprUtils.let
+    val numHashes = numBands * rowsPerBand
+    val paramArr = F.array(Dedup.minhashAffineParams(numHashes).map { case (a, b) =>
+      F.struct(F.lit(a).as("a"), F.lit(b).as("b"))
+    }: _*)
+    let(F.transform(Dedup.shingles(text, shingleN),
+        (s: Column) => Dedup.md5Hash60(s) % Dedup.MinhashP)) { hs =>
+      F.aggregate(hs, F.array_repeat(F.lit(Dedup.MinhashP), numHashes),
+        (acc: Column, h: Column) =>
+          F.zip_with(acc, paramArr, (m: Column, pr: Column) =>
+            F.least(m, (pr.getField("a") * h + pr.getField("b")) % Dedup.MinhashP)),
+        (sig: Column) => F.array((0 until numBands).map { b =>
+          F.concat_ws(",", (b * rowsPerBand until (b + 1) * rowsPerBand).map(i =>
+            F.element_at(sig, i + 1).cast("string")): _*)
+        }: _*))
+    }
+  }
+
   test("native minhash_bands matches the composable band keys exactly") {
     val tricky = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog"),
-      (1L, "the the the repeated tokens collapse in the minima"),
-      (2L, "  spaced   out   tokens  "),
-      (3L, "MiXeD Case normalizes"),
-      (4L, "single")
-    ).toDF("id", "text")
-    val cmp = tricky.select(
-      F.col("id"),
-      F.call_function("minhash_bands", F.col("text"), F.lit(4), F.lit(8)).as("native"),
-      Dedup.minhashBandKeys(F.col("text"), 4, 8, shingleN = 1).as("composable"))
-      .collect()
-    cmp.foreach { r =>
-      assert(r.getSeq[String](1) == r.getSeq[String](2),
-        s"band keys diverged for id ${r.getLong(0)}")
+      (1000L, "the quick brown fox jumps over the lazy dog"),
+      (1001L, "the the the repeated tokens collapse in the minima"),
+      (1002L, "  spaced   out   tokens  "),
+      (1003L, "MiXeD Case normalizes"),
+      (1004L, "single"),
+      (1005L, "two words"),
+      (1006L, ""),
+      (1007L, " \t\n\u000B "),
+      (1008L, "ünïcode Tökens écht ünïcode Tökens 日本 語 🙂"),
+      (1009L, "a a a a a a a a")
+    ).toDF("doc_id", "text")
+    val docs = generatedDocs.select(F.col("doc_id"), F.col("text")).union(tricky)
+    for (n <- Seq(1, 2, 3, 5)) {
+      val cmp = docs.select(F.col("text"),
+        F.size(graft.operators.TextAnalysis.tokens(F.col("text"))).as("t"),
+        F.call_function("minhash_bands", F.col("text"), F.lit(4), F.lit(8),
+          F.lit(n)).as("native"),
+        minhashBandKeys(F.col("text"), 4, 8, n).as("composable")).collect()
+      assert(cmp.exists(r => r.getInt(1) == 0 && !r.isNullAt(0)), s"n=$n: no T = 0 input")
+      assert(cmp.exists(r => r.getInt(1) > 0 && r.getInt(1) < n) || n == 1,
+        s"n=$n: no 0 < T < n input")
+      cmp.foreach { r =>
+        // null text: null keys at every width (the fold's size(null) = -1
+        // reads a null text as one null shingle at widths above 1)
+        if (r.isNullAt(0)) assert(r.isNullAt(2), s"n=$n: null text gave keys")
+        else assert(r.getSeq[String](2) == r.getSeq[String](3),
+          s"n=$n: band keys diverged for ${r.getString(0)}")
+      }
     }
+    // the three-argument form is width 1
+    assert(tricky.select(
+      F.call_function("minhash_bands", F.col("text"), F.lit(4), F.lit(8)),
+      F.call_function("minhash_bands", F.col("text"), F.lit(4), F.lit(8), F.lit(1)))
+      .collect().forall(r => r.getSeq[String](0) == r.getSeq[String](1)))
     // and the md5_hash60 native base hash equals the conv-route value
     val h = tricky.select(
       F.call_function("md5_hash60", F.col("text")).as("n"),
       Dedup.md5Hash60(F.col("text")).as("c")).collect()
     h.foreach(r => assert(r.getLong(0) == r.getLong(1)))
+  }
+
+  test("candidate→verify operators: jobs before the action and result pairs") {
+    // jobs each operator runs while it is built (the eager feature stage,
+    // which also fills the lazy pair stage; the incremental prep stage),
+    // counted on the staging as it stood before the shared verify; the
+    // same counts hold with this test run alone in a fresh JVM
+    // only jobs this thread starts count: each build runs under its own
+    // job description, so a job another thread starts is not counted
+    val counted = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    def run(df: => org.apache.spark.sql.DataFrame, jobs: Int) = {
+      val sc = spark.sparkContext
+      val tag = java.util.UUID.randomUUID().toString
+      var out: org.apache.spark.sql.DataFrame = null
+      sc.setJobDescription(tag)
+      val started = try jobsOf { out = df } finally sc.setJobDescription(null)
+      counted += ((started.count(_ == tag), jobs))
+      out.collect().map(r => (r.getLong(0), r.getLong(1),
+        BigDecimal(r.getDouble(2)).setScale(6, BigDecimal.RoundingMode.HALF_UP))).toSet
+    }
+    def ids(ps: Set[(Long, Long, BigDecimal)]) = ps.map(p => (p._1, p._2))
+    assert(ids(run(Dedup.minhashLsh(docs, "text", "doc_id", numBands = 8,
+      rowsPerBand = 2, shingleN = 1, threshold = 0.5), 4)) ==
+      Set((0L, 1L), (0L, 2L), (0L, 4L), (1L, 2L), (1L, 4L), (2L, 4L)))
+    assert(ids(run(Dedup.minhashLsh(docs, "text", "doc_id", numBands = 8,
+      rowsPerBand = 2, shingleN = 3, threshold = 0.5), 4)) ==
+      Set((0L, 1L), (0L, 4L), (1L, 4L)))
+
+    val all = Seq(
+      (0L, "the quick brown fox jumps over the lazy dog tonight"),
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "completely different content about spark engines here"),
+      (10L, "the quick brown fox jumps over the lazy dog tonight"),
+      (11L, "unrelated new document about large corpora and dedup"),
+      (12L, "unrelated new document about large corpora and dedup")
+    ).toDF("doc_id", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft-mh-jobs").toString + "/idx"
+    Dedup.writeMinhashIndex(all.filter(F.col("doc_id") < 10), "text", "doc_id",
+      path, numBands = 4, rowsPerBand = 8, shingleN = 3)
+    assert(ids(run(Dedup.minhashLshIncremental(all.filter(F.col("doc_id") >= 10),
+      "text", "doc_id", path, numBands = 4, rowsPerBand = 8, shingleN = 3,
+      threshold = 0.5, maxBucket = 64), 6)) == Set((0L, 10L), (11L, 12L)))
+
+    val xs = all.filter(F.col("doc_id") =!= 12L)
+      .union(Seq((13L, "the quick brown fox jumps over the lazy dog tonight"))
+        .toDF("doc_id", "text"))
+    assert(ids(run(Dedup.minhashLshCross(xs.filter(F.col("doc_id") >= 10),
+      "text", "doc_id", xs.filter(F.col("doc_id") < 10), "text", "doc_id",
+      numBands = 4, rowsPerBand = 8, shingleN = 3, threshold = 0.5,
+      maxBucket = 64), 5)) == Set((10L, 0L), (13L, 0L)))
+
+    val vecs = (0L until 60L).map { i =>
+      val x = ((i * 2654435761L) % 997).toFloat / 997f - 0.5f
+      val y = ((i * 40503L) % 991).toFloat / 991f - 0.5f
+      val z = ((i * 69069L) % 983).toFloat / 983f - 0.5f
+      (i, Seq(x, y, z))
+    }.toDF("vec_id", "embedding")
+    val sets = Seq(Dedup.hyperplanes(4, 3, seed = 7L), Dedup.hyperplanes(4, 3, seed = 8L))
+    // (pair count, sum of 100 * id_a + id_b) of the pair sets
+    def digest(ps: Set[(Long, Long, BigDecimal)]) =
+      (ps.size, ps.toSeq.map(p => 100 * p._1 + p._2).sum)
+    val single = run(Dedup.embeddingNearDup(vecs, "embedding", "vec_id",
+      sets.head, threshold = 0.8), 4)
+    assert(digest(single) == ((96, 170655L)))
+    assert(single.forall(_._3 >= 0.8))
+    assert(digest(run(Dedup.embeddingNearDupMulti(vecs, "embedding", "vec_id",
+      sets, threshold = 0.8), 4)) == ((137, 252690L)))
+    assert(counted.map(_._1) == counted.map(_._2), s"jobs (built, expected): $counted")
   }
 
   test("native gram_hashes matches the composable distinct-gram hashes exactly") {

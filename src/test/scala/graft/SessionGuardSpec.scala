@@ -89,4 +89,20 @@ class SessionGuardSpec extends AnyFunSuite {
     } yield s"$f:$n: $pat"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  // the near-duplicate family keeps one band-key path (the native
+  // minhash_bands; its composable reference lives in OperatorsSpec) and
+  // one capped pair explode (Dedup.bucketPairs, which builds the pairs
+  // inline: no separate pair helper for other operators to call)
+  test("one minhash band-key path and one pair explode in src/main") {
+    val hits = for {
+      f <- mainFiles
+      ls = lines(f)
+      (line, n) <- ls
+      fold = line.contains("F.aggregate(") &&
+        ls.slice(n - 1, n + 11).exists(_._1.contains("MinhashP"))
+      if line.contains("minhashBandKeys") || line.contains("elementPairs(") || fold
+    } yield s"$f:$n: $line"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }
