@@ -5,8 +5,9 @@ import scala.collection.mutable.ListBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession, functions => F}
-import org.apache.spark.sql.catalyst.expressions.{Exists, OuterReference, SubExprUtils, ScalarSubquery => CatalystScalar}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedHaving}
+import org.apache.spark.sql.catalyst.expressions.{Cube, Exists, Expression, GroupingSets, NamedExpression, OuterReference, Rollup, SubExprUtils, ScalarSubquery => CatalystScalar}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.graft.ExprColumn
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, LongType, MapType, StringType, StructField, StructType}
@@ -20,27 +21,24 @@ import graft.sources.{Tables, Versioned}
 /** Engine facade: `sql / collect / show / explain`
   * (reference: src/mini_spark/execution.py:57-62 ExecutionEngine.sql).
   *
-  * Planning a parsed query follows the reference's clause-assembly order
+  * Planning a parsed query follows the reference's clause order
   * (reference: src/mini_spark/parser.py:124-162 visit_query):
-  * table → joins → where-filter → groupBy().agg(+hidden HAVING aggs) →
-  * having-filter → final select. The HAVING rewrite appends each aggregate
-  * referenced in HAVING as a hidden `_having_<n>` column, filters on it
-  * post-aggregation and drops it in the final projection
-  * (reference: parser.py:153-161). With GROUP BY, every selected
-  * non-aggregate column must be a grouping key, else [[GroupByError]]
-  * (reference: parser.py:143-151).
+  * table → joins → where-filter → grouped select → order/limit. A
+  * grouped block (GROUP BY, or an aggregate in the select list) is one
+  * Catalyst `Aggregate` with its HAVING left to the analyzer, which also
+  * rejects a selected column that is neither a key nor aggregated
+  * ([[GroupByError]], reference: parser.py:143-151).
   */
 final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) {
 
-  /** Driver-side (rows, bytes) of a PLAIN `.parquet` file/dir — the
+  /** Driver-side row count of a PLAIN `.parquet` file/dir — the
     * MERGE small-source gate's metadata probe: a recursive listing plus
     * footer record counts, KB-sized reads, no Spark job. `None` when
     * the path is not plain parquet, holds any non-parquet data file
     * (the reader would still scan it — price as unknown), or exceeds
     * [[Engine.MergeSmallSourceBytes]] / 64 files (footer walks stay
     * cheap or don't happen). */
-  private def plainParquetFootprint(path: String)
-      : Option[(Long, Long, Option[org.apache.spark.sql.types.StructType])] =
+  private def plainParquetRows(path: String): Option[Long] =
     try {
       if (!path.endsWith(".parquet")) return None
       val conf = spark.sparkContext.hadoopConfiguration
@@ -62,27 +60,10 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
             return None
         }
       }
-      // while the footers are open for counts, recover the writer's
-      // OWN Spark schema from the first file's key-value metadata
-      // (Spark stamps it on every write) — a small source then reads
-      // with an explicit schema, skipping the per-statement
-      // schema-inference job `spark.read.parquet` would run. First
-      // file only, matching default (mergeSchema=false) semantics.
-      var schema: Option[org.apache.spark.sql.types.StructType] = None
-      val rows = files.iterator.map { f =>
+      Some(files.iterator.map { f =>
         val rdr = graft.sources.Tables.openParquet(conf, f)
-        try {
-          if (schema.isEmpty)
-            schema = Option(rdr.getFooter.getFileMetaData
-              .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-              .flatMap(j => scala.util.Try(
-                org.apache.spark.sql.types.DataType.fromJson(j)
-                  .asInstanceOf[org.apache.spark.sql.types.StructType])
-                .toOption)
-          rdr.getRecordCount
-        } finally rdr.close()
-      }.sum
-      Some((rows, bytes, schema))
+        try rdr.getRecordCount finally rdr.close()
+      }.sum)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** [[Engine.withSmallStmtConfs]] over this instance's session. */
@@ -123,11 +104,16 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     * finely). A query is planned, not run: its subqueries are Catalyst
     * subquery expressions, so no job runs before the caller's action.
     * A shape Catalyst's analyzer rejects is the statement's
-    * [[SemanticError]]. */
+    * [[SemanticError]]; a column a grouped block neither groups nor
+    * aggregates is its [[GroupByError]]. */
   def execute(stmt: Statement): GraftFrame =
     try Engine.withJobDescription(spark, stmt.kind)(run(stmt))
     catch { case e: AnalysisException =>
-      throw new SemanticError(e.getMessage).initCause(e) }
+      throw (e.getCondition match {
+        case "MISSING_AGGREGATION" | "MISSING_GROUP_BY" =>
+          new GroupByError(e.getMessage)
+        case _ => new SemanticError(e.getMessage)
+      }).initCause(e) }
 
   /** A statement's one status row: `(column, value)` pairs, each
     * column typed from its value (Long, Int, Boolean, else String) and
@@ -648,27 +634,20 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
           "but is not last — later matched clauses are unreachable")
     }
     // SMALL-SOURCE gate, probed BEFORE the source frame is built:
-    // rows already on the driver are small by count; a provably-small
-    // plain-parquet table (KB footer reads, no job) reads with the
-    // footer's own recorded Spark schema, so the fast path's collect
-    // below is the FIRST job that touches it (spark.read.parquet
-    // without a schema pays a schema-inference job first). Views and
-    // subqueries price as unknown.
-    val srcProbe: Option[(Long, Long, Option[StructType])] = m.source match {
-      case SourceRows(rows, sch) => Some((rows.length.toLong, 0L, Some(sch)))
+    // rows already on the driver are small by count, and so is a
+    // provably-small plain-parquet table (KB footer reads, no job).
+    // Views and subqueries price as unknown.
+    val srcRows: Option[Long] = m.source match {
+      case SourceRows(rows, _) => Some(rows.length.toLong)
       case SourceTable(ref) if !views.contains(ref) =>
-        plainParquetFootprint(Tables.resolve(ref, baseDir))
+        plainParquetRows(Tables.resolve(ref, baseDir))
       case _ => None
     }
-    val srcSmall = srcProbe.exists(_._1 <= Engine.MergeSmallSourceRows)
+    val srcSmall = srcRows.exists(_ <= Engine.MergeSmallSourceRows)
     val srcFrame: DataFrame = m.source match {
       case SourceRows(rows, sch) =>
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), sch)
-      case SourceTable(ref) => srcProbe match {
-        case Some((_, _, Some(sch))) if srcSmall =>
-          spark.read.schema(sch).parquet(Tables.resolve(ref, baseDir))
-        case _ => table(ref).df
-      }
+      case SourceTable(ref) => table(ref).df
       case SourceQuery(q) => evalCompound(q, Map.empty).df
     }
     val tName = "__merge_target"; val sName = "__merge_source"
@@ -1636,84 +1615,7 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
       if (!hasGrouping) {
         if (q.select.forall(_.star)) frame.select(Star)
         else frame.select(q.select.map(i => lower(i.expr, frame)): _*)
-      } else {
-        // GROUP BY validity (reference: parser.py:143-151); compare the
-        // expression under any alias against the grouping keys
-        val keyNames = q.groupBy.map(_.name).toSet
-        q.select.filterNot(_.star).foreach { item =>
-          val underlying = item.expr match {
-            case Alias(c, _) => c
-            case c           => c
-          }
-          // a bare LITERAL or scalar subquery is group-invariant
-          // (`SELECT 1 AS version, COUNT(*) ...`) — standard SQL admits
-          // it without a key
-          if (collectAggs(item.expr).isEmpty &&
-              !underlying.isInstanceOf[Lit] &&
-              !underlying.isInstanceOf[ScalarSubquery] &&
-              !keyNames.contains(underlying.name))
-            throw new GroupByError(
-              s"Column '${underlying.name}' must appear in GROUP BY or an aggregate")
-        }
-
-        // COMPUTED (non-ColRef) grouping keys — `SELECT upper(fruit)
-        // AS f ... GROUP BY upper(fruit)` and its GROUP BY ALL
-        // expansion: after aggregation the key's INPUTS are gone, so
-        // the select item cannot recompile. Group such keys under
-        // hidden stable aliases and rewrite every structurally-equal
-        // select/HAVING subtree into a reference to the hidden column.
-        // A TOP-LEVEL unaliased computed-key item would surface the
-        // hidden name; require the alias rather than invent a name.
-        // Plain-mode only: ROLLUP/CUBE/SETS keep their existing
-        // ColRef-key contract.
-        val hiddenKeys: Map[Col, String] =
-          if (q.groupKind.isDefined) Map.empty
-          else q.groupBy.zipWithIndex.collect {
-            case (k, i) if !k.isInstanceOf[ColRef] => (k, s"_gkey$i")
-          }.toMap
-        def substKeys(c: Col): Col =
-          c.transform { case k if hiddenKeys.contains(k) => ColRef(hiddenKeys(k)) }
-        val selectRewritten = q.select.map { item =>
-          val r = substKeys(item.expr)
-          r match {
-            case ColRef(n) if n.startsWith("_gkey") &&
-                hiddenKeys.valuesIterator.contains(n) =>
-              throw new GroupByError(
-                "A computed GROUP BY key selected bare needs an alias " +
-                "(`SELECT upper(x) AS u ... GROUP BY upper(x)`) — its " +
-                "output column has no natural name")
-            case _ => item.copy(expr = r)
-          }
-        }
-        val groupCols = q.groupBy.map(k =>
-          lower(hiddenKeys.get(k).fold(k)(n => Alias(k, n): Col), frame))
-
-        // name every select aggregate so the final projection can refer to it
-        val named = ListBuffer.empty[Col] // aggregates to compute
-        val finalCols = selectRewritten.map { item =>
-          stripQualifiers(nameAggs(item.expr, named))
-        }
-        // hidden HAVING aggregates (reference: parser.py:153-161)
-        val havingRewritten = q.having.map { h =>
-          rewriteHaving(substKeys(h), named)
-        }
-
-        val groupedFrame = q.groupKind match {
-          case None           => frame.groupBy(groupCols: _*)
-          case Some("rollup") => frame.rollup(groupCols: _*)
-          case Some("cube")   => frame.cube(groupCols: _*)
-          case Some("sets")   => frame.groupingSets(q.groupingSets, q.groupBy: _*)
-          case Some(other) =>
-            throw new IllegalStateException(s"unknown group kind $other")
-        }
-        var g = groupedFrame.agg(named.toSeq.map(lower(_, frame)): _*)
-        havingRewritten.foreach(h => g = g.filter(lower(h, g)))
-        // final projection: grouping keys + visible select outputs, hidden
-        // columns dropped (reference: parser.py:161); the aggregated frame
-        // exposes group keys by their bare name, so qualifiers are gone
-        // (analog of the reference's alias-prefix cleanup, plan.py:206-222)
-        g.select(finalCols.map(lower(_, g)): _*)
-      }
+      } else aggregate(q, frame, lower(_, frame))
 
     if (q.distinct) out = out.distinct()
     if (q.orderBy.nonEmpty)
@@ -1722,6 +1624,58 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     q.offset.foreach(m => out = GraftFrame.fromDF(out.df.offset(m)))
     q.limit.foreach(n => out = out.limit(n))
     out
+  }
+
+  /** A grouped block as ONE Catalyst `Aggregate` over the WHERE-filtered
+    * `frame`: the keys (under `Rollup`, `Cube` or `GroupingSets` for
+    * those kinds) group the select items, and HAVING is an
+    * `UnresolvedHaving` over it. Catalyst's analyzer does the rest:
+    * qualified and computed keys, HAVING on a select alias or on an
+    * aggregate the select list does not carry, and the rejection of a
+    * select column that is neither grouped nor aggregated (the
+    * statement's [[GroupByError]], see [[execute]]). A bare aggregate
+    * keeps its readable name (`sum_x`, `count`; `_agg_<i>` over a
+    * computed argument, `i` counting the block's aggregates before it);
+    * any other unaliased item takes Catalyst's own name. `lower` lowers
+    * a clause's subqueries against `frame`. */
+  private def aggregate(q: SqlQuery, frame: GraftFrame,
+                        lower: Col => Col): GraftFrame = {
+    def unnamed(c: Col): Col =
+      c.transform { case a: AggCol => a.copy(aliasOpt = None) }
+    val aggsBefore = q.select.scanLeft(0)((n, i) => n + collectAggs(i.expr).size)
+    val items = q.select.zip(aggsBefore).map {
+      case (i, _) if i.star => Star
+      case (SelectItem(a: AggCol, _), k) =>
+        Alias(unnamed(a), a.aliasOpt.getOrElse(a.child match {
+          case ColRef(_) | Lit(_) => a.name
+          case _                  => s"_agg_$k"
+        }))
+      case (i, _) => unnamed(i.expr)
+    }.map(lower)
+    def expr(c: Col, schema: StructType): Expression =
+      ExprColumn.planExpr(spark, c.compile(schema))
+    val keys = q.groupBy.map(k => expr(lower(k), frame.schema))
+    val grouping = q.groupKind match {
+      case None           => keys
+      case Some("rollup") => Seq(Rollup(keys.map(Seq(_))))
+      case Some("cube")   => Seq(Cube(keys.map(Seq(_))))
+      case Some("sets")   => Seq(GroupingSets(
+        q.groupingSets.map(_.map(k => expr(lower(k), frame.schema))), keys))
+      case Some(other) =>
+        throw new IllegalStateException(s"unknown group kind $other")
+    }
+    val agg = Aggregate(grouping, items.map(c => expr(c, frame.schema) match {
+      case n: NamedExpression => n
+      case e                  => UnresolvedAlias(e)
+    }), frame.df.queryExecution.analyzed)
+    // HAVING compiles against the select outputs, each typed as Col
+    // types it, over the input columns they shadow
+    val outputs = items.filterNot(_ == Star)
+      .map(c => StructField(c.name, c.dataType(frame.schema)))
+    val havingSchema = StructType(outputs ++ frame.schema.filterNot(f =>
+      outputs.exists(_.name.equalsIgnoreCase(f.name))))
+    GraftFrame.fromDF(ExprColumn.ofRows(spark, q.having.fold[LogicalPlan](agg)(h =>
+      UnresolvedHaving(expr(lower(unnamed(h)), havingSchema), agg))))
   }
 
   /** A FROM/JOIN target: a derived table (planned under the enclosing
@@ -1894,49 +1848,6 @@ final class Engine(val spark: SparkSession, val baseDir: Option[String] = None) 
     // a window's inner aggregate is per-row output, not a grouping agg
     case _: WindowFn => Seq.empty
     case other => other.children.flatMap(collectAggs)
-  }
-
-  /** Give every aggregate a stable output name, collect it into `acc`, and
-    * return the select item rewritten to refer to computed columns. */
-  private def nameAggs(c: Col, acc: ListBuffer[Col]): Col = c.transform {
-    case a @ AggCol(_, _, Some(n)) => acc += a; ColRef(n)
-    case a @ AggCol(_, child, None) =>
-      // simple children keep the readable derived name (sum_x); complex
-      // children (CASE, function calls, arithmetic) get a stable
-      // synthetic name — their toString-derived fallback can embed
-      // qualified refs whose dots stripQualifiers would then mangle into
-      // an unresolvable final projection
-      val n = child match {
-        case ColRef(_) | Lit(_) => a.name
-        case _                  => s"_agg_${acc.length}"
-      }
-      acc += a.aliased(n); ColRef(n)
-    case Alias(a: AggCol, n) => acc += a.aliased(n); ColRef(n)
-  }
-
-  /** Post-aggregation, table-alias qualifiers no longer resolve
-    * (`u.country` → `country`); rewrite dotted refs to their bare name
-    * (reference: plan.py:206-222 final de-aliasing projection). */
-  private def stripQualifiers(c: Col): Col = c.transform {
-    case ColRef(r) if r.contains('.') => ColRef(r.split('.').last)
-  }
-
-  /** Replace aggregates inside a HAVING predicate with hidden columns
-    * named `_having_<agg-name>` (reference: parser.py:153-157), reusing an
-    * already-computed aggregate when the same expression appears in the
-    * select list (reference: sql.py:433-434 normalize_agg_columns). */
-  private def rewriteHaving(c: Col, acc: ListBuffer[Col]): Col = c.transform {
-    case a: AggCol =>
-      val existing = acc.collectFirst {
-        case e @ AggCol(f, ch, Some(n)) if f == a.fn && ch == a.child => n
-      }
-      existing match {
-        case Some(n) => ColRef(n)
-        case None =>
-          val n = s"_having_${a.name}"
-          acc += a.aliased(n)
-          ColRef(n)
-      }
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.sql.types.StructType
 
 import graft.api.Col._
@@ -42,17 +42,6 @@ final class GraftFrame(val df: DataFrame) {
     * (dataframe.py:64-65); we support multi-column (its grammar already
     * allows it, reference: parser.py:30). */
   def groupBy(cols: Col*): GraftGrouped = new GraftGrouped(df, cols)
-
-  /** ROLLUP / CUBE / GROUPING SETS (extensions — absent in reference):
-    * lower onto Spark's native grouping-set aggregation (one pass,
-    * `Expand` + hash aggregate — never one job per set). Subtotal rows
-    * carry NULL in the suppressed keys, standard SQL semantics. */
-  def rollup(cols: Col*): GraftGrouped =
-    new GraftGrouped(df, cols, GraftGrouped.Rollup)
-  def cube(cols: Col*): GraftGrouped =
-    new GraftGrouped(df, cols, GraftGrouped.Cube)
-  def groupingSets(sets: Seq[Seq[Col]], keys: Col*): GraftGrouped =
-    new GraftGrouped(df, keys, GraftGrouped.Sets(sets))
 
   /** Equi-join. The reference shuffles both sides and hash-joins
     * (reference: tasks.py:190-260); here Catalyst + AQE pick
@@ -106,36 +95,19 @@ final class GraftFrame(val df: DataFrame) {
 }
 
 /** Post-`groupBy` aggregation surface
-  * (reference: src/mini_spark/dataframe.py:28-35 `GroupedData`).
-  * `mode` selects plain / rollup / cube / explicit grouping sets. */
-final class GraftGrouped(df: DataFrame, keys: Seq[Col],
-                         mode: GraftGrouped.Mode = GraftGrouped.Flat) {
+  * (reference: src/mini_spark/dataframe.py:28-35 `GroupedData`). */
+final class GraftGrouped(df: DataFrame, keys: Seq[Col]) {
   def agg(aggCols: Col*): GraftFrame = {
     val schema = df.schema
-    val keyCols: Seq[Column] = keys.map(_.compile(schema))
     val compiled = aggCols.map {
       case a @ AggCol(_, _, _) => a.compile(schema)
       case Alias(a @ AggCol(_, _, _), n) => a.aliased(n).compile(schema)
       case other => throw new IllegalArgumentException(
         s"agg() requires aggregate columns, got: $other")
     }
-    val grouped = mode match {
-      case GraftGrouped.Flat   => df.groupBy(keyCols: _*)
-      case GraftGrouped.Rollup => df.rollup(keyCols: _*)
-      case GraftGrouped.Cube   => df.cube(keyCols: _*)
-      case GraftGrouped.Sets(sets) =>
-        df.groupingSets(sets.map(_.map(_.compile(schema))), keyCols: _*)
-    }
-    new GraftFrame(grouped.agg(compiled.head, compiled.tail: _*))
+    new GraftFrame(df.groupBy(keys.map(_.compile(schema)): _*)
+      .agg(compiled.head, compiled.tail: _*))
   }
-}
-
-object GraftGrouped {
-  sealed trait Mode
-  case object Flat extends Mode
-  case object Rollup extends Mode
-  case object Cube extends Mode
-  final case class Sets(sets: Seq[Seq[Col]]) extends Mode
 }
 
 object GraftFrame {

@@ -1,6 +1,11 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Table/IO layer.
@@ -53,8 +58,42 @@ object Tables {
     else if (!path.endsWith(".parquet") &&
              Versioned.versions(spark, path).nonEmpty)
       Versioned.read(spark, path, None)
-    else spark.read.parquet(path)
+    else {
+      val reader = spark.read
+      footerSchema(spark, path).fold(reader)(reader.schema).parquet(path)
+    }
   }
+
+  /** The schema `spark.read.parquet(path)` infers with `mergeSchema`
+    * off, read on the driver from the first data file's footer instead
+    * of by the Spark job that inference runs: the writer's recorded
+    * Spark schema (`org.apache.spark.sql.parquet.row.metadata`) when
+    * present, else the Parquet schema converted under the session conf.
+    * Partition columns of a hive-style directory are still the reader's
+    * to discover. Files are skipped by Spark's listing rule (a leading
+    * `_` outside a `k=v` name, a leading `.`, a `._COPYING_` suffix).
+    * `None` when schema merging is on or no data file is found: the
+    * read then infers, and reports a bad path itself. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] =
+    try {
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled) return None
+      val conf = spark.sessionState.newHadoopConf()
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      val rootDepth = fs.makeQualified(root).depth
+      def skipped(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+        n.startsWith(".") || n.endsWith("._COPYING_")
+      val files = fs.listFiles(root, true)
+      Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+        .find(f => !Iterator.iterate(f)(_.getParent).take(f.depth - rootDepth)
+          .exists(p => skipped(p.getName)))
+        .map { f =>
+          val rdr = openParquet(conf, f)
+          try ParquetFileFormat.readSchemaFromFooter(new Footer(f, rdr.getFooter),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          finally rdr.close()
+        }
+    } catch { case NonFatal(_) => None }
 
   /** Extensions that name a non-parquet ingestion format — these refs
     * resolve base-relative WITHOUT the `.parquet` suffix rule. */

@@ -71,6 +71,98 @@ class EngineSpec extends SparkSpec {
     assert(rows(out.df) == Set(Seq("apple"), Seq("banana")))
   }
 
+  test("grouped blocks plan in Catalyst: output names, HAVING, errors " +
+    "at planning, no job before the action") {
+    def planned(q: String): org.apache.spark.sql.DataFrame = {
+      var out: graft.api.GraftFrame = null
+      val jobs = jobsOf { out = engine.sql(q) }
+      assert(jobs.isEmpty, s"$q ran ${jobs.size} jobs before its action")
+      out.df
+    }
+    Seq(
+      // a bare aggregate keeps its readable name; over a computed
+      // argument it is _agg_<aggregates before it>
+      ("SELECT fruit, SUM(quantity), COUNT(*), MAX(quantity * 2) " +
+        "FROM fruits GROUP BY fruit",
+        Seq("fruit", "sum_quantity", "count", "_agg_2"),
+        Set(Seq("apple", 7L, 2L, 8), Seq("banana", 12L, 2L, 14),
+          Seq("orange", 2L, 1L, 4))),
+      ("SELECT u.country, COUNT(*) AS n FROM users u " +
+        "JOIN orders o ON u.user_id = o.user_id GROUP BY u.country",
+        Seq("country", "n"),
+        Set(Seq("USA", 2L), Seq("Canada", 1L), Seq("UK", 1L))),
+      ("SELECT upper(fruit) AS f, SUM(quantity) AS q FROM fruits " +
+        "GROUP BY upper(fruit)",
+        Seq("f", "q"),
+        Set(Seq("APPLE", 7L), Seq("BANANA", 12L), Seq("ORANGE", 2L))),
+      ("SELECT upper(fruit) AS f, SUM(quantity) AS q FROM fruits " +
+        "GROUP BY ROLLUP(upper(fruit))",
+        Seq("f", "q"),
+        Set(Seq("APPLE", 7L), Seq("BANANA", 12L), Seq("ORANGE", 2L),
+          Seq(null, 21L))),
+      ("SELECT fruit, SUM(quantity) AS q FROM fruits GROUP BY fruit " +
+        "HAVING q > 6",
+        Seq("fruit", "q"), Set(Seq("apple", 7L), Seq("banana", 12L))),
+      ("SELECT fruit FROM fruits GROUP BY fruit HAVING MIN(quantity) > 2",
+        Seq("fruit"), Set(Seq("apple"), Seq("banana"))),
+      // an unaliased expression over aggregates takes Catalyst's name
+      ("SELECT fruit, SUM(quantity) / COUNT(*) FROM fruits GROUP BY fruit",
+        Seq("fruit", "(sum(quantity) / count(1))"),
+        Set(Seq("apple", 3.5), Seq("banana", 6.0), Seq("orange", 2.0)))
+    ).foreach { case (q, names, want) =>
+      val df = planned(q)
+      assert(df.columns.toSeq == names, q)
+      assert(rows(df) == want, q)
+    }
+    // a column neither grouped nor aggregated fails the statement itself
+    Seq(
+      "SELECT color, SUM(quantity) AS s FROM fruits GROUP BY fruit",
+      "SELECT color, SUM(quantity) AS s FROM fruits",
+      "SELECT fruit, SUM(quantity) AS s FROM fruits GROUP BY ROLLUP(upper(fruit))"
+    ).foreach { q =>
+      val e = intercept[GroupByError](engine.sql(q))
+      assert(e.getMessage.contains("MISSING_"), q)
+    }
+  }
+
+  test("a plain parquet FROM reads its schema from a footer: no job " +
+    "before the action, the schema spark.read.parquet infers") {
+    // q119's shape: three plain-parquet FROMs, two in subqueries
+    var out: graft.api.GraftFrame = null
+    val jobs = jobsOf { out = engine.sql(
+      """SELECT round(SUM(price) / 7.0, 4) AS s FROM orders
+        |WHERE user_id IN (SELECT user_id FROM users WHERE country = 'USA')
+        |  AND quantity < (SELECT 2 * AVG(quantity) FROM orders)""".stripMargin) }
+    assert(jobs.isEmpty, s"planning ran ${jobs.size} jobs")
+    assert(rows(out.df) == Set(Seq(182.8571)))
+    val d = Files.createTempDirectory("graft-footer-schema").toString
+    // Spark-written, with its row metadata; hive-partitioned
+    fruits.write.parquet(s"$d/spark.parquet")
+    fruits.write.partitionBy("color").parquet(s"$d/parted.parquet")
+    // written by parquet-mr alone: no Spark metadata in the footer
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val pq = MessageTypeParser.parseMessageType(
+      """message m { required int64 id; optional binary name (STRING);
+        |optional binary raw; optional double x;
+        |optional int64 t (TIMESTAMP(MICROS,true)); }""".stripMargin)
+    val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$d/plain.parquet/part-0.parquet"))
+      .withType(pq).build()
+    try w.write(new SimpleGroupFactory(pq).newGroup().append("id", 1L)
+      .append("name", "a").append("x", 0.5))
+    finally w.close()
+    Seq("spark", "parted", "plain").foreach { t =>
+      val path = s"$d/$t.parquet"
+      assert(graft.sources.Tables.load(spark, path).schema ==
+        spark.read.parquet(path).schema, t)
+    }
+    assert(rows(engine.sql(s"SELECT color, SUM(quantity) AS q FROM " +
+      s"'$d/parted.parquet' GROUP BY color").df) == Set(Seq("red", 3L),
+      Seq("yellow", 12L), Seq("orange", 2L), Seq("green", 4L)))
+  }
+
   test("non-grouped select column raises GroupByError (reference parser.py:143-151)") {
     assertThrows[GroupByError] {
       engine.sql("SELECT color, SUM(quantity) AS s FROM fruits GROUP BY fruit")
@@ -1769,37 +1861,18 @@ class EngineSpec extends SparkSpec {
   test("every job a statement runs carries the statement's kind") {
     val out = Files.createTempDirectory("graft-stmt-kind")
     try {
-      import scala.jdk.CollectionConverters._
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
       import spark.implicits._
       val ds = s"$out/ds"
       graft.sources.Versioned.commit(
         (1L to 300L).map(i => (i, s"v$i")).toDF("id", "v"), ds)
       graft.sources.Versioned.commit(
         (301L to 600L).map(i => (i, s"v$i")).toDF("id", "v"), ds, append = true)
-      def jobDescriptions(stmt: String): Seq[String] = {
-        val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-        val l = new SparkListener {
-          override def onJobStart(e: SparkListenerJobStart): Unit =
-            descs.add(Option(e.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .getOrElse("<none>"))
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          engine.sql(stmt)
-          // listener delivery is asynchronous: wait for the count to settle
-          var last = -1
-          while (last != descs.size) { last = descs.size; Thread.sleep(300) }
-          descs.asScala.toSeq
-        } finally spark.sparkContext.removeSparkListener(l)
-      }
       Seq(
         "UPDATE" -> s"UPDATE VECTORED '$ds' SET v = 'u' WHERE id >= 10 AND id < 20",
         "DELETE" -> s"DELETE VECTORED FROM '$ds' WHERE id >= 30 AND id < 40",
         "INSERT" -> s"INSERT INTO '$ds' VALUES (1000, 'ins'), (1001, 'ins')",
         "OPTIMIZE" -> s"OPTIMIZE '$ds'").foreach { case (kind, stmt) =>
-        val descs = jobDescriptions(stmt)
+        val descs = jobsOf(engine.sql(stmt): Unit)
         assert(descs.nonEmpty, s"$kind ran no job")
         assert(descs.forall(_ == kind), s"$kind jobs: ${descs.mkString(", ")}")
       }
@@ -1821,7 +1894,7 @@ class EngineSpec extends SparkSpec {
         ("DELETE", s"DELETE FROM '$num' WHERE id >= 30 AND id < 40", 5),
         ("OPTIMIZE", s"OPTIMIZE '$num' ZORDER BY (id, score) SEGMENTS 2", 6)
       ).foreach { case (kind, stmt, maxJobs) =>
-        val descs = jobDescriptions(stmt)
+        val descs = jobsOf(engine.sql(stmt): Unit)
         assert(descs.nonEmpty, s"$kind ran no job")
         assert(descs.forall(_ == kind), s"$kind jobs: ${descs.mkString(", ")}")
         assert(descs.size <= maxJobs,
@@ -1841,28 +1914,11 @@ class EngineSpec extends SparkSpec {
   test("a query's subqueries are planned, not run: no job before the action") {
     val out = Files.createTempDirectory("graft-subquery-jobs")
     try {
-      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
       import spark.implicits._
       val ds = s"$out/ds"
       graft.sources.Versioned.commit(
         (1L to 50L).map(i => (i, i % 7)).toDF("id", "g"), ds)
       val e = Engine(spark)
-      def jobsWhile(body: => Unit): Int = {
-        val n = new java.util.concurrent.atomic.AtomicInteger
-        val l = new SparkListener {
-          override def onJobStart(j: SparkListenerJobStart): Unit = {
-            n.incrementAndGet(); ()
-          }
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          body
-          // listener delivery is asynchronous: wait for the count to settle
-          var last = -1
-          while (last != n.get) { last = n.get; Thread.sleep(300) }
-          n.get
-        } finally spark.sparkContext.removeSparkListener(l)
-      }
       // g = id % 7 over ids 1..50: AVG(g) = 2.96, so g in 3..6 (28 rows);
       // a g = 6 row exists (all 50); ids 1..3 carry g 1..3 (g in 4..6, 21)
       Seq(
@@ -1871,12 +1927,12 @@ class EngineSpec extends SparkSpec {
         s"SELECT id FROM '$ds' WHERE g > ALL (SELECT g FROM '$ds' WHERE id < 4)" -> 21L
       ).foreach { case (q, n) =>
         var frame: graft.api.GraftFrame = null
-        assert(jobsWhile { frame = e.sql(q) } == 0, q)
+        assert(jobsOf { frame = e.sql(q) }.size == 0, q)
         assert(frame.count() == n, q)
       }
       var explained: graft.api.GraftFrame = null
-      assert(jobsWhile { explained = e.sql(
-        s"EXPLAIN SELECT id FROM '$ds' WHERE g > (SELECT AVG(g) FROM '$ds')") } == 0)
+      assert(jobsOf { explained = e.sql(
+        s"EXPLAIN SELECT id FROM '$ds' WHERE g > (SELECT AVG(g) FROM '$ds')") }.size == 0)
       val text = explained.df.collect().map(_.getString(0)).mkString("\n")
       assert(text.contains("Subquery"), text)
     } finally {

@@ -908,27 +908,6 @@ class OperatorsSpec extends SparkSpec {
       "doc_id", 3, 2)) == want)
   }
 
-  /** The jobs `body` starts, by job description. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        descs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("<none>"))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener delivery is asynchronous: wait for the count to settle
-      var last = -1
-      while (last != descs.size) { last = descs.size; Thread.sleep(300) }
-      descs.asScala.toSeq
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("duplicated n-gram removal: at most 4 jobs, the vote labelled, " +
     "nothing left persisted") {
     val docs = generatedDocs

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.sources.Versioned
@@ -46,21 +45,6 @@ class RowPositionSpec extends SparkSpec {
     import spark.implicits._
     rawWithPositions(path, v)
       .join(deleted.toDF("id"), Seq("id"), "left_anti")
-  }
-
-  private def jobsOf(body: => Unit): Int = {
-    @volatile var n = 0
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener delivery is asynchronous: wait for the count to settle
-      var last = -1
-      while (last != n) { last = n; Thread.sleep(300) }
-      n
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("in-scan vector filter: read, provenance read and time travel " +
@@ -118,9 +102,10 @@ class RowPositionSpec extends SparkSpec {
     // warm both snapshots' file indexes so only the reads are counted
     Versioned.read(spark, path, Some(plain)).collect(): Unit
     Versioned.read(spark, path, Some(vectored)).collect(): Unit
-    val jPlain = jobsOf(Versioned.read(spark, path, Some(plain)).collect(): Unit)
+    val jPlain =
+      jobsOf(Versioned.read(spark, path, Some(plain)).collect(): Unit).size
     val jVectored =
-      jobsOf(Versioned.read(spark, path, Some(vectored)).collect(): Unit)
+      jobsOf(Versioned.read(spark, path, Some(vectored)).collect(): Unit).size
     assert(jVectored <= jPlain, s"vectored $jVectored vs plain $jPlain jobs")
   }
 

@@ -105,4 +105,21 @@ class SessionGuardSpec extends AnyFunSuite {
     } yield s"$f:$n: $line"
     assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
   }
+
+  // a grouped block is one Catalyst Aggregate (Engine.aggregate): the
+  // analyzer resolves keys and HAVING, so no hidden key or HAVING
+  // columns, aggregate renaming, qualifier stripping or grouping-set
+  // modes of the fluent API come back (a hidden column name starts a
+  // word; an oracle query name such as q08_having_sql does not count)
+  test("no hand aggregate rewrite in src/main") {
+    val rewriteParts = Seq("_having_", "_gkey", "nameAggs", "stripQualifiers",
+      "GraftGrouped.Rollup", "GraftGrouped.Cube", "GraftGrouped.Sets")
+      .map(p => ("(?<![A-Za-z0-9])" + java.util.regex.Pattern.quote(p)).r)
+    val hits = for {
+      f <- mainFiles
+      (line, n) <- lines(f)
+      pat <- rewriteParts if pat.findFirstIn(line).nonEmpty
+    } yield s"$f:$n: $line"
+    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
 }

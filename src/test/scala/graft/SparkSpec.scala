@@ -42,4 +42,9 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** The description of every Spark job `body` starts, in start order
+    * (see [[org.apache.spark.graft.JobLog]]). */
+  def jobsOf(body: => Unit): Seq[String] =
+    org.apache.spark.graft.JobLog.of(spark)(body)
 }
